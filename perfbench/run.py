@@ -9,7 +9,8 @@ the first keeping its outputs for checking) is followed by whole passes over
 the workload's operations until ``--seconds`` have been measured (at
 least one pass).  Each operation is timed end to end: the call that
 builds the DataFrame, Catalyst planning (``executedPlan``) and a
-noop-sink execution.  The kept outputs are then checked.  With
+noop-sink execution; ``pass_s`` is the sum of each operation's median
+over the timed passes.  The kept outputs are then checked.  With
 ``--trace 1`` half the window runs untraced and half traced; the traced
 passes give the per-layer metrics and the difference between the two
 gives the tracing overhead.
@@ -35,6 +36,7 @@ import traceback
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 E2E_METRICS = {"setup_s": "s", "pass_s": "s", "peak_rss_mb": "MB"}
+MAX_CPUS = 4
 
 
 def process_age_s() -> float:
@@ -79,6 +81,25 @@ def wait_gone(pids: list[int], timeout: float) -> None:
             time.sleep(0.05)
 
 
+def vm_cpu_s() -> tuple[float, float]:
+    """(busy, stolen) CPU seconds of the whole machine since boot.
+
+    Busy is user + nice + system + irq + softirq time; stolen is time in
+    which a virtual CPU had work but the hypervisor ran something else.
+    """
+    with open("/proc/stat") as f:
+        v = [int(x) for x in f.readline().split()[1:9]]
+    tick = os.sysconf("SC_CLK_TCK")
+    return (v[0] + v[1] + v[2] + v[5] + v[6]) / tick, v[7] / tick
+
+
+def stolen_share(c0: tuple[float, float], c1: tuple[float, float]) -> float:
+    """The share of the CPU time wanted between two ``vm_cpu_s`` readings
+    that the hypervisor took away (0 on a host that steals none)."""
+    busy, stolen = c1[0] - c0[0], c1[1] - c0[1]
+    return stolen / (busy + stolen) if busy + stolen > 0 else 0.0
+
+
 def reset_peak_rss(pids: list[int]) -> None:
     """Restart each process's resident-memory high-water mark."""
     for p in pids:
@@ -109,7 +130,7 @@ def tail(samples: list[float]) -> tuple[float, float]:
     return xs[k], 100.0 * (k + 1) / len(xs)
 
 
-def pin_environment(work: str, nproc: int) -> dict[str, str]:
+def pin_environment(work: str, cpus: int) -> dict[str, str]:
     """Keep every file the run writes inside ``work`` and size the
     driver for a small shared host.  Must run before pyspark starts."""
     tmp = os.path.join(work, "tmp")
@@ -119,14 +140,18 @@ def pin_environment(work: str, nproc: int) -> dict[str, str]:
     env = {
         "TMPDIR": tmp,
         "SPARK_LOCAL_DIRS": local,
-        "SPARK_GRAFT_CPUS": str(nproc),
+        "SPARK_GRAFT_CPUS": str(cpus),
         "SPARK_DRIVER_MEM": "3g",
         # a fixed, pre-touched heap keeps the JVM's resident size and GC
         # sizing the same from run to run
-        "SPARK_DRIVER_JAVA_OPTS": f"-Xms3g -XX:+UseG1GC -XX:+AlwaysPreTouch -Djava.io.tmpdir={tmp}",
+        "SPARK_DRIVER_JAVA_OPTS": (f"-Xms3g -XX:+UseG1GC -XX:+AlwaysPreTouch -XX:ActiveProcessorCount={cpus}"
+                                   f" -Djava.io.tmpdir={tmp}"),
         "PYSPARK_PYTHON": sys.executable,
         "PYSPARK_DRIVER_PYTHON": sys.executable,
+        # one thread per BLAS / OpenMP / Arrow pool in every Python process
         "OMP_NUM_THREADS": "1",
+        "OPENBLAS_NUM_THREADS": "1",
+        "MKL_NUM_THREADS": "1",
     }
     os.environ.update(env)
     import tempfile
@@ -146,6 +171,7 @@ class Harness:
     def run_op(self, op, tracer, capture: bool = False) -> dict | None:
         """Build, plan and execute one operation; None when it raised."""
         try:
+            c0 = vm_cpu_s()
             with tracer.operation(op.name) as root:
                 py4j0 = tracer.py4j_calls
                 t0 = time.perf_counter()
@@ -164,12 +190,13 @@ class Harness:
                         else:
                             df.write.format("noop").mode("overwrite").save()
                 t3 = time.perf_counter()
+            stolen = stolen_share(c0, vm_cpu_s())
         except Exception:
             traceback.print_exc(file=sys.stderr)
             self.failed[op.name] = self.failed.get(op.name, 0) + 1
             return None
         rec = {"op": op.name, "build.s": t1 - t0, "plan.s": t2 - t1, "exec.s": t3 - t2,
-               "wall_s": t3 - t0}
+               "wall_s": t3 - t0, "stolen_share": stolen, "unstolen_s": (t3 - t0) * (1 - stolen)}
         if root is not None:
             rec.update(tracer.op_record(root, build, execute, py4j_build))
             rec["unaccounted_s"] = (root["end"] - root["start"]) - rec["wall_s"]
@@ -218,13 +245,18 @@ def main(argv: list[str] | None = None) -> int:
               f"one of {sorted(workloads.WORKLOADS)}", file=sys.stderr)
         return 2
 
+    cpu_start = vm_cpu_s()
     nproc = len(os.sched_getaffinity(0))
+    # Spark task slots, shuffle partitions, JVM-visible CPUs and driver
+    # thread pools; capped so that a larger shared host runs the same
+    # number of threads as the 4-vCPU reference host
+    cpus = min(nproc, MAX_CPUS)
     work = os.path.join(ROOT, ".perfbench_work", f"{args.workload}-{os.getpid()}")
     # let a terminated run clean up: stop the JVM and remove ``work``
     signal.signal(signal.SIGTERM, lambda *_: sys.exit(128 + signal.SIGTERM))
-    env = pin_environment(work, nproc)
+    env = pin_environment(work, cpus)
     try:
-        return run(args, workloads, work, env, nproc)
+        return run(args, workloads, work, env, nproc, cpus, cpu_start)
     finally:
         shutil.rmtree(work, ignore_errors=True)
         try:
@@ -233,7 +265,8 @@ def main(argv: list[str] | None = None) -> int:
             pass
 
 
-def run(args, workloads, work: str, env: dict[str, str], nproc: int) -> int:
+def run(args, workloads, work: str, env: dict[str, str], nproc: int, cpus: int,
+        cpu_start: tuple[float, float]) -> int:
     import pyspark
 
     from geodata_spark import deploy
@@ -242,8 +275,8 @@ def run(args, workloads, work: str, env: dict[str, str], nproc: int) -> int:
 
     spark = get_spark(
         "perfbench",
-        master=f"local[{nproc}]",
-        shuffle_partitions=nproc,
+        master=f"local[{cpus}]",
+        shuffle_partitions=cpus,
         extra_conf={
             "spark.local.dir": env["SPARK_LOCAL_DIRS"],
             "spark.sql.warehouse.dir": os.path.join(work, "warehouse"),
@@ -260,7 +293,7 @@ def run(args, workloads, work: str, env: dict[str, str], nproc: int) -> int:
         t = time.perf_counter()
         deploy.ensure_py_files(spark)
         phases["deploy"] = time.perf_counter() - t
-        ctx = workloads.Context(spark, work, args.seed, workloads.SIZES[args.size], nproc)
+        ctx = workloads.Context(spark, work, args.seed, workloads.SIZES[args.size], cpus)
         ctx.perturb = os.environ.get("PERFBENCH_PERTURB") == "1"
         wl = workloads.make(args.workload, ctx)
         t = time.perf_counter()
@@ -272,14 +305,15 @@ def run(args, workloads, work: str, env: dict[str, str], nproc: int) -> int:
             t = time.perf_counter()
             h.run_op(op, untraced, capture=True)
             phases[f"warmup.{op.name}"] = time.perf_counter() - t
-        # The pass after the first still runs 3-17 % slower while the JVM
-        # compiles, and by a different amount in every run; timing starts
-        # after it.
+        # The pass after the first still runs 3-24 % slower while the JVM
+        # compiles, by a different amount in every run; timing starts after it.
         t = time.perf_counter()
         for op in wl.pass_ops():
             h.run_op(op, untraced)
         phases["warmup.second_pass"] = time.perf_counter() - t
-        setup_s = process_age_s()
+        setup_wall_s = process_age_s()
+        setup_stolen = stolen_share(cpu_start, vm_cpu_s())
+        setup_s = setup_wall_s * (1 - setup_stolen)
 
         reset_peak_rss(process_tree(os.getpid()))
         window = args.seconds / 2 if args.trace else args.seconds
@@ -322,16 +356,26 @@ def run(args, workloads, work: str, env: dict[str, str], nproc: int) -> int:
 
         lat = [r["wall_s"] for _, recs in plain for r in recs] or [float("nan")]
         tail_s, tail_pct = tail(lat)
-        pass_s = statistics.median(d for d, _ in plain)
-        metrics = {"setup_s": setup_s, "pass_s": pass_s, "peak_rss_mb": rss_mb}
         by_name: dict[str, list[float]] = {}
+        unstolen: dict[str, list[float]] = {}
         for _, recs in plain:
             for r in recs:
                 by_name.setdefault(r["op"], []).append(r["wall_s"])
+                unstolen.setdefault(r["op"], []).append(r["unstolen_s"])
+        # One pass of median operations: each operation's median over the
+        # timed passes, so a pass slowed in one operation counts only
+        # there.  Times are net of the share of CPU time the hypervisor
+        # stole, so that other guests' load on a shared host is not
+        # counted as the program's; raw wall times are in the detail line.
+        pass_s = sum(statistics.median(v) for v in unstolen.values())
+        metrics = {"setup_s": setup_s, "pass_s": pass_s, "peak_rss_mb": rss_mb}
         zonal_reads = [sum(r["wall_s"] for r in recs if r["op"].startswith("zonal_")) for _, recs in plain]
         detail = {
             "workload": args.workload, "seed": args.seed, "seconds": args.seconds,
             "size": args.size, "passes": len(plain), "pass_s_all": [d for d, _ in plain],
+            "pass_wall_s": sum(statistics.median(v) for v in by_name.values()),
+            "setup_wall_s": setup_wall_s, "setup_stolen_share": setup_stolen,
+            "pass_stolen_share": [r["stolen_share"] for _, recs in plain for r in recs],
             "op_s_p50": statistics.median(lat), "op_s_tail": tail_s,
             "op_s_tail_percentile": tail_pct, "op_samples": len(lat),
             "op_s_median_by_name": {n: statistics.median(v) for n, v in sorted(by_name.items())},
@@ -348,6 +392,7 @@ def run(args, workloads, work: str, env: dict[str, str], nproc: int) -> int:
                 "pyspark": pyspark.__version__,
                 "java": spark.sparkContext._jvm.java.lang.System.getProperty("java.version"),
                 "nproc": nproc,
+                "cpus": cpus,
             },
         }
         if args.trace:
