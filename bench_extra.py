@@ -10,8 +10,6 @@ Subcommands:
   tier1                                  the three frozen tier-1 shapes from
                                          bench.py (flagship / cell_rollup /
                                          span_explode), warmed min-of-3
-  stages <query>                         run once and print per-stage metrics
-                                         (from the status store) for the query
 
 Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1), SPARK_GRAFT_CPUS.
 """

@@ -276,29 +276,3 @@ def s2_token_udf(level: int):
         )
 
     return _enc
-
-
-def grid_cell_udf(res: int):
-    """Arrow-vectorized pandas UDF twin of :func:`cell_expr`.
-
-    The expression form is preferred on the hot path (codegen); the UDF
-    form exists to satisfy batch-encode call sites that already operate
-    in pandas space (e.g. inside applyInPandas model fits).
-    """
-
-    @F.pandas_udf(T.LongType())
-    def _enc(lat: pd.Series, lon: pd.Series) -> pd.Series:
-        return pd.Series(
-            cell_id_np(lat.to_numpy(np.float64), lon.to_numpy(np.float64), res),
-            index=lat.index,
-        )
-
-    return _enc
-
-
-def with_cell_columns(df, lat_col: str = "lat", lon_col: str = "lon",
-                      resolutions: tuple[int, ...] = (5, 6, 7, 8, 9)):
-    """Attach ``cell_r{r}`` columns for each requested resolution."""
-    for r in resolutions:
-        df = df.withColumn(f"cell_r{r}", cell_expr(F.col(lat_col), F.col(lon_col), r))
-    return df

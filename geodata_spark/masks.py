@@ -27,10 +27,8 @@ cell grain, no cross-join).
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-from geodata_spark import cells
 
 
 # ---------------------------------------------------------------------------
@@ -365,14 +363,6 @@ def save_mask(stacked: DataFrame, path: str) -> None:
 
 def load_mask(spark, path: str) -> DataFrame:
     return spark.read.parquet(path)
-
-
-# ---------------------------------------------------------------------------
-# helpers
-# ---------------------------------------------------------------------------
-
-def with_cell(df: DataFrame, res: int = 9) -> DataFrame:
-    return df.withColumn("cell", cells.cell_expr(F.col("lat"), F.col("lon"), res))
 
 
 # ---------------------------------------------------------------------------

@@ -28,7 +28,7 @@ is identical in both modes; only the hash primitive differs.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from geodata_spark.pipeline.text import normalize_sql

@@ -161,13 +161,6 @@ def extract_features(media: DataFrame, width: int = 8, height: int = 8,
     return media.mapInPandas(op, schema=FEATURE_SCHEMA)
 
 
-def resize_stub(media: DataFrame, width: int, height: int) -> DataFrame:
-    """Legacy feature-at-size stage (kept for media_features).  The
-    REAL resize kernel is :func:`bilinear_resize` below, driven
-    end-to-end by :func:`resize_media`."""
-    return extract_features(media, width=width, height=height)
-
-
 def sample_frames(media: DataFrame, every_n: int = 2) -> DataFrame:
     """Frame-sampling for video refs: deterministic keep-1-in-n on the
     (doc_id, media_ref) hash — a row-level filter, no Python."""

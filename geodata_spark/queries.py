@@ -84,18 +84,13 @@ def q_zonal_wavg_hex(spark: SparkSession, sf_dir: str) -> DataFrame:
     (the north_star's H3-grain spatial join, end to end)."""
     docs = corpus(spark, sf_dir)
     pts = spatial.parse_geo_spans(docs)
-    # hex_encode="dim": corpus geo spans live on the finite synth
-    # lattice (7272 coords repeated ~1M times), so the Arrow hex
-    # encode runs once per DISTINCT coordinate and broadcasts back.
-    # Wall time at local[32]/1M rows is flat (the per-row encode
-    # overlaps the scan), but the dim path moves 137x fewer rows
-    # through Python — the margin that matters when executors are
-    # Arrow-bottlenecked at corpus scale.  Cover res stays 5: the
-    # polyfill cover is already 366k cells there (driver build 7.6s,
-    # broadcast ~6 MB); res 6 is 2.5M cells / 89s build — the
-    # boundary-sliver win does not pay for 7x cover volume.
-    zoned = spatial.join_zones(pts, spark, ZONES, res=5, grain="hex",
-                               hex_encode="dim")
+    # The hex encode runs in one pass over the points, deduplicating
+    # coordinates per Arrow batch (corpus geo spans live on the finite
+    # 7272-coordinate synth lattice).  Cover res stays 5: the polyfill
+    # cover is already 366k cells there (driver build 7.6s, broadcast
+    # ~6 MB); res 6 is 2.5M cells / 89s build — the boundary-sliver
+    # win does not pay for 7x cover volume.
+    zoned = spatial.join_zones(pts, spark, ZONES, res=5, grain="hex")
     weighted = zoned.withColumn("w", zonal.oracle_area_weight_expr(F.col("lat"))).withColumn(
         "day_idx", (F.col("hour") / F.lit(24)).cast("int")
     )

@@ -315,6 +315,9 @@ def join_zones(
     cells prove membership, boundary cells fall through to the same
     exact PIP), different physical key.  The point-side encode is one
     Arrow UDF in the scan stage; the cover still broadcasts.
+
+    ``hex_encode`` is accepted for compatibility and ignored: both
+    ``"row"`` and ``"dim"`` encode in one pass over the input.
     """
     zones = zones or ZONES
     if strategy == "auto":

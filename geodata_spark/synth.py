@@ -8,18 +8,21 @@ Iceberg/Parquet table::
                                   media_ref:string, offset:int>>)
 
 No external data exists in the sandbox, so the corpus is **synthesised
-deterministically from pure integer arithmetic** — the same formulas
-are emitted both as Spark ``Column`` expressions and as ANSI-SQL text,
-which lets the DuckDB oracle reproduce every derived value *bit
-exactly*:
+deterministically from pure integer arithmetic**.  Each generator's
+formulas are written once as SQL text, rendered per dialect: ``"spark"``
+for the ``selectExpr`` generators, ``"duckdb"`` for the oracle CTEs.
+The two spellings differ only in double literals, integer division,
+timestamp arithmetic and ``printf``.  Rendering happens at call time,
+so patching ``URBAN``/``SKEW_LT`` changes both sides.  The DuckDB
+oracle reproduces every derived value *bit exactly*:
 
 - every float is a dyadic rational (k/2^m), so products and sums are
   exact in IEEE-754 and therefore **order-independent** — Spark's
   partial aggregation and DuckDB's single-threaded sum agree to the
   last bit;
-- every string is built with C-style ``printf`` formatting of values
-  that need no rounding, so ``format_string`` (JVM) and ``printf``
-  (DuckDB) agree byte-for-byte.
+- every string is ``printf`` formatting of values that need no
+  rounding, so Spark's integer-concat rendering and DuckDB's
+  ``printf`` agree byte-for-byte.
 
 Geometry mirrors the reference's MERRA2 grid (0.5° lat × 0.625° lon,
 lat south→north — ``src/geodata/datasets/merra2.py:592``) inside the
@@ -30,11 +33,15 @@ documents into 4 "urban" cells (dense-coastal-cell skew, north_rule).
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession
-from pyspark.sql import functions as F
+import re
+from functools import partial, reduce
+
+from pyspark.sql import DataFrame, SparkSession
+
+from geodata_spark import cells
 
 # ---------------------------------------------------------------------------
-# shared integer-arithmetic constants (keep in sync between expr and SQL)
+# shared integer-arithmetic constants
 # ---------------------------------------------------------------------------
 
 HA = 2654435761  # Knuth multiplicative constant
@@ -63,7 +70,6 @@ MAX_SPANS = 6
 
 __all__ = [
     "synth_documents",
-    "synth_documents_exploded",
     "documents_sql_cte",
     "synth_grid_vars",
     "grid_vars_sql_cte",
@@ -77,120 +83,105 @@ N_DOCS_MULTIPLIER = 40
 
 
 # ---------------------------------------------------------------------------
-# hash helpers
+# SQL rendering helpers (dialect: "spark" or "duckdb")
 # ---------------------------------------------------------------------------
 
-def _h_expr(i: Column, j: Column, k: int) -> Column:
-    """H(i,j,k) = (i*HA + j*HB + k*HC + HD) % HM  — Column form.
-
-    All operands stay well inside int64 for i < 3.4e9 documents.
-    """
-    return (i * F.lit(HA) + j * F.lit(HB) + F.lit(k * HC + HD)) % F.lit(HM)
-
-
 def _h_sql(i: str, j: str, k: int) -> str:
+    """H(i,j,k) = (i*HA + j*HB + k*HC + HD) % HM, inside int64 for
+    i < 3.4e9 documents."""
     return f"(({i}) * {HA} + ({j}) * {HB} + {k * HC + HD}) % {HM}"
 
 
+def _dbl(dialect: str):
+    """Double-literal renderer: Spark reads an unsuffixed ``18.25`` as DECIMAL."""
+    return (lambda x: f"{x!r}D") if dialect == "spark" else repr
+
+
+def _div(dialect: str) -> str:
+    return "div" if dialect == "spark" else "//"
+
+
+def _fmt4_spark(x: str) -> str:
+    """``%.4f`` by integer arithmetic, 2x faster than ``format_string``.
+    Exact when ``x * 10000`` is an integer in double: every synth
+    lat/lon/val is a dyadic rational on a 1/16-or-coarser grid."""
+    n = f"CAST(({x}) * 10000.0D AS BIGINT)"
+    return (f"concat(CASE WHEN {n} < 0 THEN '-' ELSE '' END, "
+            f"CAST(abs({n}) div 10000 AS STRING), '.', "
+            f"lpad(CAST(abs({n}) % 10000 AS STRING), 4, '0'))")
+
+
+_SPEC = re.compile(r"%(\.4f|012d|d)")
+_SPARK_SPEC = {
+    ".4f": _fmt4_spark,
+    "012d": lambda a: f"lpad(CAST({a} AS STRING), 12, '0')",  # exact for i < 3.4e9
+    "d": lambda a: f"CAST({a} AS STRING)",
+}
+
+
+def _printf(fmt: str, args: list[str], dialect: str) -> str:
+    """``printf(fmt, args...)``; Spark renders it as a concat of
+    integer-exact pieces."""
+    if dialect == "duckdb":
+        return f"printf('{fmt}', {', '.join(args)})"
+    pieces = _SPEC.split(fmt)  # literal, spec, literal, ..., literal
+    return "concat({})".format(", ".join(
+        f"'{p}'" if k % 2 == 0 else _SPARK_SPEC[p](args[k // 2])
+        for k, p in enumerate(pieces) if p
+    ))
+
+
 # ---------------------------------------------------------------------------
-# Spark-side generation
+# documents — the interleaved corpus
 # ---------------------------------------------------------------------------
 
-def _dec4(x: Column) -> Column:
-    """Render a dyadic value with ≤4 decimal digits exactly as
-    ``%.4f`` would — by integer arithmetic instead of Java's
-    ``Formatter`` (which re-parses the format string and walks the
-    float formatting path per row; measured 2x on the ref-building
-    projection, r8, byte-equal output).
-
-    Precondition: ``x * 10000`` is an exact integer in double (true
-    for every synth field — lat/lon/val are dyadic rationals on a
-    1/16-or-coarser grid), so ``%.4f`` performs no rounding and equals
-    sign + integer part + '.' + zero-padded 4-digit fraction.
-    """
-    n = (x * F.lit(10000.0)).cast("long")
-    a = F.abs(n)
-    return F.concat(
-        F.when(n < 0, F.lit("-")).otherwise(F.lit("")),
-        (a / F.lit(10000)).cast("long").cast("string"),
-        F.lit("."),
-        F.lpad(F.pmod(a, F.lit(10000)).cast("string"), 4, "0"),
-    )
+def _nspans_sql(i: str) -> str:
+    return f"2 + ({_h_sql(i, '0', 0)}) % 5"
 
 
-def _span_fields(i: Column, j: Column) -> dict[str, Column]:
-    """All derived per-span fields from (doc index i, span index j)."""
-    code = _h_expr(i, j, 1) % 8  # 0,1 text | 2,3,4 geo | 5 image | 6,7 raster_tile
-    skewed = (i % SKEW_MOD) < F.lit(SKEW_LT)
-    u = _h_expr(i, j, 9) % 4
+def _span_values_sql(i: str, j: str, dialect: str) -> dict[str, str]:
+    """Per-span values from doc index i and span index j, one SQL expression each."""
+    def h(k: int) -> str:
+        return f"({_h_sql(i, j, k)})"
 
-    lat_idx = _h_expr(i, j, 2) % NY
-    lon_idx = _h_expr(i, j, 3) % NX
-    for uu, (uy, ux) in enumerate(URBAN):
-        lat_idx = F.when(skewed & (u == uu), F.lit(uy)).otherwise(lat_idx)
-        lon_idx = F.when(skewed & (u == uu), F.lit(ux)).otherwise(lon_idx)
+    def urban(axis: int, fallback: str) -> str:
+        whens = " ".join(f"WHEN {uu} THEN {cell[axis]}" for uu, cell in enumerate(URBAN))
+        return (f"CASE WHEN ({i}) % {SKEW_MOD} < {SKEW_LT} "
+                f"THEN CASE {h(9)} % 4 {whens} ELSE {fallback} END ELSE {fallback} END")
 
-    lat = F.lit(LAT0) + F.lit(DLAT) * lat_idx.cast("double")
-    lon = F.lit(LON0) + F.lit(DLON) * lon_idx.cast("double")
-    hour = _h_expr(i, j, 4) % NHOURS
-    val = (_h_expr(i, j, 5) % 1600).cast("double") / F.lit(16.0)  # [0,100) step 1/16
-
-    is_geo = (code >= 2) & (code <= 4)
-    is_image = code == 5
-    is_tile = code >= 6
-
-    kind = (
-        F.when(is_geo, F.lit("geo"))
-        .when(is_image, F.lit("image"))
-        .when(is_tile, F.lit("raster_tile"))
-        .otherwise(F.lit("text"))
-    )
-    # refs built by concat of integer-exact pieces, not format_string:
-    # Java's Formatter parses the pattern and walks the general float
-    # path per row; dec4/cast render the same bytes at half the cost
-    # (byte-equality pinned by the parse round-trip tests and every
-    # corpus oracle hash)
-    geo_ref = F.concat(
-        F.lit("geo:"), _dec4(lat), F.lit(","), _dec4(lon),
-        F.lit("@h"), hour.cast("string"),
-        F.lit("#var=wnd100m&val="), _dec4(val),
-    )
-    tile_ref = F.concat(
-        F.lit("tile:"), _dec4(lat), F.lit(","), _dec4(lon),
-        F.lit("@h"), hour.cast("string"),
-        F.lit("#res=7&val="), _dec4(val),
-    )
-    img_ref = F.concat(
-        F.lit("img://shard"), (_h_expr(i, j, 6) % 16).cast("string"),
-        F.lit("/"), i.cast("string"), F.lit("/"), j.cast("string"),
-        F.lit(".bin"),
-    )
-    media_ref = (
-        F.when(is_geo, geo_ref)
-        .when(is_tile, tile_ref)
-        .when(is_image, img_ref)
-        .otherwise(F.lit(""))
-    )
-    text = F.when(
-        code <= 1,
-        F.concat(
-            F.lit("w"), (_h_expr(i, j, 7) % 1000).cast("string"),
-            F.lit(" w"), (_h_expr(i, j, 10) % 1000).cast("string"),
-            F.lit(" w"), (_h_expr(i, j, 11) % 1000).cast("string"),
-        ),
-    ).otherwise(F.lit(""))
-    offset = (j * F.lit(16) + _h_expr(i, j, 8) % 16).cast("int")
+    d = _dbl(dialect)
     return {
-        "kind": kind,
-        "text": text,
-        "media_ref": media_ref,
-        "offset": offset,
-        # numeric twins (used by exploded form / internal operators)
-        "lat": lat,
-        "lon": lon,
-        "hour": hour,
-        "val": val,
-        "code": code,
+        "code": f"{h(1)} % 8",  # 0,1 text | 2,3,4 geo | 5 image | 6,7 raster_tile
+        "lat": f"{d(LAT0)} + {d(DLAT)} * ({urban(0, f'{h(2)} % {NY}')})",
+        "lon": f"{d(LON0)} + {d(DLON)} * ({urban(1, f'{h(3)} % {NX}')})",
+        "hour": f"{h(4)} % {NHOURS}",
+        "val": f"CAST({h(5)} % 1600 AS DOUBLE) / {d(16.0)}",  # [0,100) step 1/16
+        "shard": f"{h(6)} % 16",
+        "w1": f"{h(7)} % 1000",
+        "w2": f"{h(10)} % 1000",
+        "w3": f"{h(11)} % 1000",
+        "offset": f"CAST(({j}) * 16 + {h(8)} % 16 AS INT)",
+    }
+
+
+def _span_out_sql(c: dict[str, str], dialect: str) -> dict[str, str]:
+    """kind / text / media_ref from references ``c`` to the span fields
+    (plus the doc and span indices ``i`` and ``j``)."""
+    code = c["code"]
+    geo = f"{code} BETWEEN 2 AND 4"
+    at = [c["lat"], c["lon"], c["hour"], c["val"]]
+    p = partial(_printf, dialect=dialect)
+    return {
+        "kind": (f"CASE WHEN {geo} THEN 'geo' WHEN {code} = 5 THEN 'image' "
+                 f"WHEN {code} >= 6 THEN 'raster_tile' ELSE 'text' END"),
+        "text": (f"CASE WHEN {code} <= 1 THEN "
+                 f"{p('w%d w%d w%d', [c['w1'], c['w2'], c['w3']])} ELSE '' END"),
+        "media_ref": (
+            f"CASE WHEN {geo} THEN {p('geo:%.4f,%.4f@h%d#var=wnd100m&val=%.4f', at)} "
+            f"WHEN {code} >= 6 THEN {p('tile:%.4f,%.4f@h%d#res=7&val=%.4f', at)} "
+            f"WHEN {code} = 5 THEN {p('img://shard%d/%d/%d.bin', [c['shard'], c['i'], c['j']])} "
+            f"ELSE '' END"
+        ),
     }
 
 
@@ -200,62 +191,22 @@ def synth_documents(spark: SparkSession, n_docs: int, num_partitions: int | None
     Pure Catalyst: ``range`` → ``transform(sequence(...))`` — no Python
     in the generation path, so it scales to any corpus size Spark can
     shuffle (the 10^12-doc target is a bigger ``range`` with the same
-    plan).
+    plan).  The inner ``transform`` computes each span's fields once;
+    the outer one renders them.
     """
-    df = spark.range(0, n_docs, 1, num_partitions or spark.sparkContext.defaultParallelism)
-    i = F.col("id")
-    nspans = (F.lit(2) + _h_expr(i, F.lit(0), 0) % 5).cast("int")
-
-    def mk_span(j: Column) -> Column:
-        f = _span_fields(i, j.cast("long"))
-        return F.struct(
-            f["kind"].alias("kind"),
-            f["text"].alias("text"),
-            f["media_ref"].alias("media_ref"),
-            f["offset"].alias("offset"),
-        )
-
-    return df.select(
-        # lpad-concat == "doc%012d" for the corpus contract i < 3.4e9
-        # (≤ 10 digits; Spark lpad would truncate only past 12)
-        F.concat(F.lit("doc"), F.lpad(i.cast("string"), 12, "0")).alias("doc_id"),
-        F.transform(F.sequence(F.lit(0), nspans - F.lit(1)), mk_span).alias("spans"),
+    fields = _span_values_sql("id", "s", "spark")
+    out = _span_out_sql({k: f"f.{k}" for k in fields} | {"i": "id", "j": "j"}, "spark")
+    inner = ", ".join(f"'{k}', {v}" for k, v in fields.items())
+    outer = ", ".join(f"'{k}', {out[k]}" for k in ("kind", "text", "media_ref"))
+    return spark.range(
+        0, n_docs, 1, num_partitions or spark.sparkContext.defaultParallelism
+    ).selectExpr(
+        f"{_printf('doc%012d', ['id'], 'spark')} AS doc_id",
+        f"transform(transform(sequence(0L, {_nspans_sql('id')} - 1), "
+        f"s -> named_struct({inner})), "
+        f"(f, j) -> named_struct({outer}, 'offset', f.offset)) AS spans",
     )
 
-
-def synth_documents_exploded(spark: SparkSession, n_docs: int) -> DataFrame:
-    """Exploded per-span form with numeric twin columns.
-
-    Avoids re-parsing media_ref when an operator needs the numerics —
-    but the parse path is also provided (``spatial.parse_geo_spans``)
-    and tested for byte-exact round-trip.
-    """
-    df = spark.range(0, n_docs, 1, spark.sparkContext.defaultParallelism)
-    i = F.col("id")
-    nspans = (F.lit(2) + _h_expr(i, F.lit(0), 0) % 5).cast("int")
-    df = df.select(
-        i.alias("i"),
-        F.explode(F.sequence(F.lit(0), nspans - F.lit(1))).alias("j"),
-    )
-    f = _span_fields(F.col("i"), F.col("j").cast("long"))
-    return df.select(
-        F.concat(F.lit("doc"), F.lpad(F.col("i").cast("string"), 12, "0")).alias("doc_id"),
-        F.col("i"),
-        F.col("j").cast("long").alias("j"),
-        f["kind"].alias("kind"),
-        f["text"].alias("text"),
-        f["media_ref"].alias("media_ref"),
-        f["offset"].alias("offset"),
-        f["lat"].alias("lat"),
-        f["lon"].alias("lon"),
-        f["hour"].cast("long").alias("hour"),
-        f["val"].alias("val"),
-    )
-
-
-# ---------------------------------------------------------------------------
-# DuckDB oracle CTE (same arithmetic, ANSI SQL)
-# ---------------------------------------------------------------------------
 
 def documents_sql_cte(mult: int = N_DOCS_MULTIPLIER) -> str:
     """SQL CTE text producing the exploded corpus as ``spansx``.
@@ -266,13 +217,9 @@ def documents_sql_cte(mult: int = N_DOCS_MULTIPLIER) -> str:
     columns (i, j, doc_id, kind, text, media_ref, offset, lat, lon,
     hour, val).
     """
-    h = _h_sql
-    urban_lat = " ".join(
-        f"WHEN f.u = {uu} THEN {uy}" for uu, (uy, _) in enumerate(URBAN)
-    )
-    urban_lon = " ".join(
-        f"WHEN f.u = {uu} THEN {ux}" for uu, (_, ux) in enumerate(URBAN)
-    )
+    fields = _span_values_sql("i", "j", "duckdb")
+    out = _span_out_sql({k: k for k in [*fields, "i", "j"]}, "duckdb")
+    field_sql = ",\n         ".join(f'{v} AS "{k}"' for k, v in fields.items())
     return f"""
 _idx AS (
   SELECT (d.rn - 1) * {mult} + CAST(m.range AS BIGINT) AS i
@@ -282,52 +229,21 @@ _idx AS (
 _sp AS (
   SELECT i, CAST(s.range AS BIGINT) AS j
   FROM _idx, range({MAX_SPANS}) s
-  WHERE s.range < 2 + ({h('i', '0', 0)}) % 5
+  WHERE s.range < {_nspans_sql('i')}
 ),
 _fields AS (
   SELECT i, j,
-         ({h('i', 'j', 1)}) % 8 AS code,
-         (i % {SKEW_MOD}) < {SKEW_LT} AS skewed,
-         ({h('i', 'j', 9)}) % 4 AS u,
-         ({h('i', 'j', 2)}) % {NY} AS lat_idx0,
-         ({h('i', 'j', 3)}) % {NX} AS lon_idx0,
-         ({h('i', 'j', 4)}) % {NHOURS} AS hour,
-         CAST(({h('i', 'j', 5)}) % 1600 AS DOUBLE) / 16.0 AS val,
-         ({h('i', 'j', 6)}) % 16 AS shard,
-         ({h('i', 'j', 7)}) % 1000 AS w1,
-         ({h('i', 'j', 10)}) % 1000 AS w2,
-         ({h('i', 'j', 11)}) % 1000 AS w3,
-         CAST(j * 16 + ({h('i', 'j', 8)}) % 16 AS INT) AS "offset"
+         {field_sql}
   FROM _sp
-),
-_geo AS (
-  SELECT f.*,
-         CASE WHEN f.skewed THEN (CASE {urban_lat} END) ELSE f.lat_idx0 END AS lat_idx,
-         CASE WHEN f.skewed THEN (CASE {urban_lon} END) ELSE f.lon_idx0 END AS lon_idx
-  FROM _fields f
 ),
 spansx AS (
   SELECT i, j,
-         printf('doc%012d', i) AS doc_id,
-         CASE WHEN code BETWEEN 2 AND 4 THEN 'geo'
-              WHEN code = 5 THEN 'image'
-              WHEN code >= 6 THEN 'raster_tile'
-              ELSE 'text' END AS kind,
-         CASE WHEN code <= 1 THEN printf('w%d w%d w%d', w1, w2, w3) ELSE '' END AS text,
-         CASE WHEN code BETWEEN 2 AND 4 THEN
-                printf('geo:%.4f,%.4f@h%d#var=wnd100m&val=%.4f',
-                       {LAT0} + {DLAT} * lat_idx, {LON0} + {DLON} * lon_idx, hour, val)
-              WHEN code >= 6 THEN
-                printf('tile:%.4f,%.4f@h%d#res=7&val=%.4f',
-                       {LAT0} + {DLAT} * lat_idx, {LON0} + {DLON} * lon_idx, hour, val)
-              WHEN code = 5 THEN printf('img://shard%d/%d/%d.bin', shard, i, j)
-              ELSE '' END AS media_ref,
-         "offset",
-         {LAT0} + {DLAT} * lat_idx AS lat,
-         {LON0} + {DLON} * lon_idx AS lon,
-         hour,
-         val
-  FROM _geo
+         {_printf('doc%012d', ['i'], 'duckdb')} AS doc_id,
+         {out['kind']} AS kind,
+         {out['text']} AS text,
+         {out['media_ref']} AS media_ref,
+         "offset", lat, lon, hour, val
+  FROM _fields
 )"""
 
 
@@ -336,10 +252,6 @@ spansx AS (
 # ---------------------------------------------------------------------------
 
 GA, GB, GC, GK = 8191, 131071, 524287, 977
-
-
-def _g_expr(h: Column, y: Column, x: Column, k: int) -> Column:
-    return (h * F.lit(GA) + y * F.lit(GB) + x * F.lit(GC) + F.lit(k * HA + GK) % F.lit(HM)) % F.lit(HM)
 
 
 def _g_sql(h: str, y: str, x: str, k: int) -> str:
@@ -378,6 +290,29 @@ GRID_VARS = {
 }
 
 
+def _grid_index_sql(ny: int, nx: int, dialect: str) -> list[str]:
+    """(h, y, x) decoded from the flat row index ``id``."""
+    div = _div(dialect)
+    return [f"id {div} {ny * nx} AS h", f"(id % {ny * nx}) {div} {nx} AS y", f"id % {nx} AS x"]
+
+
+def _grid_vars_sql(variables: tuple[str, ...], dialect: str) -> list[str]:
+    """The gridded-variable columns from (h, y, x)."""
+    d = _dbl(dialect)
+    ts = (f"timestamp'{TS0}' + make_interval(0,0,0,0, CAST(h AS INT))" if dialect == "spark"
+          else f"TIMESTAMP '{TS0}' + h * INTERVAL 1 HOUR")
+    cols = [
+        "h AS hour",
+        f"{ts} AS ts",
+        f"{d(LAT0)} + {d(DLAT)} * y AS lat",
+        f"{d(LON0)} + {d(DLON)} * x AS lon",
+    ]
+    for v in variables:
+        off, span, div, key = GRID_VARS[v]
+        cols.append(f"{d(off)} + CAST(({_g_sql('h', 'y', 'x', key)}) % {span} AS DOUBLE) / {d(div)} AS {v}")
+    return cols
+
+
 def synth_grid_vars(
     spark: SparkSession,
     nhours: int = 48,
@@ -392,51 +327,27 @@ def synth_grid_vars(
     shuffle; real deployments read this table from the catalog
     partitioned by (year, month) instead.
     """
-    variables = variables or tuple(GRID_VARS)
-    n = nhours * ny * nx
-    df = spark.range(0, n, 1, spark.sparkContext.defaultParallelism)
-    h = (F.col("id") / F.lit(ny * nx)).cast("long")
-    rem = F.col("id") - h * F.lit(ny * nx)
-    y = (rem / F.lit(nx)).cast("long")
-    x = rem - y * F.lit(nx)
-    cols = [
-        h.alias("hour"),
-        F.expr(f"timestamp'{TS0}' + make_interval(0,0,0,0, CAST(id div {ny * nx} AS INT))").alias("ts"),
-        (F.lit(LAT0) + F.lit(DLAT) * y.cast("double")).alias("lat"),
-        (F.lit(LON0) + F.lit(DLON) * x.cast("double")).alias("lon"),
-    ]
-    for name in variables:
-        off, span, div, key = GRID_VARS[name]
-        g = _g_expr(h, y, x, key)
-        cols.append((F.lit(off) + (g % span).cast("double") / F.lit(div)).alias(name))
-    return df.select(*cols)
+    return (
+        spark.range(0, nhours * ny * nx, 1, spark.sparkContext.defaultParallelism)
+        .selectExpr(*_grid_index_sql(ny, nx, "spark"))
+        .selectExpr(*_grid_vars_sql(variables or tuple(GRID_VARS), "spark"))
+    )
 
 
 def grid_vars_sql_cte(nhours: int = 48, ny: int = NY, nx: int = NX,
                       variables: tuple[str, ...] | None = None) -> str:
     """DuckDB CTE ``gridv`` mirroring :func:`synth_grid_vars` bit-exactly."""
-    variables = variables or tuple(GRID_VARS)
-    n = nhours * ny * nx
-    var_sql = ",\n         ".join(
-        f"{GRID_VARS[v][0]!r} + CAST(({_g_sql('h', 'y', 'x', GRID_VARS[v][3])}) % {GRID_VARS[v][1]} AS DOUBLE) / {GRID_VARS[v][2]!r} AS {v}"
-        for v in variables
-    )
+    sep = ",\n         "
     return f"""
 _g0 AS (
-  SELECT CAST(r.range AS BIGINT) AS id FROM range({n}) r
+  SELECT CAST(r.range AS BIGINT) AS id FROM range({nhours * ny * nx}) r
 ),
 _g1 AS (
-  SELECT id, id // {ny * nx} AS h,
-         (id % {ny * nx}) // {nx} AS y,
-         id % {nx} AS x
+  SELECT id, {sep.join(_grid_index_sql(ny, nx, "duckdb"))}
   FROM _g0
 ),
 gridv AS (
-  SELECT h AS hour,
-         TIMESTAMP '{TS0}' + h * INTERVAL 1 HOUR AS ts,
-         {LAT0} + {DLAT} * y AS lat,
-         {LON0} + {DLON} * x AS lon,
-         {var_sql}
+  SELECT {sep.join(_grid_vars_sql(variables or tuple(GRID_VARS), "duckdb"))}
   FROM _g1
 )"""
 
@@ -457,65 +368,54 @@ MASK_LAYERS = {
 }
 
 
+def _mask_grid_sql(nx: int, dialect: str) -> tuple[str, str, str, str]:
+    """(y, x, lat, lon) of the mask grid from the flat row index ``id``."""
+    div, d = _div(dialect), _dbl(dialect)
+    return (f"id {div} {nx}", f"id % {nx}",
+            f"{d(LAT0)} + {d(DLAT)} * (id {div} {nx})", f"{d(LON0)} + {d(DLON)} * (id % {nx})")
+
+
+def _mask_value_sql(name: str, dialect: str) -> str:
+    """Layer ``name``'s value from the grid indices (y, x)."""
+    span, div, off, key = MASK_LAYERS[name]
+    g = _g_sql("0", "y", "x", key)
+    d = _dbl(dialect)
+    if name == "protected":
+        return f"CASE WHEN ({g}) % {span} = 0 THEN {d(1.0)} ELSE {d(0.0)} END"
+    return f"{d(off)} + CAST(({g}) % {span} AS DOUBLE) / {d(div)}"
+
+
 def synth_mask_layers(spark: SparkSession, ny: int = NY, nx: int = NX) -> DataFrame:
     """Long mask-layer table (layer, cell, lat, lon, value), res-9 cells."""
-    from geodata_spark import cells as _cells
-
-    n = ny * nx
-    df = spark.range(0, n, 1, spark.sparkContext.defaultParallelism)
-    y = (F.col("id") / F.lit(nx)).cast("long")
-    x = F.col("id") - y * F.lit(nx)
-    lat = (F.lit(LAT0) + F.lit(DLAT) * y.cast("double")).alias("lat")
-    lon = (F.lit(LON0) + F.lit(DLON) * x.cast("double")).alias("lon")
-    parts = []
-    for name, (span, div, off, key) in MASK_LAYERS.items():
-        g = _g_expr(F.lit(0), y, x, key)
-        val = (F.lit(off) + (g % span).cast("double") / F.lit(div))
-        if name == "protected":
-            val = F.when((g % span) == 0, F.lit(1.0)).otherwise(F.lit(0.0))
-        parts.append(
-            df.select(
-                F.lit(name).alias("layer"),
-                _cells.cell_expr(lat, lon, 9).alias("cell"),
-                y.alias("y_idx"),
-                x.alias("x_idx"),
-                lat,
-                lon,
-                val.alias("value"),
-            )
-        )
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out
+    y, x, lat, lon = _mask_grid_sql(nx, "spark")
+    grid = spark.range(0, ny * nx, 1, spark.sparkContext.defaultParallelism).selectExpr(
+        f"{y} AS y", f"{x} AS x", f"{lat} AS lat", f"{lon} AS lon"
+    )
+    cell = cells.cell_sql("lat", "lon", 9)
+    return reduce(DataFrame.unionByName, [
+        grid.selectExpr(f"'{name}' AS layer", f"{cell} AS cell", "y AS y_idx", "x AS x_idx",
+                        "lat", "lon", f"{_mask_value_sql(name, 'spark')} AS value")
+        for name in MASK_LAYERS
+    ])
 
 
 def mask_layers_sql_cte(ny: int = NY, nx: int = NX) -> str:
     """DuckDB CTE ``maskl`` mirroring :func:`synth_mask_layers`."""
-    from geodata_spark import cells as _cells
-
-    n = ny * nx
-    selects = []
-    for name, (span, div, off, key) in MASK_LAYERS.items():
-        g = _g_sql("0", "y", "x", key)
-        if name == "protected":
-            val = f"CASE WHEN ({g}) % {span} = 0 THEN 1.0 ELSE 0.0 END"
-        else:
-            val = f"{off!r} + CAST(({g}) % {span} AS DOUBLE) / {div!r}"
-        selects.append(
-            f"SELECT '{name}' AS layer, "
-            f"{_cells.cell_sql('lat', 'lon', 9)} AS cell, lat, lon, {val} AS value "
-            f"FROM _mgrid"
-        )
-    union = " UNION ALL ".join(selects)
+    y, x, lat, lon = _mask_grid_sql(nx, "duckdb")
+    union = " UNION ALL ".join(
+        f"SELECT '{name}' AS layer, "
+        f"{cells.cell_sql('lat', 'lon', 9)} AS cell, lat, lon, {_mask_value_sql(name, 'duckdb')} AS value "
+        f"FROM _mgrid"
+        for name in MASK_LAYERS
+    )
     return f"""
 _m0 AS (
-  SELECT CAST(r.range AS BIGINT) AS id FROM range({n}) r
+  SELECT CAST(r.range AS BIGINT) AS id FROM range({ny * nx}) r
 ),
 _mgrid AS (
-  SELECT id // {nx} AS y, id % {nx} AS x,
-         {LAT0} + {DLAT} * (id // {nx}) AS lat,
-         {LON0} + {DLON} * (id % {nx}) AS lon
+  SELECT {y} AS y, {x} AS x,
+         {lat} AS lat,
+         {lon} AS lon
   FROM _m0
 ),
 maskl AS (

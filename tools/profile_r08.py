@@ -62,8 +62,7 @@ def main() -> None:
 
         def upto_join():
             pts = spatial.parse_geo_spans(synth_documents(spark, n))
-            return spatial.join_zones(pts, spark, ZONES, res=5, grain="hex",
-                                      hex_encode="dim")
+            return spatial.join_zones(pts, spark, ZONES, res=5, grain="hex")
 
         timed("synth+parse+hexjoin", upto_join)
         timed("full zonal_wavg_hex", lambda: Q.QUERIES["zonal_wavg_hex"](spark, SF_DIR))
