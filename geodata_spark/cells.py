@@ -48,7 +48,8 @@ MAX_RES = 9
 EDGE_DEG = {r: 4.0 / (1 << (r - MIN_RES)) for r in range(MIN_RES, MAX_RES + 1)}
 
 _RES_SHIFT = 2**54
-_Y_SHIFT = 2**27
+#: y stride of packed keys: cell ids res·2⁵⁴ + y·2²⁷ + x, raster cells y·2²⁷ + x
+Y_SHIFT = 2**27
 
 
 # ---------------------------------------------------------------------------
@@ -67,7 +68,7 @@ def cell_expr(lat: Column, lon: Column, res: int) -> Column:
     e = EDGE_DEG[res]
     yi = F.floor((lat + F.lit(90.0)) / F.lit(e)).cast("long")
     xi = F.floor((lon + F.lit(180.0)) / F.lit(e)).cast("long")
-    return (F.lit(res).cast("long") * F.lit(_RES_SHIFT) + yi * F.lit(_Y_SHIFT) + xi).alias(
+    return (F.lit(res).cast("long") * F.lit(_RES_SHIFT) + yi * F.lit(Y_SHIFT) + xi).alias(
         f"cell_r{res}"
     )
 
@@ -77,7 +78,7 @@ def cell_sql(lat_sql: str, lon_sql: str, res: int) -> str:
     e = EDGE_DEG[res]
     return (
         f"({res} * {_RES_SHIFT} "
-        f"+ CAST(floor(({lat_sql} + 90) / {e!r}) AS BIGINT) * {_Y_SHIFT} "
+        f"+ CAST(floor(({lat_sql} + 90) / {e!r}) AS BIGINT) * {Y_SHIFT} "
         f"+ CAST(floor(({lon_sql} + 180) / {e!r}) AS BIGINT))"
     )
 
@@ -91,12 +92,12 @@ def parent_expr(cell: Column, steps: int = 1) -> Column:
     """
     res = F.floor(cell / F.lit(_RES_SHIFT)).cast("long")
     rem = cell - res * F.lit(_RES_SHIFT)
-    yi = F.floor(rem / F.lit(_Y_SHIFT)).cast("long")
-    xi = rem - yi * F.lit(_Y_SHIFT)
+    yi = F.floor(rem / F.lit(Y_SHIFT)).cast("long")
+    xi = rem - yi * F.lit(Y_SHIFT)
     k = F.lit(1 << steps).cast("long")
     return (
         (res - F.lit(steps)).cast("long") * F.lit(_RES_SHIFT)
-        + F.floor(yi / k).cast("long") * F.lit(_Y_SHIFT)
+        + F.floor(yi / k).cast("long") * F.lit(Y_SHIFT)
         + F.floor(xi / k).cast("long")
     )
 
@@ -105,8 +106,8 @@ def decode_expr(cell: Column) -> tuple[Column, Column, Column, Column, Column]:
     """(res, yi, xi, center_lat, center_lon) columns from a grid cell id."""
     res = F.floor(cell / F.lit(_RES_SHIFT)).cast("long")
     rem = cell - res * F.lit(_RES_SHIFT)
-    yi = F.floor(rem / F.lit(_Y_SHIFT)).cast("long")
-    xi = rem - yi * F.lit(_Y_SHIFT)
+    yi = F.floor(rem / F.lit(Y_SHIFT)).cast("long")
+    xi = rem - yi * F.lit(Y_SHIFT)
     # edge = 4 / 2^(res-5)  -> pow is fine here, res is small
     edge = F.lit(4.0) / F.pow(F.lit(2.0), (res - F.lit(MIN_RES)).cast("double"))
     clat = (yi.cast("double") + F.lit(0.5)) * edge - F.lit(90.0)
@@ -122,7 +123,7 @@ def cell_id_np(lat: np.ndarray, lon: np.ndarray, res: int) -> np.ndarray:
     e = EDGE_DEG[res]
     yi = np.floor((np.asarray(lat, dtype=np.float64) + 90.0) / e).astype(np.int64)
     xi = np.floor((np.asarray(lon, dtype=np.float64) + 180.0) / e).astype(np.int64)
-    return res * _RES_SHIFT + yi * _Y_SHIFT + xi
+    return res * _RES_SHIFT + yi * Y_SHIFT + xi
 
 
 def cell_bounds_np(cell: np.ndarray) -> tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray]:
@@ -130,8 +131,8 @@ def cell_bounds_np(cell: np.ndarray) -> tuple[np.ndarray, np.ndarray, np.ndarray
     cell = np.asarray(cell, dtype=np.int64)
     res = cell // _RES_SHIFT
     rem = cell - res * _RES_SHIFT
-    yi = rem // _Y_SHIFT
-    xi = rem - yi * _Y_SHIFT
+    yi = rem // Y_SHIFT
+    xi = rem - yi * Y_SHIFT
     edge = 4.0 / np.power(2.0, res - MIN_RES)
     lat0 = yi * edge - 90.0
     lon0 = xi * edge - 180.0
@@ -146,7 +147,7 @@ def cells_in_bbox(lat_min: float, lat_max: float, lon_min: float, lon_max: float
     x0 = int(np.floor((lon_min + 180.0) / e))
     x1 = max(int(np.floor((lon_max + 180.0 - 1e-12) / e)), x0)
     yy, xx = np.meshgrid(np.arange(y0, y1 + 1), np.arange(x0, x1 + 1), indexing="ij")
-    return (res * _RES_SHIFT + yy.ravel() * _Y_SHIFT + xx.ravel()).astype(np.int64)
+    return (res * _RES_SHIFT + yy.ravel() * Y_SHIFT + xx.ravel()).astype(np.int64)
 
 
 # ---------------------------------------------------------------------------

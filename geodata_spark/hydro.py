@@ -15,12 +15,11 @@ The classic DEM pre-analysis pair (ESRI/GRASS ``flowdirection`` /
 - **Watershed labeling** follows the resulting FUNCTIONAL graph (one
   outgoing edge per cell) to its sink by pointer DOUBLING: each round
   root ← root(root) via one self-join, halving the remaining path
-  length, so convergence is O(log max-path-length) rounds — the
-  filter_area discipline (hook + pointer-jump CC, masks.py:188) applied
-  to flow trees, with the same fused convergence probe (the round's
-  single action materializes the checkpoint AND answers "did any
-  pointer move?") and the same hard RuntimeError on non-convergence
-  instead of a silent cap.
+  length, so convergence is O(log max-path-length) rounds.  The rounds
+  run on ``fixpoint.fixpoint`` (one job per round, a hard RuntimeError
+  on non-convergence instead of a silent cap); its exact probe is the
+  sum of each cell's flow-step distance to its current root, which
+  grows exactly when some root moves.
 
 At 100 TB the per-round cost is one equi-join on the packed cell key
 (both sides hash-partitioned the same way) over a table that never
@@ -33,7 +32,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-Y_STEP = 2**27  # packed key stride (filter_area convention, masks.py:223)
+from geodata_spark.cells import Y_SHIFT as Y_STEP  # packed (y, x) key stride
+from geodata_spark.fixpoint import fixpoint
 
 
 def flow_direction_d8(layer: DataFrame, value_col: str = "value") -> DataFrame:
@@ -103,27 +103,25 @@ def watershed(
     Output: (y_idx, x_idx, cell, basin) — ``basin`` is the sink's
     packed key, so sink rows have basin == cell.
     """
+    # _d: flow steps from the cell to its current root; a jump adds the
+    # root's own _d, so sum(_d) grows exactly when some root moves
     d8 = flow_direction_d8(layer, value_col).select(
-        "y_idx", "x_idx", "cell", F.col("parent").alias("root")
+        "y_idx", "x_idx", "cell", F.col("parent").alias("root"),
+        (F.col("parent") != F.col("cell")).cast("long").alias("_d"),
     )
-    cur = d8.localCheckpoint(eager=True)
-    for _ in range(max_iters):
-        hop = cur.select(F.col("cell").alias("_pc"), F.col("root").alias("_pr"))
-        nxt = (
-            cur.join(hop, cur.root == hop._pc)   # total: roots are live cells
-            .select(
-                "y_idx", "x_idx", "cell",
-                F.col("_pr").alias("root"),
-                (F.col("_pr") != F.col("root")).cast("int").alias("_changed"),
-            )
+
+    def jump(cur: DataFrame) -> DataFrame:
+        hop = cur.select(
+            F.col("cell").alias("_pc"), F.col("root").alias("_pr"),
+            F.col("_d").alias("_pd"),
         )
-        nxt = nxt.localCheckpoint(eager=False)
-        # fused probe: this ONE action materializes the checkpoint and
-        # answers convergence (filter_area discipline)
-        changed = nxt.agg(F.max("_changed")).collect()[0][0]
-        cur = nxt.drop("_changed")
-        if not changed:
-            return cur.withColumnRenamed("root", "basin")
-    raise RuntimeError(
-        f"watershed: pointer doubling did not converge in {max_iters} rounds"
+        return cur.join(hop, cur.root == hop._pc).select(  # total: roots are live cells
+            "y_idx", "x_idx", "cell",
+            F.col("_pr").alias("root"), (F.col("_d") + F.col("_pd")).alias("_d"),
+        )
+
+    ws, _ = fixpoint(
+        d8, jump, lambda cur: [F.sum("_d").alias("d")], max_iters,
+        "watershed: pointer doubling",
     )
+    return ws.select("y_idx", "x_idx", "cell", F.col("root").alias("basin"))

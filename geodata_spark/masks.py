@@ -30,6 +30,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from geodata_spark.cells import Y_SHIFT
+from geodata_spark.fixpoint import fixpoint
+
 
 # ---------------------------------------------------------------------------
 # P6 — filter_raster
@@ -207,35 +210,30 @@ def filter_area(
     (2^64 cells), unlike plain min-propagation which the round-2 judge
     flagged as silently capping at diameter 50.  If the fixpoint is
     somehow not reached a ``RuntimeError`` is raised rather than
-    returning a silently-split labeling.  localCheckpoints keep
-    lineage flat across rounds, and the convergence probe is FUSED
-    into the round's checkpoint-materializing aggregation (a
-    ``max(_changed)`` over the same job), so each round launches one
-    job, not a materialize + a count.
+    returning a silently-split labeling.  The rounds run on
+    ``fixpoint.fixpoint`` (one job per round); labels never rise over a
+    fixed row set, so the decimal sum of labels is an exact probe.
 
     The reference reprojects to equal-area and thresholds in km²
     (mask.py:1309-1398); at cell grain the equivalent threshold is a
     cell count (callers convert km² → cells via the area of a cell at
     the region's latitude).
     """
-    key = (F.col(y_col).cast("long") * F.lit(2**27) + F.col(x_col).cast("long")).alias("cell")
+    key = (F.col(y_col).cast("long") * F.lit(Y_SHIFT) + F.col(x_col).cast("long")).alias("cell")
     layer = layer.withColumn("_cc_key", key)
     active = layer.filter(F.col("value") != 0).select(
         F.col("_cc_key").alias("cell"), F.col("_cc_key").alias("label")
     )
-    active = active.localCheckpoint(eager=True)
-    y_step = 2**27
-    converged = False
-    for it in range(max_iters):
-        nbrs = active.select(F.col("cell"), F.col("label"))
+
+    def hook_and_jump(active: DataFrame) -> DataFrame:
         # hook: candidate labels flowing to each neighbor cell + self
         cands = None
-        for d in (0, 1, -1, y_step, -y_step):
-            c = nbrs.select((F.col("cell") + F.lit(d)).alias("cell"), "label")
+        for d in (0, 1, -1, Y_SHIFT, -Y_SHIFT):
+            c = active.select((F.col("cell") + F.lit(d)).alias("cell"), "label")
             cands = c if cands is None else cands.unionByName(c)
         hooked = (
             cands.groupBy("cell").agg(F.min("label").alias("new_label"))
-            .join(active.select("cell", "label"), "cell")  # keep only real cells
+            .join(active, "cell")  # keep only real cells
         )
         # materialize BEFORE the self-join: `parent` below re-reads
         # hooked, and without a checkpoint the 5-way-union/groupBy/join
@@ -247,34 +245,16 @@ def filter_area(
         parent = hooked.select(
             F.col("cell").alias("_pcell"), F.col("new_label").alias("_plabel")
         )
-        jumped = (
-            hooked.join(parent, hooked.new_label == parent._pcell, "left")
-            .select(
-                "cell",
-                "label",
-                F.least(
-                    "new_label", F.coalesce("_plabel", "new_label")
-                ).alias("new_label"),
-            )
+        return hooked.join(parent, hooked.new_label == parent._pcell, "left").select(
+            "cell",
+            F.least("new_label", F.coalesce("_plabel", "new_label")).alias("label"),
         )
-        # LAZY checkpoint + fused convergence probe: the max(_changed)
-        # aggregate below is the round's ONE action — it materializes
-        # the checkpoint (truncating lineage for the next round) and
-        # answers "did any label move?" in the same job, instead of a
-        # separate count() launch per round (round-3 advice)
-        jumped = jumped.withColumn(
-            "_changed", (F.col("new_label") < F.col("label")).cast("int")
-        ).localCheckpoint(eager=False)
-        changed = jumped.agg(F.max("_changed")).first()[0]
-        active = jumped.select("cell", F.col("new_label").alias("label"))
-        if not changed:
-            converged = True
-            break
-    if not converged:
-        raise RuntimeError(
-            f"filter_area: connected components did not converge in "
-            f"{max_iters} rounds — labeling would be silently split"
-        )
+
+    active, _ = fixpoint(
+        active, hook_and_jump,
+        lambda df: [F.sum(F.col("label").cast("decimal(38,0)")).alias("s")],
+        max_iters, "filter_area: connected components",
+    )
     sizes = active.groupBy("label").agg(F.count(F.lit(1)).alias("n"))
     keep = active.join(
         F.broadcast(sizes.filter(F.col("n") >= min_cells).select("label")), "label"

@@ -31,6 +31,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from geodata_spark.fixpoint import fixpoint
 from geodata_spark.pipeline.text import normalize_sql
 
 
@@ -784,7 +785,7 @@ def connected_components(
     contraction — the published MapReduce CC algorithm (Kiveris et
     al., "Connected Components in MapReduce and Beyond", SoCC'14).
     Round count is O(log² n) worst-case and ~log₂(diameter) in
-    practice (a 1000-node path converges in ~6 alternations; pinned by
+    practice (a 1000-node path converges in ~11 alternations; pinned by
     tests/test_pipeline.py), so pathological chain graphs cannot blow
     the round budget the way diameter-bound propagation can.
 
@@ -795,11 +796,10 @@ def connected_components(
     near-dedup actually produces.
 
     Scale shape (both): one-or-two equi-join + min-aggregate rounds,
-    nothing ever holds a component in memory; each round
-    localCheckpoints to keep the plan from growing (the same
-    iterative-convergence discipline as masks.filter_area).  Raises
-    after ``max_iter`` rounds rather than returning a half-converged
-    labelling.
+    nothing ever holds a component in memory; the rounds run on
+    ``fixpoint.fixpoint``, which checkpoints each round in one job to
+    keep the plan from growing and raises after ``max_iter`` rounds
+    rather than returning a half-converged labelling.
     """
     if method == "star":
         return _cc_star(pairs, id_a, id_b, max_iter)
@@ -814,13 +814,8 @@ def connected_components(
         # recomputed by the join in EVERY propagation round
         .localCheckpoint()
     )
-    labels = (
-        edges.select(F.col("src").alias("node"))
-        .distinct()
-        .withColumn("label", F.col("node"))
-        .localCheckpoint()
-    )
-    for _ in range(max_iter):
+
+    def propagate(labels: DataFrame) -> DataFrame:
         nbr = (
             edges.join(
                 labels.select(F.col("node").alias("dst"), F.col("label").alias("_nl")),
@@ -830,25 +825,19 @@ def connected_components(
             .agg(F.min("_nl").alias("_nbl"))
             .withColumnRenamed("src", "node")
         )
-        stepped = (
-            labels.join(nbr, "node", "left")
-            .select(
-                "node",
-                F.least(F.col("label"), F.coalesce(F.col("_nbl"), F.col("label"))).alias("label"),
-                (F.coalesce(F.col("_nbl"), F.col("label")) < F.col("label")).cast("long").alias("_chg"),
-            )
-            # lazy checkpoint; the convergence agg below materializes it
-            # (fused probe — one job per round, r8)
-            .localCheckpoint(eager=False)
+        return labels.join(nbr, "node", "left").select(
+            "node", F.least(F.col("label"), F.col("_nbl")).alias("label")  # least skips NULL
         )
-        changed = stepped.agg(F.sum("_chg")).first()[0] or 0
-        labels = stepped.drop("_chg")
-        if changed == 0:
-            return labels.select("node", F.col("label").alias("component"))
-    raise RuntimeError(
-        f"connected_components did not converge in {max_iter} rounds "
-        "(graph diameter exceeds the bound — raise max_iter)"
+
+    # labels never rise over a fixed node set: the label sum is exact
+    labels, _ = fixpoint(
+        edges.select(F.col("src").alias("node")).distinct().withColumn("label", F.col("node")),
+        propagate,
+        lambda df: [F.sum(F.col("label").cast("decimal(38,0)")).alias("s")],
+        max_iter,
+        "connected_components(hashmin)",
     )
+    return labels.select("node", F.col("label").alias("component"))
 
 
 def _sym(edges: DataFrame) -> DataFrame:
@@ -880,9 +869,7 @@ def _cc_star(pairs: DataFrame, id_a: str, id_b: str, max_iter: int) -> DataFrame
             F.greatest(F.col(id_a), F.col(id_b)).alias("v"),
         )
         .distinct()
-        # lazy: the first action is the initial convergence checksum
-        # below, which materializes the checkpoint in the same job —
-        # one driver round instead of two (r8 fused-probe discipline)
+        # lazy: materialized by the same job as the starting edge set
         .localCheckpoint(eager=False)
     )
     edges = canon.filter(F.col("u") != F.col("v"))
@@ -895,15 +882,14 @@ def _cc_star(pairs: DataFrame, id_a: str, id_b: str, max_iter: int) -> DataFrame
         .distinct()
     )
 
-    def _checksum(e: DataFrame) -> tuple:
-        row = e.agg(
+    def _checksum(e: DataFrame) -> list:
+        return [
             F.count(F.lit(1)).alias("n"),
             # bit_xor: order-free and overflow-free under ANSI mode
             # (edges are distinct, so xor cannot self-cancel a dup)
             F.expr("bit_xor(xxhash64(u, v))").alias("h"),
             F.expr("sum(cast(xxhash64(v, u) as decimal(38, 0)))").alias("h2"),
-        ).first()
-        return (row["n"], row["h"], row["h2"])
+        ]
 
     # NOTE (r8): a window-min rewrite of both stars (min-of-
     # neighborhood attached in one exchange instead of groupBy +
@@ -946,24 +932,10 @@ def _cc_star(pairs: DataFrame, id_a: str, id_b: str, max_iter: int) -> DataFrame
             .distinct()
         )
 
-    prev = _checksum(edges)
-    rounds_used = 0
-    for _ in range(max_iter):
-        # fused probe (the watershed/filter_area discipline): a LAZY
-        # checkpoint whose first action is the convergence checksum —
-        # one job per alternation instead of the round-6 two
-        # (eager checkpoint + separate checksum)
-        edges = _small_star(_large_star(edges)).localCheckpoint(eager=False)
-        rounds_used += 1
-        cur = _checksum(edges)
-        if cur == prev:
-            break
-        prev = cur
-    else:
-        raise RuntimeError(
-            f"connected_components(star) did not converge in {max_iter} "
-            "alternations — raise max_iter"
-        )
+    edges, rounds_used = fixpoint(
+        edges, lambda e: _small_star(_large_star(e)), _checksum, max_iter,
+        "connected_components(star)",
+    )
 
     # at the fixpoint every edge is (root, member); isolated inputs
     # (pairs whose two ids were equal) label themselves

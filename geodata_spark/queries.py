@@ -217,7 +217,6 @@ def q_zone_cover(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_Y_SHIFT = 2**27
 _RES_SHIFT = 2**54
 _ZONE_COVER_SQL = f"""
 WITH centers AS (
@@ -227,7 +226,7 @@ WITH centers AS (
   FROM range(432, 576) y, range(1012, 1264) x
 ),
 cells9 AS (
-  SELECT 9 * {_RES_SHIFT} + yi * {_Y_SHIFT} + xi AS cell_r9, lat, lon FROM centers
+  SELECT 9 * {_RES_SHIFT} + yi * {cells.Y_SHIFT} + xi AS cell_r9, lat, lon FROM centers
 ),
 zoned AS ({zone_membership_sql('cells9')})
 SELECT zone_id,
@@ -377,10 +376,11 @@ WHERE lat BETWEEN nz.lat0 AND nz.lat1 AND lon BETWEEN nz.lon0 AND nz.lon1
 def q_filter_area(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Connected-component area filter (A6): kept-cell table.
 
-    The Spark side iterates min-label propagation to a fixpoint
-    (masks.filter_area); the DuckDB oracle reaches the same fixpoint
-    with a recursive label-propagation CTE — an exact, hash-checked
-    compare of which cells survive the min_cells threshold."""
+    The Spark side runs hook + pointer-jump connected components to a
+    fixpoint (masks.filter_area on fixpoint.fixpoint); the DuckDB
+    oracle reaches the same labelling with a recursive
+    label-propagation CTE — an exact, hash-checked compare of which
+    cells survive the min_cells threshold."""
     from geodata_spark import masks
 
     stacked = _filtered_mask_layers(spark)
@@ -402,9 +402,7 @@ def _filter_area_sql() -> str:
     of the 4-neighbor relation on nonzero cells (packed key ±1, ±2²⁷ —
     identical arithmetic to masks.filter_area), label = min reachable
     key, keep components with ≥ 2 cells."""
-    from geodata_spark import cells as _cells
-
-    y_step = 2**27
+    y_step = cells.Y_SHIFT
     return f"""
 WITH RECURSIVE {mask_layers_sql_cte()},
 {_mask_filter_sql()},
@@ -415,7 +413,7 @@ agg AS (
   FROM filtered
   GROUP BY cell
 ),
-idx AS (SELECT {_cells.cell_sql('lat', 'lon', 9)} AS cell, y, x FROM _mgrid),
+idx AS (SELECT {cells.cell_sql('lat', 'lon', 9)} AS cell, y, x FROM _mgrid),
 nzc AS (
   SELECT CAST(y * {y_step} + x AS BIGINT) AS k, y, x
   FROM idx JOIN agg USING (cell)
@@ -3242,8 +3240,9 @@ FROM v JOIN c
 
 def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Transitive near-dup clustering: MinHash+LSH verified pairs →
-    connected components (hash-min label propagation), each cluster
-    labelled by its smallest doc id.  The DuckDB oracle computes the
+    connected components (star contraction, connected_components'
+    default method, on fixpoint.fixpoint), each cluster labelled by its
+    smallest doc id.  The DuckDB oracle computes the
     same components by a RECURSIVE CTE transitive closure — two
     utterly different algorithms (iterative join fixpoint vs recursive
     set expansion), same labelling."""
@@ -4170,8 +4169,8 @@ def q_watershed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distributed hydrology: D8 flow direction (scatter→gather
     steepest descent, dyadic drop²/dist² argmax — no sqrt, no
     tolerance) + watershed basin labels by pointer DOUBLING
-    (hydro.watershed, O(log path) rounds with the filter_area fused
-    convergence probe).  Oracle: DuckDB recursive CTE walking each
+    (hydro.watershed, O(log path) rounds on fixpoint.fixpoint, one
+    job per round).  Oracle: DuckDB recursive CTE walking each
     cell's flow path to its sink — two different algorithms
     (log-round doubling vs linear recursion), same labels.  Output
     adds per-basin cell counts."""

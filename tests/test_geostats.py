@@ -208,6 +208,10 @@ def test_watershed_pointer_doubling_is_log_rounds(spark):
     labs = {r.x_idx: r.basin for r in ws.collect()}
     assert set(labs.values()) == {0}      # everything drains to x=0
     assert len(labs) == 1000
+    import pytest as _pytest
+
+    with _pytest.raises(RuntimeError, match="did not converge"):
+        watershed(df, max_iters=3)        # the bound raises, never truncates
 
 
 def test_retention_and_lift_semantics(spark):
