@@ -87,8 +87,9 @@ def q_zonal_wavg_hex(spark: SparkSession, sf_dir: str) -> DataFrame:
     # The hex encode runs in one pass over the points, deduplicating
     # coordinates per Arrow batch (corpus geo spans live on the finite
     # 7272-coordinate synth lattice).  Cover res stays 5: the polyfill
-    # cover is already 366k cells there (driver build 7.6s, broadcast
-    # ~6 MB); res 6 is 2.5M cells / 89s build — the boundary-sliver
+    # cover is already 366k cells there (hex7_polyfill ~3.8 s, once
+    # per catalog; a 48 MiB broadcast hash relation per query, on 4
+    # vCPUs); res 6 is 2.5M cells / 89s build — the boundary-sliver
     # win does not pay for 7x cover volume.
     zoned = spatial.join_zones(pts, spark, ZONES, res=5, grain="hex")
     weighted = zoned.withColumn("w", zonal.oracle_area_weight_expr(F.col("lat"))).withColumn(

@@ -22,6 +22,9 @@ reference's per-boundary-pixel geometry_mask test (``mask.py:593-599``).
 
 from __future__ import annotations
 
+import threading
+from collections import OrderedDict
+
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
@@ -105,8 +108,34 @@ def parse_geo_spans(docs: DataFrame, kinds: tuple[str, ...] = ("geo",)) -> DataF
     )
 
 
-_COVER_CACHE: dict[tuple, list] = {}
-_COVER_DF_CACHE: dict[tuple, "DataFrame"] = {}
+# Both cover memos are LRU-bounded at this many entries.  The registry
+# uses two covers per session (grid res 9, hex res 5); the largest,
+# hex res 5 over ZONES, is 366,549 rows: 6.2 MB of planned columns and
+# 39 MB of checkpoint blocks per session.
+COVER_CACHE_LIMIT = 8
+
+# (catalog hash, res, grain) -> planned cover columns
+_COVER_CACHE: OrderedDict[tuple, pd.DataFrame] = OrderedDict()
+# (session id, catalog hash, res, grain) -> checkpointed cover DataFrame.
+# The id is safe as a key: the cached DataFrame keeps its session alive.
+_COVER_DF_CACHE: OrderedDict[tuple, DataFrame] = OrderedDict()
+# join_zones runs from lineage's partition threads: one lock guards
+# both memos, and holding it across a build runs one planner and one
+# checkpoint job per key however many threads ask at once
+_COVER_LOCK = threading.Lock()
+
+
+def _lru_get(cache: OrderedDict, key: tuple):
+    hit = cache.get(key)
+    if hit is not None:
+        cache.move_to_end(key)
+    return hit
+
+
+def _lru_put(cache: OrderedDict, key: tuple, value) -> None:
+    cache[key] = value
+    while len(cache) > COVER_CACHE_LIMIT:
+        cache.popitem(last=False)
 
 
 def _zones_key(zones: dict[str, list[np.ndarray]]) -> str:
@@ -121,29 +150,42 @@ def _zones_key(zones: dict[str, list[np.ndarray]]) -> str:
     return h.hexdigest()
 
 
-def _cover_rows(zones: dict[str, list[np.ndarray]], res: int, grain: str = "grid") -> list:
+def _cover_columns(
+    zones: dict[str, list[np.ndarray]], res: int, grain: str, cell_col: str
+) -> pd.DataFrame:
     """Memoized cover planning: the cover of a zone set at a resolution
     is a deterministic plan artifact (like a prepared statement) —
     real deployments build it once per zone catalog and reuse it across
     every query, so repeated plan builds must not re-run the planner.
     ``grain="hex"`` plans the cover on the aperture-7 hexagonal index
-    (hexgrid.hex7_polyfill — same full/boundary contract)."""
+    (hexgrid.hex7_polyfill — same full/boundary contract).  Rows are
+    per zone in catalog order, full cells then boundary cells, held as
+    three columns.  Call under ``_COVER_LOCK``."""
     key = (_zones_key(zones), res, grain)
-    rows = _COVER_CACHE.get(key)
-    if rows is None:
+    cols = _lru_get(_COVER_CACHE, key)
+    if cols is None:
         if grain == "hex":
             from geodata_spark import hexgrid as HG
 
             cover_fn = lambda rings: HG.hex7_polyfill(rings, res)  # noqa: E731
         else:
             cover_fn = lambda rings: geometry.polygon_cover(rings, res)  # noqa: E731
-        rows = []
+        zids, ids, flags = [], [], []
         for zid, rings in zones.items():
-            full, boundary = cover_fn(rings)
-            rows.extend((zid, int(c), False) for c in full)
-            rows.extend((zid, int(c), True) for c in boundary)
-        _COVER_CACHE[key] = rows
-    return rows
+            for part, boundary in zip(cover_fn(rings), (False, True)):
+                # repeat one str reference; np.full would copy it per row
+                zids.append(np.repeat(np.array([zid], dtype=object), len(part)))
+                ids.append(np.asarray(part, dtype=np.int64))
+                flags.append(np.full(len(part), boundary))
+        cols = pd.DataFrame(
+            {
+                "zone_id": np.concatenate(zids),
+                cell_col: np.concatenate(ids),
+                "boundary": np.concatenate(flags),
+            }
+        )
+        _lru_put(_COVER_CACHE, key, cols)
+    return cols
 
 
 def zone_cover_df(
@@ -159,33 +201,48 @@ def zone_cover_df(
     by cell containment alone; ``boundary=true`` rows require the exact
     PIP test.  ``grain="hex"`` emits ``cell_hex{res}`` hexagonal cells
     (hexgrid.hex7_polyfill) with the identical contract.
+
+    The cover is materialized once per (session, catalog, res, grain):
+    the first call runs one local-checkpoint job, and every later call
+    in that session returns the same DataFrame, whose plan scans the
+    checkpoint (``Scan ExistingRDD``).  A literal ``LocalRelation``
+    instead would be re-optimized and shipped inside the tasks of
+    every query that uses it (366,549 rows for hex res 5).  Memos are
+    LRU-bounded by ``COVER_CACHE_LIMIT``; entries of stopped sessions
+    are dropped.
+
+    Known failure mode: a local checkpoint lives only in the executors'
+    block managers and has no lineage to recompute from.  Losing an
+    executor that holds a cover block fails every later query that
+    uses the cover until the session is restarted.
     """
     zones = zones or ZONES
-    rows = _cover_rows(zones, res, grain)
     cell_col = f"cell_hex{res}" if grain == "hex" else f"cell_r{res}"
-    schema = T.StructType(
-        [
-            T.StructField("zone_id", T.StringType(), False),
-            T.StructField(cell_col, T.LongType(), False),
-            T.StructField("boundary", T.BooleanType(), False),
-        ]
-    )
-    # Arrow path: a cover can be O(10^4) rows; per-tuple Python
-    # serialization in createDataFrame dominated plan-build latency.
-    # The RESULTING DataFrame (a LocalRelation over the static zone
-    # catalog — a plan artifact, not query data) is also memoized per
-    # session: the pandas→Arrow→JVM conversion of a 366k-row hex cover
-    # costs ~0.5 s per query BUILD, paid on every plan construction
-    # without this (the cover rows above were already memoized; the
-    # conversion was not).
-    ckey = (_zones_key(zones), res, grain)
-    hit = _COVER_DF_CACHE.get(ckey)
-    if hit is not None and hit.sparkSession is spark:
-        return hit
-    pdf = pd.DataFrame(rows, columns=["zone_id", cell_col, "boundary"])
-    df = spark.createDataFrame(pdf, schema)
-    _COVER_DF_CACHE[ckey] = df
-    return df
+    key = (id(spark), _zones_key(zones), res, grain)
+    with _COVER_LOCK:
+        # SparkContext.stop() clears _jsc: such a session's blocks are gone
+        for k in [
+            k for k, df in _COVER_DF_CACHE.items()
+            if df.sparkSession.sparkContext._jsc is None
+        ]:
+            del _COVER_DF_CACHE[k]
+        hit = _lru_get(_COVER_DF_CACHE, key)
+        if hit is not None:
+            return hit
+        schema = T.StructType(
+            [
+                T.StructField("zone_id", T.StringType(), False),
+                T.StructField(cell_col, T.LongType(), False),
+                T.StructField("boundary", T.BooleanType(), False),
+            ]
+        )
+        # Arrow path: per-tuple Python serialization in createDataFrame
+        # dominated plan-build latency for covers of O(10^4+) rows
+        df = spark.createDataFrame(
+            _cover_columns(zones, res, grain, cell_col), schema
+        ).localCheckpoint(eager=True)
+        _lru_put(_COVER_DF_CACHE, key, df)
+        return df
 
 
 def pip_udf(spark: SparkSession, zones: dict[str, list[np.ndarray]] | None = None):
