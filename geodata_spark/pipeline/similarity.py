@@ -1,14 +1,26 @@
 """Similarity search over an embedding column (array<float>).
 
-- :func:`brute_force_topk` — exact cosine top-k: broadcast the (small)
-  query set, JVM-side dot products via ``aggregate(zip_with(...))``,
-  ranking window per query.  The correctness baseline.
+Six top-k methods.  Each ranks a query's neighbours by (score desc, id
+asc), and all of them score through one Arrow top-k kernel
+(:func:`_topk_kernel`):
+
+- :func:`brute_force_topk` — exact cosine against every vector.  The
+  correctness baseline.
 - :func:`hyperplane_lsh_topk` — random-hyperplane (SimHash-for-vectors)
-  bucketing: candidates share a sign-pattern prefix; exact cosine only
-  within buckets.  The scale path: candidate count ∝ bucket occupancy,
-  not corpus size.
-- :func:`ivf_topk` — inverted-file: assign every vector to its nearest
-  of C coarse centroids (broadcast), probe the query's top-p cells.
+  bucketing: exact cosine only for candidates that share a sign-pattern
+  bucket.  Candidate count ∝ bucket occupancy, not corpus size.
+- :func:`ivf_topk` — inverted file: assign every vector to its nearest
+  of C coarse centroids, score each query only inside its n_probe
+  nearest cells (:func:`ivf_probe` is the query phase on a stored index).
+- :func:`pq_topk` — product quantization: asymmetric-distance (ADC)
+  scores from a per-query lookup table over compressed codes.
+- :func:`pq_topk_refined` — a PQ shortlist re-ranked by exact dot.
+- :func:`ivfpq_topk` — IVF probe, in-cell ADC shortlist, exact cosine
+  re-rank.
+
+The query matrix, the IVF probe plan and the IVF centroids are
+model-sized and live on the driver; :data:`MAX_QUERIES`,
+:data:`MAX_PROBE_ROWS` and :data:`MAX_CELLS` bound them.
 """
 
 from __future__ import annotations
@@ -19,6 +31,31 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.window import Window
+
+# Row bounds of the driver-side collects.  Each ANN path collects its
+# model-sized side once and ships it to every scorer task: the query
+# matrix (n_queries × dim doubles in each task closure; a brute-force
+# batch scores rows × n_queries at once), the probe plan (which query
+# reads which IVF cell) and the IVF centroids (plan literals in
+# ivf_assign).  A collect above its bound raises ValueError instead of
+# pulling an unbounded table onto the driver.  The bounds sit above
+# every in-repo caller (bench.py's ann_crossover: 256 queries, 16
+# probes of 64 cells).
+MAX_QUERIES = 1024
+MAX_PROBE_ROWS = 65_536
+MAX_CELLS = 4096
+
+
+def _collect_bounded(df: DataFrame, limit: int, what: str) -> list:
+    """``df.collect()``, or ValueError when ``df`` holds more than
+    ``limit`` rows; at most ``limit + 1`` rows reach the driver."""
+    rows = df.limit(limit + 1).collect()
+    if len(rows) > limit:
+        raise ValueError(
+            f"{what}: more than {limit} rows, too many to hold on the "
+            "driver; split the input into smaller batches"
+        )
+    return rows
 
 
 def _dot(a: F.Column, b: F.Column) -> F.Column:
@@ -44,17 +81,16 @@ def cosine(a: F.Column, b: F.Column) -> F.Column:
 
 
 # ---------------------------------------------------------------------------
-# Arrow batch scorer — the per-pair cosine hot path, off the JVM
+# Arrow top-k kernel — the per-pair scoring hot path, off the JVM
 # ---------------------------------------------------------------------------
 # The historical shape computed cosine() per joined row: a higher-order
 # aggregate(zip_with(...)) pair — interpreted, with a per-row array
 # allocation — AND the join itself materialized BOTH 64-dim arrays into
 # every candidate row (≈1 KB/pair; tens of GB at crossover scale)
-# before the projection could reduce them to one double.  The scorer
+# before the projection could reduce them to one double.  The kernel
 # below moves the arithmetic into numpy over whole Arrow batches while
 # the query side rides along as a driver-collected matrix (queries are
-# the broadcast-sized side by contract — the same "model-sized"
-# contract as the PQ query-LUT build).
+# the broadcast-sized side by contract, bounded by MAX_QUERIES).
 #
 # EXACTNESS: every sum is accumulated dimension-by-dimension in the
 # same left-to-right order as the JVM fold (aggregate starts at 0.0 and
@@ -64,13 +100,17 @@ def cosine(a: F.Column, b: F.Column) -> F.Column:
 # BIT-IDENTICAL to the higher-order-function path — the round-6 oracle
 # hashes cannot move.  (A BLAS matmul would be ~10x faster again but
 # uses blocked summation — different ulps, different round-6 ties — so
-# it is deliberately not used.)
+# it is deliberately not used.)  ADC scores add their lookup-table
+# terms j-ascending from zero, the order of the SQL twins' term sums.
 
 
 def _collect_query_matrix(queries: DataFrame, q_id_col: str, q_vec_col: str):
-    """Driver-side (ids, matrix) of the query set (broadcast-sized by
-    contract)."""
-    rows = queries.select(q_id_col, q_vec_col).collect()
+    """Driver-side (ids, matrix) of the query set — the one collect of
+    the query table, bounded by :data:`MAX_QUERIES`."""
+    rows = _collect_bounded(
+        queries.select(q_id_col, q_vec_col), MAX_QUERIES,
+        "query set (similarity.MAX_QUERIES)",
+    )
     qids = np.array([r[0] for r in rows], dtype=np.int64)
     Q = np.array([[float(x) for x in r[1]] for r in rows], dtype=np.float64)
     return qids, Q
@@ -84,130 +124,224 @@ def _seq_sqnorm(V: np.ndarray) -> np.ndarray:
     return acc
 
 
-def _seq_dot(V: np.ndarray, Q: np.ndarray) -> np.ndarray:
-    """(n,dim)·(m,dim)ᵀ accumulated in dimension order (JVM fold
-    order): acc[i,q] += V[i,d]·Q[q,d] for d ascending."""
-    acc = np.zeros((len(V), len(Q)), dtype=np.float64)
+def _seq_dot(V: np.ndarray, Qb: np.ndarray) -> np.ndarray:
+    """(n,dim)·(1|n, m, dim) → (n, m), accumulated in dimension order
+    (JVM fold order): acc[i,q] += V[i,d]·Qb[·,q,d] for d ascending.  A
+    (1, m, dim) ``Qb`` scores every row against m vectors; an
+    (n, 1, dim) one pairs row i with its own vector."""
+    acc = np.zeros((len(V), Qb.shape[1]), dtype=np.float64)
     tmp = np.empty_like(acc)
     for d in range(V.shape[1]):
-        np.multiply(V[:, d : d + 1], Q[None, :, d], out=tmp)
+        np.multiply(V[:, d : d + 1], Qb[:, :, d], out=tmp)
         acc += tmp
     return acc
 
 
 def _list_to_mat(col, n_rows: int) -> np.ndarray:
-    """Arrow list<float|double> column → (n, dim) float64 matrix."""
+    """Arrow list<float|double|int> column → (n, dim) float64 matrix."""
     flat = col.flatten().to_numpy(zero_copy_only=False).astype(np.float64)
     return flat.reshape(n_rows, -1)
 
 
-def _brute_score_fn(qids: np.ndarray, Q: np.ndarray, k: int,
-                    id_field: str, vec_field: str, q_id_field: str):
-    """mapInArrow fn: score every (row, query) pair, emit a per-batch
-    candidate superset of the global top-k.
+# Scorers: ``score(P, qpos)`` → the (rows × queries) score matrix of a
+# block.  ``P`` holds the block's decoded payload rows; ``qpos`` indexes
+# the query matrix — shape (1, m) for m queries against every row,
+# (n, 1) for each row against its own query.
 
-    Pruning is PROVABLY lossless for the (round(cos,6) desc, id asc)
-    final window: a row is dropped only when its raw cosine is more
-    than 2e-6 below the batch's k-th best for that query, which forces
-    its round-6 value strictly below k kept rows' — it cannot reach
-    the global top-k.  The final window (unchanged) does the ranking.
-    """
-    import pyarrow as pa
 
+def _cosine_scorer(Q: np.ndarray):
     qn = np.sqrt(_seq_sqnorm(Q))
 
-    def score(batches):
-        for batch in batches:
-            n = batch.num_rows
-            if n == 0:
-                continue
-            ids = batch.column(id_field).to_numpy(zero_copy_only=False)
-            V = _list_to_mat(batch.column(vec_field), n)
-            vn = np.sqrt(_seq_sqnorm(V))
-            cos = _seq_dot(V, Q)
-            cos /= vn[:, None] * qn[None, :]
-            # self-pair exclusion (query_id != vec_id)
-            cos[ids[:, None] == qids[None, :]] = -np.inf
-            if n > k:
-                kth = np.partition(cos, n - k, axis=0)[n - k]
-                keep = cos >= (kth - 2e-6)
-            else:
-                keep = np.isfinite(cos)
-            keep &= np.isfinite(cos)
-            ri, qi = np.nonzero(keep)
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(qids[qi], type=pa.int64()),
-                    pa.array(ids[ri], type=pa.int64()),
-                    pa.array(cos[ri, qi], type=pa.float64()),
-                ],
-                [q_id_field, id_field, "cosine"],
-            )
+    def score(V, qpos):
+        s = _seq_dot(V, Q[qpos])
+        s /= np.sqrt(_seq_sqnorm(V))[:, None] * qn[qpos]
+        return s
 
     return score
 
 
-def _pair_score_fn(qids: np.ndarray, Q: np.ndarray,
-                   id_field: str, vec_field: str, q_id_field: str,
-                   k_prune: int | None = None, metric: str = "cosine",
-                   out_field: str = "cosine"):
-    """mapInArrow fn for candidate rows (query_id, vec_id, vec):
-    cosine (or raw dot, ``metric="dot"``) against the row's own query
-    vector, same fold order.
+def _dot_scorer(Q: np.ndarray):
+    return lambda V, qpos: _seq_dot(V, Q[qpos])
 
-    With ``k_prune`` set, each batch emits only a per-(batch, query)
-    candidate superset of the top-``k_prune`` (same lossless 2e-6
-    margin as the brute scorer) — the final ranking window then sees
-    tasks·queries·k rows instead of every candidate."""
-    import pyarrow as pa
 
-    qn = np.sqrt(_seq_sqnorm(Q))
+def _adc_scorer(lut: np.ndarray, ksub: int):
+    """ADC over PQ codes: Σ_j lut[q, j·ksub + code_j], j ascending."""
+
+    def score(C, qpos):
+        C = C.astype(np.int64)
+        s = np.zeros((len(C), qpos.shape[1]), dtype=np.float64)
+        for j in range(C.shape[1]):
+            s += lut[qpos, j * ksub + C[:, j : j + 1]]
+        return s
+
+    return score
+
+
+def _adc_lut(Q: np.ndarray, books: list[list[list[float]]]) -> np.ndarray:
+    """(n_queries, m·ksub) ADC lookup table: entry [q, j·ksub + c] =
+    round(Q[q]_j · books[j][c], 6), with Q[q]_j the j-th dsub-slice of
+    the query.  The dot folds d-ascending from 0.0 — the order of
+    Catalyst's ``aggregate(zip_with(...))`` and DuckDB's
+    ``list_sum(list_transform(...))`` — so each entry is bit-identical
+    to the per-row recompute of the SQL twin (the PQ oracle rows pin
+    it)."""
+    dsub = len(books[0][0])
+    raw = np.concatenate(
+        [
+            _seq_dot(Q[:, j * dsub:(j + 1) * dsub],
+                     np.asarray(book, dtype=np.float64)[None])
+            for j, book in enumerate(books)
+        ],
+        axis=1,
+    )
+    return np.array([[round(x, 6) for x in row] for row in raw.tolist()],
+                    dtype=np.float64).reshape(raw.shape)
+
+
+# Splits: ``split(keys)`` → the (rows, qpos) blocks of one batch, from
+# the batch's key column.  Without a split a batch is one block: every
+# row × every query.
+
+
+def _cell_split(probes: dict):
+    """One block per IVF cell: the cell's rows × the queries probing it
+    (``probes`` from :func:`_probe_plan`); unprobed cells are skipped."""
+
+    def split(cells):
+        for c in np.unique(cells):
+            qpos = probes.get(int(c))
+            if qpos is not None:
+                yield np.flatnonzero(cells == c), qpos[None, :]
+
+    return split
+
+
+def _pair_split(qids: np.ndarray):
+    """Candidate rows keyed by query id: every row × its own query.
+    Pruning then runs per query (see :func:`_keep_topk`)."""
     order = np.argsort(qids, kind="stable")
     sorted_qids = qids[order]
 
-    def score(batches):
+    def split(row_qids):
+        yield slice(None), order[np.searchsorted(sorted_qids, row_qids)][:, None]
+
+    return split
+
+
+def _keep_columns(S: np.ndarray, k: int, margin: float) -> np.ndarray:
+    """Entries of S that can still reach their column's top-k: finite
+    and no more than ``margin`` below the column's k-th best."""
+    n = len(S)
+    if n > k:
+        keep = S >= (np.partition(S, n - k, axis=0)[n - k] - margin)
+    else:
+        keep = np.ones(S.shape, dtype=bool)
+    return keep & np.isfinite(S)
+
+
+def _keep_topk(S: np.ndarray, qpos: np.ndarray, k: int,
+               margin: float) -> np.ndarray:
+    """Per-query pruning mask of one scored block."""
+    if qpos.shape[0] == 1:
+        return _keep_columns(S, k, margin)
+    # row-paired block: lay the rows out as (rank within query × query),
+    # −inf padded, so each query's rows form one column
+    order = np.argsort(qpos[:, 0], kind="stable")
+    qs = qpos[order, 0]
+    first = np.r_[True, qs[1:] != qs[:-1]]
+    col = np.cumsum(first) - 1
+    row = np.arange(len(qs)) - np.flatnonzero(first)[col]
+    M = np.full((row.max() + 1, col[-1] + 1), -np.inf)
+    M[row, col] = S[order, 0]
+    keep = np.empty(S.shape, dtype=bool)
+    keep[order, 0] = _keep_columns(M, k, margin)[row, col]
+    return keep
+
+
+def _topk_kernel(qids: np.ndarray, score, k: int, margin: float,
+                 names: list[str], split=None):
+    """mapInArrow fn: each batch's per-query top-k candidate superset.
+
+    Batches carry ``(id, payload)`` columns, or ``(key, id, payload)``
+    with a ``split``; the payload is a list column (vector or PQ codes).
+    Every block of the batch is scored with ``score``; self-pairs
+    (row id == query id) score −inf and are never emitted.
+
+    Pruning is PROVABLY lossless for the final (score desc, id asc)
+    window: a candidate is dropped only when its score is more than
+    ``margin`` below its query's k-th best in the block, so k kept rows
+    rank strictly above it and it cannot reach the global top-k.  The
+    margin is 2e-6 where the window ranks round(score, 6) and 0 where it
+    ranks the raw score.  Emits ``names`` = (query id, id, score).
+    """
+    everyone = np.arange(len(qids))[None, :]
+
+    def run(batches):
+        import pyarrow as pa
+
         for batch in batches:
             n = batch.num_rows
             if n == 0:
                 continue
-            row_qid = batch.column(q_id_field).to_numpy(zero_copy_only=False)
-            ids = batch.column(id_field).to_numpy(zero_copy_only=False)
-            V = _list_to_mat(batch.column(vec_field), n)
-            pos = order[np.searchsorted(sorted_qids, row_qid)]
-            Qr = Q[pos]
-            acc = np.zeros(n, dtype=np.float64)
-            for d in range(V.shape[1]):
-                acc += V[:, d] * Qr[:, d]
-            if metric == "dot":
-                cos = acc
-            else:
-                vn = np.sqrt(_seq_sqnorm(V))
-                cos = acc / (vn * qn[pos])
-            if k_prune is not None:
-                keep = np.zeros(n, dtype=bool)
-                grp = np.argsort(row_qid, kind="stable")
-                bounds = np.flatnonzero(
-                    np.diff(row_qid[grp], prepend=row_qid[grp[0]] - 1)
-                )
-                for s, e in zip(bounds, np.append(bounds[1:], n)):
-                    idx = grp[s:e]
-                    sub = cos[idx]
-                    if len(idx) > k_prune:
-                        kth = np.partition(sub, len(idx) - k_prune)[len(idx) - k_prune]
-                        keep[idx] = sub >= (kth - 2e-6)
-                    else:
-                        keep[idx] = True
-                row_qid, ids, cos = row_qid[keep], ids[keep], cos[keep]
+            cols = batch.columns
+            ids = cols[-2].to_numpy(zero_copy_only=False)
+            P = _list_to_mat(cols[-1], n)
+            blocks = (split(cols[0].to_numpy(zero_copy_only=False)) if split
+                      else [(slice(None), everyone)])
+            out_q, out_i, out_s = [], [], []
+            for rows, qpos in blocks:
+                S = score(P[rows], qpos)
+                bq = np.broadcast_to(qids[qpos], S.shape)
+                bi = ids[rows]
+                S[bi[:, None] == bq] = -np.inf
+                ri, ci = np.nonzero(_keep_topk(S, qpos, k, margin))
+                out_q.append(bq[ri, ci])
+                out_i.append(bi[ri])
+                out_s.append(S[ri, ci])
+            if not out_q:
+                continue
             yield pa.RecordBatch.from_arrays(
                 [
-                    pa.array(row_qid, type=pa.int64()),
-                    pa.array(ids, type=pa.int64()),
-                    pa.array(cos, type=pa.float64()),
+                    pa.array(np.concatenate(out_q), type=pa.int64()),
+                    pa.array(np.concatenate(out_i), type=pa.int64()),
+                    pa.array(np.concatenate(out_s), type=pa.float64()),
                 ],
-                [q_id_field, id_field, out_field],
+                names,
             )
 
-    return score
+    return run
+
+
+def _ann_top_k(src: DataFrame, qids: np.ndarray, score, k: int,
+               q_id_col: str, id_col: str, name: str, *, raw: bool = False,
+               split=None, dedup: bool = False) -> DataFrame:
+    """Score ``src`` through :func:`_topk_kernel`, then keep each
+    query's top-k: ``(q_id_col, rank, id_col, name)`` ranked by
+    (round(score, 6) desc, id asc) — the raw score with ``raw`` —
+    where ``name`` holds the ranked value.  ``dedup`` drops repeated
+    (query, id) candidates before ranking."""
+    schema = T.StructType(
+        [
+            T.StructField(q_id_col, T.LongType()),
+            T.StructField(id_col, T.LongType()),
+            T.StructField("_score", T.DoubleType()),
+        ]
+    )
+    kernel = _topk_kernel(qids, score, k, 0.0 if raw else 2e-6,
+                          schema.names, split)
+    scored = src.mapInArrow(kernel, schema)
+    if dedup:
+        scored = scored.dropDuplicates([q_id_col, id_col])
+    value = F.col("_score") if raw else F.round("_score", 6)
+    w = Window.partitionBy(q_id_col).orderBy(
+        F.col(name).desc(), F.col(id_col).asc()
+    )
+    return (
+        scored.select(q_id_col, id_col, value.alias(name))
+        .withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+        .select(q_id_col, "rank", id_col, name)
+    )
 
 
 def brute_force_topk(
@@ -221,33 +355,19 @@ def brute_force_topk(
 ) -> DataFrame:
     """Exact top-k by cosine; queries ride on the driver (small side).
 
-    One Arrow scan of the vector table (see the batch-scorer block
-    above): the round-2..7 shape — a condition-less broadcast join
-    whose output rows each carried BOTH embeddings, then a per-pair
-    higher-order cosine — materialized ≈1 KB per (vector, query) pair
-    before projecting it down to one double.  The scorer emits only a
+    One Arrow scan of the vector table through the top-k kernel: the
+    round-2..7 shape — a condition-less broadcast join whose output
+    rows each carried BOTH embeddings, then a per-pair higher-order
+    cosine — materialized ≈1 KB per (vector, query) pair before
+    projecting it down to one double.  The kernel emits only a
     provably sufficient per-batch candidate superset; the final
     ranking window is unchanged, and every cosine is bit-identical to
     the old fold (r8: crossover brute 27.8s → ~2s at 100k×256).
     """
     qids, Q = _collect_query_matrix(queries, q_id_col, q_vec_col)
-    schema = T.StructType(
-        [
-            T.StructField(q_id_col, T.LongType()),
-            T.StructField(id_col, T.LongType()),
-            T.StructField("cosine", T.DoubleType()),
-        ]
-    )
-    scored = vectors.select(id_col, vec_col).mapInArrow(
-        _brute_score_fn(qids, Q, k, id_col, vec_col, q_id_col), schema
-    )
-    w = Window.partitionBy(q_id_col).orderBy(
-        F.round(F.col("cosine"), 6).desc(), F.col(id_col).asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(q_id_col, "rank", id_col, F.round("cosine", 6).alias("cosine_r6"))
+    return _ann_top_k(
+        vectors.select(id_col, vec_col), qids, _cosine_scorer(Q), k,
+        q_id_col, id_col, "cosine_r6",
     )
 
 
@@ -330,11 +450,17 @@ def hyperplane_lsh_topk(
     payload-free (this is also where duplicate cross-table collisions
     die, replacing the old post-cosine dropDuplicates), and each
     surviving candidate re-attaches its single vector once for the
-    Arrow batch scorer.  The historical join carried both 64-dim
+    Arrow top-k kernel.  The historical join carried both 64-dim
     arrays through the bucket join and computed an interpreted
     higher-order cosine per pair.  Candidate set, cosines and final
     window are all unchanged bit-for-bit.
+
+    The query set is collected once and bounded by
+    :data:`MAX_QUERIES`; that bound is what keeps the unconditional
+    ``F.broadcast(qx)`` below safe — the probe side holds
+    n_queries × n_tables × (1 + n_planes) rows of three longs.
     """
+    qids, Q = _collect_query_matrix(queries, q_id_col, q_vec_col)
     sigs = hyperplane_multisig_udf(dim, n_planes, n_tables, seed)
     vx = vectors.select(
         F.col(id_col),
@@ -348,9 +474,7 @@ def hyperplane_lsh_topk(
     if n_probe_bits >= 1:
         probes += [F.col("_qsig").bitwiseXOR(F.lit(1 << b)) for b in range(n_planes)]
     qx = qsig.withColumn("_bucket", F.explode(F.array(*probes))).drop("_qsig")
-    # the probe side is model-sized by contract (n_queries × n_tables ×
-    # (1+n_planes) rows of three longs — the same contract that puts
-    # the query matrix in the scorer closure), but its size ESTIMATE
+    # the probe side is model-sized (see above), but its size ESTIMATE
     # flows from the full vector scan, so the planner picks a
     # SortMergeJoin that shuffles AND sorts the corpus-sized bucket
     # side.  Explicit broadcast (guide §3.1) keeps the corpus side
@@ -362,25 +486,10 @@ def hyperplane_lsh_topk(
         .select(q_id_col, id_col)
         .distinct()
     )
-    qids, Q = _collect_query_matrix(queries, q_id_col, q_vec_col)
     withvec = cand.join(vectors.select(id_col, vec_col), id_col)
-    schema = T.StructType(
-        [
-            T.StructField(q_id_col, T.LongType()),
-            T.StructField(id_col, T.LongType()),
-            T.StructField("cosine", T.DoubleType()),
-        ]
-    )
-    scored = withvec.select(q_id_col, id_col, vec_col).mapInArrow(
-        _pair_score_fn(qids, Q, id_col, vec_col, q_id_col, k_prune=k), schema
-    )
-    w = Window.partitionBy(q_id_col).orderBy(
-        F.round(F.col("cosine"), 6).desc(), F.col(id_col).asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(q_id_col, "rank", id_col, F.round("cosine", 6).alias("cosine_r6"))
+    return _ann_top_k(
+        withvec.select(q_id_col, id_col, vec_col), qids, _cosine_scorer(Q),
+        k, q_id_col, id_col, "cosine_r6", split=_pair_split(qids),
     )
 
 
@@ -463,15 +572,16 @@ def ivf_assign(
     vec_col: str = "embedding",
     layout: bool = True,
 ) -> DataFrame:
-    """IVF index build: best cell per vector (broadcast centroids).
+    """IVF index build: best cell per vector (centroids as plan literals).
 
     This is the ONE-TIME cost of the index — at 100 TB it is
     materialized as a cell-partitioned table and amortized over every
     subsequent query batch (bench.py's ann crossover times build and
-    probe separately for exactly this reason).  max_by in one hash
-    aggregation — a ranking window here would sort-shuffle all N×C
-    (vector, centroid) pairs just to keep one row per vector.
-    Ordering key struct(s, -cell) == (cosine desc, cell asc) tie-break.
+    probe separately for exactly this reason).  One projection per row
+    picks the best cell: array_max over (round(cosine, 9), -cell)
+    structs == (cosine desc, cell asc) tie-break — no join, no
+    aggregation, no ranking window.  The centroid table is collected
+    once, bounded by :data:`MAX_CELLS`.
 
     ``layout=True`` (the default) clusters the output by ``cell`` so a
     ``partitionBy("cell")`` write lands ONE file per cell instead of
@@ -496,7 +606,9 @@ def ivf_assign(
     # similarity, and lexicographic array_max over (s, -cell) is
     # exactly the old max_by ordering.
     crows = sorted(
-        ((int(r["cell"]), [float(x) for x in r["cent"]]) for r in cents.collect()),
+        (int(r["cell"]), [float(x) for x in r["cent"]])
+        for r in _collect_bounded(cents, MAX_CELLS,
+                                  "IVF centroids (similarity.MAX_CELLS)")
     )
     cell_ids = [c for c, _ in crows]
     cmat = [cent for _, cent in crows]
@@ -546,6 +658,30 @@ def ivf_assign(
     return out
 
 
+def _probe_plan(queries: DataFrame, cents: DataFrame, n_probe: int,
+                qids: np.ndarray, q_id_col: str, q_vec_col: str) -> dict:
+    """IVF probe plan: ``{cell: sorted positions in qids of the queries
+    probing it}``.  Each query probes its ``n_probe`` nearest cells by
+    (round(cosine, 9) desc, cell asc) — the 9-dp guard of
+    :func:`ivf_assign`.  The plan is collected once, bounded by
+    :data:`MAX_PROBE_ROWS`."""
+    sim = F.round(cosine(F.col(q_vec_col), F.col("cent")), 9).alias("s")
+    w = Window.partitionBy(q_id_col).orderBy(F.col("s").desc(), F.col("cell").asc())
+    plan = (
+        queries.join(F.broadcast(cents))
+        .select(q_id_col, "cell", sim)
+        .withColumn("r", F.row_number().over(w))
+        .filter(F.col("r") <= n_probe)
+        .select(q_id_col, "cell")
+    )
+    qpos = {int(q): i for i, q in enumerate(qids)}
+    by_cell: dict[int, list[int]] = {}
+    for q, c in _collect_bounded(plan, MAX_PROBE_ROWS,
+                                 "IVF probe plan (similarity.MAX_PROBE_ROWS)"):
+        by_cell.setdefault(int(c), []).append(qpos[int(q)])
+    return {c: np.array(sorted(v), dtype=np.int64) for c, v in by_cell.items()}
+
+
 def ivf_probe(
     v_assigned: DataFrame,
     cents: DataFrame,
@@ -564,7 +700,7 @@ def ivf_probe(
     Plan shape (r8, guide §8 co-locate): the probe plan — which query
     reads which cells — is model-sized (n_queries × n_probe rows), so
     it is computed once and carried to the index scan inside the Arrow
-    scorer's closure instead of being joined: the historical
+    kernel's closure instead of being joined: the historical
     q_probes ⋈ v_assigned fan-out copied each indexed vector once per
     probing query (and then ran an interpreted per-pair cosine).  Now
     the index is scanned ONCE; each batch scores its rows against
@@ -573,76 +709,8 @@ def ivf_probe(
     are bit-identical to the join form (the ``ann_ivf_topk`` oracle
     row pins it).
     """
-    qa = queries.join(F.broadcast(cents))
-    sim_qc = F.round(cosine(F.col(q_vec_col), F.col("cent")), 9).alias("s")
-    wq = Window.partitionBy(q_id_col).orderBy(F.col("s").desc(), F.col("cell").asc())
-    q_probes = (
-        qa.select(q_id_col, "cell", sim_qc)
-        .withColumn("r", F.row_number().over(wq))
-        .filter(F.col("r") <= n_probe)
-        .select(q_id_col, "cell")
-    )
     qids, Q = _collect_query_matrix(queries, q_id_col, q_vec_col)
-    qpos = {int(q): i for i, q in enumerate(qids)}
-    cell_to_q: dict[int, list[int]] = {}
-    for r in q_probes.collect():
-        cell_to_q.setdefault(int(r["cell"]), []).append(qpos[int(r[q_id_col])])
-    cell_probe_idx = {c: np.array(sorted(v), dtype=np.int64)
-                      for c, v in cell_to_q.items()}
-    qn = np.sqrt(_seq_sqnorm(Q))
-
-    def score(batches):
-        import pyarrow as pa
-
-        for batch in batches:
-            n = batch.num_rows
-            if n == 0:
-                continue
-            cells_np = batch.column("cell").to_numpy(zero_copy_only=False)
-            ids = batch.column(id_col).to_numpy(zero_copy_only=False)
-            V = _list_to_mat(batch.column(vec_col), n)
-            vn = np.sqrt(_seq_sqnorm(V))
-            out_q: list[np.ndarray] = []
-            out_i: list[np.ndarray] = []
-            out_c: list[np.ndarray] = []
-            for c in np.unique(cells_np):
-                probe = cell_probe_idx.get(int(c))
-                if probe is None:
-                    continue
-                m = cells_np == c
-                Vc, vnc, idc = V[m], vn[m], ids[m]
-                cos = _seq_dot(Vc, Q[probe])
-                cos /= vnc[:, None] * qn[probe][None, :]
-                cos[idc[:, None] == qids[probe][None, :]] = -np.inf
-                nc = len(idc)
-                if nc > k:
-                    kth = np.partition(cos, nc - k, axis=0)[nc - k]
-                    keep = cos >= (kth - 2e-6)
-                else:
-                    keep = np.ones_like(cos, dtype=bool)
-                keep &= np.isfinite(cos)
-                ri, qi = np.nonzero(keep)
-                out_q.append(qids[probe][qi])
-                out_i.append(idc[ri])
-                out_c.append(cos[ri, qi])
-            if not out_q:
-                continue
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(np.concatenate(out_q), type=pa.int64()),
-                    pa.array(np.concatenate(out_i), type=pa.int64()),
-                    pa.array(np.concatenate(out_c), type=pa.float64()),
-                ],
-                [q_id_col, id_col, "cosine"],
-            )
-
-    schema = T.StructType(
-        [
-            T.StructField(q_id_col, T.LongType()),
-            T.StructField(id_col, T.LongType()),
-            T.StructField("cosine", T.DoubleType()),
-        ]
-    )
+    probes = _probe_plan(queries, cents, n_probe, qids, q_id_col, q_vec_col)
     # scan-level cell pruning: the probed-cell union is driver-known,
     # so it pushes down as a partition filter on a cell-partitioned
     # index table — at scale a query batch reads n_probe/n_cells of
@@ -651,25 +719,15 @@ def ivf_probe(
     # prune_scan=False for a COMPUTED assignment (ivf_topk end-to-end):
     # there the filter would be pushed into the defining projection and
     # re-evaluate the whole array_max(choices) expression per row — the
-    # same duplicated-evaluation class the scorer exists to avoid
-    # (measured 2x on ivf_full, r8); the Python-side probe map already
-    # skips unprobed cells.
+    # same duplicated-evaluation class the kernel exists to avoid
+    # (measured 2x on ivf_full, r8); the cell split already skips
+    # unprobed cells.
     src = v_assigned
     if prune_scan:
-        probed_cells = sorted(int(c) for c in cell_probe_idx)
-        src = src.filter(F.col("cell").isin(probed_cells))
-    scored = (
-        src.select("cell", id_col, vec_col)
-        .mapInArrow(score, schema)
-        .dropDuplicates([q_id_col, id_col])
-    )
-    w = Window.partitionBy(q_id_col).orderBy(
-        F.round(F.col("cosine"), 6).desc(), F.col(id_col).asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(q_id_col, "rank", id_col, F.round("cosine", 6).alias("cosine_r6"))
+        src = src.filter(F.col("cell").isin(sorted(probes)))
+    return _ann_top_k(
+        src.select("cell", id_col, vec_col), qids, _cosine_scorer(Q), k,
+        q_id_col, id_col, "cosine_r6", split=_cell_split(probes), dedup=True,
     )
 
 
@@ -963,103 +1021,37 @@ def pq_topk(
     table (m·ksub doubles) is precomputed ONCE, so the corpus-side
     scan does m array lookups + m−1 adds per row, zero multiplies.
 
-    The LUT is built driver-side (queries are by definition the small
-    broadcast side; nq·m·ksub doubles is model-sized) with a strictly
-    SEQUENTIAL fold — the same product-then-accumulate order as
-    Catalyst's ``aggregate(zip_with(...))`` and DuckDB's
-    ``list_sum(list_transform(...))`` — so each LUT entry is
+    The LUT is built driver-side (:func:`_adc_lut`; queries are by
+    definition the small broadcast side, nq·m·ksub doubles is
+    model-sized) with a strictly SEQUENTIAL fold, so each LUT entry is
     bit-identical to the per-row recompute the SQL twin performs, and
     the fixed left-associated sum of 6-dp terms keeps the final score
     exact cross-engine.  Data motion: ONE scan of the (id, codes)
-    table joined to the broadcast LUT rows."""
-    m = len(books)
-    dsub = len(books[0][0])
+    table; the LUT matrix rides in the Arrow kernel's closure."""
+    qids, Q = _collect_query_matrix(queries, q_id_col, q_vec_col)
+    return _pq_top_k(codes, qids, _adc_lut(Q, books), len(books[0]), k,
+                     q_id_col)
 
-    def seq_dot(a, b) -> float:
-        s = 0.0
-        for x, y in zip(a, b):
-            s += float(x) * float(y)
-        return s
 
-    # ONE FLAT array per query (index j·ksub + code): a single-level
-    # element_at per subspace in codegen — the nested
-    # array<array<double>> form measured 3.5x slower than brute force
-    # at 25.6M join rows (two-level GenericArrayData access per term)
-    ksub = len(books[0])
-    lut_rows = []
-    for r in queries.select(q_id_col, q_vec_col).collect():
-        qv = [float(x) for x in r[1]]
-        lut = [
-            round(seq_dot(qv[j * dsub:(j + 1) * dsub], cent), 6)
-            for j in range(m)
-            for cent in books[j]
-        ]
-        lut_rows.append((r[0], lut))
+def _pq_top_k(codes: DataFrame, qids: np.ndarray, lut: np.ndarray,
+              ksub: int, k: int, q_id_col: str) -> DataFrame:
+    """ADC top-k of :func:`pq_topk` for a built LUT.
 
-    # Arrow gather scorer over ONE pass of the code table (r8): the
-    # round-7 shape — a condition-less broadcast join of the LUT rows —
-    # copied every query's full LUT array (m·ksub doubles) into every
-    # fan-out row (≈2 KB × n·nq) before the element_at chain reduced it
-    # to one double.  Here the LUT matrix rides in the task closure and
-    # each batch gathers LUT[q, j·ksub + code_j] for all queries at
-    # once, accumulating over j in the SAME order as the element_at
-    # chain (term j=0 first), so every adc_r6 is bit-identical; the
-    # per-batch pruning keeps exactly the rows with score ≥ the batch's
-    # k-th best per query — nothing ranked above them exists outside
-    # that set, so the final window (unchanged) returns the same rows.
-    import pyarrow as pa
-
-    lut_mat = np.array([lut for _, lut in lut_rows], dtype=np.float64)
-    lut_qids = np.array([qid for qid, _ in lut_rows], dtype=np.int64)
-
-    def score_fn(batches):
-        for batch in batches:
-            n = batch.num_rows
-            if n == 0:
-                continue
-            ids = batch.column("id").to_numpy(zero_copy_only=False)
-            C = _list_to_mat(batch.column("codes"), n).astype(np.int64)
-            acc = np.zeros((n, len(lut_qids)), dtype=np.float64)
-            for j in range(m):
-                acc += lut_mat[:, j * ksub + C[:, j]].T
-            acc[ids[:, None] == lut_qids[None, :]] = -np.inf
-            if n > k:
-                kth = np.partition(acc, n - k, axis=0)[n - k]
-                keep = acc >= kth
-            else:
-                keep = np.isfinite(acc)
-            keep &= np.isfinite(acc)
-            ri, qi = np.nonzero(keep)
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(lut_qids[qi], type=pa.int64()),
-                    pa.array(ids[ri], type=pa.int64()),
-                    pa.array(acc[ri, qi], type=pa.float64()),
-                ],
-                [q_id_col, "vec_id", "adc_r6"],
-            )
-
-    schema = T.StructType(
-        [
-            T.StructField(q_id_col, T.LongType()),
-            T.StructField("vec_id", T.LongType()),
-            T.StructField("adc_r6", T.DoubleType()),
-        ]
-    )
-    w = Window.partitionBy(q_id_col).orderBy(
-        F.col("adc_r6").desc(), F.col("vec_id").asc()
-    )
+    One pass of the code table through the Arrow kernel, with the LUT
+    matrix in the task closure: a broadcast join of the LUT rows would
+    copy every query's m·ksub doubles into every (code row × query)
+    fan-out row (≈2 KB × n·nq).  Each batch gathers
+    LUT[q, j·ksub + code_j] for all queries at once, adding terms
+    j-ascending like the SQL twin's term sum, so every adc_r6 is
+    bit-identical; pruning keeps the rows with score ≥ the batch's
+    k-th best per query (margin 0: the window ranks the raw score)."""
     # the code table is tiny BY DESIGN (that is the compression), so
     # maxPartitionBytes gives its scan ~1 split; repartition to the
-    # session's parallelism so the batch scorer runs wide.
+    # session's parallelism so the kernel runs wide.
     par = codes.sparkSession.sparkContext.defaultParallelism
-    return (
-        codes.repartition(par)
-        .select("id", "codes")
-        .mapInArrow(score_fn, schema)
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(q_id_col, "rank", "vec_id", "adc_r6")
+    return _ann_top_k(
+        codes.repartition(par).select("id", "codes"), qids,
+        _adc_scorer(lut, ksub), k, q_id_col, "vec_id", "adc_r6", raw=True,
     )
 
 
@@ -1088,40 +1080,21 @@ def pq_topk_refined(
     back to the vector table — at 100 TB that is an id-keyed point
     lookup into the (bucketed/partitioned) embedding store, never a
     second corpus scan."""
-    short = pq_topk(codes, books, queries, k=shortlist,
-                    q_id_col=q_id_col, q_vec_col=q_vec_col)
-    # exact re-rank via the Arrow pair scorer (r8): the shortlist rows
+    qids, Q = _collect_query_matrix(queries, q_id_col, q_vec_col)
+    short = _pq_top_k(codes, qids, _adc_lut(Q, books), len(books[0]),
+                      shortlist, q_id_col)
+    # exact re-rank via the Arrow kernel (r8): the shortlist rows
     # attach their single raw vector once; the query matrix rides in
     # the closure instead of a broadcast join copying q_vec into every
     # row.  Raw dots are bit-identical to the old per-pair fold; the
     # same round(·, 6) is applied JVM-side before the same window.
-    qids, Q = _collect_query_matrix(queries, q_id_col, q_vec_col)
-    schema = T.StructType(
-        [
-            T.StructField(q_id_col, T.LongType()),
-            T.StructField("vec_id", T.LongType()),
-            T.StructField("dot", T.DoubleType()),
-        ]
-    )
-    exact = (
+    cand = (
         short.select(q_id_col, "vec_id")
         .join(vecs.select(F.col(id_col).alias("vec_id"), vec_col), "vec_id")
         .select(q_id_col, "vec_id", vec_col)
-        .mapInArrow(
-            _pair_score_fn(qids, Q, "vec_id", vec_col, q_id_col,
-                           k_prune=k, metric="dot", out_field="dot"),
-            schema,
-        )
-        .select(q_id_col, "vec_id", F.round(F.col("dot"), 6).alias("dot_r6"))
     )
-    w = Window.partitionBy(q_id_col).orderBy(
-        F.col("dot_r6").desc(), F.col("vec_id").asc()
-    )
-    return (
-        exact.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(q_id_col, "rank", "vec_id", "dot_r6")
-    )
+    return _ann_top_k(cand, qids, _dot_scorer(Q), k, q_id_col, "vec_id",
+                      "dot_r6", split=_pair_split(qids))
 
 
 def ivfpq_topk(
@@ -1152,152 +1125,41 @@ def ivfpq_topk(
     Inputs are the two independently-built indexes (``ivf_assign``'s
     (id, cell) table and :func:`pq_train_encode`'s (id, codes) table)
     plus the raw vector store for the refine pass."""
-    qa = queries.join(F.broadcast(cents))
-    sim_qc = F.round(cosine(F.col(q_vec_col), F.col("cent")), 9).alias("s")
-    wq = Window.partitionBy(q_id_col).orderBy(
-        F.col("s").desc(), F.col("cell").asc()
-    )
-    q_probes = (
-        qa.select(q_id_col, q_vec_col, "cell", sim_qc)
-        .withColumn("r", F.row_number().over(wq))
-        .filter(F.col("r") <= n_probe)
-        .select(q_id_col, "cell")
-    )
-    cell_codes = v_assigned.select(
-        F.col(id_col).alias("id"), "cell"
-    ).join(codes, "id")
-
-    m = len(books)
-    ksub = len(books[0])
-    dsub = len(books[0][0])
-    spark = codes.sparkSession
-
-    def seq_dot(a, b) -> float:
-        s = 0.0
-        for x, y in zip(a, b):
-            s += float(x) * float(y)
-        return s
-
-    lut_rows = []
-    for r in queries.select(q_id_col, q_vec_col).collect():
-        qv = [float(x) for x in r[1]]
-        lut_rows.append((r[0], [
-            round(seq_dot(qv[j * dsub:(j + 1) * dsub], cent), 6)
-            for j in range(m) for cent in books[j]
-        ]))
-    # ADC over the probed cells via the co-locate Arrow scorer (r8):
+    qids, Q = _collect_query_matrix(queries, q_id_col, q_vec_col)
+    probes = _probe_plan(queries, cents, n_probe, qids, q_id_col, q_vec_col)
+    # ADC over the probed cells via the Arrow kernel's cell split (r8):
     # the probe plan (which query reads which cells) and the LUT matrix
     # are both model-sized and ride in the task closure — the round-7
     # broadcast join copied every query's full LUT array into every
     # (code-row × probing-query) fan-out row.  Scores accumulate the
     # LUT terms in the same j-ascending order as the element_at chain,
     # so the shortlist (and therefore the refined result) is identical.
-    import pyarrow as pa
-
-    lut_mat = np.array([lut for _, lut in lut_rows], dtype=np.float64)
-    lut_qids = np.array([qid for qid, _ in lut_rows], dtype=np.int64)
-    qpos = {int(q): i for i, q in enumerate(lut_qids)}
-    cell_to_q: dict[int, list[int]] = {}
-    for r in q_probes.collect():
-        cell_to_q.setdefault(int(r["cell"]), []).append(qpos[int(r[q_id_col])])
-    cell_probe_idx = {c: np.array(sorted(v), dtype=np.int64)
-                      for c, v in cell_to_q.items()}
-
-    def adc_fn(batches):
-        for batch in batches:
-            n = batch.num_rows
-            if n == 0:
-                continue
-            cells_np = batch.column("cell").to_numpy(zero_copy_only=False)
-            ids = batch.column("id").to_numpy(zero_copy_only=False)
-            C = _list_to_mat(batch.column("codes"), n).astype(np.int64)
-            out_q, out_i, out_s = [], [], []
-            for c in np.unique(cells_np):
-                probe = cell_probe_idx.get(int(c))
-                if probe is None:
-                    continue
-                mask = cells_np == c
-                Cc, idc = C[mask], ids[mask]
-                acc = np.zeros((len(idc), len(probe)), dtype=np.float64)
-                sub_lut = lut_mat[probe]
-                for j in range(m):
-                    acc += sub_lut[:, j * ksub + Cc[:, j]].T
-                acc[idc[:, None] == lut_qids[probe][None, :]] = -np.inf
-                nc = len(idc)
-                if nc > shortlist:
-                    kth = np.partition(acc, nc - shortlist, axis=0)[nc - shortlist]
-                    keep = acc >= kth
-                else:
-                    keep = np.isfinite(acc)
-                keep &= np.isfinite(acc)
-                ri, qi = np.nonzero(keep)
-                out_q.append(lut_qids[probe][qi])
-                out_i.append(idc[ri])
-                out_s.append(acc[ri, qi])
-            if not out_q:
-                continue
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(np.concatenate(out_q), type=pa.int64()),
-                    pa.array(np.concatenate(out_i), type=pa.int64()),
-                    pa.array(np.concatenate(out_s), type=pa.float64()),
-                ],
-                [q_id_col, "vec_id", "adc"],
-            )
-
-    adc_schema = T.StructType(
-        [
-            T.StructField(q_id_col, T.LongType()),
-            T.StructField("vec_id", T.LongType()),
-            T.StructField("adc", T.DoubleType()),
-        ]
-    )
-    par = codes.sparkSession.sparkContext.defaultParallelism
-    w_short = Window.partitionBy(q_id_col).orderBy(
-        F.col("adc").desc(), F.col("vec_id").asc()
-    )
-    # scan-level cell pruning (same as ivf_probe): only the probed
+    # Scan-level cell pruning (same as ivf_probe): only the probed
     # cells' codes are read/shuffled; unprobed cells contribute no
-    # candidates either way
-    probed_cells = sorted(int(c) for c in cell_probe_idx)
-    short = (
-        cell_codes.filter(F.col("cell").isin(probed_cells))
+    # candidates either way.
+    par = codes.sparkSession.sparkContext.defaultParallelism
+    cell_codes = (
+        v_assigned.select(F.col(id_col).alias("id"), "cell")
+        .join(codes, "id")
+        .filter(F.col("cell").isin(sorted(probes)))
         .repartition(par, "cell")
         .select("cell", "id", "codes")
-        .mapInArrow(adc_fn, adc_schema)
-        .withColumn("r", F.row_number().over(w_short))
-        .filter(F.col("r") <= shortlist)
-        .select(q_id_col, "vec_id")
     )
-    # exact re-rank of the shortlist via the cosine pair scorer — the
-    # same Arrow path as pq_topk_refined, bit-identical to the old
-    # per-pair higher-order cosine
-    qids_m, Q = _collect_query_matrix(queries, q_id_col, q_vec_col)
-    ref_schema = T.StructType(
-        [
-            T.StructField(q_id_col, T.LongType()),
-            T.StructField("vec_id", T.LongType()),
-            T.StructField("cosine", T.DoubleType()),
-        ]
-    )
-    w = Window.partitionBy(q_id_col).orderBy(
-        F.col("cosine_r6").desc(), F.col("vec_id").asc()
-    )
-    return (
+    short = _ann_top_k(
+        cell_codes, qids, _adc_scorer(_adc_lut(Q, books), len(books[0])),
+        shortlist, q_id_col, "vec_id", "adc", raw=True,
+        split=_cell_split(probes),
+    ).select(q_id_col, "vec_id")
+    # exact re-rank of the shortlist via the kernel's pair split — the
+    # same path as pq_topk_refined, bit-identical to the old per-pair
+    # higher-order cosine
+    cand = (
         short.join(vecs.select(F.col(id_col).alias("vec_id"), vec_col),
                    "vec_id")
         .select(q_id_col, "vec_id", vec_col)
-        .mapInArrow(
-            _pair_score_fn(qids_m, Q, "vec_id", vec_col, q_id_col,
-                           k_prune=k),
-            ref_schema,
-        )
-        .select(q_id_col, "vec_id",
-                F.round(F.col("cosine"), 6).alias("cosine_r6"))
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(q_id_col, "rank", "vec_id", "cosine_r6")
     )
+    return _ann_top_k(cand, qids, _cosine_scorer(Q), k, q_id_col, "vec_id",
+                      "cosine_r6", split=_pair_split(qids))
 
 
 def _pq_sql_parts(
