@@ -2,27 +2,69 @@
 (``hydro.watershed``, ``masks.filter_area``, both methods of
 ``pipeline.dedup.connected_components``).
 
-Each round materializes the new state in ONE Spark job: the probe's
-aggregates ride on the eager local checkpoint as ``Observation``
-metrics, so no second action reads convergence (a global
-``agg(...).first()`` is a job of its own under AQE), and the checkpoint
-keeps the plan from growing with the round count.  The loop stops when
-the probe returns the same value twice in a row, so a probe must change
-whenever the state changes: an exact measure, not a hash that could
-collide.
+Every call first materializes the starting state in ONE Spark job (an
+eager local checkpoint; the probe's aggregates and the row count ride
+on it as ``Observation`` metrics, so reading them is no second action).
+Then it takes one of two paths:
+
+- **Driver finish** (a ``local_step`` is given and the state has at most
+  :data:`LOCAL_MAX_ROWS` rows): collect the checkpointed state once with
+  ``toArrow()``, run the same rounds in numpy, and return the result as
+  a locally checkpointed DataFrame (lazy: the first job that reads it
+  writes the blocks).  Two jobs in all (start, collect), whatever the
+  round count; downstream plans read checkpointed blocks, never a
+  ``LocalRelation`` of literal rows.
+- **Distributed rounds** (above the bound, or no ``local_step``): each
+  round materializes the new state in one job, probe included (a
+  global ``agg(...).first()`` would be a job of its own under AQE), and
+  the checkpoint keeps the plan from growing with the round count.
+
+Both paths stop when a round leaves the state unchanged and raise the
+same ``"<what> did not converge in N rounds"`` error after ``max_iter``
+rounds; they count rounds the same way, the unchanged one included.
+The distributed path reads "unchanged" off the probe, which must
+therefore change whenever the state changes: an exact measure, not a
+hash that could collide.  The driver path compares the numpy columns.
+
+The bound: each distributed round is a few Spark jobs of fixed
+scheduling and checkpoint cost plus its join, so on small states the
+rounds are almost all overhead.  Measured on a 4-core host (local[4],
+``hydro.watershed`` on a one-row ramp DEM of n cells, about log2 n
+pointer-doubling rounds; time after the shared D8 stage, driver finish
+vs distributed rounds): 1k cells 0.4 vs 1.5 s, 10k 0.4 vs 2.8 s, 100k
+0.5 vs 6.9 s, 1M 3.4 vs 41.8 s.  There is no crossover up to 1M rows:
+the driver finish wins at every size, so the bound is set by driver
+memory, not speed.  The finishes hold 120–300 B per row of numpy and
+Arrow buffers on the driver (each caller states its own figure), so at
+most ~300 MB at the bound.
 """
 
 from __future__ import annotations
 
-from typing import Callable, Sequence
+from typing import Callable, Iterator, Sequence
 
+import numpy as np
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame, Observation
+from pyspark.sql import functions as F
+
+# States with at most this many rows finish on the driver (see above).
+LOCAL_MAX_ROWS = 1_000_000
+
+Columns = dict[str, np.ndarray]
+LocalStep = Callable[[Columns], Iterator[Columns]]
 
 
 def _materialize(df: DataFrame, probe: Callable[[DataFrame], Sequence[Column]]):
     obs = Observation()
-    df = df.observe(obs, *probe(df)).localCheckpoint(eager=True)
+    df = df.observe(
+        obs, F.count(F.lit(1)).alias("_fixpoint_rows"), *probe(df)
+    ).localCheckpoint(eager=True)
     return df, obs.get
+
+
+def _not_converged(what: str, max_iter: int) -> RuntimeError:
+    return RuntimeError(f"{what} did not converge in {max_iter} rounds")
 
 
 def fixpoint(
@@ -31,15 +73,105 @@ def fixpoint(
     probe: Callable[[DataFrame], Sequence[Column]],
     max_iter: int,
     what: str,
+    local_step: LocalStep | None = None,
 ) -> tuple[DataFrame, int]:
     """Apply ``step`` until ``probe`` (named aggregate Columns over the
     state) gives the same values twice in a row; return the checkpointed
     state and the rounds run, the last (unchanged) one included.  Raises
-    rather than return a half-converged state."""
-    state, seen = _materialize(state, probe)
+    rather than return a half-converged state.
+
+    ``local_step`` is the same round on the driver: given the starting
+    state as numpy columns, it yields the state after each round (same
+    columns, rows in a stable order).  Its jobs are labelled
+    ``fixpoint:<what> round N`` / ``fixpoint:<what> local``; the
+    caller's job description is restored on exit."""
+    sc = state.sparkSession.sparkContext
+    caller = sc.getLocalProperty("spark.job.description")
+    try:
+        sc.setJobDescription(f"fixpoint:{what} round 0")
+        state, seen = _materialize(state, probe)
+        if local_step is not None and seen["_fixpoint_rows"] <= LOCAL_MAX_ROWS:
+            sc.setJobDescription(f"fixpoint:{what} local")
+            return _finish_local(state, local_step, max_iter, what)
+        for rounds in range(1, max_iter + 1):
+            sc.setJobDescription(f"fixpoint:{what} round {rounds}")
+            state, value = _materialize(step(state), probe)
+            if value == seen:
+                return state, rounds
+            seen = value
+        raise _not_converged(what, max_iter)
+    finally:
+        sc.setLocalProperty("spark.job.description", caller)
+
+
+def _finish_local(
+    state: DataFrame, local_step: LocalStep, max_iter: int, what: str
+) -> tuple[DataFrame, int]:
+    table = state.toArrow()
+    cur = {name: table.column(name).to_numpy() for name in table.column_names}
+    states = local_step(cur)
     for rounds in range(1, max_iter + 1):
-        state, value = _materialize(step(state), probe)
-        if value == seen:
-            return state, rounds
-        seen = value
-    raise RuntimeError(f"{what} did not converge in {max_iter} rounds")
+        nxt = next(states)
+        if all(np.array_equal(nxt[name], cur[name]) for name in cur):
+            out = pa.Table.from_arrays(
+                [pa.array(nxt[f.name], type=f.type) for f in table.schema],
+                schema=table.schema,
+            )
+            # lazy: the first job that reads the result writes its blocks,
+            # so an eager checkpoint would only add a job
+            spark = state.sparkSession
+            return spark.createDataFrame(out, state.schema).localCheckpoint(eager=False), rounds
+        cur = nxt
+    raise _not_converged(what, max_iter)
+
+
+def lookup(keys: np.ndarray, values: np.ndarray) -> np.ndarray:
+    """Row of each of ``values`` in the distinct ``keys``; -1 where absent.
+    One argsort of ``keys``, one searchsorted."""
+    if len(keys) == 0:
+        return np.full(len(values), -1, dtype=np.int64)
+    order = np.argsort(keys, kind="stable")
+    at = np.minimum(np.searchsorted(keys, values, sorter=order), len(keys) - 1)
+    rows = order[at]
+    return np.where(keys[rows] == values, rows, -1)
+
+
+def min_label_rounds(
+    key: np.ndarray,
+    label: np.ndarray,
+    src: np.ndarray,
+    dst: np.ndarray,
+    jump: bool,
+) -> Iterator[np.ndarray]:
+    """Min-label propagation on the driver, one yield per round.
+
+    Rows are nodes with distinct ``key``s; ``label`` holds keys of rows;
+    ``(src, dst)`` are row pairs of an undirected edge list.  A round:
+    every node hooks to the least label in its closed neighbourhood, then
+    with ``jump`` shortcuts once, label ← min(label, label(label)).  Yields
+    the label column (keys, row order kept) after each round, forever.
+    """
+    n = len(key)
+    if n == 0:
+        while True:
+            yield label
+    # work in rank space: ranks order like keys, so min over ranks is min
+    # over keys, and a label's rank indexes its node directly
+    order = np.argsort(key, kind="stable")
+    ranked = key[order]
+    rank = np.empty(n, dtype=np.int64)
+    rank[order] = np.arange(n)
+    lab = np.searchsorted(ranked, label)[order]
+    # closed neighbourhoods, grouped by the hearing node: each rank hears
+    # itself first, so every reduceat segment is non-empty
+    own = np.arange(n)
+    hearer = np.concatenate([own, rank[src], rank[dst]])
+    heard = np.concatenate([own, rank[dst], rank[src]])
+    by_hearer = np.argsort(hearer, kind="stable")
+    heard = heard[by_hearer]
+    starts = np.searchsorted(hearer[by_hearer], own)
+    while True:
+        lab = np.minimum.reduceat(lab[heard], starts)
+        if jump:
+            lab = np.minimum(lab, lab[lab])
+        yield ranked[lab[rank]]

@@ -14,17 +14,21 @@ The classic DEM pre-analysis pair (ESRI/GRASS ``flowdirection`` /
 
 - **Watershed labeling** follows the resulting FUNCTIONAL graph (one
   outgoing edge per cell) to its sink by pointer DOUBLING: each round
-  root ← root(root) via one self-join, halving the remaining path
-  length, so convergence is O(log max-path-length) rounds.  The rounds
-  run on ``fixpoint.fixpoint`` (one job per round, a hard RuntimeError
-  on non-convergence instead of a silent cap); its exact probe is the
-  sum of each cell's flow-step distance to its current root, which
-  grows exactly when some root moves.
+  root ← root(root), halving the remaining path length, so convergence
+  is O(log max-path-length) rounds.  The rounds run on
+  ``fixpoint.fixpoint`` (a hard RuntimeError on non-convergence instead
+  of a silent cap); its exact probe is the sum of each cell's flow-step
+  distance to its current root, which grows exactly when some root
+  moves.
 
-At 100 TB the per-round cost is one equi-join on the packed cell key
-(both sides hash-partitioned the same way) over a table that never
-exceeds one row per raster cell; rounds ≤ log2(longest flow path),
-i.e. ~40 rounds bounds a 10^12-cell path.
+Where the rounds run: a D8 table of at most ``fixpoint.LOCAL_MAX_ROWS``
+cells (1M) is collected once and doubled in numpy on the driver
+(``root ← root[root]`` over row indices from one argsort/searchsorted),
+about 120 B of driver memory per cell, so ≤ ~120 MB at the bound.
+Above it each round is one checkpointed Spark equi-join on the packed
+cell key over a table of one row per raster cell, ~40 rounds bounding
+a 10^12-cell flow path.  Either way the D8 stage itself stays
+distributed.
 """
 
 from __future__ import annotations
@@ -33,7 +37,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from geodata_spark.cells import Y_SHIFT as Y_STEP  # packed (y, x) key stride
-from geodata_spark.fixpoint import fixpoint
+from geodata_spark.fixpoint import fixpoint, lookup
 
 
 def flow_direction_d8(layer: DataFrame, value_col: str = "value") -> DataFrame:
@@ -99,6 +103,9 @@ def watershed(
 ) -> DataFrame:
     """Basin label per cell: the packed key of the sink its D8 flow
     path reaches, by pointer doubling (O(log path-length) rounds).
+    Rasters of at most ``fixpoint.LOCAL_MAX_ROWS`` cells (1M) double on
+    the driver, holding ~120 B per cell there (≤ ~120 MB); larger ones
+    run one checkpointed Spark round each.
 
     Output: (y_idx, x_idx, cell, basin) — ``basin`` is the sink's
     packed key, so sink rows have basin == cell.
@@ -120,8 +127,16 @@ def watershed(
             F.col("_pr").alias("root"), (F.col("_d") + F.col("_pd")).alias("_d"),
         )
 
+    def jump_local(cols):
+        cell, d = cols["cell"], cols["_d"]
+        at = lookup(cell, cols["root"])  # row of each root: roots are live cells
+        while True:
+            d = d + d[at]
+            at = at[at]
+            yield {**cols, "root": cell[at], "_d": d}
+
     ws, _ = fixpoint(
         d8, jump, lambda cur: [F.sum("_d").alias("d")], max_iters,
-        "watershed: pointer doubling",
+        "watershed: pointer doubling", jump_local,
     )
     return ws.select("y_idx", "x_idx", "cell", F.col("root").alias("basin"))

@@ -20,18 +20,20 @@ get_bounds/res     layer extents                          :func:`layer_bounds`  
 
 Scale notes: layer merges are hash aggregations on the cell id (no
 join needed — union + groupBy gives map-side partial aggregation);
-connected components is the one iterative op, implemented as bounded
-alternating row/column label propagation (each step a groupBy at the
-cell grain, no cross-join).
+connected components is the one iterative op: hook + pointer-jump
+label propagation on ``fixpoint.fixpoint`` (distributed rounds are a
+groupBy at the cell grain, no cross-join; small layers finish on the
+driver).
 """
 
 from __future__ import annotations
 
+import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from geodata_spark.cells import Y_SHIFT
-from geodata_spark.fixpoint import fixpoint
+from geodata_spark.fixpoint import fixpoint, lookup, min_label_rounds
 
 
 # ---------------------------------------------------------------------------
@@ -211,8 +213,12 @@ def filter_area(
     flagged as silently capping at diameter 50.  If the fixpoint is
     somehow not reached a ``RuntimeError`` is raised rather than
     returning a silently-split labeling.  The rounds run on
-    ``fixpoint.fixpoint`` (one job per round); labels never rise over a
-    fixed row set, so the decimal sum of labels is an exact probe.
+    ``fixpoint.fixpoint``; labels never rise over a fixed row set, so
+    the decimal sum of labels is an exact probe.  Layers of at most
+    ``fixpoint.LOCAL_MAX_ROWS`` nonzero cells (1M) finish on the driver
+    (``fixpoint.min_label_rounds`` over the ±1 / ±2^27 neighbour pairs),
+    holding ~300 B per nonzero cell there (≤ ~300 MB); larger ones run
+    one checkpointed Spark round each.
 
     The reference reprojects to equal-area and thresholds in km²
     (mask.py:1309-1398); at cell grain the equivalent threshold is a
@@ -250,10 +256,20 @@ def filter_area(
             F.least("new_label", F.coalesce("_plabel", "new_label")).alias("label"),
         )
 
+    def hook_and_jump_local(cols):
+        cell = cols["cell"]
+        n = len(cell)
+        # each neighbour pair once: the cell and the one at +1 / +Y_SHIFT
+        nbr = lookup(cell, np.concatenate([cell + 1, cell + Y_SHIFT]))
+        hit = nbr >= 0
+        rows = np.tile(np.arange(n), 2)[hit]
+        for label in min_label_rounds(cell, cols["label"], rows, nbr[hit], jump=True):
+            yield {"cell": cell, "label": label}
+
     active, _ = fixpoint(
         active, hook_and_jump,
         lambda df: [F.sum(F.col("label").cast("decimal(38,0)")).alias("s")],
-        max_iters, "filter_area: connected components",
+        max_iters, "filter_area: connected components", hook_and_jump_local,
     )
     sizes = active.groupBy("label").agg(F.count(F.lit(1)).alias("n"))
     keep = active.join(

@@ -28,10 +28,12 @@ is identical in both modes; only the hash primitive differs.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+import numpy as np
+from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 
-from geodata_spark.fixpoint import fixpoint
+from geodata_spark import fixpoint as _fixpoint
+from geodata_spark.fixpoint import fixpoint, lookup, min_label_rounds
 from geodata_spark.pipeline.text import normalize_sql
 
 
@@ -795,20 +797,28 @@ def connected_components(
     per-round cost is lower (one join) on the tiny-clique graphs
     near-dedup actually produces.
 
-    Scale shape (both): one-or-two equi-join + min-aggregate rounds,
-    nothing ever holds a component in memory; the rounds run on
-    ``fixpoint.fixpoint``, which checkpoints each round in one job to
-    keep the plan from growing and raises after ``max_iter`` rounds
-    rather than returning a half-converged labelling.
+    Scale shape (both): the rounds run on ``fixpoint.fixpoint``, which
+    raises after ``max_iter`` rounds rather than returning a
+    half-converged labelling.  Graphs of at most
+    ``fixpoint.LOCAL_MAX_ROWS`` rows (1M; nodes and directed edges for
+    hashmin, distinct pairs for star) finish on the driver with
+    ``fixpoint.min_label_rounds``, holding ~200 B per directed edge
+    (hashmin) or ~250 B per pair (star) there, so ≤ ~250 MB; star emits
+    the canonical (min, member) star, the unique fixpoint of
+    large/small-star.  Larger graphs run one-or-two equi-join +
+    min-aggregate rounds, each checkpointed, and nothing ever holds a
+    component in memory.
     """
     if method == "star":
         return _cc_star(pairs, id_a, id_b, max_iter)
     if method != "hashmin":
         raise ValueError(f"unknown method {method!r}")
+    n_edges = Observation()
     edges = (
         pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst"))
         .unionByName(pairs.select(F.col(id_b).alias("src"), F.col(id_a).alias("dst")))
         .distinct()
+        .observe(n_edges, F.count(F.lit(1)).alias("n"))
         # materialize ONCE: `pairs` is usually an expensive unexecuted
         # plan (the MinHash/LSH band join) that would otherwise be
         # recomputed by the join in EVERY propagation round
@@ -829,6 +839,16 @@ def connected_components(
             "node", F.least(F.col("label"), F.col("_nbl")).alias("label")  # least skips NULL
         )
 
+    def propagate_local(cols):
+        node = cols["node"]
+        e = edges.toArrow()
+        src, dst = (lookup(node, e.column(c).to_numpy()) for c in ("src", "dst"))
+        for label in min_label_rounds(node, cols["label"], src, dst, jump=False):
+            yield {"node": node, "label": label}
+
+    # fixpoint bounds the node count; the driver finish also collects the
+    # edge list, so bound that here
+    small = n_edges.get["n"] <= _fixpoint.LOCAL_MAX_ROWS
     # labels never rise over a fixed node set: the label sum is exact
     labels, _ = fixpoint(
         edges.select(F.col("src").alias("node")).distinct().withColumn("label", F.col("node")),
@@ -836,6 +856,7 @@ def connected_components(
         lambda df: [F.sum(F.col("label").cast("decimal(38,0)")).alias("s")],
         max_iter,
         "connected_components(hashmin)",
+        propagate_local if small else None,
     )
     return labels.select("node", F.col("label").alias("component"))
 
@@ -932,9 +953,19 @@ def _cc_star(pairs: DataFrame, id_a: str, id_b: str, max_iter: int) -> DataFrame
             .distinct()
         )
 
+    def star_local(cols):
+        # min-label rounds over the starting edges; each round's state is
+        # the (label, member) edge set, which at the fixpoint is the star
+        u, v = cols["u"], cols["v"]
+        node = np.unique(np.concatenate([u, v]))
+        src, dst = np.searchsorted(node, u), np.searchsorted(node, v)
+        for label in min_label_rounds(node, node, src, dst, jump=True):
+            member = label != node
+            yield {"u": label[member], "v": node[member]}
+
     edges, rounds_used = fixpoint(
         edges, lambda e: _small_star(_large_star(e)), _checksum, max_iter,
-        "connected_components(star)",
+        "connected_components(star)", star_local,
     )
 
     # at the fixpoint every edge is (root, member); isolated inputs

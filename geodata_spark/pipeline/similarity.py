@@ -25,9 +25,11 @@ model-sized and live on the driver; :data:`MAX_QUERIES`,
 
 from __future__ import annotations
 
+import math
+
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.window import Window
@@ -762,6 +764,20 @@ def ivf_topk(
     )
 
 
+def _sql_double(x: float) -> str:
+    # repr round-trips a double exactly (-0.0 included); the D suffix keeps
+    # it DOUBLE, since a bare 0.123456 parses as DECIMAL
+    return f"{x!r}D" if math.isfinite(x) else f"double('{x}')"
+
+
+def _double_matrix(rows) -> Column:
+    """A list of float lists as one ``array<array<double>>`` SQL literal:
+    one py4j call, not one per element."""
+    return F.expr("array(" + ", ".join(
+        "array(" + ", ".join(_sql_double(x) for x in r) + ")" for r in rows
+    ) + ")")
+
+
 def kmeans_lloyd(
     vecs: DataFrame,
     k: int = 4,
@@ -825,16 +841,15 @@ def kmeans_lloyd(
     assigned = None
     for r_i in range(iters):
         # ONE indexed transform over a literal centroid matrix, not k
-        # Python-built struct subtrees (the ivf_assign r8 pattern):
-        # constructing k copies of the zip_with/aggregate lambda tree
-        # through py4j cost ~1 s per round per call — GIL-bound driver
-        # work that serialized the PQ subspace pool (m=8, ksub=32: the
-        # expression builds alone were ~16 s of the 19 s pq build).
-        # Per-element arithmetic, fold order, 6-dp rounds and the
-        # (d, index) lexicographic argmin are unchanged — assignments
-        # and centroids are bit-identical (kmeans/PQ oracle rows pin).
+        # Python-built struct subtrees (the ivf_assign r8 pattern), and
+        # the matrix is ONE SQL text: F.lit(cents) built it element by
+        # element, k·dim py4j calls per round (a 3-round 4×64 build made
+        # ~5,200 calls, ~1,500 with the SQL text).  Per-element
+        # arithmetic, fold order, 6-dp rounds and the (d, index)
+        # lexicographic argmin are unchanged — assignments and centroids
+        # are bit-identical (kmeans/PQ oracle rows pin).
         choices = F.transform(
-            F.lit(cents),
+            _double_matrix(cents),
             lambda c, i: F.struct(dist2(c).alias("d"), i.alias("j")),
         )
         assigned = emb.withColumn("_best", F.array_min(choices)).select(

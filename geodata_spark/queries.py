@@ -378,7 +378,9 @@ def q_filter_area(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Connected-component area filter (A6): kept-cell table.
 
     The Spark side runs hook + pointer-jump connected components to a
-    fixpoint (masks.filter_area on fixpoint.fixpoint); the DuckDB
+    fixpoint (masks.filter_area on fixpoint.fixpoint; at most
+    fixpoint.LOCAL_MAX_ROWS = 1M nonzero cells finish on the driver in
+    numpy, ~300 B per cell there, above it Spark rounds); the DuckDB
     oracle reaches the same labelling with a recursive
     label-propagation CTE — an exact, hash-checked compare of which
     cells survive the min_cells threshold."""
@@ -3242,7 +3244,9 @@ FROM v JOIN c
 def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Transitive near-dup clustering: MinHash+LSH verified pairs →
     connected components (star contraction, connected_components'
-    default method, on fixpoint.fixpoint), each cluster labelled by its
+    default method, on fixpoint.fixpoint; at most fixpoint.LOCAL_MAX_ROWS
+    = 1M distinct pairs finish on the driver in numpy, ~250 B per pair
+    there, above it Spark rounds), each cluster labelled by its
     smallest doc id.  The DuckDB oracle computes the
     same components by a RECURSIVE CTE transitive closure — two
     utterly different algorithms (iterative join fixpoint vs recursive
@@ -4170,11 +4174,12 @@ def q_watershed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distributed hydrology: D8 flow direction (scatter→gather
     steepest descent, dyadic drop²/dist² argmax — no sqrt, no
     tolerance) + watershed basin labels by pointer DOUBLING
-    (hydro.watershed, O(log path) rounds on fixpoint.fixpoint, one
-    job per round).  Oracle: DuckDB recursive CTE walking each
-    cell's flow path to its sink — two different algorithms
-    (log-round doubling vs linear recursion), same labels.  Output
-    adds per-basin cell counts."""
+    (hydro.watershed, O(log path) rounds on fixpoint.fixpoint: at most
+    fixpoint.LOCAL_MAX_ROWS = 1M cells double on the driver in numpy,
+    ~120 B per cell there, above it Spark rounds).  Oracle: DuckDB
+    recursive CTE walking each cell's flow path to its sink — two
+    different algorithms (log-round doubling vs linear recursion), same
+    labels.  Output adds per-basin cell counts."""
     from geodata_spark import hydro
     from geodata_spark.synth import synth_mask_layers
 

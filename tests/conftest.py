@@ -24,6 +24,15 @@ def spark():
     yield s
 
 
+@pytest.fixture
+def distributed_fixpoint(monkeypatch):
+    """Every fixpoint state is above the driver-finish bound: the
+    distributed rounds run (the default bound takes the driver path)."""
+    from geodata_spark import fixpoint
+
+    monkeypatch.setattr(fixpoint, "LOCAL_MAX_ROWS", 0)
+
+
 @pytest.fixture(scope="session")
 def duck():
     import duckdb

@@ -206,3 +206,21 @@ def test_probe_and_centroid_bounds(spark, dup_vecs, dup_queries, monkeypatch):
     monkeypatch.setattr(SIM, "MAX_CELLS", 3)
     with pytest.raises(ValueError, match="MAX_CELLS"):
         SIM.ivf_assign(dup_vecs, cents)
+
+
+def test_centroid_matrix_literal_round_trips_doubles(spark):
+    """kmeans_lloyd's one-SQL-text centroid matrix gives back every
+    double bit for bit, signed zero and non-finite values included, as
+    array<array<double>>."""
+    import struct
+
+    rows = [
+        [0.123456, -0.0, 0.0, 1e-06, -1e-06, 1e16, 5e-324, 1.7976931348623157e308],
+        [float("nan"), float("inf"), -float("inf"), 0.1, 0.2, 0.3, -3.25, 7.0],
+    ]
+    col = spark.range(1).select(SIM._double_matrix(rows).alias("m"))
+    assert col.schema["m"].dataType.simpleString() == "array<array<double>>"
+    got = col.first().m
+    assert [struct.pack("<d", x) for r in got for x in r] == [
+        struct.pack("<d", x) for r in rows for x in r
+    ]

@@ -214,6 +214,11 @@ def test_watershed_pointer_doubling_is_log_rounds(spark):
         watershed(df, max_iters=3)        # the bound raises, never truncates
 
 
+def test_watershed_pointer_doubling_is_log_rounds_distributed(spark, distributed_fixpoint):
+    """The same pins on the distributed rounds."""
+    test_watershed_pointer_doubling_is_log_rounds(spark)
+
+
 def test_retention_and_lift_semantics(spark):
     import tempfile
 

@@ -152,6 +152,11 @@ def test_filter_area_long_snake_logarithmic_rounds(spark):
         masks.filter_area(df, min_cells=1, max_iters=1)
 
 
+def test_filter_area_long_snake_logarithmic_rounds_distributed(spark, distributed_fixpoint):
+    """The same pins on the distributed rounds."""
+    test_filter_area_long_snake_logarithmic_rounds(spark)
+
+
 def test_dilate_matches_numpy(spark):
     """Disc dilation == brute-force numpy morphological dilation."""
     import numpy as np

@@ -499,6 +499,11 @@ def test_connected_components_semantics(spark):
     assert {r["component"] for r in full.collect()} == {100}
 
 
+def test_connected_components_semantics_distributed(spark, distributed_fixpoint):
+    """The same pins on the distributed rounds."""
+    test_connected_components_semantics(spark)
+
+
 def test_cc_star_logarithmic_on_path(spark):
     """The star contraction converges on a 1000-node path in
     <= 2*log2(n) alternations (diameter-bound propagation would need
@@ -516,6 +521,11 @@ def test_cc_star_logarithmic_on_path(spark):
     assert len(rows) == n
     assert {r["component"] for r in rows} == {0}
     assert out._cc_rounds <= 2 * math.log2(n), out._cc_rounds
+
+
+def test_cc_star_logarithmic_on_path_distributed(spark, distributed_fixpoint):
+    """The same pins on the distributed rounds."""
+    test_cc_star_logarithmic_on_path(spark)
 
 
 def test_cc_star_equals_hashmin_random(spark):
