@@ -2,9 +2,17 @@
 (``hydro.watershed``, ``masks.filter_area``, both methods of
 ``pipeline.dedup.connected_components``).
 
-Every call first materializes the starting state in ONE Spark job (an
-eager local checkpoint; the probe's aggregates and the row count ride
-on it as ``Observation`` metrics, so reading them is no second action).
+Operators whose whole input fits under :data:`LOCAL_MAX_ROWS` skip
+this loop's Spark stages: they take the input with
+:func:`collect_at_most` (one job, at most bound + 1 rows), compute the
+starting state in numpy and run the rounds with :func:`finish_local`
+(``hydro.watershed``; ``similarity.kmeans_lloyd`` uses the collect and
+:func:`local_result` for its fixed Lloyd rounds).
+
+Every :func:`fixpoint` call first materializes the starting state in
+ONE Spark job (an eager local checkpoint; the probe's aggregates and
+the row count ride on it as ``Observation`` metrics, so reading them
+is no second action).
 Then it takes one of two paths:
 
 - **Driver finish** (a ``local_step`` is given and the state has at most
@@ -41,18 +49,40 @@ most ~300 MB at the bound.
 
 from __future__ import annotations
 
+from contextlib import contextmanager
 from typing import Callable, Iterator, Sequence
 
 import numpy as np
 import pyarrow as pa
-from pyspark.sql import Column, DataFrame, Observation
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 # States with at most this many rows finish on the driver (see above).
 LOCAL_MAX_ROWS = 1_000_000
 
 Columns = dict[str, np.ndarray]
 LocalStep = Callable[[Columns], Iterator[Columns]]
+
+
+def collect_at_most(df: DataFrame, n: int) -> pa.Table | None:
+    """``df`` as one Arrow table, in one job, or None when it holds more
+    than ``n`` rows; at most ``n + 1`` rows reach the driver."""
+    table = df.limit(n + 1).toArrow()
+    return None if table.num_rows > n else table
+
+
+@contextmanager
+def job_description(spark: SparkSession, text: str):
+    """Label the Spark jobs run inside with ``text``; the caller's job
+    description is restored on exit, also after a raise."""
+    sc = spark.sparkContext
+    caller = sc.getLocalProperty("spark.job.description")
+    sc.setJobDescription(text)
+    try:
+        yield sc
+    finally:
+        sc.setLocalProperty("spark.job.description", caller)
 
 
 def _materialize(df: DataFrame, probe: Callable[[DataFrame], Sequence[Column]]):
@@ -85,14 +115,12 @@ def fixpoint(
     columns, rows in a stable order).  Its jobs are labelled
     ``fixpoint:<what> round N`` / ``fixpoint:<what> local``; the
     caller's job description is restored on exit."""
-    sc = state.sparkSession.sparkContext
-    caller = sc.getLocalProperty("spark.job.description")
-    try:
-        sc.setJobDescription(f"fixpoint:{what} round 0")
+    spark = state.sparkSession
+    with job_description(spark, f"fixpoint:{what} round 0") as sc:
         state, seen = _materialize(state, probe)
         if local_step is not None and seen["_fixpoint_rows"] <= LOCAL_MAX_ROWS:
             sc.setJobDescription(f"fixpoint:{what} local")
-            return _finish_local(state, local_step, max_iter, what)
+            return finish_local(spark, state.toArrow(), state.schema, local_step, max_iter, what)
         for rounds in range(1, max_iter + 1):
             sc.setJobDescription(f"fixpoint:{what} round {rounds}")
             state, value = _materialize(step(state), probe)
@@ -100,29 +128,40 @@ def fixpoint(
                 return state, rounds
             seen = value
         raise _not_converged(what, max_iter)
-    finally:
-        sc.setLocalProperty("spark.job.description", caller)
 
 
-def _finish_local(
-    state: DataFrame, local_step: LocalStep, max_iter: int, what: str
+def finish_local(
+    spark: SparkSession,
+    start: pa.Table,
+    schema: StructType,
+    local_step: LocalStep,
+    max_iter: int,
+    what: str,
 ) -> tuple[DataFrame, int]:
-    table = state.toArrow()
-    cur = {name: table.column(name).to_numpy() for name in table.column_names}
+    """The driver rounds of :func:`fixpoint` from a starting state held
+    as an Arrow table: run ``local_step`` until a round leaves every
+    column unchanged, and return the result as :func:`local_result` with
+    ``schema`` and the rounds run, or raise after ``max_iter`` rounds."""
+    cur = {name: start.column(name).to_numpy() for name in start.column_names}
     states = local_step(cur)
     for rounds in range(1, max_iter + 1):
         nxt = next(states)
         if all(np.array_equal(nxt[name], cur[name]) for name in cur):
             out = pa.Table.from_arrays(
-                [pa.array(nxt[f.name], type=f.type) for f in table.schema],
-                schema=table.schema,
+                [pa.array(nxt[f.name], type=f.type) for f in start.schema],
+                schema=start.schema,
             )
-            # lazy: the first job that reads the result writes its blocks,
-            # so an eager checkpoint would only add a job
-            spark = state.sparkSession
-            return spark.createDataFrame(out, state.schema).localCheckpoint(eager=False), rounds
+            return local_result(spark, out, schema), rounds
         cur = nxt
     raise _not_converged(what, max_iter)
+
+
+def local_result(spark: SparkSession, table: pa.Table, schema: StructType) -> DataFrame:
+    """A driver-computed result as a DataFrame over checkpointed blocks,
+    so downstream plans never carry a ``LocalRelation`` of literal rows.
+    Lazy: the first job that reads it writes the blocks, so an eager
+    checkpoint would only add a job."""
+    return spark.createDataFrame(table, schema).localCheckpoint(eager=False)
 
 
 def lookup(keys: np.ndarray, values: np.ndarray) -> np.ndarray:

@@ -21,23 +21,33 @@ The classic DEM pre-analysis pair (ESRI/GRASS ``flowdirection`` /
   distance to its current root, which grows exactly when some root
   moves.
 
-Where the rounds run: a D8 table of at most ``fixpoint.LOCAL_MAX_ROWS``
-cells (1M) is collected once and doubled in numpy on the driver
-(``root ← root[root]`` over row indices from one argsort/searchsorted),
-about 120 B of driver memory per cell, so ≤ ~120 MB at the bound.
-Above it each round is one checkpointed Spark equi-join on the packed
-cell key over a table of one row per raster cell, ~40 rounds bounding
-a 10^12-cell flow path.  Either way the D8 stage itself stays
-distributed.
+Where it runs: a raster of at most ``fixpoint.LOCAL_MAX_ROWS`` cells
+(1M) runs whole on the driver after ONE bounded Arrow collect of
+``(y_idx, x_idx, value)``: D8 is one ``fixpoint.lookup`` per offset
+and the doubling is ``root ← root[root]`` over row indices, both in
+numpy, about 170 B of driver memory per cell (numpy and Arrow), so
+≤ ~170 MB at the bound.  Larger rasters, and rasters the driver would
+not reproduce bit for bit (a NULL or non-finite value, a repeated
+cell), run the D8 stage in Spark; its table then finishes on the
+driver under the bound or runs one checkpointed Spark equi-join per
+round on the packed cell key above it, ~40 rounds bounding a
+10^12-cell flow path.
 """
 
 from __future__ import annotations
 
+import numpy as np
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
+from geodata_spark import fixpoint as fp
 from geodata_spark.cells import Y_SHIFT as Y_STEP  # packed (y, x) key stride
 from geodata_spark.fixpoint import fixpoint, lookup
+
+# D8 offsets (dy, dx), center -> neighbour, in tie-break order
+_OFFSETS = [(dy, dx) for dy in (-1, 0, 1) for dx in (-1, 0, 1) if (dy, dx) != (0, 0)]
 
 
 def flow_direction_d8(layer: DataFrame, value_col: str = "value") -> DataFrame:
@@ -59,9 +69,7 @@ def flow_direction_d8(layer: DataFrame, value_col: str = "value") -> DataFrame:
             F.lit(dy).alias("dy"), F.lit(dx).alias("dx"),
             F.lit(float(dy * dy + dx * dx)).alias("d2"),
         )
-        for dy in (-1, 0, 1)
-        for dx in (-1, 0, 1)
-        if not (dy == 0 and dx == 0)
+        for dy, dx in _OFFSETS
     ])
     # scatter: neighbor elevation arrives at the center it can drain
     scattered = base.withColumn("_o", F.explode(offs)).select(
@@ -98,45 +106,112 @@ def flow_direction_d8(layer: DataFrame, value_col: str = "value") -> DataFrame:
     )
 
 
+# The doubling state is (y_idx, x_idx, cell, root, _d).  _d: flow steps
+# from the cell to its current root; a jump adds the root's own _d, so
+# sum(_d) grows exactly when some root moves.
+
+def _jump(cur: DataFrame) -> DataFrame:
+    hop = cur.select(
+        F.col("cell").alias("_pc"), F.col("root").alias("_pr"),
+        F.col("_d").alias("_pd"),
+    )
+    return cur.join(hop, cur.root == hop._pc).select(  # total: roots are live cells
+        "y_idx", "x_idx", "cell",
+        F.col("_pr").alias("root"), (F.col("_d") + F.col("_pd")).alias("_d"),
+    )
+
+
+def _jump_local(cols):
+    cell, d = cols["cell"], cols["_d"]
+    at = lookup(cell, cols["root"])  # row of each root: roots are live cells
+    while True:
+        d = d + d[at]
+        at = at[at]
+        yield {**cols, "root": cell[at], "_d": d}
+
+
+def _d8_local(cell: np.ndarray, z: np.ndarray) -> np.ndarray:
+    """:func:`flow_direction_d8`'s ``parent`` in numpy, for distinct
+    cells and finite ``z``: one :func:`~geodata_spark.fixpoint.lookup`
+    per offset, in ``_OFFSETS`` order.  A neighbour replaces the best so
+    far only on a strictly steeper drop²/d2, so ties keep the smallest
+    (dy, dx), as ``max_by`` does; the best starts below 0, because a
+    strictly lower neighbour whose drop² underflows to 0 still drains
+    the cell."""
+    parent, best = cell.copy(), np.full(len(cell), -1.0)
+    for dy, dx in _OFFSETS:
+        nbr = cell + dy * Y_STEP + dx
+        at = lookup(cell, nbr)
+        zn = np.where(at >= 0, z[at], np.inf)  # absent: never lower
+        with np.errstate(over="ignore"):  # drop² may overflow to inf, as in Spark
+            s2 = (z - zn) * (z - zn) / float(dy * dy + dx * dx)
+        take = (zn < z) & (s2 > best)
+        parent = np.where(take, nbr, parent)
+        best = np.where(take, s2, best)
+    return parent
+
+
+def _local_start(cols: pa.Table) -> pa.Table | None:
+    """The starting state of the doubling, ``(y_idx, x_idx, cell, root,
+    _d)``, from the collected ``(y_idx, x_idx, _z)``; None where the
+    driver would not reproduce the Spark stage: a NULL, a repeated cell,
+    a non-finite ``z`` (Spark orders NaN above every value), or a
+    coordinate whose packed key could overflow a long (Spark raises)."""
+    if any(c.null_count for c in cols.columns):
+        return None
+    y, x, z = (cols.column(name).to_numpy() for name in ("y_idx", "x_idx", "_z"))
+    yx = np.concatenate([y, x])
+    if not (np.isfinite(z).all() and ((-(2**35) < yx) & (yx < 2**35)).all()):
+        return None
+    cell = y * Y_STEP + x
+    if len(np.unique(cell)) != len(cell):
+        return None
+    parent = _d8_local(cell, z)
+    return pa.table({
+        "y_idx": y, "x_idx": x, "cell": cell, "root": parent,
+        "_d": (parent != cell).astype(np.int64),
+    })
+
+
 def watershed(
     layer: DataFrame, value_col: str = "value", max_iters: int = 64
 ) -> DataFrame:
     """Basin label per cell: the packed key of the sink its D8 flow
     path reaches, by pointer doubling (O(log path-length) rounds).
-    Rasters of at most ``fixpoint.LOCAL_MAX_ROWS`` cells (1M) double on
-    the driver, holding ~120 B per cell there (≤ ~120 MB); larger ones
-    run one checkpointed Spark round each.
+
+    Rasters of at most ``fixpoint.LOCAL_MAX_ROWS`` cells (1M) run whole
+    on the driver: one Arrow collect of ``(y_idx, x_idx, value)`` (job
+    ``watershed local``), D8 and the doubling in numpy, ~170 B of driver
+    memory per cell (≤ ~170 MB at the bound).  Larger rasters, and any
+    with a NULL or non-finite value or a repeated cell, run the Spark D8
+    stage and the rounds of ``fixpoint.fixpoint``.
 
     Output: (y_idx, x_idx, cell, basin) — ``basin`` is the sink's
     packed key, so sink rows have basin == cell.
     """
-    # _d: flow steps from the cell to its current root; a jump adds the
-    # root's own _d, so sum(_d) grows exactly when some root moves
-    d8 = flow_direction_d8(layer, value_col).select(
-        "y_idx", "x_idx", "cell", F.col("parent").alias("root"),
-        (F.col("parent") != F.col("cell")).cast("long").alias("_d"),
+    spark = layer.sparkSession
+    base = layer.selectExpr(  # one SQL text per column: few py4j calls
+        "CAST(y_idx AS BIGINT) AS y_idx", "CAST(x_idx AS BIGINT) AS x_idx",
+        f"CAST({value_col} AS DOUBLE) AS _z",
     )
-
-    def jump(cur: DataFrame) -> DataFrame:
-        hop = cur.select(
-            F.col("cell").alias("_pc"), F.col("root").alias("_pr"),
-            F.col("_d").alias("_pd"),
+    with fp.job_description(spark, "watershed local"):
+        cols = fp.collect_at_most(base, fp.LOCAL_MAX_ROWS)
+    start = None if cols is None else _local_start(cols)
+    what = "watershed: pointer doubling"
+    if start is not None:
+        y, x = (base.schema[name].nullable for name in ("y_idx", "x_idx"))
+        schema = T.StructType([
+            T.StructField("y_idx", T.LongType(), y),
+            T.StructField("x_idx", T.LongType(), x),
+            *(T.StructField(name, T.LongType(), y or x) for name in ("cell", "root", "_d")),
+        ])
+        ws, _ = fp.finish_local(spark, start, schema, _jump_local, max_iters, what)
+    else:
+        d8 = flow_direction_d8(layer, value_col).select(
+            "y_idx", "x_idx", "cell", F.col("parent").alias("root"),
+            (F.col("parent") != F.col("cell")).cast("long").alias("_d"),
         )
-        return cur.join(hop, cur.root == hop._pc).select(  # total: roots are live cells
-            "y_idx", "x_idx", "cell",
-            F.col("_pr").alias("root"), (F.col("_d") + F.col("_pd")).alias("_d"),
+        ws, _ = fixpoint(
+            d8, _jump, lambda cur: [F.sum("_d").alias("d")], max_iters, what, _jump_local,
         )
-
-    def jump_local(cols):
-        cell, d = cols["cell"], cols["_d"]
-        at = lookup(cell, cols["root"])  # row of each root: roots are live cells
-        while True:
-            d = d + d[at]
-            at = at[at]
-            yield {**cols, "root": cell[at], "_d": d}
-
-    ws, _ = fixpoint(
-        d8, jump, lambda cur: [F.sum("_d").alias("d")], max_iters,
-        "watershed: pointer doubling", jump_local,
-    )
-    return ws.select("y_idx", "x_idx", "cell", F.col("root").alias("basin"))
+    return ws.selectExpr("y_idx", "x_idx", "cell", "root AS basin")

@@ -26,13 +26,17 @@ model-sized and live on the driver; :data:`MAX_QUERIES`,
 from __future__ import annotations
 
 import math
+from decimal import ROUND_HALF_UP, Decimal
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.window import Window
+
+from geodata_spark import fixpoint as fp
 
 # Row bounds of the driver-side collects.  Each ANN path collects its
 # model-sized side once and ships it to every scorer task: the query
@@ -48,16 +52,16 @@ MAX_PROBE_ROWS = 65_536
 MAX_CELLS = 4096
 
 
-def _collect_bounded(df: DataFrame, limit: int, what: str) -> list:
-    """``df.collect()``, or ValueError when ``df`` holds more than
+def _collect_bounded(df: DataFrame, limit: int, what: str) -> pa.Table:
+    """``df`` as an Arrow table, or ValueError when it holds more than
     ``limit`` rows; at most ``limit + 1`` rows reach the driver."""
-    rows = df.limit(limit + 1).collect()
-    if len(rows) > limit:
+    table = fp.collect_at_most(df, limit)
+    if table is None:
         raise ValueError(
             f"{what}: more than {limit} rows, too many to hold on the "
             "driver; split the input into smaller batches"
         )
-    return rows
+    return table
 
 
 def _dot(a: F.Column, b: F.Column) -> F.Column:
@@ -109,12 +113,12 @@ def cosine(a: F.Column, b: F.Column) -> F.Column:
 def _collect_query_matrix(queries: DataFrame, q_id_col: str, q_vec_col: str):
     """Driver-side (ids, matrix) of the query set — the one collect of
     the query table, bounded by :data:`MAX_QUERIES`."""
-    rows = _collect_bounded(
+    ids, vecs = _collect_bounded(
         queries.select(q_id_col, q_vec_col), MAX_QUERIES,
         "query set (similarity.MAX_QUERIES)",
-    )
-    qids = np.array([r[0] for r in rows], dtype=np.int64)
-    Q = np.array([[float(x) for x in r[1]] for r in rows], dtype=np.float64)
+    ).columns
+    qids = np.array(ids.to_pylist(), dtype=np.int64)
+    Q = np.array([[float(x) for x in v] for v in vecs.to_pylist()], dtype=np.float64)
     return qids, Q
 
 
@@ -607,10 +611,10 @@ def ivf_assign(
     # time.  Selection is bit-identical: the same round(·, 9) per
     # similarity, and lexicographic array_max over (s, -cell) is
     # exactly the old max_by ordering.
+    table = _collect_bounded(cents, MAX_CELLS, "IVF centroids (similarity.MAX_CELLS)")
     crows = sorted(
-        (int(r["cell"]), [float(x) for x in r["cent"]])
-        for r in _collect_bounded(cents, MAX_CELLS,
-                                  "IVF centroids (similarity.MAX_CELLS)")
+        (int(c), [float(x) for x in cent])
+        for c, cent in zip(table.column("cell").to_pylist(), table.column("cent").to_pylist())
     )
     cell_ids = [c for c, _ in crows]
     cmat = [cent for _, cent in crows]
@@ -633,18 +637,21 @@ def ivf_assign(
     # ONE indexed transform over a literal centroid matrix, not C
     # unrolled branches: the unrolled form re-analyzed C large lambda
     # subtrees per plan build, which dominated the one-shot index-build
-    # timing at small corpora (r8).
+    # timing at small corpora (r8).  The matrix, the norms and the cell
+    # ids are one SQL text each, not one py4j call per element.
     nv = _norm(F.col(vec_col))
+    norm_arr = F.expr(_sql_array(map(_sql_double, norms)))
+    cell_arr = F.expr(_sql_array(map(str, cell_ids)))
     choices = F.transform(
-        F.lit(cmat),
+        _double_matrix(cmat),
         lambda c, i: F.struct(
             F.round(
                 _dot(F.col(vec_col), c)
-                / (F.col("_nv") * F.element_at(F.lit(norms), i + 1)),
+                / (F.col("_nv") * F.element_at(norm_arr, i + 1)),
                 9,
             ).alias("s"),
-            (-F.element_at(F.lit(cell_ids), i + 1)).alias("_negc"),
-            F.element_at(F.lit(cell_ids), i + 1).alias("cell"),
+            (-F.element_at(cell_arr, i + 1)).alias("_negc"),
+            F.element_at(cell_arr, i + 1).alias("cell"),
         ),
     )
     out = (
@@ -678,8 +685,10 @@ def _probe_plan(queries: DataFrame, cents: DataFrame, n_probe: int,
     )
     qpos = {int(q): i for i, q in enumerate(qids)}
     by_cell: dict[int, list[int]] = {}
-    for q, c in _collect_bounded(plan, MAX_PROBE_ROWS,
-                                 "IVF probe plan (similarity.MAX_PROBE_ROWS)"):
+    q_col, c_col = _collect_bounded(
+        plan, MAX_PROBE_ROWS, "IVF probe plan (similarity.MAX_PROBE_ROWS)"
+    ).columns
+    for q, c in zip(q_col.to_pylist(), c_col.to_pylist()):
         by_cell.setdefault(int(c), []).append(qpos[int(q)])
     return {c: np.array(sorted(v), dtype=np.int64) for c, v in by_cell.items()}
 
@@ -770,12 +779,43 @@ def _sql_double(x: float) -> str:
     return f"{x!r}D" if math.isfinite(x) else f"double('{x}')"
 
 
+_GRAIN = Decimal("1e-6")
+
+
+def spark_round6(x) -> np.ndarray:
+    """Spark's ``round(x, 6)`` on doubles, element-wise and bit for bit.
+
+    Spark rounds HALF_UP on the value's decimal string
+    (``BigDecimal.valueOf``), then takes the nearest double; -0.0 comes
+    back as 0.0 and NaN/±inf pass through.  In bulk that is ``rint(x·10⁶)
+    / 10⁶`` (the quotient of two exact values, correctly rounded, as
+    Spark's ``BigDecimal.doubleValue``): ``x·10⁶`` is within 2 ulp of the
+    decimal string's value, so ``rint`` picks Spark's integer unless that
+    value is within a few ulp of a half grain.  Those near-ties, and
+    ``|x·10⁶| ≥ 2⁵²``, take the exact ``Decimal`` route on the shortest
+    repr; ``|x| ≥ 2⁵³`` is an integer already and comes back unchanged."""
+    x = np.array(x, dtype=np.float64, ndmin=1)
+    with np.errstate(invalid="ignore", over="ignore"):
+        y = x * 1e6
+        out = np.rint(y) / 1e6 + 0.0  # + 0.0: -0.0 -> 0.0
+        ay = np.abs(y)
+        near = np.abs(ay - np.floor(ay) - 0.5) <= 8 * np.spacing(ay)
+    big = ~(np.abs(x) < 2.0**53)  # NaN included
+    out[big] = x[big]
+    for i in np.flatnonzero(near & ~big):
+        v = Decimal(repr(float(x.flat[i]))).quantize(_GRAIN, ROUND_HALF_UP)
+        out.flat[i] = float(v) + 0.0
+    return out
+
+
+def _sql_array(items) -> str:
+    return "array(" + ", ".join(items) + ")"
+
+
 def _double_matrix(rows) -> Column:
     """A list of float lists as one ``array<array<double>>`` SQL literal:
     one py4j call, not one per element."""
-    return F.expr("array(" + ", ".join(
-        "array(" + ", ".join(_sql_double(x) for x in r) + ")" for r in rows
-    ) + ")")
+    return F.expr(_sql_array(_sql_array(map(_sql_double, r)) for r in rows))
 
 
 def kmeans_lloyd(
@@ -802,18 +842,32 @@ def kmeans_lloyd(
       engines (unrounded means differ in ulps by aggregation order and
       would cascade through assignments).
 
-    Scale shape: centroids are MODEL-sized (k·dim doubles) — collected
-    to the driver each round and re-broadcast as literals (the k-means
-    pattern on any engine); per round the data is touched twice (one
-    codegen assignment pass, one posexplode + (cluster, dim) hash agg
-    whose output is k·dim rows).  No shuffle ever carries the vectors
-    except the dim-keyed agg, and iters is a fixed small constant.
+    Where it runs: after the init job, an input of n vectors with
+    n·max(dim, k) ≤ ``fixpoint.LOCAL_MAX_ROWS`` (1M; the vectors are
+    then ≤ 8 MB of doubles) is collected once as Arrow (job
+    ``kmeans_lloyd local``) and every round runs on the driver in numpy
+    (:func:`_lloyd_local`; numpy and Arrow take ≤ ~90 B of driver
+    memory per unit of n·max(dim, k), ≤ ~90 MB at the bound), so the
+    whole call is two jobs.  The driver repeats Spark's arithmetic
+    operation for operation, with :func:`spark_round6` for
+    ``round(·, 6)``.  A per-dim mean may still differ from Spark's in
+    the last ulp before its round, because the sum's order follows
+    Spark's partitions, which vary too; the 6-dp grain absorbs that
+    exactly as it does between Spark and DuckDB.  NULL, ragged or
+    non-finite vectors take the Spark rounds.
+
+    Above the bound centroids stay MODEL-sized (k·dim doubles) —
+    collected to the driver each round and re-broadcast as literals
+    (the k-means pattern on any engine); per round the data is touched
+    twice (one codegen assignment pass, one posexplode + (cluster, dim)
+    hash agg whose output is k·dim rows).  No shuffle ever carries the
+    vectors except the dim-keyed agg, and iters is a fixed small
+    constant.
 
     Returns (id, cluster, d2_r6) for the final assignment.
     """
-    emb = vecs.select(
-        F.col(id_col).alias("id"),
-        F.transform(vec_col, lambda x: x.cast("double")).alias("v"),
+    emb = vecs.selectExpr(  # SQL text: few py4j calls
+        f"{id_col} AS id", f"transform({vec_col}, x -> CAST(x AS DOUBLE)) AS v",
     # materialize the casted vectors ONCE: the iterative driver loop
     # issues iters+1 actions (init collect, per-round means, final
     # assignment), each of which would otherwise rescan the source and
@@ -827,6 +881,22 @@ def kmeans_lloyd(
         raise ValueError(
             f"kmeans_lloyd: k={k} exceeds the input's {len(cents)} rows"
         )
+    dim = len(cents[0]) if cents else 0
+    with fp.job_description(vecs.sparkSession, "kmeans_lloyd local"):
+        table = fp.collect_at_most(emb, fp.LOCAL_MAX_ROWS // max(dim, k, 1))
+    V = None if table is None or not cents else _local_vectors(table.column("v"), dim)
+    if V is not None:
+        cluster, d2, cents = _lloyd_local(V, cents, iters)
+        schema = T.StructType([
+            emb.schema["id"],
+            T.StructField("cluster", T.LongType()),
+            T.StructField("d2_r6", T.DoubleType()),
+        ])
+        out = fp.local_result(vecs.sparkSession, pa.table(
+            {"id": table.column("id"), "cluster": cluster, "d2_r6": d2}
+        ), schema)
+        return (out, cents) if return_centroids else out
+
     def dist2(cent) -> "F.Column":
         # aggregate(zip_with(...)) measured FASTER than an unrolled
         # 64-term codegen chain here (2.7s vs 7.2s per run, r8): the
@@ -881,6 +951,52 @@ def kmeans_lloyd(
         # asymmetric-distance scorer must use to match the codes)
         return out, cents
     return out
+
+
+def _local_vectors(col: pa.ChunkedArray, dim: int) -> np.ndarray | None:
+    """The collected vectors as an (n, dim) matrix; None where the driver
+    rounds would not reproduce Spark's: a NULL vector or element, a
+    vector of another length (``zip_with`` pads it with NULLs), a
+    non-finite element, or one so large that a squared distance or a
+    sum could overflow."""
+    arr = col.combine_chunks()
+    flat = arr.flatten()
+    if arr.null_count or flat.null_count or (np.diff(arr.offsets.to_numpy()) != dim).any():
+        return None
+    V = flat.to_numpy().reshape(len(arr), dim)
+    if not (np.abs(V) <= 1e100).all():  # NaN fails too
+        return None
+    return V
+
+
+def _lloyd_local(V: np.ndarray, cents: list, iters: int):
+    """:func:`kmeans_lloyd`'s rounds on the driver, operation for
+    operation: per row and centroid the left fold ``0.0 + (x0−c0)² + …``
+    in dim order, Spark's ``round(·, 6)``, the first index of the least
+    distance; per (cluster, dim) ``sum / count`` over rows in input
+    order, rounded again; an empty cluster keeps its centroid, and the
+    last round only assigns.  Returns (cluster, d2_r6, centroids of the
+    last assignment)."""
+    C = np.array(cents, dtype=np.float64)
+    n, dim = V.shape
+    for r_i in range(iters):
+        d = np.zeros((n, len(C)))
+        for i in range(dim):
+            t = V[:, i, None] - C[:, i]
+            d = d + t * t
+        d = spark_round6(d)
+        cluster = np.argmin(d, axis=1)
+        if r_i == iters - 1:
+            break
+        counts = np.bincount(cluster, minlength=len(C))
+        sums = np.zeros_like(C)
+        for i in range(dim):
+            # bincount adds each bin's weights in row order, as Spark's
+            # sum does within a partition
+            sums[:, i] = np.bincount(cluster, weights=V[:, i], minlength=len(C))
+        seen = counts > 0
+        C[seen] = spark_round6(sums[seen] / counts[seen, None])
+    return cluster.astype(np.int64), d[np.arange(n), cluster], C.tolist()
 
 
 def kmeans_lloyd_sql(
@@ -983,11 +1099,12 @@ def pq_train_encode(
     if dim % m:
         raise ValueError(f"dim {dim} not divisible by m={m}")
     dsub = dim // m
-    # the m subspace trainings are INDEPENDENT small jobs whose wall
-    # time is dominated by Lloyd's driver-synchronized collects, so
-    # they overlap from a driver thread pool (guide §2.6: submit
-    # independent jobs concurrently so the next job's tasks back-fill
-    # executors idled by the current one's driver round-trip).  Each
+    # the m subspace trainings are INDEPENDENT: two small jobs each
+    # (init, collect) when Lloyd runs on the driver, a few per round
+    # above its bound.  Either way their wall time is driver round-trips
+    # and numpy, so they overlap from a driver thread pool (guide §2.6:
+    # submit independent jobs concurrently so the next job's tasks
+    # back-fill executors idled by the current one's driver work).  Each
     # subspace's computation — init, rounds, rounding, assignment —
     # is unchanged and scheduling-independent, so codes and codebooks
     # are bit-identical to the sequential loop (the PQ oracle rows pin

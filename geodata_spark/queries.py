@@ -4174,9 +4174,11 @@ def q_watershed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distributed hydrology: D8 flow direction (scatter→gather
     steepest descent, dyadic drop²/dist² argmax — no sqrt, no
     tolerance) + watershed basin labels by pointer DOUBLING
-    (hydro.watershed, O(log path) rounds on fixpoint.fixpoint: at most
-    fixpoint.LOCAL_MAX_ROWS = 1M cells double on the driver in numpy,
-    ~120 B per cell there, above it Spark rounds).  Oracle: DuckDB
+    (hydro.watershed, O(log path) rounds: a raster of at most
+    fixpoint.LOCAL_MAX_ROWS = 1M cells is collected once and runs D8
+    and the doubling on the driver in numpy, ~170 B per cell there, so
+    ≤ ~170 MB of driver memory; above it a Spark D8 stage and Spark
+    rounds on fixpoint.fixpoint).  Oracle: DuckDB
     recursive CTE walking each cell's flow path to its sink — two
     different algorithms (log-round doubling vs linear recursion), same
     labels.  Output adds per-basin cell counts."""
@@ -4614,7 +4616,11 @@ def q_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     deterministic via 6-dp-rounded distances before the argmin and
     6-dp-rounded centroids between rounds — the recipe that makes an
     ORACLE possible for an iterative float algorithm (the unrolled
-    DuckDB twin recomputes every round independently)."""
+    DuckDB twin recomputes every round independently).  Inputs with
+    n·max(dim, k) ≤ fixpoint.LOCAL_MAX_ROWS = 1M (≤ 8 MB of vectors)
+    run every round on the driver after one Arrow collect, ≤ ~90 B per
+    unit of n·max(dim, k) there, so ≤ ~90 MB of driver memory; larger
+    ones run the Spark rounds."""
     vecs = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     out = SIM.kmeans_lloyd(vecs, k=4, iters=3)
     return out.select(F.col("id").alias("vec_id"), "cluster", "d2_r6")

@@ -34,7 +34,7 @@ documents into 4 "urban" cells (dense-coastal-cell skew, north_rule).
 from __future__ import annotations
 
 import re
-from functools import partial, reduce
+from functools import partial
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -391,12 +391,17 @@ def synth_mask_layers(spark: SparkSession, ny: int = NY, nx: int = NX) -> DataFr
     grid = spark.range(0, ny * nx, 1, spark.sparkContext.defaultParallelism).selectExpr(
         f"{y} AS y", f"{x} AS x", f"{lat} AS lat", f"{lon} AS lon"
     )
-    cell = cells.cell_sql("lat", "lon", 9)
-    return reduce(DataFrame.unionByName, [
-        grid.selectExpr(f"'{name}' AS layer", f"{cell} AS cell", "y AS y_idx", "x AS x_idx",
-                        "lat", "lon", f"{_mask_value_sql(name, 'spark')} AS value")
+    # one projection: each grid row yields its five (layer, value) pairs;
+    # inline over NOT NULL structs keeps each field's nullability (stack
+    # would make layer nullable)
+    layers = ", ".join(
+        f"named_struct('layer', '{name}', 'value', {_mask_value_sql(name, 'spark')})"
         for name in MASK_LAYERS
-    ])
+    )
+    return grid.selectExpr(
+        f"{cells.cell_sql('lat', 'lon', 9)} AS cell", "y AS y_idx", "x AS x_idx", "lat", "lon",
+        f"inline(array({layers}))",
+    ).selectExpr("layer", "cell", "y_idx", "x_idx", "lat", "lon", "value")
 
 
 def mask_layers_sql_cte(ny: int = NY, nx: int = NX) -> str:

@@ -12,9 +12,10 @@ reference ranking under the same (score desc, id asc) order.
 from __future__ import annotations
 
 import math
-from decimal import ROUND_HALF_UP, Decimal
 from functools import reduce
 
+import numpy as np
+import pyarrow as pa
 import pytest
 from pyspark.sql import functions as F
 
@@ -85,8 +86,7 @@ def _fold_dot(a, b) -> float:
 
 
 def _spark_round6(x: float) -> float:
-    """Spark's round(x, 6) on a double: HALF_UP on its decimal string."""
-    return float(Decimal(repr(x)).quantize(Decimal("1e-6"), rounding=ROUND_HALF_UP))
+    return float(SIM.spark_round6(x)[0])
 
 
 def _ranked(scores: dict, k: int) -> dict:
@@ -224,3 +224,28 @@ def test_centroid_matrix_literal_round_trips_doubles(spark):
     assert [struct.pack("<d", x) for r in got for x in r] == [
         struct.pack("<d", x) for r in rows for x in r
     ]
+
+
+def test_spark_round6_equals_spark_round_bit_for_bit(spark):
+    """``spark_round6`` (numpy bulk, exact Decimal near a half grain)
+    returns the very doubles of Spark's ``round(x, 6)``: 100k random
+    doubles across magnitudes, values on and next to a half grain, and
+    the constructed ties."""
+    rng = np.random.default_rng(6)
+    half = (rng.integers(-10**9, 10**9, 20_000) + 0.5) / 1e6
+    x = np.concatenate([
+        rng.standard_normal(60_000) * 10.0 ** rng.uniform(-12, 12, 60_000),
+        half, np.nextafter(half, np.inf), np.nextafter(half, -np.inf),
+        rng.integers(-10**6, 10**6, 20_000) / 1e7,
+        [5e-7, -5e-7, 2.5e-6, 1.0000005, 123456.0000005, -0.0, 0.0, 1e300, -1e-300,
+         2.0**53, 2.0**52 / 1e6, np.nan, np.inf, -np.inf],
+    ])
+    df = spark.createDataFrame(pa.table({"i": np.arange(len(x)), "x": x}))
+    got = df.select("i", F.round("x", 6).alias("r")).toArrow().sort_by("i")
+    want = got.column("r").to_numpy()
+    assert want.view(np.int64)[-14:-3].tolist() == np.array(
+        [1e-6, -1e-6, 3e-6, 1.000001, 123456.000001, 0.0, 0.0, 1e300, 0.0, 2.0**53, 4503599627.370496]
+    ).view(np.int64).tolist()  # HALF_UP away from zero; -0.0 -> 0.0
+    mine = SIM.spark_round6(x)
+    bad = np.flatnonzero(mine.view(np.int64) != want.view(np.int64))
+    assert len(bad) == 0, [(repr(x[i]), repr(mine[i]), repr(want[i])) for i in bad[:10]]
