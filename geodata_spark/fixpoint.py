@@ -1,49 +1,42 @@
-"""One iterate-to-fixpoint loop for the iterative operators
-(``hydro.watershed``, ``masks.filter_area``, both methods of
+"""One iterate-to-fixpoint toolkit for the iterative operators
+(``hydro.watershed``, ``masks.filter_area``,
 ``pipeline.dedup.connected_components``).
 
-Operators whose whole input fits under :data:`LOCAL_MAX_ROWS` skip
-this loop's Spark stages: they take the input with
-:func:`collect_at_most` (one job, at most bound + 1 rows), compute the
-starting state in numpy and run the rounds with :func:`finish_local`
-(``hydro.watershed``; ``similarity.kmeans_lloyd`` uses the collect and
-:func:`local_result` for its fixed Lloyd rounds).
+Each operator takes exactly one of two whole paths:
 
-Every :func:`fixpoint` call first materializes the starting state in
-ONE Spark job (an eager local checkpoint; the probe's aggregates and
-the row count ride on it as ``Observation`` metrics, so reading them
-is no second action).
-Then it takes one of two paths:
+- **Driver** (the input has at most :data:`LOCAL_MAX_ROWS` rows): take
+  the input with :func:`collect_at_most` (one job, at most bound + 1
+  rows), compute the starting state in numpy, run the rounds with
+  :func:`finish_local` and return the result through
+  :func:`local_result`.  One job in all, whatever the round count;
+  downstream plans read checkpointed blocks, never a ``LocalRelation``
+  of literal rows.  (``similarity.kmeans_lloyd`` uses the same collect
+  and result for its fixed Lloyd rounds.)
+- **Distributed rounds** (above the bound): :func:`fixpoint` first
+  materializes the starting state in ONE Spark job (an eager local
+  checkpoint; the probe's aggregates ride on it as ``Observation``
+  metrics, so reading them is no second action), then each round
+  materializes the new state in one job, probe included (a global
+  ``agg(...).first()`` would be a job of its own under AQE), and the
+  checkpoint keeps the plan from growing with the round count.
 
-- **Driver finish** (a ``local_step`` is given and the state has at most
-  :data:`LOCAL_MAX_ROWS` rows): collect the checkpointed state once with
-  ``toArrow()``, run the same rounds in numpy, and return the result as
-  a locally checkpointed DataFrame (lazy: the first job that reads it
-  writes the blocks).  Two jobs in all (start, collect), whatever the
-  round count; downstream plans read checkpointed blocks, never a
-  ``LocalRelation`` of literal rows.
-- **Distributed rounds** (above the bound, or no ``local_step``): each
-  round materializes the new state in one job, probe included (a
-  global ``agg(...).first()`` would be a job of its own under AQE), and
-  the checkpoint keeps the plan from growing with the round count.
-
-Both paths stop when a round leaves the state unchanged and raise the
-same ``"<what> did not converge in N rounds"`` error after ``max_iter``
+Both stop when a round leaves the state unchanged and raise the same
+``"<what> did not converge in N rounds"`` error after ``max_iter``
 rounds; they count rounds the same way, the unchanged one included.
-The distributed path reads "unchanged" off the probe, which must
+The distributed rounds read "unchanged" off the probe, which must
 therefore change whenever the state changes: an exact measure, not a
-hash that could collide.  The driver path compares the numpy columns.
+hash that could collide.  The driver rounds compare the numpy columns.
 
 The bound: each distributed round is a few Spark jobs of fixed
 scheduling and checkpoint cost plus its join, so on small states the
 rounds are almost all overhead.  Measured on a 4-core host (local[4],
 ``hydro.watershed`` on a one-row ramp DEM of n cells, about log2 n
-pointer-doubling rounds; time after the shared D8 stage, driver finish
-vs distributed rounds): 1k cells 0.4 vs 1.5 s, 10k 0.4 vs 2.8 s, 100k
-0.5 vs 6.9 s, 1M 3.4 vs 41.8 s.  There is no crossover up to 1M rows:
-the driver finish wins at every size, so the bound is set by driver
-memory, not speed.  The finishes hold 120–300 B per row of numpy and
-Arrow buffers on the driver (each caller states its own figure), so at
+pointer-doubling rounds; time after a shared Spark D8 stage, driver
+rounds vs distributed rounds): 1k cells 0.4 vs 1.5 s, 10k 0.4 vs
+2.8 s, 100k 0.5 vs 6.9 s, 1M 3.4 vs 41.8 s.  There is no crossover up
+to 1M rows: the driver wins at every size, so the bound is set by
+driver memory, not speed.  The driver paths hold 120–300 B per row of
+numpy and Arrow buffers (each caller states its own figure), so at
 most ~300 MB at the bound.
 """
 
@@ -58,7 +51,7 @@ from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
-# States with at most this many rows finish on the driver (see above).
+# Inputs with at most this many rows run on the driver (see above).
 LOCAL_MAX_ROWS = 1_000_000
 
 Columns = dict[str, np.ndarray]
@@ -87,9 +80,7 @@ def job_description(spark: SparkSession, text: str):
 
 def _materialize(df: DataFrame, probe: Callable[[DataFrame], Sequence[Column]]):
     obs = Observation()
-    df = df.observe(
-        obs, F.count(F.lit(1)).alias("_fixpoint_rows"), *probe(df)
-    ).localCheckpoint(eager=True)
+    df = df.observe(obs, *probe(df)).localCheckpoint(eager=True)
     return df, obs.get
 
 
@@ -103,24 +94,15 @@ def fixpoint(
     probe: Callable[[DataFrame], Sequence[Column]],
     max_iter: int,
     what: str,
-    local_step: LocalStep | None = None,
 ) -> tuple[DataFrame, int]:
     """Apply ``step`` until ``probe`` (named aggregate Columns over the
     state) gives the same values twice in a row; return the checkpointed
     state and the rounds run, the last (unchanged) one included.  Raises
-    rather than return a half-converged state.
-
-    ``local_step`` is the same round on the driver: given the starting
-    state as numpy columns, it yields the state after each round (same
-    columns, rows in a stable order).  Its jobs are labelled
-    ``fixpoint:<what> round N`` / ``fixpoint:<what> local``; the
-    caller's job description is restored on exit."""
-    spark = state.sparkSession
-    with job_description(spark, f"fixpoint:{what} round 0") as sc:
+    rather than return a half-converged state.  Its jobs are labelled
+    ``fixpoint:<what> round N``; the caller's job description is
+    restored on exit."""
+    with job_description(state.sparkSession, f"fixpoint:{what} round 0") as sc:
         state, seen = _materialize(state, probe)
-        if local_step is not None and seen["_fixpoint_rows"] <= LOCAL_MAX_ROWS:
-            sc.setJobDescription(f"fixpoint:{what} local")
-            return finish_local(spark, state.toArrow(), state.schema, local_step, max_iter, what)
         for rounds in range(1, max_iter + 1):
             sc.setJobDescription(f"fixpoint:{what} round {rounds}")
             state, value = _materialize(step(state), probe)
@@ -131,27 +113,18 @@ def fixpoint(
 
 
 def finish_local(
-    spark: SparkSession,
-    start: pa.Table,
-    schema: StructType,
-    local_step: LocalStep,
-    max_iter: int,
-    what: str,
-) -> tuple[DataFrame, int]:
-    """The driver rounds of :func:`fixpoint` from a starting state held
-    as an Arrow table: run ``local_step`` until a round leaves every
-    column unchanged, and return the result as :func:`local_result` with
-    ``schema`` and the rounds run, or raise after ``max_iter`` rounds."""
-    cur = {name: start.column(name).to_numpy() for name in start.column_names}
-    states = local_step(cur)
+    start: Columns, local_step: LocalStep, max_iter: int, what: str
+) -> tuple[Columns, int]:
+    """The rounds of :func:`fixpoint` on the driver: ``local_step``,
+    given the starting state as numpy columns, yields the state after
+    each round (same columns, rows in a stable order).  Returns the
+    first state that a round leaves unchanged in every column and the
+    rounds run, or raises after ``max_iter`` rounds."""
+    cur, states = start, local_step(start)
     for rounds in range(1, max_iter + 1):
         nxt = next(states)
         if all(np.array_equal(nxt[name], cur[name]) for name in cur):
-            out = pa.Table.from_arrays(
-                [pa.array(nxt[f.name], type=f.type) for f in start.schema],
-                schema=start.schema,
-            )
-            return local_result(spark, out, schema), rounds
+            return nxt, rounds
         cur = nxt
     raise _not_converged(what, max_iter)
 

@@ -15,29 +15,28 @@ The classic DEM pre-analysis pair (ESRI/GRASS ``flowdirection`` /
 - **Watershed labeling** follows the resulting FUNCTIONAL graph (one
   outgoing edge per cell) to its sink by pointer DOUBLING: each round
   root ← root(root), halving the remaining path length, so convergence
-  is O(log max-path-length) rounds.  The rounds run on
-  ``fixpoint.fixpoint`` (a hard RuntimeError on non-convergence instead
-  of a silent cap); its exact probe is the sum of each cell's flow-step
-  distance to its current root, which grows exactly when some root
-  moves.
+  is O(log max-path-length) rounds, with a hard RuntimeError on
+  non-convergence instead of a silent cap.  The Spark rounds' exact
+  probe is the sum of each cell's flow-step distance to its current
+  root, which grows exactly when some root moves.
 
 Where it runs: a raster of at most ``fixpoint.LOCAL_MAX_ROWS`` cells
 (1M) runs whole on the driver after ONE bounded Arrow collect of
 ``(y_idx, x_idx, value)``: D8 is one ``fixpoint.lookup`` per offset
 and the doubling is ``root ← root[root]`` over row indices, both in
 numpy, about 170 B of driver memory per cell (numpy and Arrow), so
-≤ ~170 MB at the bound.  Larger rasters, and rasters the driver would
-not reproduce bit for bit (a NULL or non-finite value, a repeated
-cell), run the D8 stage in Spark; its table then finishes on the
-driver under the bound or runs one checkpointed Spark equi-join per
-round on the packed cell key above it, ~40 rounds bounding a
-10^12-cell flow path.
+≤ ~170 MB at the bound.  The driver D8 orders heights as Spark does
+(NULL never drains nor is drained into; NaN above every value), so
+every raster under the bound takes this path.  Larger rasters run the
+D8 stage in Spark and one checkpointed Spark equi-join per round on
+the packed cell key, ~40 rounds bounding a 10^12-cell flow path.
 """
 
 from __future__ import annotations
 
 import numpy as np
 import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -130,47 +129,56 @@ def _jump_local(cols):
         yield {**cols, "root": cell[at], "_d": d}
 
 
-def _d8_local(cell: np.ndarray, z: np.ndarray) -> np.ndarray:
+def _d8_local(cell: np.ndarray, z: np.ndarray, null: np.ndarray) -> np.ndarray:
     """:func:`flow_direction_d8`'s ``parent`` in numpy, for distinct
-    cells and finite ``z``: one :func:`~geodata_spark.fixpoint.lookup`
-    per offset, in ``_OFFSETS`` order.  A neighbour replaces the best so
-    far only on a strictly steeper drop²/d2, so ties keep the smallest
-    (dy, dx), as ``max_by`` does; the best starts below 0, because a
-    strictly lower neighbour whose drop² underflows to 0 still drains
-    the cell."""
+    cells: one :func:`~geodata_spark.fixpoint.lookup` per offset, in
+    ``_OFFSETS`` order, under Spark's order for doubles (NaN above
+    every value and equal to NaN).  A neighbour is lower when
+    ``zn < z`` or when ``z`` alone is NaN; it replaces the best so far
+    on a greater drop²/d2, or a NaN one over a non-NaN best, so ties
+    keep the smallest (dy, dx), as ``max_by`` does.  The best starts
+    below 0, because a strictly lower neighbour whose drop² underflows
+    to 0 still drains the cell.  A ``null`` cell neither drains nor is
+    drained into."""
     parent, best = cell.copy(), np.full(len(cell), -1.0)
     for dy, dx in _OFFSETS:
         nbr = cell + dy * Y_STEP + dx
         at = lookup(cell, nbr)
-        zn = np.where(at >= 0, z[at], np.inf)  # absent: never lower
-        with np.errstate(over="ignore"):  # drop² may overflow to inf, as in Spark
+        zn = z[at]  # at == -1 (absent) is masked out below
+        with np.errstate(over="ignore", invalid="ignore"):  # inf and NaN as in Spark
             s2 = (z - zn) * (z - zn) / float(dy * dy + dx * dx)
-        take = (zn < z) & (s2 > best)
+        lower = (zn < z) | (np.isnan(z) & ~np.isnan(zn))
+        steeper = (s2 > best) | (np.isnan(s2) & ~np.isnan(best))
+        take = (at >= 0) & ~null & ~null[at] & lower & steeper
         parent = np.where(take, nbr, parent)
         best = np.where(take, s2, best)
     return parent
 
 
-def _local_start(cols: pa.Table) -> pa.Table | None:
+def _local_start(cols: pa.Table) -> fp.Columns:
     """The starting state of the doubling, ``(y_idx, x_idx, cell, root,
-    _d)``, from the collected ``(y_idx, x_idx, _z)``; None where the
-    driver would not reproduce the Spark stage: a NULL, a repeated cell,
-    a non-finite ``z`` (Spark orders NaN above every value), or a
-    coordinate whose packed key could overflow a long (Spark raises)."""
-    if any(c.null_count for c in cols.columns):
-        return None
-    y, x, z = (cols.column(name).to_numpy() for name in ("y_idx", "x_idx", "_z"))
+    _d)``, from the collected ``(y_idx, x_idx, _z)``.  A row with a NULL
+    coordinate is dropped, as in the Spark rounds (its key joins
+    nothing).  Raises ``ValueError`` on a coordinate whose packed key
+    could overflow a long (Spark raises under ANSI) and on a repeated
+    cell."""
+    cols = cols.filter(pc.and_(pc.is_valid(cols["y_idx"]), pc.is_valid(cols["x_idx"])))
+    y, x = (cols.column(name).to_numpy() for name in ("y_idx", "x_idx"))
     yx = np.concatenate([y, x])
-    if not (np.isfinite(z).all() and ((-(2**35) < yx) & (yx < 2**35)).all()):
-        return None
+    if not ((-(2**35) < yx) & (yx < 2**35)).all():
+        raise ValueError("watershed: |y_idx| and |x_idx| must be below 2^35")
     cell = y * Y_STEP + x
-    if len(np.unique(cell)) != len(cell):
-        return None
-    parent = _d8_local(cell, z)
-    return pa.table({
+    order = np.argsort(cell, kind="stable")
+    again = order[1:][cell[order][1:] == cell[order][:-1]]
+    if len(again):
+        i = again[0]
+        raise ValueError(f"watershed: cell (y_idx={y[i]}, x_idx={x[i]}) is repeated")
+    z = cols.column("_z")
+    parent = _d8_local(cell, z.to_numpy(), z.is_null().to_numpy())
+    return {
         "y_idx": y, "x_idx": x, "cell": cell, "root": parent,
         "_d": (parent != cell).astype(np.int64),
-    })
+    }
 
 
 def watershed(
@@ -182,9 +190,15 @@ def watershed(
     Rasters of at most ``fixpoint.LOCAL_MAX_ROWS`` cells (1M) run whole
     on the driver: one Arrow collect of ``(y_idx, x_idx, value)`` (job
     ``watershed local``), D8 and the doubling in numpy, ~170 B of driver
-    memory per cell (≤ ~170 MB at the bound).  Larger rasters, and any
-    with a NULL or non-finite value or a repeated cell, run the Spark D8
-    stage and the rounds of ``fixpoint.fixpoint``.
+    memory per cell (≤ ~170 MB at the bound).  Larger rasters run the
+    Spark D8 stage and the rounds of ``fixpoint.fixpoint``.
+
+    Each ``(y_idx, x_idx)`` cell must appear once.  Under the bound a
+    repeated cell raises ``ValueError`` before any round.  Above it a
+    repeated cell is invalid input that is not checked: each doubling
+    round joins every row to every copy of its root, so the rows that
+    point at the cell multiply every round.  A row with a NULL
+    coordinate is dropped.
 
     Output: (y_idx, x_idx, cell, basin) — ``basin`` is the sink's
     packed key, so sink rows have basin == cell.
@@ -196,22 +210,20 @@ def watershed(
     )
     with fp.job_description(spark, "watershed local"):
         cols = fp.collect_at_most(base, fp.LOCAL_MAX_ROWS)
-    start = None if cols is None else _local_start(cols)
     what = "watershed: pointer doubling"
-    if start is not None:
+    if cols is None:
+        d8 = flow_direction_d8(layer, value_col).select(
+            "y_idx", "x_idx", "cell", F.col("parent").alias("root"),
+            (F.col("parent") != F.col("cell")).cast("long").alias("_d"),
+        )
+        ws, _ = fixpoint(d8, _jump, lambda cur: [F.sum("_d").alias("d")], max_iters, what)
+    else:
+        out, _ = fp.finish_local(_local_start(cols), _jump_local, max_iters, what)
         y, x = (base.schema[name].nullable for name in ("y_idx", "x_idx"))
         schema = T.StructType([
             T.StructField("y_idx", T.LongType(), y),
             T.StructField("x_idx", T.LongType(), x),
             *(T.StructField(name, T.LongType(), y or x) for name in ("cell", "root", "_d")),
         ])
-        ws, _ = fp.finish_local(spark, start, schema, _jump_local, max_iters, what)
-    else:
-        d8 = flow_direction_d8(layer, value_col).select(
-            "y_idx", "x_idx", "cell", F.col("parent").alias("root"),
-            (F.col("parent") != F.col("cell")).cast("long").alias("_d"),
-        )
-        ws, _ = fixpoint(
-            d8, _jump, lambda cur: [F.sum("_d").alias("d")], max_iters, what, _jump_local,
-        )
+        ws = fp.local_result(spark, pa.table(out), schema)
     return ws.selectExpr("y_idx", "x_idx", "cell", "root AS basin")

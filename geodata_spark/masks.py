@@ -21,17 +21,20 @@ get_bounds/res     layer extents                          :func:`layer_bounds`  
 Scale notes: layer merges are hash aggregations on the cell id (no
 join needed — union + groupBy gives map-side partial aggregation);
 connected components is the one iterative op: hook + pointer-jump
-label propagation on ``fixpoint.fixpoint`` (distributed rounds are a
-groupBy at the cell grain, no cross-join; small layers finish on the
-driver).
+label propagation (small layers run whole on the driver; larger ones
+run on ``fixpoint.fixpoint``, each round a groupBy at the cell grain,
+no cross-join).
 """
 
 from __future__ import annotations
 
 import numpy as np
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
+from geodata_spark import fixpoint as fp
 from geodata_spark.cells import Y_SHIFT
 from geodata_spark.fixpoint import fixpoint, lookup, min_label_rounds
 
@@ -212,13 +215,16 @@ def filter_area(
     (2^64 cells), unlike plain min-propagation which the round-2 judge
     flagged as silently capping at diameter 50.  If the fixpoint is
     somehow not reached a ``RuntimeError`` is raised rather than
-    returning a silently-split labeling.  The rounds run on
-    ``fixpoint.fixpoint``; labels never rise over a fixed row set, so
-    the decimal sum of labels is an exact probe.  Layers of at most
-    ``fixpoint.LOCAL_MAX_ROWS`` nonzero cells (1M) finish on the driver
-    (``fixpoint.min_label_rounds`` over the ±1 / ±2^27 neighbour pairs),
-    holding ~300 B per nonzero cell there (≤ ~300 MB); larger ones run
-    one checkpointed Spark round each.
+    returning a silently-split labeling.
+
+    Layers of at most ``fixpoint.LOCAL_MAX_ROWS`` nonzero cells (1M)
+    run whole on the driver: one Arrow collect of the nonzero cells
+    (job ``filter_area local``), the same hook + jump rounds with
+    ``fixpoint.min_label_rounds`` over the ±1 / ±2^27 neighbour pairs,
+    and the region sizes in numpy, holding ~300 B per nonzero cell
+    there (≤ ~300 MB).  Larger layers run one checkpointed Spark round
+    each on ``fixpoint.fixpoint``; labels never rise over a fixed row
+    set, so the decimal sum of labels is an exact probe.
 
     The reference reprojects to equal-area and thresholds in km²
     (mask.py:1309-1398); at cell grain the equivalent threshold is a
@@ -266,15 +272,31 @@ def filter_area(
         for label in min_label_rounds(cell, cols["label"], rows, nbr[hit], jump=True):
             yield {"cell": cell, "label": label}
 
-    active, _ = fixpoint(
-        active, hook_and_jump,
-        lambda df: [F.sum(F.col("label").cast("decimal(38,0)")).alias("s")],
-        max_iters, "filter_area: connected components", hook_and_jump_local,
-    )
-    sizes = active.groupBy("label").agg(F.count(F.lit(1)).alias("n"))
-    keep = active.join(
-        F.broadcast(sizes.filter(F.col("n") >= min_cells).select("label")), "label"
-    ).select(F.col("cell").alias("_cc_key"), F.lit(1).alias("_keep"))
+    what = "filter_area: connected components"
+    with fp.job_description(layer.sparkSession, "filter_area local"):
+        cols = fp.collect_at_most(active.select("cell"), fp.LOCAL_MAX_ROWS)
+    if cols is None:
+        active, _ = fixpoint(
+            active, hook_and_jump,
+            lambda df: [F.sum(F.col("label").cast("decimal(38,0)")).alias("s")],
+            max_iters, what,
+        )
+        sizes = active.groupBy("label").agg(F.count(F.lit(1)).alias("n"))
+        kept = active.join(
+            F.broadcast(sizes.filter(F.col("n") >= min_cells).select("label")), "label"
+        ).select(F.col("cell").alias("_cc_key"))
+    else:
+        cell = cols.column("cell").drop_null().to_numpy()  # a NULL key joins no cell
+        out, _ = fp.finish_local(
+            {"cell": cell, "label": cell}, hook_and_jump_local, max_iters, what
+        )
+        _, region, size = np.unique(out["label"], return_inverse=True, return_counts=True)
+        kept = fp.local_result(
+            layer.sparkSession,
+            pa.table({"_cc_key": cell[size[region] >= min_cells]}),
+            T.StructType([T.StructField("_cc_key", T.LongType())]),
+        )
+    keep = kept.select("_cc_key", F.lit(1).alias("_keep"))
     return (
         layer.join(keep, "_cc_key", "left")
         .withColumn(

@@ -29,11 +29,13 @@ is identical in both modes; only the hash primitive differs.
 from __future__ import annotations
 
 import numpy as np
-from pyspark.sql import Column, DataFrame, Observation
+import pyarrow as pa
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
-from geodata_spark import fixpoint as _fixpoint
-from geodata_spark.fixpoint import fixpoint, lookup, min_label_rounds
+from geodata_spark import fixpoint as fp
+from geodata_spark.fixpoint import fixpoint, min_label_rounds
 from geodata_spark.pipeline.text import normalize_sql
 
 
@@ -774,91 +776,64 @@ def connected_components(
     id_a: str = "id_a",
     id_b: str = "id_b",
     max_iter: int = 20,
-    method: str = "star",
 ) -> DataFrame:
     """Connected components of an undirected pair list → (node, component).
 
     This is the TRANSITIVE step of near-dedup (A~B, B~C ⇒ {A,B,C} one
     cluster) that the pairwise MinHash/SimHash outputs deliberately
     leave to the caller; each component is labelled by its smallest
-    member.
+    member, and a node that appears only in self-pairs labels itself.
 
-    ``method="star"`` (default): alternating large-star / small-star
-    contraction — the published MapReduce CC algorithm (Kiveris et
-    al., "Connected Components in MapReduce and Beyond", SoCC'14).
-    Round count is O(log² n) worst-case and ~log₂(diameter) in
-    practice (a 1000-node path converges in ~11 alternations; pinned by
-    tests/test_pipeline.py), so pathological chain graphs cannot blow
-    the round budget the way diameter-bound propagation can.
-
-    ``method="hashmin"``: the round-5 hash-min label propagation —
-    every node repeatedly adopts the minimum label among itself and
-    its neighbours; rounds = graph DIAMETER.  Kept because its
-    per-round cost is lower (one join) on the tiny-clique graphs
-    near-dedup actually produces.
-
-    Scale shape (both): the rounds run on ``fixpoint.fixpoint``, which
-    raises after ``max_iter`` rounds rather than returning a
-    half-converged labelling.  Graphs of at most
-    ``fixpoint.LOCAL_MAX_ROWS`` rows (1M; nodes and directed edges for
-    hashmin, distinct pairs for star) finish on the driver with
-    ``fixpoint.min_label_rounds``, holding ~200 B per directed edge
-    (hashmin) or ~250 B per pair (star) there, so ≤ ~250 MB; star emits
-    the canonical (min, member) star, the unique fixpoint of
-    large/small-star.  Larger graphs run one-or-two equi-join +
-    min-aggregate rounds, each checkpointed, and nothing ever holds a
-    component in memory.
+    Graphs of at most ``fixpoint.LOCAL_MAX_ROWS`` pairs (1M) run whole
+    on the driver: one Arrow collect of the canonical (least, greatest)
+    pairs (job ``connected_components local``), then min-label rounds
+    with pointer jumping (``fixpoint.min_label_rounds``), ~250 B per
+    pair there (≤ ~250 MB).  Larger graphs run alternating large-star /
+    small-star contraction — the published MapReduce CC algorithm
+    (Kiveris et al., "Connected Components in MapReduce and Beyond",
+    SoCC'14) — one-or-two equi-join + min-aggregate rounds on
+    ``fixpoint.fixpoint``, each checkpointed, and nothing ever holds a
+    component in memory.  Round count is O(log² n) worst-case and
+    ~log₂(diameter) in practice on both paths (a 1000-node path
+    converges in ~11 rounds; pinned by tests/test_pipeline.py), so
+    pathological chain graphs cannot blow the round budget the way
+    diameter-bound propagation can.  Both raise after ``max_iter``
+    rounds rather than return a half-converged labelling.
     """
-    if method == "star":
-        return _cc_star(pairs, id_a, id_b, max_iter)
-    if method != "hashmin":
-        raise ValueError(f"unknown method {method!r}")
-    n_edges = Observation()
-    edges = (
-        pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst"))
-        .unionByName(pairs.select(F.col(id_b).alias("src"), F.col(id_a).alias("dst")))
-        .distinct()
-        .observe(n_edges, F.count(F.lit(1)).alias("n"))
-        # materialize ONCE: `pairs` is usually an expensive unexecuted
-        # plan (the MinHash/LSH band join) that would otherwise be
-        # recomputed by the join in EVERY propagation round
-        .localCheckpoint()
+    ends = pairs.select(
+        F.least(F.col(id_a), F.col(id_b)).alias("u"),
+        F.greatest(F.col(id_a), F.col(id_b)).alias("v"),
     )
+    what = "connected_components"
+    with fp.job_description(pairs.sparkSession, f"{what} local"):
+        table = fp.collect_at_most(ends, fp.LOCAL_MAX_ROWS)
+    if table is None:
+        return _cc_star(ends, max_iter, what)
+    # least/greatest are NULL only where both ids are: such a pair is a
+    # NULL node with a NULL component, as on the Spark path
+    rows, table = table.num_rows, table.drop_null()
+    u, v = (table.column(c).to_numpy() for c in ("u", "v"))
+    node = np.unique(np.concatenate([u, v]))
+    src, dst = np.searchsorted(node, u), np.searchsorted(node, v)
 
-    def propagate(labels: DataFrame) -> DataFrame:
-        nbr = (
-            edges.join(
-                labels.select(F.col("node").alias("dst"), F.col("label").alias("_nl")),
-                "dst",
-            )
-            .groupBy("src")
-            .agg(F.min("_nl").alias("_nbl"))
-            .withColumnRenamed("src", "node")
-        )
-        return labels.join(nbr, "node", "left").select(
-            "node", F.least(F.col("label"), F.col("_nbl")).alias("label")  # least skips NULL
-        )
+    def min_label_local(cols):
+        for label in min_label_rounds(node, node, src, dst, jump=True):
+            yield {"node": node, "component": label}
 
-    def propagate_local(cols):
-        node = cols["node"]
-        e = edges.toArrow()
-        src, dst = (lookup(node, e.column(c).to_numpy()) for c in ("src", "dst"))
-        for label in min_label_rounds(node, cols["label"], src, dst, jump=False):
-            yield {"node": node, "label": label}
-
-    # fixpoint bounds the node count; the driver finish also collects the
-    # edge list, so bound that here
-    small = n_edges.get["n"] <= _fixpoint.LOCAL_MAX_ROWS
-    # labels never rise over a fixed node set: the label sum is exact
-    labels, _ = fixpoint(
-        edges.select(F.col("src").alias("node")).distinct().withColumn("label", F.col("node")),
-        propagate,
-        lambda df: [F.sum(F.col("label").cast("decimal(38,0)")).alias("s")],
-        max_iter,
-        "connected_components(hashmin)",
-        propagate_local if small else None,
+    out, rounds = fp.finish_local(
+        {"node": node, "component": node}, min_label_local, max_iter, what
     )
-    return labels.select("node", F.col("label").alias("component"))
+    typ, field = table.schema.field("u").type, ends.schema["u"]
+    cols = [pa.array(out[c], type=typ) for c in ("node", "component")]
+    if table.num_rows < rows:
+        cols = [pa.concat_arrays([c, pa.nulls(1, typ)]) for c in cols]
+    res = fp.local_result(
+        pairs.sparkSession,
+        pa.table(cols, names=["node", "component"]),
+        T.StructType([T.StructField(c, field.dataType, field.nullable) for c in ("node", "component")]),
+    )
+    res._cc_rounds = rounds  # introspection for the convergence test
+    return res
 
 
 def _sym(edges: DataFrame) -> DataFrame:
@@ -868,8 +843,9 @@ def _sym(edges: DataFrame) -> DataFrame:
     )
 
 
-def _cc_star(pairs: DataFrame, id_a: str, id_b: str, max_iter: int) -> DataFrame:
-    """Alternating large-star/small-star contraction (Kiveris SoCC'14).
+def _cc_star(ends: DataFrame, max_iter: int, what: str) -> DataFrame:
+    """Alternating large-star/small-star contraction (Kiveris SoCC'14)
+    over the canonical ``(u, v)`` pairs ``ends``.
 
     large-star: every node links its strictly-larger neighbours to the
     minimum of its closed neighbourhood; small-star: links itself and
@@ -879,20 +855,14 @@ def _cc_star(pairs: DataFrame, id_a: str, id_b: str, max_iter: int) -> DataFrame
     canonical (min, max) edge set is unchanged (count + order-free
     xxhash checksum — deterministic, no full subtract join).
     """
-    # materialize ONCE: `pairs` is usually an expensive unexecuted plan
-    # (the MinHash/LSH band join).  Nodes derive from the canonical
-    # pair set BEFORE the reflexive filter, so a node that appears
-    # only in self-pairs (id_a == id_b) still labels itself — the
-    # hashmin method's behavior
-    canon = (
-        pairs.select(
-            F.least(F.col(id_a), F.col(id_b)).alias("u"),
-            F.greatest(F.col(id_a), F.col(id_b)).alias("v"),
-        )
-        .distinct()
-        # lazy: materialized by the same job as the starting edge set
-        .localCheckpoint(eager=False)
-    )
+    # checkpoint ONCE: `pairs` is usually an expensive unexecuted plan
+    # (the MinHash/LSH band join).  The checkpoint is lazy, but AQE
+    # runs the shuffle stages of `pairs` and the distinct at call time;
+    # only the final stage waits for the first round.  Nodes derive
+    # from the canonical pair set BEFORE the reflexive filter, so a
+    # node that appears only in self-pairs (id_a == id_b) still labels
+    # itself
+    canon = ends.distinct().localCheckpoint(eager=False)
     edges = canon.filter(F.col("u") != F.col("v"))
     # nodes stays a LAZY plan over the checkpointed canon: it is read
     # exactly once (the final labelling join), so an eager checkpoint
@@ -953,19 +923,8 @@ def _cc_star(pairs: DataFrame, id_a: str, id_b: str, max_iter: int) -> DataFrame
             .distinct()
         )
 
-    def star_local(cols):
-        # min-label rounds over the starting edges; each round's state is
-        # the (label, member) edge set, which at the fixpoint is the star
-        u, v = cols["u"], cols["v"]
-        node = np.unique(np.concatenate([u, v]))
-        src, dst = np.searchsorted(node, u), np.searchsorted(node, v)
-        for label in min_label_rounds(node, node, src, dst, jump=True):
-            member = label != node
-            yield {"u": label[member], "v": node[member]}
-
     edges, rounds_used = fixpoint(
-        edges, lambda e: _small_star(_large_star(e)), _checksum, max_iter,
-        "connected_components(star)", star_local,
+        edges, lambda e: _small_star(_large_star(e)), _checksum, max_iter, what
     )
 
     # at the fixpoint every edge is (root, member); isolated inputs

@@ -378,9 +378,10 @@ def q_filter_area(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Connected-component area filter (A6): kept-cell table.
 
     The Spark side runs hook + pointer-jump connected components to a
-    fixpoint (masks.filter_area on fixpoint.fixpoint; at most
-    fixpoint.LOCAL_MAX_ROWS = 1M nonzero cells finish on the driver in
-    numpy, ~300 B per cell there, above it Spark rounds); the DuckDB
+    fixpoint (masks.filter_area: at most fixpoint.LOCAL_MAX_ROWS = 1M
+    nonzero cells are collected once and run whole on the driver in
+    numpy, ~300 B per cell there; above it Spark rounds on
+    fixpoint.fixpoint); the DuckDB
     oracle reaches the same labelling with a recursive
     label-propagation CTE — an exact, hash-checked compare of which
     cells survive the min_cells threshold."""
@@ -3243,11 +3244,12 @@ FROM v JOIN c
 
 def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Transitive near-dup clustering: MinHash+LSH verified pairs →
-    connected components (star contraction, connected_components'
-    default method, on fixpoint.fixpoint; at most fixpoint.LOCAL_MAX_ROWS
-    = 1M distinct pairs finish on the driver in numpy, ~250 B per pair
-    there, above it Spark rounds), each cluster labelled by its
-    smallest doc id.  The DuckDB oracle computes the
+    connected components (connected_components: at most
+    fixpoint.LOCAL_MAX_ROWS = 1M pairs are collected once and run
+    min-label rounds with pointer jumping on the driver in numpy,
+    ~250 B per pair there; above it star-contraction Spark rounds on
+    fixpoint.fixpoint), each cluster labelled by its smallest doc id.
+    The DuckDB oracle computes the
     same components by a RECURSIVE CTE transitive closure — two
     utterly different algorithms (iterative join fixpoint vs recursive
     set expansion), same labelling."""
@@ -4177,8 +4179,9 @@ def q_watershed(spark: SparkSession, sf_dir: str) -> DataFrame:
     (hydro.watershed, O(log path) rounds: a raster of at most
     fixpoint.LOCAL_MAX_ROWS = 1M cells is collected once and runs D8
     and the doubling on the driver in numpy, ~170 B per cell there, so
-    ≤ ~170 MB of driver memory; above it a Spark D8 stage and Spark
-    rounds on fixpoint.fixpoint).  Oracle: DuckDB
+    ≤ ~170 MB of driver memory, NULL and non-finite heights included;
+    above it a Spark D8 stage and Spark rounds on fixpoint.fixpoint).
+    Oracle: DuckDB
     recursive CTE walking each cell's flow path to its sink — two
     different algorithms (log-round doubling vs linear recursion), same
     labels.  Output adds per-basin cell counts."""
@@ -6213,7 +6216,8 @@ ORACLES = {
     "stratified_sample": _stratified_sample_sql(),
     # binned interval join vs DuckDB's plain range join
     "interval_join": _INTERVAL_JOIN_SQL,
-    # iterative hash-min fixpoint vs recursive-CTE transitive closure
+    # iterative min-label / star-contraction fixpoint vs recursive-CTE
+    # transitive closure
     "dedup_clusters": _dedup_clusters_sql(),
     "tfidf_top_terms": TX.tfidf_top_terms_sql(top_k=3),
     "zorder_stats": _ZORDER_SQL,

@@ -35,6 +35,8 @@ def get_spark(
         else:
             shuffle_partitions = 2 * cpus
 
+    # default heap: half the host's physical memory, at most 24g
+    heap_mb = min(24 << 10, os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2 >> 20)
     builder = (
         SparkSession.builder.master(master)
         .appName(app_name)
@@ -46,16 +48,17 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "24g"))
+        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", f"{heap_mb}m"))
         # Pre-size the heap: with many executor threads the default
         # tiny -Xms triggers a growth/GC storm on the first
         # allocation-heavy stage (observed 15x first-run outliers at
-        # local[32]).
+        # local[32]).  At most the default heap: a JVM refuses an -Xms
+        # above its -Xmx.
         .config(
             "spark.driver.extraJavaOptions",
             os.environ.get(
                 "SPARK_DRIVER_JAVA_OPTS",
-                "-Xms8g -XX:+UseG1GC -XX:+AlwaysPreTouch",
+                f"-Xms{min(8 << 10, heap_mb)}m -XX:+UseG1GC -XX:+AlwaysPreTouch",
             ),
         )
         # 128 MiB split targets keep scan tasks balanced at 100 TB scale

@@ -1,5 +1,5 @@
 """fixpoint: rounds, one Spark job per round, the iteration bound, and
-the driver finish below ``LOCAL_MAX_ROWS``."""
+the iterative operators run whole on the driver below ``LOCAL_MAX_ROWS``."""
 
 import numpy as np
 import pyarrow as pa
@@ -42,6 +42,12 @@ def _in_group(spark, group, fn):
     return out, sorted(sc.statusTracker().getJobIdsForGroup(group))
 
 
+def _job_descriptions(spark, group, fn):
+    _, jobs = _in_group(spark, group, fn)
+    store = spark.sparkContext._jsc.sc().statusStore()
+    return [store.job(j).description().get() for j in jobs]
+
+
 def test_fixpoint_rounds_and_one_job_per_round(spark):
     from geodata_spark.fixpoint import fixpoint
 
@@ -66,52 +72,44 @@ def test_fixpoint_raises_at_the_bound(spark):
         fixpoint(start, _decrement, _total, 3, "decrement")
 
 
-def test_local_finish_runs_in_three_jobs(spark):
-    from geodata_spark.fixpoint import fixpoint
+def _finish(spark, max_iter):
+    from geodata_spark import fixpoint as fp
 
-    (state, rounds), jobs = _in_group(
-        spark, "test_fixpoint_local",
-        lambda: fixpoint(_start(spark), _decrement, _total, 64, "decrement", _decrement_local),
-    )
+    out, rounds = fp.finish_local({"v": np.arange(6)}, _decrement_local, max_iter, "decrement")
+    return fp.local_result(spark, pa.table(out), _start(spark).schema), rounds
+
+
+def test_local_finish_runs_no_job(spark):
+    (state, rounds), jobs = _in_group(spark, "test_fixpoint_local", lambda: _finish(spark, 64))
     assert rounds == 6  # the same count as the distributed rounds
-    # the starting checkpoint and one toArrow collect; the result is
-    # checkpointed by the first job that reads it
-    assert len(jobs) == 2, jobs
+    # the result is checkpointed by the first job that reads it
+    assert jobs == []
     assert state.schema == _start(spark).schema
     assert sorted(r.v for r in state.collect()) == [0] * 6
 
 
 def test_local_finish_raises_at_the_bound(spark):
-    from geodata_spark.fixpoint import fixpoint
-
     with pytest.raises(RuntimeError, match="decrement did not converge in 3 rounds"):
-        fixpoint(_start(spark), _decrement, _total, 3, "decrement", _decrement_local)
+        _finish(spark, 3)
 
 
-def test_above_the_bound_runs_distributed_rounds(spark, distributed_fixpoint):
-    from geodata_spark.fixpoint import fixpoint
-
-    (state, rounds), jobs = _in_group(
-        spark, "test_fixpoint_above",
-        lambda: fixpoint(_start(spark), _decrement, _total, 64, "decrement", _decrement_local),
-    )
-    assert rounds == 6
-    assert len(jobs) == rounds + 1
-    assert sorted(r.v for r in state.collect()) == [0] * 6
-
-
-@pytest.mark.parametrize("path", ["local", "distributed", "watershed", "kmeans_lloyd"])
+@pytest.mark.parametrize(
+    "path", ["distributed", "watershed", "filter_area", "connected_components", "kmeans_lloyd"]
+)
 def test_jobs_are_labelled_and_the_caller_description_restored(spark, request, path):
     from geodata_spark import fixpoint as fp
+    from geodata_spark import masks
     from geodata_spark.hydro import watershed
+    from geodata_spark.pipeline.dedup import connected_components
     from geodata_spark.pipeline.similarity import kmeans_lloyd
 
     if path == "distributed":
         request.getfixturevalue("distributed_fixpoint")
     sc = spark.sparkContext
-    store = sc._jsc.sc().statusStore()
     group = f"test_fixpoint_desc_{path}"
     ramp = _raster_df(spark, [[float(x) for x in range(8)]])
+    snake = _raster_df(spark, [[1.0] * 8])
+    path_graph = spark.createDataFrame([(i, i + 1) for i in range(12)], "id_a long, id_b long")
     vecs = spark.createDataFrame([(i, [float(i % 3)]) for i in range(6)], "vec_id long, embedding array<double>")
 
     def run_and_raise():
@@ -121,25 +119,25 @@ def test_jobs_are_labelled_and_the_caller_description_restored(spark, request, p
             with pytest.raises(RuntimeError, match="did not converge"):
                 if path == "watershed":
                     watershed(ramp, max_iters=1)
+                elif path == "filter_area":
+                    masks.filter_area(snake, 2, max_iters=1)
+                elif path == "connected_components":
+                    connected_components(path_graph, max_iter=1)
                 else:
-                    fp.fixpoint(_start(spark), _decrement, _total, 2, "dec", _decrement_local)
+                    fp.fixpoint(_start(spark), _decrement, _total, 2, "dec")
         # the caller's description is back, even after the raise
         assert sc.getLocalProperty("spark.job.description") == f"{group} caller"
 
-    _, jobs = _in_group(spark, group, run_and_raise)
-    descs = [store.job(j).description().get() for j in jobs]
-    if path == "local":
-        assert descs[0] == "fixpoint:dec round 0"
-        assert descs[1:] == ["fixpoint:dec local"]  # the collect; the raise precedes a result
-    elif path == "distributed":
+    descs = _job_descriptions(spark, group, run_and_raise)
+    if path == "distributed":
         assert descs == [f"fixpoint:dec round {i}" for i in range(3)]
-    elif path == "watershed":
-        assert descs == ["watershed local"]  # the one collect; the rounds run in numpy
+    elif path != "kmeans_lloyd":
+        assert descs == [f"{path} local"]  # the one collect; the rounds run in numpy
     else:
         assert descs == [f"{group} caller", "kmeans_lloyd local"]  # the init, the vectors
 
 
-# -- the driver finish returns the distributed path's rows -------------------
+# -- the driver path returns the distributed path's rows ---------------------
 
 _property = settings(
     max_examples=8, deadline=None, suppress_health_check=[HealthCheck.function_scoped_fixture]
@@ -173,18 +171,35 @@ def _grids(values):
 
 
 def _raster_df(spark, grid):
-    rows = [(y, x, float(v)) for y, r in enumerate(grid) for x, v in enumerate(r)]
+    rows = [(y, x, v if v is None else float(v)) for y, r in enumerate(grid) for x, v in enumerate(r)]
     return spark.createDataFrame(rows, "y_idx long, x_idx long, value double")
 
 
 # few distinct heights: plateaus and exact slope ties on most draws; 1e-200
-# above 0.0 is a strictly lower neighbour whose drop² underflows to 0
+# above 0.0 is a strictly lower neighbour whose drop² underflows to 0;
+# Spark orders NaN above +inf, -0.0 equal to 0.0, and a NULL height
+# neither drains nor is drained into
+_heights = st.sampled_from(
+    [0.0, -0.0, 1e-200, 2e-200, 0.5, 1.0, 2.0, 3.0,
+     float("nan"), float("inf"), float("-inf"), None]
+)
+
+
 @_property
-@given(dem=_grids(st.sampled_from([0.0, 1e-200, 2e-200, 0.5, 1.0, 2.0, 3.0])))
+@given(dem=_grids(_heights))
 def test_watershed_local_equals_distributed(spark, dem):
     from geodata_spark.hydro import watershed
 
-    local, distributed = _both_paths(lambda: watershed(_raster_df(spark, dem)))
+    # a row with a NULL coordinate joins no cell: both paths drop it
+    layer = _raster_df(spark, dem).unionByName(spark.createDataFrame(
+        [(None, 0, 0.0), (0, None, 0.0)], "y_idx long, x_idx long, value double"
+    ))
+    # every raster under the bound runs whole on the driver: only the
+    # collect's jobs run
+    assert set(_job_descriptions(spark, "test_watershed_path", lambda: watershed(layer))) == {
+        "watershed local"
+    }
+    local, distributed = _both_paths(lambda: watershed(layer))
     assert local.schema == distributed.schema
     _assert_same_rows(local, distributed)
 
@@ -194,69 +209,50 @@ def test_watershed_local_equals_distributed(spark, dem):
 def test_filter_area_local_equals_distributed(spark, mask, min_cells):
     from geodata_spark import masks
 
-    _assert_same_rows(*_both_paths(lambda: masks.filter_area(_raster_df(spark, mask), min_cells)))
+    local, distributed = _both_paths(lambda: masks.filter_area(_raster_df(spark, mask), min_cells))
+    assert local.schema == distributed.schema
+    _assert_same_rows(local, distributed)
 
 
-# small id range: self-pairs, repeated pairs and isolated pairs on most draws
-_pairs = st.lists(st.tuples(st.integers(0, 24), st.integers(0, 24)), min_size=1, max_size=30)
+# small id range: self-pairs, repeated pairs and isolated pairs on most draws;
+# least/greatest skip a NULL id, and a pair of two NULLs is a NULL node
+_ids = st.one_of(st.none(), st.integers(0, 24))
+_pairs = st.lists(st.tuples(_ids, _ids), min_size=1, max_size=30)
 
 
-@pytest.mark.parametrize("method", ["hashmin", "star"])
 @_property
 @given(pairs=_pairs)
-def test_connected_components_local_equals_distributed(spark, method, pairs):
+def test_connected_components_local_equals_distributed(spark, pairs):
     from geodata_spark.pipeline.dedup import connected_components
 
     df = spark.createDataFrame(pairs, "id_a long, id_b long")
-    _assert_same_rows(
-        *_both_paths(lambda: connected_components(df, max_iter=30, method=method))
-    )
+    local, distributed = _both_paths(lambda: connected_components(df, max_iter=30))
+    assert local.schema == distributed.schema
+    _assert_same_rows(local, distributed)
 
 
 # -- whole operators on the driver: watershed and kmeans_lloyd ----------------
 
 
-def _fallback_raster(spark, dem, kind):
-    rows = [(y, x, v) for y, r in enumerate(dem) for x, v in enumerate(r)]
-    y, x, _ = rows[len(rows) // 2]
-    if kind == "duplicate":
-        rows.append((y, x, 0.25))
-    else:
-        rows[len(rows) // 2] = (y, x, None if kind == "null" else float("nan"))
-    return spark.createDataFrame(rows, "y_idx long, x_idx long, value double")
-
-
-def _takes_spark_d8(layer):
-    from geodata_spark import fixpoint as fp
-    from geodata_spark import hydro
-
-    base = layer.select("y_idx", "x_idx", layer.value.alias("_z"))
-    return hydro._local_start(fp.collect_at_most(base, 100)) is None
-
-
-@pytest.mark.parametrize("kind", ["nan", "null"])
-@settings(_property, max_examples=3)
-@given(dem=_grids(st.sampled_from([0.0, 0.5, 1.0, 2.0])))
-def test_watershed_falls_back_to_spark_d8(spark, kind, dem):
+@pytest.mark.parametrize("bad, match", [
+    pytest.param((0, 3, 0.25), r"cell \(y_idx=0, x_idx=3\) is repeated", id="repeated"),
+    pytest.param((0, 2**35, 0.25), r"below 2\^35", id="huge"),
+])
+def test_watershed_rejects_a_repeated_cell_or_a_huge_coordinate(spark, bad, match):
+    """Both raise ValueError before any round: a repeated cell would give
+    the cell two elevations (D8 could cycle until ``max_iters``), and a
+    huge coordinate would overflow the packed key."""
     from geodata_spark.hydro import watershed
 
-    layer = _fallback_raster(spark, dem, kind)
-    assert _takes_spark_d8(layer)
-    _assert_same_rows(*_both_paths(lambda: watershed(layer)))
+    rows = [(0, x, v) for x, v in enumerate([2.0, 1.0, 1.0, 2.0, 1.0, 0.0, 0.5])] + [bad]
+    layer = spark.createDataFrame(rows, "y_idx long, x_idx long, value double")
 
+    def run():
+        with pytest.raises(ValueError, match=match):
+            watershed(layer)
 
-def test_watershed_repeated_cell_takes_spark_d8(spark):
-    """A repeated cell takes the Spark D8 stage and the driver rounds, as
-    before.  Its copies give the cell two elevations, so D8 may cycle;
-    the doubling then raises instead of returning labels.  (The
-    distributed rounds are not run here: each jump doubles the rows
-    that point at the repeated cell.)"""
-    from geodata_spark.hydro import watershed
-
-    layer = _fallback_raster(spark, [[2.0, 1.0, 1.0, 2.0, 1.0, 0.0, 0.5]], "duplicate")
-    assert _takes_spark_d8(layer)
-    with pytest.raises(RuntimeError, match="did not converge in 8 rounds"):
-        watershed(layer, max_iters=8)
+    # no Spark job runs after the collect
+    assert set(_job_descriptions(spark, "test_watershed_bad", run)) == {"watershed local"}
 
 
 # few distinct components: duplicate vectors (so empty clusters) and tied
@@ -319,14 +315,23 @@ def test_kmeans_falls_back_on_null_ragged_or_non_finite_vectors(bad):
 
 
 def test_driver_builds_take_at_most_one_and_two_jobs(spark):
+    from geodata_spark import masks
     from geodata_spark.hydro import watershed
+    from geodata_spark.pipeline.dedup import connected_components
     from geodata_spark.pipeline.similarity import kmeans_lloyd
 
     dem = _raster_df(spark, [[float((y * 7 + x * 3) % 5) for x in range(9)] for y in range(8)])
+    mask = _raster_df(spark, [[float((y * 7 + x * 3) % 5 > 1) for x in range(9)] for y in range(8)])
+    pairs = spark.createDataFrame([(i, (i * 7) % 40) for i in range(40)], "id_a long, id_b long")
     vecs = _vectors_df(spark, [[float(i % 3), float(i % 5)] for i in range(40)])
-    dem.count(), vecs.count()
+    dem.count(), mask.count(), pairs.count(), vecs.count()
+    # each: the collect, then the rounds in numpy
     ws, jobs = _in_group(spark, "test_watershed_build", lambda: watershed(dem))
-    assert len(jobs) <= 1, jobs  # the collect: D8 and the doubling run in numpy
+    assert len(jobs) <= 1, jobs
+    fa, jobs = _in_group(spark, "test_filter_area_build", lambda: masks.filter_area(mask, 3))
+    assert len(jobs) <= 1, jobs
+    cc, jobs = _in_group(spark, "test_cc_build", lambda: connected_components(pairs))
+    assert len(jobs) <= 1, jobs
     km, jobs = _in_group(spark, "test_kmeans_build", lambda: kmeans_lloyd(vecs, k=3, iters=3))
     assert len(jobs) <= 2, jobs  # the k smallest ids, then the vectors
-    assert ws.count() == 72 and km.count() == 40
+    assert ws.count() == 72 and fa.count() == 72 and cc.count() == 40 and km.count() == 40

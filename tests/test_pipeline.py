@@ -488,13 +488,13 @@ def test_connected_components_semantics(spark):
     )
     got = {r["node"]: r["component"] for r in connected_components(pairs).collect()}
     assert got == {1: 1, 2: 1, 3: 1, 4: 1, 10: 10, 11: 10, 12: 10, 20: 20, 21: 20}
-    # a 12-node path needs ~11 hash-min propagation rounds; max_iter=2
+    # a 12-node path needs more than 2 rounds on either path; max_iter=2
     # must refuse to return a half-converged labelling
     path = spark.createDataFrame(
         [(i, i + 1) for i in range(100, 111)], "id_a long, id_b long"
     )
     with _pytest.raises(RuntimeError, match="did not converge"):
-        connected_components(path, max_iter=2, method="hashmin")
+        connected_components(path, max_iter=2)
     full = connected_components(path)
     assert {r["component"] for r in full.collect()} == {100}
 
@@ -516,7 +516,7 @@ def test_cc_star_logarithmic_on_path(spark):
     path = spark.createDataFrame(
         [(i, i + 1) for i in range(n - 1)], "id_a long, id_b long"
     )
-    out = connected_components(path, max_iter=25, method="star")
+    out = connected_components(path, max_iter=25)
     rows = out.collect()
     assert len(rows) == n
     assert {r["component"] for r in rows} == {0}
@@ -528,23 +528,39 @@ def test_cc_star_logarithmic_on_path_distributed(spark, distributed_fixpoint):
     test_cc_star_logarithmic_on_path(spark)
 
 
-def test_cc_star_equals_hashmin_random(spark):
-    """Both CC methods produce the identical labelling on a random
-    graph (150 nodes, 120 edges, mixed components)."""
+def _union_find_labels(edges):
+    """Smallest member of each node's component, by union-find."""
+    parent = {}
+
+    def find(a):
+        parent.setdefault(a, a)
+        while parent[a] != a:
+            parent[a] = parent[parent[a]]
+            a = parent[a]
+        return a
+
+    for a, b in edges:
+        ra, rb = find(a), find(b)
+        parent[max(ra, rb)] = min(ra, rb)
+    return {a: find(a) for a in parent}
+
+
+def test_cc_star_equals_union_find_random(spark, monkeypatch):
+    """connected_components labels a random graph (150 nodes, 120
+    edges, mixed components) as union-find does, on both paths."""
     import numpy as np
 
+    from geodata_spark import fixpoint
     from geodata_spark.pipeline.dedup import connected_components
 
     rng = np.random.default_rng(17)
-    e = rng.integers(0, 150, size=(120, 2))
-    pairs = spark.createDataFrame(
-        [(int(a), int(b)) for a, b in e if a != b], "id_a long, id_b long"
-    )
-    star = {r["node"]: r["component"]
-            for r in connected_components(pairs, method="star").collect()}
-    hm = {r["node"]: r["component"]
-          for r in connected_components(pairs, method="hashmin", max_iter=50).collect()}
-    assert star == hm
+    e = [(int(a), int(b)) for a, b in rng.integers(0, 150, size=(120, 2)) if a != b]
+    pairs = spark.createDataFrame(e, "id_a long, id_b long")
+    want = _union_find_labels(e)
+    for bound in (fixpoint.LOCAL_MAX_ROWS, 0):
+        monkeypatch.setattr(fixpoint, "LOCAL_MAX_ROWS", bound)
+        got = {r["node"]: r["component"] for r in connected_components(pairs).collect()}
+        assert got == want, bound
 
 
 def test_tfidf_top_terms_semantics(spark):
@@ -764,16 +780,19 @@ def test_kmeans_lloyd_determinism_and_blob_recovery(spark, vecs):
     assert tab.to_numpy().sum() == 90
 
 
-def test_cc_star_keeps_self_pair_only_nodes(spark):
+def test_cc_star_keeps_self_pair_only_nodes(spark, monkeypatch):
     """Regression: a node appearing only in reflexive pairs must label
-    itself under BOTH methods (star used to drop it)."""
+    itself on BOTH paths (star used to drop it)."""
+    from geodata_spark import fixpoint
+
     pairs = spark.createDataFrame(
         [(5, 5), (1, 2), (2, 3)], "id_a long, id_b long"
     )
-    for method in ("star", "hashmin"):
+    for bound in (fixpoint.LOCAL_MAX_ROWS, 0):
+        monkeypatch.setattr(fixpoint, "LOCAL_MAX_ROWS", bound)
         out = {r.node: r.component
-               for r in DD.connected_components(pairs, method=method).collect()}
-        assert out == {1: 1, 2: 1, 3: 1, 5: 5}, method
+               for r in DD.connected_components(pairs).collect()}
+        assert out == {1: 1, 2: 1, 3: 1, 5: 5}, bound
 
 
 def test_pq_train_encode_codes_match_subspace_kmeans(spark, vecs):
