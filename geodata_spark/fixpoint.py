@@ -5,13 +5,13 @@
 Each operator takes exactly one of two whole paths:
 
 - **Driver** (the input has at most :data:`LOCAL_MAX_ROWS` rows): take
-  the input with :func:`collect_at_most` (one job, at most bound + 1
-  rows), compute the starting state in numpy, run the rounds with
-  :func:`finish_local` and return the result through
-  :func:`local_result`.  One job in all, whatever the round count;
-  downstream plans read checkpointed blocks, never a ``LocalRelation``
-  of literal rows.  (``similarity.kmeans_lloyd`` uses the same collect
-  and result for its fixed Lloyd rounds.)
+  the input with :func:`collect_at_most` (one bounded collect, at most
+  bound + 1 rows), compute the starting state in numpy, run the rounds
+  with :func:`finish_local` and return the result through
+  :func:`local_result`.  No job runs after the collect, whatever the
+  round count; downstream plans read checkpointed blocks, never a
+  ``LocalRelation`` of literal rows.  (``similarity.kmeans_lloyd``
+  uses the same collect and result for its fixed Lloyd rounds.)
 - **Distributed rounds** (above the bound): :func:`fixpoint` first
   materializes the starting state in ONE Spark job (an eager local
   checkpoint; the probe's aggregates ride on it as ``Observation``
@@ -59,8 +59,11 @@ LocalStep = Callable[[Columns], Iterator[Columns]]
 
 
 def collect_at_most(df: DataFrame, n: int) -> pa.Table | None:
-    """``df`` as one Arrow table, in one job, or None when it holds more
-    than ``n`` rows; at most ``n + 1`` rows reach the driver."""
+    """``df`` as one Arrow table, or None when it holds more than ``n``
+    rows; at most ``n + 1`` rows reach the driver.  ``limit(n + 1)``
+    runs CollectLimit's incremental partition scan: one job when the
+    first partitions hold ``n + 1`` rows or all of them, otherwise a
+    few, each scanning more partitions than the last."""
     table = df.limit(n + 1).toArrow()
     return None if table.num_rows > n else table
 
@@ -135,6 +138,14 @@ def local_result(spark: SparkSession, table: pa.Table, schema: StructType) -> Da
     Lazy: the first job that reads it writes the blocks, so an eager
     checkpoint would only add a job."""
     return spark.createDataFrame(table, schema).localCheckpoint(eager=False)
+
+
+def first_repeat(keys: np.ndarray) -> int | None:
+    """Row of the second copy of the least repeated key, or None when
+    the keys are distinct."""
+    order = np.argsort(keys, kind="stable")
+    again = order[1:][keys[order][1:] == keys[order][:-1]]
+    return int(again[0]) if len(again) else None
 
 
 def lookup(keys: np.ndarray, values: np.ndarray) -> np.ndarray:

@@ -273,8 +273,11 @@ def _pack_ijk(face: np.ndarray, i: np.ndarray, j: np.ndarray, k: np.ndarray,
         di, dj, dk = np.clip(di, 0, 2), np.clip(dj, 0, 2), np.clip(dk, 0, 2)
         digits[:, rr - 1] = _DIGIT[di, dj, dk]
 
-    # res-0 ijk components are small on the owning face; clip to the
-    # 2-bit field (faraway garbage can only arise from NaN input)
+    # A point's canonical id has res-0 components 0-2 (its argmax face's
+    # extent).  A face-local lattice cell past that extent (forced-face
+    # encodes, local disks, polyfill rectangles) can reach 3 or more and
+    # is clipped to the 2-bit field, so several such cells share one id
+    # whose decoded centre is not theirs.  hex7_polyfill drops them.
     i0, j0, k0 = np.clip(i, 0, 3), np.clip(j, 0, 3), np.clip(k, 0, 3)
     out = (
         (np.int64(res) << np.int64(57))
@@ -580,35 +583,15 @@ def hex7_local_cells_udf(res: int, margin_rad: float):
 # polygon polyfill (hex-grain zone cover)
 # ---------------------------------------------------------------------------
 
-def _local_cells_in_bbox(
-    face: int, lat0: float, lat1: float, lon0: float, lon1: float,
-    res: int, pad_cells: float = 1.5,
-) -> np.ndarray:
-    """All face-``face`` lattice cells whose center lies in the padded
-    bbox — exact axial-range enumeration in the face plane (no sampling
-    pitch to get wrong)."""
-    las = np.linspace(lat0, lat1, 9)
-    los = np.linspace(lon0, lon1, 9)
-    gla, glo = np.meshgrid(las, los, indexing="ij")
-    x, y = _geo_to_forced_face_xy(gla.ravel(), glo.ravel(), face)
-    i, j, k = _face_xy_to_ijk(x, y, res)
-    ai, aj = i - k, j - k
-    p = int(np.ceil(pad_cells)) + max(
-        int(ai.max() - ai.min()), int(aj.max() - aj.min())
-    ) // 8 + 2  # corner-grid spacing in cells, plus the pad
-    ais = np.arange(ai.min() - p, ai.max() + p + 1)
-    ajs = np.arange(aj.min() - p, aj.max() + p + 1)
-    bi, bj = np.meshgrid(ais, ajs, indexing="ij")
-    bi, bj = bi.ravel(), bj.ravel()
-    ni, nj, nk = _ijk_normalize(bi, bj, np.zeros_like(bi))
-    ids = _pack_ijk(np.full(len(ni), np.int64(face)), ni, nj, nk, res)
-    cla, clo = hex7_center_np(ids)
-    pad_deg = pad_cells * _SQRT7 ** (-res) * _RES0_U * 60.0  # generous
-    keep = (
-        (cla >= lat0 - pad_deg) & (cla <= lat1 + pad_deg)
-        & (clo >= lon0 - pad_deg) & (clo <= lon1 + pad_deg)
+def _reachable(cell: np.ndarray) -> np.ndarray:
+    """True where all three res-0 IJK components are <= 2: the ids a
+    point can have (see :func:`_pack_ijk`)."""
+    cell = np.asarray(cell, dtype=np.int64)
+    return (
+        (((cell >> np.int64(50)) & np.int64(3)) != 3)
+        & (((cell >> np.int64(48)) & np.int64(3)) != 3)
+        & (((cell >> np.int64(46)) & np.int64(3)) != 3)
     )
-    return ids[keep]
 
 
 def hex7_polyfill(rings: list[np.ndarray], res: int) -> tuple[np.ndarray, np.ndarray]:
@@ -618,18 +601,27 @@ def hex7_polyfill(rings: list[np.ndarray], res: int) -> tuple[np.ndarray, np.nda
     contract — ``full`` cells are provably inside, ``boundary`` cells
     need the exact per-point PIP, everything else is provably outside —
     so a membership join built on this cover is EXACT at hex grain.
+    Both outputs are res-``res`` ids, each at most once, disjoint, and
+    only ids a point can have: a cell whose res-0 IJK leaves the 2-bit
+    field (a lattice cell past its face's extent, see :func:`_pack_ijk`)
+    is never emitted.
 
     Face-edge correctness: a point's canonical token is a cell of its
     argmax face's lattice, so the cover enumerates EVERY face lattice
     present near the polygon (``hex7_faces_np`` over the bbox with a
     2-cell margin) and classifies each face's cells independently; a
     cell id embeds its face, so cross-face rows are distinct keys and a
-    point still joins at most once per zone.  Classification is
-    conservative: any ring edge within 1.0× the cell's own max
-    neighbor-center distance (≥ 1.7× circumradius) marks it boundary;
-    remaining cells are uniform and one vectorized center PIP decides
-    full/outside.  Runs on the driver; zones are small, output
-    broadcasts (same scale shape as the square cover).
+    point still joins at most once per zone.
+
+    Per face, one pass: the axial rectangle spanning the bbox (plus a
+    pad) is grown by one ring, packed once and decoded to centres once.
+    Candidates are the inner cells whose centre lies in the padded bbox;
+    each one's 6 neighbour centres are index shifts into that centre
+    array.  Classification is conservative: any ring edge within 1.0×
+    the cell's own max neighbor-center distance (≥ 1.7× circumradius)
+    marks it boundary; remaining cells are uniform and one vectorized
+    center PIP decides full/outside.  Runs on the driver; zones are
+    small, output broadcasts (same scale shape as the square cover).
     """
     from geodata_spark import geometry
 
@@ -639,6 +631,7 @@ def hex7_polyfill(rings: list[np.ndarray], res: int) -> tuple[np.ndarray, np.nda
     las = np.linspace(lat0, lat1, 9)
     los = np.linspace(lon0, lon1, 9)
     gla, glo = np.meshgrid(las, los, indexing="ij")
+    gla, glo = gla.ravel(), glo.ravel()
     # faces whose lattice a point in the (padded) bbox might use.
     # hex7_faces_np guarantees a point p's argmax face is inside a
     # sample's mask only when margin >= 2*dist(p, sample), so the
@@ -650,21 +643,49 @@ def hex7_polyfill(rings: list[np.ndarray], res: int) -> tuple[np.ndarray, np.nda
         math.hypot((lat1 - lat0) / 8.0, (lon1 - lon0) / 8.0)
     )
     margin = 2.5 * _RES0_U * _SQRT7 ** (-res) + samp_diag
-    faces = np.nonzero(hex7_faces_np(gla.ravel(), glo.ravel(), margin).any(axis=0))[0]
+    faces = np.nonzero(hex7_faces_np(gla, glo, margin).any(axis=0))[0]
+    pad_cells = 1.5
+    pad_deg = pad_cells * _SQRT7 ** (-res) * _RES0_U * 60.0  # generous
+    nbr = _disk_offsets(1)[1:]
 
     fulls, bounds = [], []
     for f in faces:
-        cand = _local_cells_in_bbox(int(f), lat0, lat1, lon0, lon1, res)
+        # exact axial-range enumeration in the face plane (no sampling
+        # pitch to get wrong): the rectangle spans the 9x9 bbox samples
+        # plus the pad and the sample spacing in cells, plus one ring
+        x, y = _geo_to_forced_face_xy(gla, glo, int(f))
+        i, j, k = _face_xy_to_ijk(x, y, res)
+        ai, aj = i - k, j - k
+        p = int(np.ceil(pad_cells)) + max(
+            int(ai.max() - ai.min()), int(aj.max() - aj.min())
+        ) // 8 + 3
+        bi, bj = np.meshgrid(
+            np.arange(ai.min() - p, ai.max() + p + 1),
+            np.arange(aj.min() - p, aj.max() + p + 1),
+            indexing="ij",
+        )
+        ni, nj, nk = _ijk_normalize(bi.ravel(), bj.ravel(), np.zeros(bi.size, np.int64))
+        ids = _pack_ijk(np.full(bi.size, np.int64(f)), ni, nj, nk, res).reshape(bi.shape)
+        cla, clo = (c.reshape(bi.shape) for c in hex7_center_np(ids.ravel()))
+        h, w = bi.shape
+        inner = (slice(1, h - 1), slice(1, w - 1))
+        keep = (
+            (cla[inner] >= lat0 - pad_deg) & (cla[inner] <= lat1 + pad_deg)
+            & (clo[inner] >= lon0 - pad_deg) & (clo[inner] <= lon1 + pad_deg)
+            & _reachable(ids[inner])
+        )
+        cand = ids[inner][keep]
         if len(cand) == 0:
             continue
-        clat, clon = hex7_center_np(cand)
+        clat, clon = cla[inner][keep], clo[inner][keep]
         # per-cell conservative radius: max neighbor-center distance in
         # degree space (>= sqrt(3)x circumradius; 1.0x of it is safe)
-        nb = hex7_local_disk_np(cand, 1)[:, 1:]
         rad = np.zeros(len(cand))
-        for d in range(nb.shape[1]):
-            nla, nlo = hex7_center_np(nb[:, d])
-            rad = np.maximum(rad, np.hypot(nla - clat, nlo - clon))
+        for di, dj in nbr:
+            sh = (slice(1 + di, h - 1 + di), slice(1 + dj, w - 1 + dj))
+            rad = np.maximum(
+                rad, np.hypot(cla[sh][keep] - clat, clo[sh][keep] - clon)
+            )
         near = np.zeros(len(cand), dtype=bool)
         for ring in rings:
             closed = np.vstack([np.asarray(ring, dtype=np.float64), ring[:1]])
@@ -696,6 +717,17 @@ def hex7_parent_np(cell: np.ndarray, res: int, parent_res: int) -> np.ndarray:
     return out
 
 
+def _parent_bits(parent_res: int) -> tuple[int, int]:
+    """(AND mask, OR stamp) that truncate any finer id to ``parent_res``:
+    clear the res nibble, stamp the parent res, set later digits to 7."""
+    if not 0 <= parent_res <= 15:
+        raise ValueError(f"parent_res must be 0..15, got {parent_res}")
+    sevens = 0
+    for rr in range(parent_res + 1, 16):
+        sevens |= 7 << (45 - 3 * rr)
+    return ~(0xF << 57), (parent_res << 57) | sevens
+
+
 def hex7_parent_expr(cell, parent_res: int):
     """Catalyst twin of :func:`hex7_parent_np`: fine id → ancestor id.
 
@@ -708,13 +740,15 @@ def hex7_parent_expr(cell, parent_res: int):
     aggregate instead of the fact table.  Numpy-twinned in
     tests/test_hexgrid.py.
     """
-    if not 0 <= parent_res <= 15:
-        raise ValueError(f"parent_res must be 0..15, got {parent_res}")
-    sevens = 0
-    for rr in range(parent_res + 1, 16):
-        sevens |= 7 << (45 - 3 * rr)
-    cleared = cell.bitwiseAND(F.lit(~(0xF << 57)))
-    return cleared.bitwiseOR(F.lit((parent_res << 57) | sevens))
+    mask, stamp = _parent_bits(parent_res)
+    return cell.bitwiseAND(F.lit(mask)).bitwiseOR(F.lit(stamp))
+
+
+def hex7_parent_sql(cell: str, parent_res: int) -> str:
+    """:func:`hex7_parent_expr` as SQL text over the column ``cell``,
+    so several ancestors render into one ``selectExpr``."""
+    mask, stamp = _parent_bits(parent_res)
+    return f"(({cell} & {mask}L) | {stamp}L)"
 
 
 def hex7_token_expr(cell):

@@ -168,10 +168,8 @@ def _local_start(cols: pa.Table) -> fp.Columns:
     if not ((-(2**35) < yx) & (yx < 2**35)).all():
         raise ValueError("watershed: |y_idx| and |x_idx| must be below 2^35")
     cell = y * Y_STEP + x
-    order = np.argsort(cell, kind="stable")
-    again = order[1:][cell[order][1:] == cell[order][:-1]]
-    if len(again):
-        i = again[0]
+    i = fp.first_repeat(cell)
+    if i is not None:
         raise ValueError(f"watershed: cell (y_idx={y[i]}, x_idx={x[i]}) is repeated")
     z = cols.column("_z")
     parent = _d8_local(cell, z.to_numpy(), z.is_null().to_numpy())

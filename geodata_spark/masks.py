@@ -226,6 +226,11 @@ def filter_area(
     each on ``fixpoint.fixpoint``; labels never rise over a fixed row
     set, so the decimal sum of labels is an exact probe.
 
+    Each nonzero ``(y_col, x_col)`` cell must appear once.  Under the
+    bound a repeated one raises ``ValueError`` before any round.  Above
+    it a repeated cell is invalid input that is not checked: the
+    rounds' self-joins multiply rows through its copies.
+
     The reference reprojects to equal-area and thresholds in km²
     (mask.py:1309-1398); at cell grain the equivalent threshold is a
     cell count (callers convert km² → cells via the area of a cell at
@@ -233,9 +238,8 @@ def filter_area(
     """
     key = (F.col(y_col).cast("long") * F.lit(Y_SHIFT) + F.col(x_col).cast("long")).alias("cell")
     layer = layer.withColumn("_cc_key", key)
-    active = layer.filter(F.col("value") != 0).select(
-        F.col("_cc_key").alias("cell"), F.col("_cc_key").alias("label")
-    )
+    nonzero = layer.filter(F.col("value") != 0)
+    active = nonzero.select(F.col("_cc_key").alias("cell"), F.col("_cc_key").alias("label"))
 
     def hook_and_jump(active: DataFrame) -> DataFrame:
         # hook: candidate labels flowing to each neighbor cell + self
@@ -274,7 +278,9 @@ def filter_area(
 
     what = "filter_area: connected components"
     with fp.job_description(layer.sparkSession, "filter_area local"):
-        cols = fp.collect_at_most(active.select("cell"), fp.LOCAL_MAX_ROWS)
+        cols = fp.collect_at_most(
+            nonzero.select(F.col("_cc_key").alias("cell"), y_col, x_col), fp.LOCAL_MAX_ROWS
+        )
     if cols is None:
         active, _ = fixpoint(
             active, hook_and_jump,
@@ -286,7 +292,12 @@ def filter_area(
             F.broadcast(sizes.filter(F.col("n") >= min_cells).select("label")), "label"
         ).select(F.col("cell").alias("_cc_key"))
     else:
-        cell = cols.column("cell").drop_null().to_numpy()  # a NULL key joins no cell
+        cols = cols.filter(cols["cell"].is_valid())  # a NULL key joins no cell
+        cell = cols.column("cell").to_numpy()
+        i = fp.first_repeat(cell)
+        if i is not None:
+            y, x = (cols.column(c)[i].as_py() for c in (y_col, x_col))
+            raise ValueError(f"filter_area: cell ({y_col}={y}, {x_col}={x}) is repeated")
         out, _ = fp.finish_local(
             {"cell": cell, "label": cell}, hook_and_jump_local, max_iters, what
         )

@@ -86,11 +86,10 @@ def q_zonal_wavg_hex(spark: SparkSession, sf_dir: str) -> DataFrame:
     pts = spatial.parse_geo_spans(docs)
     # The hex encode runs in one pass over the points, deduplicating
     # coordinates per Arrow batch (corpus geo spans live on the finite
-    # 7272-coordinate synth lattice).  Cover res stays 5: the polyfill
-    # cover is already 366k cells there (hex7_polyfill ~3.8 s, once
-    # per catalog; a 48 MiB broadcast hash relation per query, on 4
-    # vCPUs); res 6 is 2.5M cells / 89s build — the boundary-sliver
-    # win does not pay for 7x cover volume.
+    # 7272-coordinate synth lattice).  Cover res stays 5: its compacted
+    # cover is 30,290 rows there (hex7_polyfill ~1.3 s once per catalog
+    # on 4 vCPUs); res 6 is 80,549 rows but a 13.7 s build, and the
+    # boundary-sliver win does not pay for that.
     zoned = spatial.join_zones(pts, spark, ZONES, res=5, grain="hex")
     weighted = zoned.withColumn("w", zonal.oracle_area_weight_expr(F.col("lat"))).withColumn(
         "day_idx", (F.col("hour") / F.lit(24)).cast("int")

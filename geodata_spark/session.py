@@ -7,8 +7,42 @@ the driver entrypoint agree on shuffle sizing, AQE and Arrow settings.
 from __future__ import annotations
 
 import os
+import re
+from typing import Mapping
 
 from pyspark.sql import SparkSession
+
+# JVM memory string: a count with an optional k/m/g/t (or kb/mb/gb/tb)
+# suffix; Spark reads a bare count of spark.driver.memory as MiB
+_JVM_SIZE = re.compile(r"(\d+)(?:([kmgt])b?)?", re.IGNORECASE)
+_SHIFT = {"k": 10, "m": 20, "g": 30, "t": 40}
+
+
+def _jvm_bytes(size: str) -> int:
+    m = _JVM_SIZE.fullmatch(size.strip())
+    if m is None:
+        raise ValueError(f"not a JVM memory size: {size!r}")
+    return int(m.group(1)) << _SHIFT[(m.group(2) or "m").lower()]
+
+
+def driver_memory_conf(env: Mapping[str, str], phys_bytes: int) -> dict[str, str]:
+    """``spark.driver.memory`` and ``spark.driver.extraJavaOptions`` from
+    ``SPARK_DRIVER_MEM`` / ``SPARK_DRIVER_JAVA_OPTS`` in ``env``.
+
+    The default heap is half of ``phys_bytes``, at most 24g.  The default
+    options pre-size the heap: with many executor threads the default
+    tiny -Xms triggers a growth/GC storm on the first allocation-heavy
+    stage (observed 15x first-run outliers at local[32]).  That -Xms is
+    8g at most and never above the effective heap, which a JVM would
+    refuse."""
+    heap = env.get("SPARK_DRIVER_MEM", f"{min(24 << 10, phys_bytes // 2 >> 20)}m")
+    xms_mb = max(1, min(8 << 10, _jvm_bytes(heap) >> 20))
+    return {
+        "spark.driver.memory": heap,
+        "spark.driver.extraJavaOptions": env.get(
+            "SPARK_DRIVER_JAVA_OPTS", f"-Xms{xms_mb}m -XX:+UseG1GC -XX:+AlwaysPreTouch"
+        ),
+    }
 
 
 def get_spark(
@@ -35,8 +69,9 @@ def get_spark(
         else:
             shuffle_partitions = 2 * cpus
 
-    # default heap: half the host's physical memory, at most 24g
-    heap_mb = min(24 << 10, os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2 >> 20)
+    memory = driver_memory_conf(
+        os.environ, os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    )
     builder = (
         SparkSession.builder.master(master)
         .appName(app_name)
@@ -48,19 +83,7 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", f"{heap_mb}m"))
-        # Pre-size the heap: with many executor threads the default
-        # tiny -Xms triggers a growth/GC storm on the first
-        # allocation-heavy stage (observed 15x first-run outliers at
-        # local[32]).  At most the default heap: a JVM refuses an -Xms
-        # above its -Xmx.
-        .config(
-            "spark.driver.extraJavaOptions",
-            os.environ.get(
-                "SPARK_DRIVER_JAVA_OPTS",
-                f"-Xms{min(8 << 10, heap_mb)}m -XX:+UseG1GC -XX:+AlwaysPreTouch",
-            ),
-        )
+        .config(map=memory)
         # 128 MiB split targets keep scan tasks balanced at 100 TB scale
         # and are harmless at test scale.
         .config("spark.sql.files.maxPartitionBytes", "134217728")

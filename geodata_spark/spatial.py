@@ -109,9 +109,10 @@ def parse_geo_spans(docs: DataFrame, kinds: tuple[str, ...] = ("geo",)) -> DataF
 
 
 # Both cover memos are LRU-bounded at this many entries.  The registry
-# uses two covers per session (grid res 9, hex res 5); the largest,
-# hex res 5 over ZONES, is 366,549 rows: 6.2 MB of planned columns and
-# 39 MB of checkpoint blocks per session.
+# uses two covers per session (grid res 9, hex res 5); the larger, grid
+# res 9 over ZONES, is 33,094 rows; hex res 5 is 30,290 rows (its full
+# cells compacted): 0.5 MB of planned columns and 3.1 MB of checkpoint
+# blocks per session.
 COVER_CACHE_LIMIT = 8
 
 # (catalog hash, res, grain) -> planned cover columns
@@ -158,8 +159,9 @@ def _cover_columns(
     real deployments build it once per zone catalog and reuse it across
     every query, so repeated plan builds must not re-run the planner.
     ``grain="hex"`` plans the cover on the aperture-7 hexagonal index
-    (hexgrid.hex7_polyfill — same full/boundary contract).  Rows are
-    per zone in catalog order, full cells then boundary cells, held as
+    (hexgrid.hex7_polyfill — same full/boundary contract) and compacts
+    each zone's full cells (hexgrid.hex7_compact_np).  Rows are per
+    zone in catalog order, full cells then boundary cells, held as
     three columns.  Call under ``_COVER_LOCK``."""
     key = (_zones_key(zones), res, grain)
     cols = _lru_get(_COVER_CACHE, key)
@@ -167,7 +169,9 @@ def _cover_columns(
         if grain == "hex":
             from geodata_spark import hexgrid as HG
 
-            cover_fn = lambda rings: HG.hex7_polyfill(rings, res)  # noqa: E731
+            def cover_fn(rings):
+                full, boundary = HG.hex7_polyfill(rings, res)
+                return HG.hex7_compact_np(full), boundary
         else:
             cover_fn = lambda rings: geometry.polygon_cover(rings, res)  # noqa: E731
         zids, ids, flags = [], [], []
@@ -197,19 +201,32 @@ def zone_cover_df(
     """(zone_id, cell_r{res}, boundary) cover table, built on the driver.
 
     Zones are small; the output is meant to sit on the broadcast side
-    of the membership join.  ``boundary=false`` rows prove membership
-    by cell containment alone; ``boundary=true`` rows require the exact
-    PIP test.  ``grain="hex"`` emits ``cell_hex{res}`` hexagonal cells
-    (hexgrid.hex7_polyfill) with the identical contract.
+    of the membership join.  ``boundary=true`` rows are res-``res``
+    cells that require the exact PIP test.  ``boundary=false`` rows
+    prove membership by cell containment alone:
+
+    - ``grain="grid"``: res-``res`` square cells, matched by equality
+      with the point's ``cell_r{res}``.
+    - ``grain="hex"``: ``cell_hex{res}`` holds each zone's full
+      hexagonal cells (hexgrid.hex7_polyfill) compacted
+      (hexgrid.hex7_compact_np), so a full row may be an ancestor at
+      any res up to ``res``; it holds every res-``res`` descendant,
+      and a point's res-``res`` id matches at most one full row per
+      zone.  Join on the point's ancestors at the resolutions the
+      cover holds, as :func:`join_zones` does.  ZONES at res 5:
+      8,734 full rows at res 1-5 for 196,690 cells, next to 21,556
+      boundary rows.
+
+    In both grains a ``(zone_id, cell)`` pair appears once, and full
+    and boundary rows of a zone never overlap.
 
     The cover is materialized once per (session, catalog, res, grain):
     the first call runs one local-checkpoint job, and every later call
     in that session returns the same DataFrame, whose plan scans the
     checkpoint (``Scan ExistingRDD``).  A literal ``LocalRelation``
     instead would be re-optimized and shipped inside the tasks of
-    every query that uses it (366,549 rows for hex res 5).  Memos are
-    LRU-bounded by ``COVER_CACHE_LIMIT``; entries of stopped sessions
-    are dropped.
+    every query that uses it.  Memos are LRU-bounded by
+    ``COVER_CACHE_LIMIT``; entries of stopped sessions are dropped.
 
     Known failure mode: a local checkpoint lives only in the executors'
     block managers and has no lineage to recompute from.  Losing an
@@ -371,7 +388,10 @@ def join_zones(
     (the cover's full/boundary contract is grain-independent — full
     cells prove membership, boundary cells fall through to the same
     exact PIP), different physical key.  The point-side encode is one
-    Arrow UDF in the scan stage; the cover still broadcasts.
+    Arrow UDF in the scan stage; the cover still broadcasts.  Its full
+    cells are compacted, so each point probes its ancestor at every
+    res the cover holds (bit truncation in the JVM, one row each) and
+    the output's ``cell_hex{res}`` is the point's own id.
 
     ``hex_encode`` is accepted for compatibility and ignored: both
     ``"row"`` and ``"dim"`` encode in one pass over the input.
@@ -400,10 +420,30 @@ def join_zones(
         pts = points.withColumn(
             cell_col, HG.hex7_id_udf(res)(F.col(lat_col), F.col(lon_col))
         )
+        with _COVER_LOCK:
+            cover_ids = _cover_columns(zones, res, grain, cell_col)[cell_col]
+        levels = np.unique(HG.hex7_res_np(cover_ids.to_numpy())).tolist()
     else:
         cell_col = f"cell_r{res}"
         pts = points.withColumn(cell_col, cells.cell_expr(F.col(lat_col), F.col(lon_col), res))
-    joined = pts.join(F.broadcast(cover), cell_col)
+        levels = [res]
+    if levels == [res]:
+        joined = pts.join(F.broadcast(cover), cell_col)
+    else:
+        # compacted full cells: probe the point's ancestor at every res
+        # the cover holds.  A point matches at most one compacted full
+        # row per zone and boundary rows are res-``res`` only, so the
+        # rows are those of the plain equi-join; the key column then
+        # gets the point's own id back.
+        probe = ", ".join(HG.hex7_parent_sql("_hex_id", r) for r in levels)
+        pts = pts.withColumnRenamed(cell_col, "_hex_id").selectExpr(
+            "*", f"explode(array({probe})) AS {cell_col}"
+        )
+        joined = (
+            pts.join(F.broadcast(cover), cell_col)
+            .withColumn(cell_col, F.col("_hex_id"))
+            .drop("_hex_id")
+        )
 
     if strategy == "expr":
         keep = F.expr(

@@ -255,6 +255,23 @@ def test_watershed_rejects_a_repeated_cell_or_a_huge_coordinate(spark, bad, matc
     assert set(_job_descriptions(spark, "test_watershed_bad", run)) == {"watershed local"}
 
 
+def test_filter_area_rejects_a_repeated_cell(spark):
+    """A repeated nonzero cell raises ValueError before any round: the
+    copies used to give 7 rows on the driver path and 8 on the Spark
+    path for this layer."""
+    from geodata_spark import masks
+
+    rows = [(0, x, 1.0) for x in (0, 1, 1, 2, 3)]
+    layer = spark.createDataFrame(rows, "y_idx long, x_idx long, value double")
+
+    def run():
+        with pytest.raises(ValueError, match=r"cell \(y_idx=0, x_idx=1\) is repeated"):
+            masks.filter_area(layer, 5)
+
+    # no Spark job runs after the collect
+    assert set(_job_descriptions(spark, "test_filter_area_bad", run)) == {"filter_area local"}
+
+
 # few distinct components: duplicate vectors (so empty clusters) and tied
 # distances on most draws
 _vectors = st.integers(1, 3).flatmap(

@@ -9,8 +9,12 @@ NotImplementedError contract when the wheel is absent).
 
 from __future__ import annotations
 
+import hashlib
+
 import numpy as np
 import pytest
+from hypothesis import given, settings
+from hypothesis import strategies as st
 
 from geodata_spark import hexgrid as H
 
@@ -373,19 +377,33 @@ def test_polyfill_membership_exact_large_zone():
         assert via == bool(truth[n]), (pla[n], plo[n])
 
 
-# Candidate-volume pins (VERDICT r6 "Next round" #6).  The hex join's
-# scale risk is silent candidate inflation: a res/margin tweak that
-# doubles the polyfill cover or widens the kNN disk would still be
-# CORRECT (the membership contract is exact, the disk is a superset)
-# but would double shuffle volume at 100 TB.  Exact counts are pinned
-# so any such change fails loudly and must re-justify its cost here.
+# Candidate-volume pins.  The hex join's scale risk is silent candidate
+# inflation: a res/margin tweak that doubles the polyfill cover or widens
+# the kNN disk would still be CORRECT (the membership contract is exact,
+# the disk is a superset) but would double shuffle volume at 100 TB.
+# Exact counts are pinned so any such change fails loudly and must
+# re-justify its cost here.  The counts are of distinct ids a point can
+# have: the cover emits no cell whose res-0 IJK component is 3 (such a
+# face-local cell lies past its face's extent, and several of them
+# clip to one id).  Dropping those took north_rect from (93327, 8845),
+# south_rect from (159182, 11497), east_tri from (46735, 5812) and
+# coast_l from (33580, 5121); islands lies inside one face.
 POLYFILL_COVER_R5 = {
     # zone: (full cells, boundary cells) at res 5
-    "north_rect": (93327, 8845),
-    "south_rect": (159182, 11497),
-    "east_tri": (46735, 5812),
-    "coast_l": (33580, 5121),
+    "north_rect": (58953, 5689),
+    "south_rect": (63039, 5420),
+    "east_tri": (42210, 4748),
+    "coast_l": (31281, 4456),
     "islands": (1207, 1243),
+}
+
+# sha256 over ZONES in catalog order of (sorted full, sorted boundary)
+# as little-endian int64: the previous per-face planner's output minus
+# its component-3 ids, so the one-pass planner classifies every
+# reachable cell exactly as the planner before it did
+POLYFILL_SHA256 = {
+    4: "9b6e60f25a4d8e1d5e98c9f8c2b6cd54dae4416aed0fa4a905678b3d0e703c5c",
+    5: "8dc9a30879e9e163f8934a5ba17501e134bb983378447a64f45143b8d793dcad",
 }
 
 
@@ -397,6 +415,53 @@ def test_polyfill_cover_volume_pinned():
         full, bound = H.hex7_polyfill(rings, 5)
         got[zid] = (len(full), len(bound))
     assert got == POLYFILL_COVER_R5, got
+
+
+@pytest.mark.parametrize("res", sorted(POLYFILL_SHA256))
+def test_polyfill_cells_pinned(res):
+    from geodata_spark.spatial import ZONES
+
+    h = hashlib.sha256()
+    for rings in ZONES.values():
+        for part in H.hex7_polyfill(rings, res):
+            assert len(np.unique(part)) == len(part)
+            assert H._reachable(part).all()
+            h.update(np.sort(part).astype("<i8").tobytes())
+    assert h.hexdigest() == POLYFILL_SHA256[res]
+
+
+# the 30 icosahedron edges: vertex pairs at the nearest-neighbour dot
+_DOTS = H._VERTS @ H._VERTS.T
+_EDGES = [
+    (a, b) for a in range(12) for b in range(a + 1, 12)
+    if _DOTS[a, b] > _DOTS[0, 1:].max() - 1e-9
+]
+
+
+@settings(max_examples=40, deadline=None)
+@given(
+    edge=st.integers(0, len(_EDGES) - 1),
+    vertex=st.integers(0, 11),
+    res=st.integers(0, 9),
+    seed=st.integers(0, 2**32 - 1),
+)
+def test_point_ids_stay_in_the_two_bit_field(edge, vertex, res, seed):
+    """No point's canonical id has a res-0 IJK component of 3, even
+    within 1e-12..1e-2 rad of an icosahedron edge or vertex: that is
+    why the polyfill may drop such ids as unreachable."""
+    assert len(_EDGES) == 30
+    rng = np.random.default_rng(seed)
+    a, b = H._VERTS[list(_EDGES[edge])]
+    t = rng.uniform(0.0, 1.0, (1000, 1))
+    base = np.vstack([a * (1 - t) + b * t, np.repeat(H._VERTS[[vertex]], 1000, axis=0)])
+    base /= np.linalg.norm(base, axis=1, keepdims=True)
+    step = rng.normal(size=base.shape)
+    step /= np.linalg.norm(step, axis=1, keepdims=True)
+    p = base + step * 10.0 ** rng.uniform(-12, -2, (len(base), 1))
+    p /= np.linalg.norm(p, axis=1, keepdims=True)
+    lat = np.degrees(np.arcsin(np.clip(p[:, 2], -1.0, 1.0)))
+    lon = np.degrees(np.arctan2(p[:, 1], p[:, 0]))
+    assert H._reachable(H.hex7_id_np(lat, lon, res)).all()
 
 
 def test_hex_knn_disk_candidate_volume_pinned():

@@ -10,6 +10,7 @@ import pandas as pd
 import pytest
 
 from geodata_spark import geometry, hexgrid, spatial
+from geodata_spark.zones import ZONES
 
 # two small zones: a rectangle and a triangle sharing its east edge
 # (the diagonal exercises the exact PIP on boundary cells)
@@ -29,14 +30,17 @@ def points(spark):
     )
 
 
-def _literal_cover(spark, res, grain):
+def _literal_cover(spark, res, grain, compact=True):
     """The cover as built before memoization: Python row tuples through
-    createDataFrame, no checkpoint."""
+    createDataFrame, no checkpoint.  Hex full cells are compacted per
+    zone, as the memoized cover stores them, unless ``compact=False``."""
     cell_col = f"cell_hex{res}" if grain == "hex" else f"cell_r{res}"
     rows = []
     for zid, rings in TINY.items():
         if grain == "hex":
             full, boundary = hexgrid.hex7_polyfill(rings, res)
+            if compact:
+                full = hexgrid.hex7_compact_np(full)
         else:
             full, boundary = geometry.polygon_cover(rings, res)
         rows.extend((zid, int(c), False) for c in full)
@@ -70,13 +74,40 @@ def test_cover_plan_scans_checkpoint(spark, points):
     assert "ExistingRDD" in plan and "BroadcastHashJoin" in plan
 
 
+def test_hex_cover_full_cells_are_compacted():
+    # TINY at hex res 4 compacts to coarser full cells, so the join tests
+    # below run the ancestor probe
+    cols = spatial._cover_columns(TINY, 4, "hex", "cell_hex4")
+    full = cols.loc[~cols["boundary"], "cell_hex4"].to_numpy()
+    bound = cols.loc[cols["boundary"], "cell_hex4"].to_numpy()
+    assert set(hexgrid.hex7_res_np(bound).tolist()) == {4}
+    assert len(set(hexgrid.hex7_res_np(full).tolist())) > 1
+    for zid, rings in TINY.items():
+        want, _ = hexgrid.hex7_polyfill(rings, 4)
+        got = cols.loc[(cols["zone_id"] == zid) & ~cols["boundary"], "cell_hex4"]
+        assert np.array_equal(hexgrid.hex7_uncompact_np(got.to_numpy(), 4), np.sort(want))
+
+
+def test_zones_hex_cover_rows():
+    # ZONES at hex res 5: 196,690 reachable full cells compact to 8,734
+    # rows at res 1-5, next to 21,556 boundary cells
+    cols = spatial._cover_columns(ZONES, 5, "hex", "cell_hex5")
+    ids = cols["cell_hex5"].to_numpy()
+    assert hexgrid._reachable(ids).all()
+    assert not cols.duplicated(["zone_id", "cell_hex5"]).any()
+    assert (len(cols), int(cols["boundary"].sum())) == (30290, 21556)
+
+
 @pytest.mark.parametrize("grain,res", GRAINS)
 @pytest.mark.parametrize("strategy", ["expr", "udf"])
 def test_join_output_matches_literal_cover(spark, points, monkeypatch, grain, res, strategy):
     new = spatial.join_zones(points, spark, TINY, res=res, strategy=strategy, grain=grain)
-    _, old_cover = _literal_cover(spark, res, grain)
+    # the reference is the plain equi-join on an uncompacted cover
+    pdf, old_cover = _literal_cover(spark, res, grain, compact=False)
     monkeypatch.setattr(spatial, "zone_cover_df", lambda *a, **k: old_cover)
+    monkeypatch.setattr(spatial, "_cover_columns", lambda *a, **k: pdf)
     old = spatial.join_zones(points, spark, TINY, res=res, strategy=strategy, grain=grain)
+    assert new.columns == old.columns
     assert new.count() > 0 and _same_rows(new, old)
 
 
