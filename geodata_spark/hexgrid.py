@@ -1,4 +1,4 @@
-"""Aperture-7 hexagonal cell index (H3-style), Arrow-vectorized.
+"""Aperture-7 hexagonal cell index (H3-style), numpy and Catalyst.
 
 The north_star asks for H3 (res 5-9) cell encoding next to S2.  The
 engine ships the full published H3 *pipeline* from scratch in numpy —
@@ -6,8 +6,9 @@ lat/lon → icosahedron face via max-dot-product → gnomonic projection
 → hex IJK rounding → aperture-7 digit extraction with Class II/III
 alternation (the algorithm documented at h3geo.org/docs/core-library;
 reference analog: the grid discretization in cutout.py:340-344) — as
-:func:`hex7_token_np` / :func:`hex7_token_udf`, plus canonical-H3
-twins (:func:`h3_token_udf`) gated on the ``h3`` wheel.
+:func:`hex7_id_np` / :func:`hex7_token_np`, with a Catalyst twin
+(:func:`with_hex7_id`) for Spark plans, plus canonical-H3 twins
+(:func:`h3_token_udf`) gated on the ``h3`` wheel.
 
 Why two paths instead of one canonical encoder:
 
@@ -59,13 +60,15 @@ Token layout (64-bit, rendered as 16 hex chars):
               7 — the same convention that gives canonical H3 tokens
               their trailing f's.
 
-Scale shape: encoding is a stateless map over (lat, lon) — one
-Arrow-batched pandas UDF, no shuffle, no state; at 100 TB it
-pipelines inside the scan stage like the S2/grid encoders.
+Scale shape: encoding is a stateless map over (lat, lon) — a few
+Catalyst projections (:func:`with_hex7_id`), no Python stage, no
+shuffle, no state; at 100 TB it pipelines inside the scan stage's
+whole-stage codegen like the S2/grid encoders.
 """
 
 from __future__ import annotations
 
+import json
 import math
 
 import numpy as np
@@ -594,6 +597,18 @@ def _reachable(cell: np.ndarray) -> np.ndarray:
     )
 
 
+def _reach_radius(res: int) -> int:
+    """Hex distance from its face centre that no reachable res-``res``
+    cell exceeds.  A cell is ``D(parent) + u`` with ``D`` the aperture-7
+    map (a similarity of ratio sqrt(7)) and ``|u| <= 1`` lattice units,
+    and a reachable res-0 cell is at most 2 units out, so a reachable
+    centre is within ``R = 2 s + (s - 1) / (sqrt(7) - 1)``, ``s =
+    7^(res/2)``, and each of ``|a|``, ``|b|``, ``|a - b|`` within ``2R /
+    sqrt(3)`` (res 5: 390; the farthest reachable cell is at 375)."""
+    s = 7.0 ** (res / 2.0)
+    return math.ceil((2.0 * s + (s - 1.0) / (math.sqrt(7.0) - 1.0)) * 2.0 / math.sqrt(3.0))
+
+
 def hex7_polyfill(rings: list[np.ndarray], res: int) -> tuple[np.ndarray, np.ndarray]:
     """Classify hex cells against a polygon: (full_ids, boundary_ids).
 
@@ -614,14 +629,16 @@ def hex7_polyfill(rings: list[np.ndarray], res: int) -> tuple[np.ndarray, np.nda
     point still joins at most once per zone.
 
     Per face, one pass: the axial rectangle spanning the bbox (plus a
-    pad) is grown by one ring, packed once and decoded to centres once.
-    Candidates are the inner cells whose centre lies in the padded bbox;
-    each one's 6 neighbour centres are index shifts into that centre
-    array.  Classification is conservative: any ring edge within 1.0×
-    the cell's own max neighbor-center distance (≥ 1.7× circumradius)
-    marks it boundary; remaining cells are uniform and one vectorized
-    center PIP decides full/outside.  Runs on the driver; zones are
-    small, output broadcasts (same scale shape as the square cover).
+    pad) is grown by one ring and clipped to the face's reachable
+    hexagon (:func:`_reach_radius`) plus that ring; its cells in that
+    hexagon are packed once and decoded to centres once.  Candidates are
+    the inner cells whose centre lies in the padded bbox; each one's 6
+    neighbour centres are index shifts into that centre array.
+    Classification is conservative: any ring edge within 1.0× the cell's
+    own max neighbor-center distance (≥ 1.7× circumradius) marks it
+    boundary; remaining cells are uniform and one vectorized center PIP
+    decides full/outside.  Runs on the driver; zones are small, output
+    broadcasts (same scale shape as the square cover).
     """
     from geodata_spark import geometry
 
@@ -647,6 +664,7 @@ def hex7_polyfill(rings: list[np.ndarray], res: int) -> tuple[np.ndarray, np.nda
     pad_cells = 1.5
     pad_deg = pad_cells * _SQRT7 ** (-res) * _RES0_U * 60.0  # generous
     nbr = _disk_offsets(1)[1:]
+    lim = _reach_radius(res) + 1  # reachable cells and their neighbours
 
     fulls, bounds = [], []
     for f in faces:
@@ -659,14 +677,19 @@ def hex7_polyfill(rings: list[np.ndarray], res: int) -> tuple[np.ndarray, np.nda
         p = int(np.ceil(pad_cells)) + max(
             int(ai.max() - ai.min()), int(aj.max() - aj.min())
         ) // 8 + 3
-        bi, bj = np.meshgrid(
-            np.arange(ai.min() - p, ai.max() + p + 1),
-            np.arange(aj.min() - p, aj.max() + p + 1),
-            indexing="ij",
-        )
-        ni, nj, nk = _ijk_normalize(bi.ravel(), bj.ravel(), np.zeros(bi.size, np.int64))
-        ids = _pack_ijk(np.full(bi.size, np.int64(f)), ni, nj, nk, res).reshape(bi.shape)
-        cla, clo = (c.reshape(bi.shape) for c in hex7_center_np(ids.ravel()))
+        i0, i1 = max(ai.min() - p, -lim), min(ai.max() + p, lim)
+        j0, j1 = max(aj.min() - p, -lim), min(aj.max() + p, lim)
+        if i1 - i0 < 2 or j1 - j0 < 2:
+            continue
+        bi, bj = np.meshgrid(np.arange(i0, i1 + 1), np.arange(j0, j1 + 1), indexing="ij")
+        # outside the hexagon: no id is reachable, and the NaN centre
+        # keeps the cell out of the candidates
+        live = np.abs(bi - bj) <= lim
+        ni, nj, nk = _ijk_normalize(bi[live], bj[live], np.zeros(int(live.sum()), np.int64))
+        ids = np.zeros(bi.shape, np.int64)
+        ids[live] = _pack_ijk(np.full(len(ni), np.int64(f)), ni, nj, nk, res)
+        cla, clo = np.full(bi.shape, np.nan), np.full(bi.shape, np.nan)
+        cla[live], clo[live] = hex7_center_np(ids[live])
         h, w = bi.shape
         inner = (slice(1, h - 1), slice(1, w - 1))
         keep = (
@@ -733,7 +756,7 @@ def hex7_parent_expr(cell, parent_res: int):
 
     Pure JVM bit arithmetic (clear the res nibble, stamp the parent
     res, OR the trailing digits to 7), so hierarchical rollups pay the
-    Arrow encode ONCE at the finest grain and derive every coarser
+    encode ONCE at the finest grain and derive every coarser
     level inside whole-stage codegen.  Truncation is transitive
     (truncate(truncate(id, r), r') == truncate(id, r')), which is what
     lets a rollup cascade re-aggregate level r' from the level-r
@@ -757,53 +780,186 @@ def hex7_token_expr(cell):
     return F.lpad(F.lower(F.hex(cell)), 16, "0")
 
 
-def hex7_id_udf(res: int):
-    """Arrow-vectorized pandas UDF: (lat, lon) → hex7 id (LONG —
-    prefer over the string token for joins/rollups).
+# ---------------------------------------------------------------------------
+# Catalyst encode: hex7_id_np as SQL projections (no Python stage)
+# ---------------------------------------------------------------------------
 
-    The value is deterministic; the UDF is *flagged* non-deterministic
-    so Catalyst cannot substitute the expression when pushing inferred
-    join-key filters (``isnotnull(cell_hex…)``) below the defining
-    Project — that substitution materializes a SECOND ArrowEvalPython
-    stage and doubles the Python encode cost per row.  The flag keeps
-    the encode a single Arrow stage; the null filter evaluates against
-    the already-computed attribute above it.
+def _sql_dbl(v: float) -> str:
+    return f"{float(v)!r}D" if v >= 0 else f"({float(v)!r}D)"
+
+
+_SQL_FINITE = "abs({}) < CAST('Infinity' AS DOUBLE)"  # false for NULL and NaN too
+# (v + 1.5 * 2^52) - 1.5 * 2^52 is rint(v), half to even, for |v| < 2^51
+# in IEEE arithmetic; Spark's rint is nullable and compiles larger
+_SQL_RINT_SHIFT = f"{3 << 51}D"
+_SQL_SEVENTH = _sql_dbl(1.0 / 7.0)
+
+# face f's centre is exactly the negated centre of face 19 - f, so
+# numpy's dot with face 19 - f is exactly minus its dot with face f
+assert (_FACE_CENTER[::-1] == -_FACE_CENTER).all()
+
+# per face (centre, e1, e2).  Spark's SQL parser takes ~0.1 ms per
+# 17-digit double literal, so the 180 constants are one JSON string,
+# which the optimizer folds into a literal.
+_FACE_FRAMES_SQL = "from_json('{}', 'array<array<double>>')".format(json.dumps(
+    [[float(v) for v in (*c, *e1, *e2)] for c, e1, e2 in zip(_FACE_CENTER, _FACE_E1, _FACE_E2)]
+))
+
+# walk levels inlined into one projection; codegen's subexpression
+# elimination evaluates the shared inner levels once
+_WALK_LEVELS_PER_PROJECTION = 3
+
+
+def _sql_rint(v: str) -> str:
+    return f"(({v}) + {_SQL_RINT_SHIFT} - {_SQL_RINT_SHIFT})"
+
+
+def _hex7_id_projections(lat: str, lon: str, res: int) -> list[list[str]]:
+    """:func:`hex7_id_np` as SQL text: a list of projections, each a
+    list of ``expr AS name`` items added to the columns before it.  The
+    last one yields ``__h7_id``.
+
+    Op for op the numpy chain, except where the result is provably the
+    same:
+
+    * ``np.radians`` is a multiply by pi/180, as here;
+    * the face dots are ``(x*c0 + y*c1) + z*c2``, the order of numpy's
+      BLAS product and of ``np.sum`` over three terms; face 19 - f's dot
+      is minus face f's, so ten dots give all twenty, and the face is
+      the first maximum, whose dot is the gnomonic denominator;
+    * ``np.round`` is rounding half to even (:data:`_SQL_RINT_SHIFT`);
+    * the walk keeps axial (a, b) = (i - k, j - k), which normalizing
+      leaves unchanged.  C ``lround(n / 7.0)`` for an integer ``n``
+      (never a tie) is the nearest integer to ``n * (1/7)``, which is
+      within 2^-40 of ``n / 7`` for ``|n| < 2^45``;
+    * the digit at level r is ``4i + 2j + k`` of the unit residual
+      (i, j, k) = normalize(da, db, 0), which is ``v mod 7`` for
+      ``v = 4 da + 2 db`` in -6..6.
+
+    A non-finite input is replaced by (0, 0) and its face nulled at the
+    end, and each nullable Spark function (``cos``, ``/``, ...) is
+    wrapped in ``coalesce``: non-nullable expressions compile to much
+    smaller code, which keeps the generated methods of a query stage
+    under the JIT's 8,000-byte limit.
     """
-
-    @F.pandas_udf(T.LongType())
-    def _enc(lat: pd.Series, lon: pd.Series) -> pd.Series:
-        la = lat.to_numpy(np.float64)
-        lo = lon.to_numpy(np.float64)
-        # per-batch coordinate dedup: raster-sourced corpora repeat a
-        # small lattice (~7k coords) millions of times, so encoding the
-        # batch's UNIQUE (lat, lon) pairs and scattering back does the
-        # trig + digit-walk work once per coordinate, not once per row
-        # (measured 5-10x on lattice batches; ≤2x overhead worst-case
-        # on all-unique batches from the lexsort).  Same values row for
-        # row — np.unique only memoizes the pure function.
-        pairs = np.empty(len(la), dtype=[("la", np.float64), ("lo", np.float64)])
-        pairs["la"], pairs["lo"] = la, lo
-        uniq, inv = np.unique(pairs, return_inverse=True)
-        if len(uniq) * 2 < len(la):
-            ids = hex7_id_np(uniq["la"], uniq["lo"], res)[inv]
+    rad = _sql_dbl(math.pi / 180.0)
+    phi, lam = (
+        f"coalesce(IF({_SQL_FINITE.format(v)}, {v}, 0D), 0D) * {rad}" for v in (lat, lon)
+    )
+    dots = [
+        f"(__h7_x * __h7_fr[{f}][0] + __h7_y * __h7_fr[{f}][1]) + __h7_z * __h7_fr[{f}][2]"
+        for f in range(10)
+    ]
+    face = "CASE {} ELSE 19 END".format(" ".join(
+        [f"WHEN __h7_d{f} >= __h7_g THEN {f}" for f in range(10)]
+        + [f"WHEN __h7_d{19 - f} <= -__h7_g THEN {f}" for f in range(10, 19)]
+    ))
+    t = [f"(__h7_{v} / __h7_g - __h7_c[{n}])" for n, v in enumerate("xyz")]
+    u, v = (
+        f"coalesce(({t[0]} * __h7_c[{k}] + {t[1]} * __h7_c[{k + 1}]) + {t[2]} * __h7_c[{k + 2}], 0D)"
+        for k in (3, 6)
+    )
+    # gnomonic plane → lattice: polar form, Class III rotation, scale
+    rs = f"hypot(__h7_u, __h7_v) * {_sql_dbl(_SQRT7 ** res / _RES0_U)}"
+    theta = "atan2(__h7_v, __h7_u)"
+    if _is_class_iii(res):
+        theta = f"{theta} - {_sql_dbl(_AP7_ROT)}"
+    aj = f"coalesce({rs} * sin({theta}) / {_sql_dbl(_SIN60)}, 0D)"
+    # cube-coordinate round, as _hex2d_to_ijk
+    s = "(-__h7_ai - __h7_aj)"
+    rq, rr, rs_ = _sql_rint("__h7_ai"), _sql_rint("__h7_aj"), _sql_rint(s)
+    dq, dr, ds = f"abs({rq} - __h7_ai)", f"abs({rr} - __h7_aj)", f"abs({rs_} - {s})"
+    fix_q = f"({dq} > {dr} AND {dq} > {ds})"
+    projections = [
+        [
+            f"{_FACE_FRAMES_SQL} AS __h7_fr",
+            f"coalesce(cos({phi}) * cos({lam}), 0D) AS __h7_x",
+            f"coalesce(cos({phi}) * sin({lam}), 0D) AS __h7_y",
+            f"coalesce(sin({phi}), 0D) AS __h7_z",
+        ],
+        [f"{d} AS __h7_d{f}" for f, d in enumerate(dots)]
+        + [f"greatest({', '.join(f'abs({d})' for d in dots)}) AS __h7_g"],
+        [f"{face} AS __h7_f", f"__h7_fr[{face}] AS __h7_c"],
+        [f"{u} AS __h7_u", f"{v} AS __h7_v"],
+        [f"{aj} AS __h7_aj", f"coalesce({rs} * cos({theta}), 0D) + {aj} * 0.5D AS __h7_ai"],
+        [
+            f"IF({fix_q}, -{rr} - {rs_}, {rq}) AS __h7_a{res}",
+            f"IF(NOT {fix_q} AND {dr} > {ds}, -{rq} - {rs_}, {rr}) AS __h7_b{res}",
+        ],
+    ]
+    # walk up to res 0, a few levels inlined per projection
+    a, b, items = f"__h7_a{res}", f"__h7_b{res}", []
+    for r in range(res, 0, -1):
+        if _is_class_iii(r):
+            a, b = f"(3D * {a} - {b})", f"({a} + 2D * {b})"
         else:
-            ids = hex7_id_np(la, lo, res)
-        return pd.Series(ids, index=lat.index)
-
-    return _enc.asNondeterministic()
-
-
-def hex7_token_udf(res: int):
-    """Arrow-vectorized pandas UDF: (lat, lon) → hex7 token (STRING)."""
-
-    @F.pandas_udf(T.StringType())
-    def _enc(lat: pd.Series, lon: pd.Series) -> pd.Series:
-        return pd.Series(
-            hex7_token_np(lat.to_numpy(np.float64), lon.to_numpy(np.float64), res),
-            index=lat.index,
+            a, b = f"(2D * {a} + {b})", f"(3D * {b} - {a})"
+        a, b = _sql_rint(f"{a} * {_SQL_SEVENTH}"), _sql_rint(f"{b} * {_SQL_SEVENTH}")
+        items += [f"{a} AS __h7_a{r - 1}", f"{b} AS __h7_b{r - 1}"]
+        if len(items) == 2 * _WALK_LEVELS_PER_PROJECTION or r == 1:
+            projections.append(items)
+            a, b, items = f"__h7_a{r - 1}", f"__h7_b{r - 1}", []
+    # digits from consecutive levels, then the id: everything below the
+    # face field is an integer under 2^52, exact in a double
+    low = []
+    for r in range(res, 0, -1):
+        a, b, pa, pb = f"__h7_a{r}", f"__h7_b{r}", f"__h7_a{r - 1}", f"__h7_b{r - 1}"
+        v = (
+            f"(4D * {a} + 2D * {b} - 6D * {pa} - 10D * {pb})" if _is_class_iii(r)
+            else f"(4D * {a} + 2D * {b} - 14D * {pa})"
         )
+        floor7 = _sql_rint(f"({v} - 3D) * {_SQL_SEVENTH}")  # floor(v / 7), v in -6..6
+        low.append(f"({v} - 7D * {floor7}) * {8 ** (15 - r)}")
+    m = "least(__h7_a0, __h7_b0, 0D)"
+    low += [
+        f"least(__h7_a0 - {m}, 3D) * {2 ** 50}",
+        f"least(__h7_b0 - {m}, 3D) * {2 ** 48}",
+        f"least(-{m}, 3D) * {2 ** 46}",
+    ]
+    stamp = res << 57
+    for rr in range(res + 1, 16):
+        stamp |= 7 << (45 - 3 * rr)
+    finite = f"{_SQL_FINITE.format(lat)} AND {_SQL_FINITE.format(lon)}"
+    projections.append([
+        f"{stamp}L | shiftleft(CAST(IF({finite}, __h7_f, NULL) AS BIGINT), 52)"
+        f" | CAST({' + '.join(low)} AS BIGINT) AS __h7_id"
+    ])
+    return projections
 
-    return _enc
+
+def with_hex7_id(df, lat_col: str, lon_col: str, res: int, out_col: str):
+    """``df`` plus ``out_col``: the hex7 id (LONG) of ``(lat_col,
+    lon_col)`` at ``res``, equal to :func:`hex7_id_np`, computed by
+    Catalyst expressions alone — no Python stage, whole-stage codegen.
+    ``out_col`` replaces a column of that name, as ``withColumn`` does.
+
+    A NULL, NaN or ±inf latitude or longitude gives a NULL id.
+
+    Exactness: the projections repeat numpy's operations in numpy's
+    order (see :func:`_hex7_id_projections`), so ids are bit-identical
+    wherever the JVM's ``sin``, ``cos``, ``atan2`` and ``hypot`` return
+    numpy's values.  They may differ in the last ulp; an id can then
+    differ only for a point within an ulp of a cell edge or a face
+    tie.  Zone membership does not depend on such an id: a zone cover's
+    margin is at least a cell's circumradius, so a point inside a zone
+    lies in one of its full or boundary cells either way, and boundary
+    rows keep the exact PIP test.
+    """
+    if not 0 <= res <= 15:
+        raise ValueError(f"res must be 0..15, got {res}")
+    quote = lambda c: "`" + c.replace("`", "``") + "`"  # noqa: E731
+    for items in _hex7_id_projections(quote(lat_col), quote(lon_col), res):
+        df = df.selectExpr("*", *items)
+    # The id leaves through a one-element explode: the optimizer traces a
+    # join key down through projections by inlining their aliases
+    # (dynamic partition pruning), which copies each walk level once per
+    # use, exponentially in ``res``; it stops at a generator.
+    cols = [quote(c) for c in df.columns if not c.startswith("__h7_")]
+    key = f"explode(array(__h7_id)) AS {quote(out_col)}"
+    out = [key if c == quote(out_col) else c for c in cols]
+    if quote(out_col) not in cols:
+        out.append(key)
+    return df.selectExpr(*out)
 
 
 # ---------------------------------------------------------------------------
@@ -817,7 +973,7 @@ def _h3_mod():
         raise NotImplementedError(
             "canonical H3 tokens need the `h3` wheel (not in this image; "
             "no network to fetch Uber's base-cell convention tables). "
-            "Install h3 to activate; hex7_token_udf is the from-scratch "
+            "Install h3 to activate; with_hex7_id is the from-scratch "
             "aperture-7 index with the same plumbing."
         ) from e
     return h3
@@ -843,9 +999,7 @@ def with_hex_columns(df, lat_col: str = "lat", lon_col: str = "lon",
                      resolutions: tuple[int, ...] = (5, 6, 7, 8, 9)):
     """Attach ``hex7_r{res}`` id columns for each requested res."""
     for r in resolutions:
-        df = df.withColumn(
-            f"hex7_r{r}", hex7_id_udf(r)(F.col(lat_col), F.col(lon_col))
-        )
+        df = with_hex7_id(df, lat_col, lon_col, r, f"hex7_r{r}")
     return df
 
 

@@ -84,9 +84,8 @@ def q_zonal_wavg_hex(spark: SparkSession, sf_dir: str) -> DataFrame:
     (the north_star's H3-grain spatial join, end to end)."""
     docs = corpus(spark, sf_dir)
     pts = spatial.parse_geo_spans(docs)
-    # The hex encode runs in one pass over the points, deduplicating
-    # coordinates per Arrow batch (corpus geo spans live on the finite
-    # 7272-coordinate synth lattice).  Cover res stays 5: its compacted
+    # The hex encode is Catalyst projections in the scan stage (no
+    # Python worker).  Cover res stays 5: its compacted
     # cover is 30,290 rows there (hex7_polyfill ~1.3 s once per catalog
     # on 4 vCPUs); res 6 is 80,549 rows but a 13.7 s build, and the
     # boundary-sliver win does not pay for that.
@@ -2781,12 +2780,12 @@ q_sql_grid_reduce = _q_sql("sql_grid_reduce")
 # ---------------------------------------------------------------------------
 
 def q_hex_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Aperture-7 hexagonal cell encode (hexgrid.hex7_token_udf) over a
+    """Aperture-7 hexagonal cell encode (hexgrid.with_hex7_id) over a
     deterministic in-query point set — the H3-style twin of the S2/grid
     encoders (north_star: batch-encode H3 res 5-9 cell ids; reference
     analog cutout.py:340-344 grid discretization).
 
-    The encode is numpy/Arrow math DuckDB cannot run, so the oracle is
+    DuckDB has no twin of the encode, so the oracle is
     a FIXTURE LITERAL: the same 24 points x (res 5, 7) tokens, pinned
     from the deterministic construction (module fixtures in
     tests/test_hexgrid.py pin the underlying math to the spec)."""
@@ -2800,10 +2799,10 @@ def q_hex_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
     outs = []
     for res in (5, 7):
         outs.append(
-            pts.select(
+            HG.with_hex7_id(pts, "lat", "lon", res, "cell").select(
                 "point_id",
                 F.lit(res).cast("int").alias("res"),
-                HG.hex7_token_udf(res)(F.col("lat"), F.col("lon")).alias("cell"),
+                HG.hex7_token_expr(F.col("cell")).alias("cell"),
             )
         )
     return outs[0].unionByName(outs[1])
@@ -2900,7 +2899,8 @@ def q_events_asof_binned(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_hex_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Corpus-integrated hexagonal rollup: geo spans → hex7 res-5 cell
-    (Arrow UDF inside the scan stage) → count + dyadic sum per cell.
+    (Catalyst projections inside the scan stage) → count + dyadic sum
+    per cell.
 
     Oracle: the corpus grid is the finite deterministic NY×NX lattice,
     so the encode is reproducible in SQL by JOINing the 7272-row
@@ -2912,8 +2912,8 @@ def q_hex_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = corpus(spark, sf_dir)
     pts = spatial.parse_geo_spans(docs)
-    enc = pts.withColumn("hex5", HG.hex7_token_udf(5)(F.col("lat"), F.col("lon")))
-    return enc.groupBy("hex5").agg(
+    enc = HG.with_hex7_id(pts, "lat", "lon", 5, "hex5")
+    return enc.groupBy(HG.hex7_token_expr(F.col("hex5")).alias("hex5")).agg(
         F.count(F.lit(1)).cast("long").alias("n_points"),
         F.sum("val").alias("val_sum"),
     )
@@ -2954,7 +2954,7 @@ GROUP BY d.hex5
 def q_hex_rollup_multi(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hierarchical (hypertable-style) hexagonal rollup, res 5→4→3.
 
-    Scale shape: the Arrow hex encode runs ONCE at the finest grain
+    Scale shape: the hex encode runs ONCE at the finest grain
     inside the scan stage, and the res-5 aggregate is the only shuffle
     of fact-table cardinality.  The coarser levels come from exploding
     the three (res, token) keys per row of the res-5 AGGREGATE
@@ -2964,7 +2964,7 @@ def q_hex_rollup_multi(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUPING SETS Expand multiplies the FACT table 3× before its
     shuffle, and a union of per-level cascades recomputes the fact
     scan per level (Spark does not share subplans across union
-    branches).  Plan-pinned: 1 ArrowEvalPython, 2 Exchanges, 1 scan.
+    branches).  Plan-pinned: no Python stage, 2 Exchanges, 1 scan.
     Dyadic ``val`` keeps every level's sum order-independent and
     bit-exact vs the oracle.
 
@@ -2975,7 +2975,7 @@ def q_hex_rollup_multi(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = corpus(spark, sf_dir)
     pts = spatial.parse_geo_spans(docs)
-    enc = pts.withColumn("id5", HG.hex7_id_udf(5)(F.col("lat"), F.col("lon")))
+    enc = HG.with_hex7_id(pts, "lat", "lon", 5, "id5")
     agg5 = enc.groupBy("id5").agg(
         F.count(F.lit(1)).cast("long").alias("n_points"),
         F.sum("val").alias("val_sum"),
@@ -5281,9 +5281,8 @@ def q_areal_interp(spark: SparkSession, sf_dir: str) -> DataFrame:
     pts = synth_grid_vars(
         spark, nhours=1, ny=72, nx=101, variables=("temperature",)
     ).select("lat", "lon")
-    zoned = spatial.join_zones(pts, spark).withColumn(
-        "hex5", HG.hex7_token_udf(5)(F.col("lat"), F.col("lon"))
-    )
+    zoned = HG.with_hex7_id(spatial.join_zones(pts, spark), "lat", "lon", 5, "hex5")
+    zoned = zoned.withColumn("hex5", HG.hex7_token_expr(F.col("hex5")))
     ab = zoned.groupBy("zone_id", "hex5").agg(
         F.count(F.lit(1)).cast("long").alias("n_cells_ab")
     )

@@ -14,10 +14,12 @@ zone lists), the point/span table is the 10^12-row side.  The polygons
 are therefore compiled **on the driver** into a cover table
 (zone_id, cell_r{res}, boundary) via the Sutherland-Hodgman planner
 (geometry.polygon_cover) and **broadcast**; membership becomes a
-broadcast hash equi-join on the cell id, fully JVM-side.  Only rows in
-*boundary* cells (a thin O(perimeter) sliver) cross into Python for the
-exact vectorized PIP test — the Arrow-batched analog of the
-reference's per-boundary-pixel geometry_mask test (``mask.py:593-599``).
+broadcast hash equi-join on the cell id, fully JVM-side at both grains
+(the hex encode is Catalyst projections, :func:`hexgrid.with_hex7_id`).
+Rows in *boundary* cells (a thin O(perimeter) sliver) take the exact
+PIP test — compiled into Catalyst by default, or an Arrow UDF for big
+polygon sets — the analog of the reference's per-boundary-pixel
+geometry_mask test (``mask.py:593-599``).
 """
 
 from __future__ import annotations
@@ -387,11 +389,20 @@ def join_zones(
     hexagonal index instead of the square grid: identical output rows
     (the cover's full/boundary contract is grain-independent — full
     cells prove membership, boundary cells fall through to the same
-    exact PIP), different physical key.  The point-side encode is one
-    Arrow UDF in the scan stage; the cover still broadcasts.  Its full
+    exact PIP), different physical key.  The point-side encode is
+    :func:`hexgrid.with_hex7_id`, Catalyst projections in the scan
+    stage with no Python stage; the cover still broadcasts.  Its full
     cells are compacted, so each point probes its ancestor at every
     res the cover holds (bit truncation in the JVM, one row each) and
-    the output's ``cell_hex{res}`` is the point's own id.
+    the output's ``cell_hex{res}`` is the point's own id.  The JVM's
+    trigonometry may differ from numpy's in the last ulp, so a point
+    within an ulp of a cell edge may get the neighbouring id; it still
+    lies in one of the zone's full or boundary cells (the cover's
+    margin is at least a circumradius), and boundary rows keep the
+    exact PIP test, so membership does not change.
+
+    A point whose ``lat_col`` or ``lon_col`` is NULL, NaN or ±inf is
+    in no zone, at both grains: it is dropped by the cover join.
 
     ``hex_encode`` is accepted for compatibility and ignored: both
     ``"row"`` and ``"dim"`` encode in one pass over the input.
@@ -403,29 +414,23 @@ def join_zones(
     if grain == "hex":
         from geodata_spark import hexgrid as HG
 
+        # a point without a finite position has a NULL id: no match
         cell_col = f"cell_hex{res}"
-        # Both modes now encode in ONE pass over the input with the
-        # per-batch coordinate dedup inside hex7_id_udf (raster-sourced
-        # corpora repeat a small lattice, so the trig + digit walk runs
-        # once per unique coordinate per batch).  The round-7 "dim"
-        # mode (distinct → encode → broadcast join back) moved fewer
-        # rows through Python but RE-EXECUTED the entire upstream plan
-        # for its distinct branch — a second full synth+parse pass
-        # when the input is an inline generator rather than a cheap
-        # parquet rescan (measured +8s of the hex flagship's 19s at 2M
-        # docs, r8).  One pass + batch dedup keeps the Python work per
-        # unique coordinate without ever paying a second scan; the
-        # parameter is kept for API compatibility and both values are
-        # row-for-row identical (pinned by the zonal_wavg_hex oracle).
-        pts = points.withColumn(
-            cell_col, HG.hex7_id_udf(res)(F.col(lat_col), F.col(lon_col))
-        )
+        pts = HG.with_hex7_id(points, lat_col, lon_col, res, cell_col)
         with _COVER_LOCK:
             cover_ids = _cover_columns(zones, res, grain, cell_col)[cell_col]
         levels = np.unique(HG.hex7_res_np(cover_ids.to_numpy())).tolist()
     else:
+        # A point without a finite position gets key -1, which no cover
+        # row holds (cover ids are non-negative), so it matches no zone;
+        # the encode would raise on NaN.  The key is then not nullable,
+        # so the optimizer infers no isnotnull(key) filter to push below
+        # the encode, which would evaluate it twice.
         cell_col = f"cell_r{res}"
-        pts = points.withColumn(cell_col, cells.cell_expr(F.col(lat_col), F.col(lon_col), res))
+        lat, lon = F.col(lat_col), F.col(lon_col)
+        finite = (F.abs(lat) < F.lit(float("inf"))) & (F.abs(lon) < F.lit(float("inf")))
+        cell = F.when(finite, cells.cell_expr(lat, lon, res))
+        pts = points.withColumn(cell_col, F.coalesce(cell, F.lit(-1).cast("long")))
         levels = [res]
     if levels == [res]:
         joined = pts.join(F.broadcast(cover), cell_col)

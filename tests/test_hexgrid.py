@@ -2,7 +2,7 @@
 
 Mirrors the S2 treatment in test_cells.py: hand-derived spec pins from
 the construction (face centers → all-zero digit tokens, unit lattice
-offsets → known digit sequences), global invariants, UDF ≡ numpy, and
+offsets → known digit sequences), global invariants, Catalyst ≡ numpy, and
 the canonical-H3 gate (documented Uber tokens behind ``import h3``,
 NotImplementedError contract when the wheel is absent).
 """
@@ -119,26 +119,99 @@ def test_parent_truncation_exact_and_transitive():
     assert 0.55 < agree < 0.75, agree
 
 
-def test_udf_matches_numpy(spark):
-    rng = np.random.default_rng(5)
-    lat = rng.uniform(-60, 60, 64)
-    lon = rng.uniform(-150, 150, 64)
-    df = spark.createDataFrame(
-        [(float(a), float(b)) for a, b in zip(lat, lon)], ["lat", "lon"]
-    )
+def _near_edges_and_vertices(seed: int, n: int = 300) -> tuple[np.ndarray, np.ndarray]:
+    """Points jittered 1e-14..1e-2 rad off every icosahedron edge and
+    vertex (the face ties and lattice edges an encode can get wrong)."""
+    rng = np.random.default_rng(seed)
+    base = []
+    for a, b in _EDGES:
+        t = rng.uniform(0.0, 1.0, (n, 1))
+        base.append(H._VERTS[a] * (1 - t) + H._VERTS[b] * t)
+    base.append(np.repeat(H._VERTS, n, axis=0))
+    base = np.vstack(base)
+    base /= np.linalg.norm(base, axis=1, keepdims=True)
+    step = rng.normal(size=base.shape)
+    step /= np.linalg.norm(step, axis=1, keepdims=True)
+    p = base + step * 10.0 ** rng.uniform(-14, -2, (len(base), 1))
+    p /= np.linalg.norm(p, axis=1, keepdims=True)
+    lat = np.degrees(np.arcsin(np.clip(p[:, 2], -1.0, 1.0)))
+    return lat, np.degrees(np.arctan2(p[:, 1], p[:, 0]))
+
+
+def test_with_hex7_id_matches_numpy(spark):
+    """The Catalyst encode equals hex7_id_np bit for bit at every res
+    on the corpus lattice (the hex5_grid_dim fixture's domain), 100k
+    uniform points, points near every icosahedron edge and vertex,
+    the hex_cells points and the face centres."""
+    import pandas as pd
+
+    from geodata_spark.synth import DLAT, DLON, LAT0, LON0, NX, NY
+
+    rng = np.random.default_rng(13)
+    yy, xx = np.meshgrid(np.arange(NY), np.arange(NX), indexing="ij")
+    edge_lat, edge_lon = _near_edges_and_vertices(17)
+    idx = np.arange(24)
+    lat = np.concatenate([
+        LAT0 + DLAT * yy.ravel(), rng.uniform(-90, 90, 100_000), edge_lat,
+        -78.0 + idx * 6.7, np.degrees(np.arcsin(H._FACE_CENTER[:, 2])),
+    ])
+    lon = np.concatenate([
+        LON0 + DLON * xx.ravel(), rng.uniform(-180, 180, 100_000), edge_lon,
+        -168.0 + idx * 14.3, np.degrees(np.arctan2(H._FACE_CENTER[:, 1], H._FACE_CENTER[:, 0])),
+    ])
+    df = spark.createDataFrame(pd.DataFrame({"n": np.arange(len(lat)), "lat": lat, "lon": lon}))
+    df = df.cache()
+    try:
+        for res in range(16):
+            got = (
+                H.with_hex7_id(df, "lat", "lon", res, "id").select("n", "id")
+                .toPandas().sort_values("n")["id"].to_numpy()
+            )
+            want = H.hex7_id_np(lat, lon, res)
+            bad = np.nonzero(got != want)[0]
+            assert len(bad) == 0, (res, len(bad), lat[bad[:3]], lon[bad[:3]])
+    finally:
+        df.unpersist()
+
+
+def test_with_hex7_id_null_and_columns(spark):
+    """NULL, NaN and ±inf coordinates give a NULL id (no ANSI cast
+    error); other columns keep their order and an existing ``out_col``
+    is replaced in place; with_hex_columns and hex7_token_expr build on
+    the same encode."""
     import pyspark.sql.functions as F
 
-    got_tok = [
-        r[0]
-        for r in df.select(H.hex7_token_udf(7)(F.col("lat"), F.col("lon"))).collect()
-    ]
-    got_id = [
-        r[0] for r in df.select(H.hex7_id_udf(7)(F.col("lat"), F.col("lon"))).collect()
-    ]
-    assert got_tok == list(H.hex7_token_np(lat, lon, 7))
-    assert got_id == list(H.hex7_id_np(lat, lon, 7))
+    rows = [(1, 10.0, 20.0), (2, float("nan"), 20.0), (3, 10.0, float("inf")),
+            (4, None, 20.0), (5, float("-inf"), None)]
+    df = spark.createDataFrame(rows, "n int, lat double, lon double")
+    out = H.with_hex7_id(df.withColumn("h", F.lit("x")), "lat", "lon", 7, "n")
+    assert out.columns == ["n", "lat", "lon", "h"]
+    got = [r.n for r in out.collect()]
+    assert got[0] == int(H.hex7_id_np(np.array([10.0]), np.array([20.0]), 7)[0])
+    assert got[1:] == [None] * 4
+    tok = H.with_hex7_id(df, "lat", "lon", 7, "c").select(H.hex7_token_expr(F.col("c")))
+    assert [r[0] for r in tok.collect()][0] == H.hex7_token_np(np.array([10.0]), np.array([20.0]), 7)[0]
     wide = H.with_hex_columns(df, resolutions=(5, 9))
-    assert {"hex7_r5", "hex7_r9"} <= set(wide.columns)
+    assert wide.columns == ["n", "lat", "lon", "hex7_r5", "hex7_r9"]
+    with pytest.raises(ValueError):
+        H.with_hex7_id(df, "lat", "lon", 16, "c")
+
+
+def test_with_hex7_id_compiles_under_the_jit_limit(spark):
+    """Every generated method of the encode's codegen stage stays under
+    HotSpot's 8,000-byte limit at the finest res (a longer method runs
+    in the bytecode interpreter)."""
+    conf = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try:
+        df = spark.range(10).selectExpr("id * 1.5D AS lat", "id * 2.5D AS lon")
+        plan = H.with_hex7_id(df, "lat", "lon", 15, "h")._jdf.queryExecution().executedPlan()
+        jvm = spark.sparkContext._jvm
+        stages = jvm.org.apache.spark.sql.execution.debug.package.codegenStringSeq(plan)
+        sizes = [stages.apply(i)._3().maxMethodCodeSize() for i in range(stages.size())]
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", conf)
+    assert sizes and max(sizes) < 8000, sizes
 
 
 def test_canonical_h3_gate():

@@ -531,8 +531,8 @@ def test_hex_knn_plan_ring_equi_join(spark):
 
 def test_hex_zone_join_broadcasts_cover(spark):
     """Hex-grain zone membership keeps the flagship's physical shape:
-    broadcast cover join + codegen PIP (single Python stage = the
-    encode UDF, nothing else)."""
+    broadcast cover join + codegen PIP, and no Python stage (the hex
+    encode is Catalyst projections)."""
     from geodata_spark import spatial
     from geodata_spark.synth import synth_documents
 
@@ -542,19 +542,19 @@ def test_hex_zone_join_broadcasts_cover(spark):
     plan = _plan(out)
     assert "BroadcastHashJoin" in plan, "hex zone cover must broadcast"
     assert "CartesianProduct" not in plan
-    assert plan.count("ArrowEvalPython") == 1  # the hex encode only
+    assert plan.count("ArrowEvalPython") == plan.count("BatchEvalPython") == 0
 
 
 def test_hex_rollup_multi_single_pass(spark):
-    """The hierarchical hex rollup must pay the fact table ONCE: one
-    Arrow encode stage, one fact-cardinality shuffle plus one tiny
-    re-agg shuffle, and no per-level union re-computation (which would
-    show 3 ArrowEvalPython / 6 Exchanges)."""
+    """The hierarchical hex rollup must pay the fact table ONCE: no
+    Python stage, one fact-cardinality shuffle plus one tiny re-agg
+    shuffle, and no per-level union re-computation (which would show
+    6 Exchanges)."""
     from geodata_spark import queries as Q
 
     df = Q.q_hex_rollup_multi(spark, "/root/testdata/sf0.001")
     plan = _plan(df)
-    assert plan.count("ArrowEvalPython") == 1, plan
+    assert plan.count("ArrowEvalPython") == plan.count("BatchEvalPython") == 0, plan
     assert plan.count("Exchange") == 2, plan
 
 

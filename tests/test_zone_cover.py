@@ -158,3 +158,20 @@ def test_stopped_session_entries_are_dropped(spark, monkeypatch):
     monkeypatch.setitem(spatial._COVER_DF_CACHE, ("stopped",), stopped)
     spatial.zone_cover_df(spark, TINY, 8)
     assert ("stopped",) not in spatial._COVER_DF_CACHE
+
+
+@pytest.mark.parametrize("strategy", ["expr", "udf"])
+def test_join_zones_drops_non_finite_points(spark, strategy):
+    """A point with a NULL, NaN or ±inf coordinate is in no zone, at
+    both grains and with both PIP strategies (the grid encode used to
+    raise ARITHMETIC_OVERFLOW on NaN, and the hex UDF gave all of them
+    one real id)."""
+    good = [(31.0, 101.0), (30.5, 104.5), (29.5, 99.0)]
+    bad = [(float("nan"), 101.0), (31.0, float("nan")), (float("inf"), 101.0),
+           (31.0, float("-inf")), (None, 101.0), (31.0, None)]
+    df = spark.createDataFrame(good + bad, "lat double, lon double")
+    rows = {}
+    for grain, res in GRAINS:
+        out = spatial.join_zones(df, spark, TINY, res=res, grain=grain, strategy=strategy)
+        rows[grain] = sorted((r.zone_id, r.lat, r.lon) for r in out.collect())
+    assert rows["grid"] == rows["hex"] == [("rect", 31.0, 101.0), ("tri", 30.5, 104.5)]

@@ -66,16 +66,17 @@ NOTES = {
         "over the candidate disk only"
     ),
     "hex_rollup_multi": (
-        "hierarchical rollup: ONE Arrow encode at res 5, one "
+        "hierarchical rollup: ONE Catalyst encode at res 5, one "
         "fact-cardinality shuffle, then the (res, token) triple "
         "explodes on the small aggregate and re-aggregates once — "
         "no GROUPING SETS fact-table Expand, no per-level union "
         "recompute"
     ),
     "zonal_wavg_hex": (
-        "hex-grain flagship: hex encode is the ONLY Python stage "
-        "(one ArrowEvalPython); broadcast hex-polyfill cover join, "
-        "CASE-short-circuit PIP still in codegen, two-phase hash agg"
+        "hex-grain flagship: no Python stage — the hex encode is "
+        "Catalyst projections in the scan stage; broadcast "
+        "hex-polyfill cover join, CASE-short-circuit PIP still in "
+        "codegen, two-phase hash agg"
     ),
     "zorder_stats": (
         "Z-order key audit: the Morton key is ONE codegen expression "
