@@ -180,7 +180,7 @@ def ensure_prepared(spark, n_docs: int) -> str:
 
         docs = spark.read.parquet(ensure_corpus(spark, n_docs))
         pts = spatial.parse_geo_spans(docs).withColumn(
-            "cell_r9", cells.cell_expr(F.col("lat"), F.col("lon"), 9)
+            "cell_r9", F.expr(cells.cell_sql("lat", "lon", 9))
         )
         (
             pts.repartitionByRange(64, "cell_r9")
@@ -282,7 +282,7 @@ def bench_queries(spark) -> tuple[dict[str, float], dict[str, dict]]:
     # cell-encode + hierarchy rollup throughput
     docs = spark.read.parquet(ensure_corpus(spark, N_DOCS))
     pts = spatial.parse_geo_spans(docs, kinds=("geo", "raster_tile"))
-    enc = pts.withColumn("cell_r9", cells.cell_expr(F.col("lat"), F.col("lon"), 9))
+    enc = pts.withColumn("cell_r9", F.expr(cells.cell_sql("lat", "lon", 9)))
     agg = enc.groupBy(cells.parent_expr(F.col("cell_r9"), 4).alias("cell_r5")).agg(
         F.count(F.lit(1)).alias("n"), F.sum("val").alias("v")
     )
@@ -952,7 +952,7 @@ def skew_bench() -> dict:
         def build_topk(salt_buckets):
             docs = spark.read.parquet(path)
             pts = spatial.parse_geo_spans(docs).withColumn(
-                "cell_r9", cells.cell_expr(F.col("lat"), F.col("lon"), 9)
+                "cell_r9", F.expr(cells.cell_sql("lat", "lon", 9))
             )
             return topk_per_group(
                 pts,
@@ -977,7 +977,7 @@ def skew_bench() -> dict:
         def build_cumsum(two_phase: bool):
             docs = spark.read.parquet(path)
             pts = spatial.parse_geo_spans(docs).withColumn(
-                "cell_r9", cells.cell_expr(F.col("lat"), F.col("lon"), 9)
+                "cell_r9", F.expr(cells.cell_sql("lat", "lon", 9))
             )
             if two_phase:
                 return grouped_prefix_sum(
@@ -1010,7 +1010,7 @@ def skew_bench() -> dict:
         def build_asof(bin_expr):
             docs = spark.read.parquet(path)
             pts = spatial.parse_geo_spans(docs).withColumn(
-                "cell_r9", cells.cell_expr(F.col("lat"), F.col("lon"), 9)
+                "cell_r9", F.expr(cells.cell_sql("lat", "lon", 9))
             )
             right = pts.select("cell_r9", F.col("hour").alias("ts"),
                                "val", "doc_id")

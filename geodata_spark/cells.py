@@ -56,25 +56,17 @@ Y_SHIFT = 2**27
 # grid scheme — Catalyst expressions (hot path, oracle-reproducible)
 # ---------------------------------------------------------------------------
 
-def cell_expr(lat: Column, lon: Column, res: int) -> Column:
-    """Cell id of (lat, lon) at ``res`` as a Catalyst expression.
+def cell_sql(lat_sql: str, lon_sql: str, res: int) -> str:
+    """Cell id of (lat, lon) at ``res`` as ANSI-SQL text over the SQL
+    snippets ``lat_sql`` and ``lon_sql`` (usually column names).
 
-    Stays inside whole-stage codegen: floor + integer arithmetic only.
-    Equivalent ANSI SQL: ``r*18014398509481984 + floor((lat+90)/e)*134217728
-    + floor((lon+180)/e)``.
+    The one grid-key formula: Spark parses it (``selectExpr`` /
+    ``F.expr``: floor + integer arithmetic, inside whole-stage
+    codegen) and the DuckDB oracles run the same text, so both engines
+    compute the key from one source.
     """
     if not MIN_RES <= res <= MAX_RES:
         raise ValueError(f"res must be in [{MIN_RES},{MAX_RES}], got {res}")
-    e = EDGE_DEG[res]
-    yi = F.floor((lat + F.lit(90.0)) / F.lit(e)).cast("long")
-    xi = F.floor((lon + F.lit(180.0)) / F.lit(e)).cast("long")
-    return (F.lit(res).cast("long") * F.lit(_RES_SHIFT) + yi * F.lit(Y_SHIFT) + xi).alias(
-        f"cell_r{res}"
-    )
-
-
-def cell_sql(lat_sql: str, lon_sql: str, res: int) -> str:
-    """ANSI-SQL text equivalent of :func:`cell_expr` (for DuckDB oracles)."""
     e = EDGE_DEG[res]
     return (
         f"({res} * {_RES_SHIFT} "

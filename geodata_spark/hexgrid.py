@@ -70,11 +70,14 @@ from __future__ import annotations
 
 import json
 import math
+import uuid
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from geodata_spark.sqltext import ident
 
 # ---------------------------------------------------------------------------
 # Canonical icosahedron (golden-ratio construction, public geometry)
@@ -927,11 +930,53 @@ def _hex7_id_projections(lat: str, lon: str, res: int) -> list[list[str]]:
     return projections
 
 
+def _hex7_select(df, lat_col: str, lon_col: str, res: int, final: list[str]):
+    """``df`` through the encode's projections, then ``SELECT final``,
+    as one ``spark.sql`` text: ``final`` may use ``df``'s columns and
+    ``__h7_id``, the id.  One parse and one analysis, where a
+    ``selectExpr`` per projection analyzes the growing plan ten times."""
+    if not 0 <= res <= 15:
+        raise ValueError(f"res must be 0..15, got {res}")
+    view = f"__h7_src_{uuid.uuid4().hex}"
+    sql = f"SELECT * FROM {view}"
+    for items in _hex7_id_projections(ident(lat_col), ident(lon_col), res):
+        sql = f"SELECT *, {', '.join(items)} FROM ({sql})"
+    spark = df.sparkSession
+    df.createOrReplaceTempView(view)
+    try:
+        return spark.sql(f"SELECT {', '.join(final)} FROM ({sql})")
+    finally:
+        # the session catalog's drop: Catalog.dropTempView also uncaches
+        # the view's plan, which is the caller's ``df`` if it is cached
+        spark._jsparkSession.sessionState().catalog().dropTempView(view)
+
+
+def with_hex7_probe(df, lat_col: str, lon_col: str, res: int, levels: list[int], out_col: str):
+    """``df``'s columns other than ``out_col``, ``__h7_id`` (the point's
+    res-``res`` id) and ``out_col``: one row per level in ``levels``,
+    holding the point's ancestor at that res.
+
+    The key leaves through the generator: the optimizer traces a join
+    key down through projections by inlining their aliases (dynamic
+    partition pruning), which copies each walk level once per use,
+    exponentially in ``res``; it stops at a generator.  ``__h7_id``
+    rides beside it as a plain column, never a join key."""
+    probes = ", ".join(
+        "__h7_id" if r == res else hex7_parent_sql("__h7_id", r) for r in levels
+    )
+    cols = [ident(c) for c in df.columns if c != out_col]
+    return _hex7_select(
+        df, lat_col, lon_col, res,
+        [*cols, "__h7_id", f"explode(array({probes})) AS {ident(out_col)}"],
+    )
+
+
 def with_hex7_id(df, lat_col: str, lon_col: str, res: int, out_col: str):
     """``df`` plus ``out_col``: the hex7 id (LONG) of ``(lat_col,
     lon_col)`` at ``res``, equal to :func:`hex7_id_np`, computed by
     Catalyst expressions alone — no Python stage, whole-stage codegen.
     ``out_col`` replaces a column of that name, as ``withColumn`` does.
+    The plan is built from one SQL text (:func:`_hex7_select`).
 
     A NULL, NaN or ±inf latitude or longitude gives a NULL id.
 
@@ -944,22 +989,16 @@ def with_hex7_id(df, lat_col: str, lon_col: str, res: int, out_col: str):
     margin is at least a cell's circumradius, so a point inside a zone
     lies in one of its full or boundary cells either way, and boundary
     rows keep the exact PIP test.
+
+    :func:`spatial.join_zones` uses the same encode with the cover's
+    ancestor probe fused into its last projection (:func:`with_hex7_probe`).
     """
-    if not 0 <= res <= 15:
-        raise ValueError(f"res must be 0..15, got {res}")
-    quote = lambda c: "`" + c.replace("`", "``") + "`"  # noqa: E731
-    for items in _hex7_id_projections(quote(lat_col), quote(lon_col), res):
-        df = df.selectExpr("*", *items)
-    # The id leaves through a one-element explode: the optimizer traces a
-    # join key down through projections by inlining their aliases
-    # (dynamic partition pruning), which copies each walk level once per
-    # use, exponentially in ``res``; it stops at a generator.
-    cols = [quote(c) for c in df.columns if not c.startswith("__h7_")]
-    key = f"explode(array(__h7_id)) AS {quote(out_col)}"
-    out = [key if c == quote(out_col) else c for c in cols]
-    if quote(out_col) not in cols:
-        out.append(key)
-    return df.selectExpr(*out)
+    # the id leaves through a one-element generator (see with_hex7_probe)
+    key = f"explode(array(__h7_id)) AS {ident(out_col)}"
+    cols = [key if c == out_col else ident(c) for c in df.columns]
+    if out_col not in df.columns:
+        cols.append(key)
+    return _hex7_select(df, lat_col, lon_col, res, cols)
 
 
 # ---------------------------------------------------------------------------

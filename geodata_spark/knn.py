@@ -20,6 +20,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from geodata_spark import cells
+from geodata_spark.sqltext import ident, lit
 
 
 def _with_neighbor_cells(df: DataFrame, res: int, lat_col: str, lon_col: str,
@@ -31,20 +32,16 @@ def _with_neighbor_cells(df: DataFrame, res: int, lat_col: str, lon_col: str,
     every point within planar radius ``r``."""
     e = cells.EDGE_DEG[res]
     rng = range(-ring, ring + 1)
-    offsets = [(dy, dx) for dy in rng for dx in rng]
-    cellarr = F.array(
-        *[
-            cells.cell_expr(
-                F.col(lat_col) + F.lit(dy * e), F.col(lon_col) + F.lit(dx * e), res
-            )
-            for dy, dx in offsets
-        ]
+    lat, lon = ident(lat_col), ident(lon_col)
+    ids = ", ".join(
+        cells.cell_sql(f"({lat} + {lit(dy * e)})", f"({lon} + {lit(dx * e)})", res)
+        for dy in rng for dx in rng
     )
     # array_distinct: at domain edges several ring offsets clamp to the
     # same cell id; deduping the array here (free, in codegen) means a
     # source row can match a target at most once — no post-join
     # dropDuplicates shuffle needed.
-    return df.withColumn("_nbr_cell", F.explode(F.array_distinct(cellarr)))
+    return df.withColumn("_nbr_cell", F.expr(f"explode(array_distinct(array({ids})))"))
 
 
 def _with_hex_disk(df: DataFrame, res: int, ring: int, lat_col: str, lon_col: str) -> DataFrame:
@@ -108,9 +105,7 @@ def knn_join(
         s = sources.withColumn("_nbr_cell", F.explode(skeys))
     else:
         t = _with_neighbor_cells(targets, res, t_lat, t_lon)
-        s = sources.withColumn(
-            "_nbr_cell", cells.cell_expr(F.col(s_lat), F.col(s_lon), res)
-        )
+        s = sources.withColumn("_nbr_cell", F.expr(cells.cell_sql(ident(s_lat), ident(s_lon), res)))
     # rename source cols to avoid collisions
     for c in sources.columns:
         s = s.withColumnRenamed(c, f"{c}_src")
@@ -205,9 +200,7 @@ def radius_join(
 
     ring = max(1, math.ceil(radius_deg / cells.EDGE_DEG[res]))
     t = _with_neighbor_cells(targets, res, t_lat, t_lon, ring=ring)
-    s = sources.withColumn(
-        "_nbr_cell", cells.cell_expr(F.col(s_lat), F.col(s_lon), res)
-    )
+    s = sources.withColumn("_nbr_cell", F.expr(cells.cell_sql(ident(s_lat), ident(s_lon), res)))
     for c in sources.columns:
         s = s.withColumnRenamed(c, f"{c}_src")
     s = s.withColumnRenamed("_nbr_cell_src", "_nbr_cell")

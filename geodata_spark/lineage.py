@@ -33,6 +33,8 @@ from concurrent.futures import ThreadPoolExecutor
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
+from geodata_spark.sqltext import ident, lit
+
 
 def content_hash_col(df: DataFrame) -> F.Column:
     """Order-independent row-content hash: sum of xxhash64 over all columns.
@@ -42,16 +44,17 @@ def content_hash_col(df: DataFrame) -> F.Column:
     partition an int64 sum would overflow and raise under Spark 4 ANSI
     mode).  DECIMAL(38,0) holds ~10^38 — safe past 10^19 rows, far above
     the 10^12-row target.  Sum is commutative → stable across shuffles.
+    One ``F.expr`` text.
     """
-    h = F.xxhash64(*[F.col(c) for c in df.columns])
-    return F.sum(h.cast("decimal(38,0)"))
+    cols = ", ".join(ident(c) for c in df.columns)
+    return F.expr(f"sum(CAST(xxhash64({cols}) AS DECIMAL(38,0)))")
 
 
 def partition_fingerprint(df: DataFrame, partition_col: str) -> dict[str, tuple[int, int]]:
     """{partition: (row_count, content_hash)} — one aggregation pass."""
     rows = (
         df.groupBy(partition_col)
-        .agg(F.count(F.lit(1)).alias("n"), content_hash_col(df).alias("h"))
+        .agg(F.expr("count(1) AS n"), content_hash_col(df).alias("h"))
         .collect()
     )
     return {str(r[0]): (r["n"], int(r["h"])) for r in rows}
@@ -125,10 +128,11 @@ def run_partitioned(
 
     def _process(part: str, n_in: int, h_in: int) -> str:
         t0 = time.time()
-        slice_df = source.filter(F.col(partition_col) == part)
+        # ``part`` is the str of the value: compare as a string literal
+        slice_df = source.filter(f"{ident(partition_col)} = {lit(part)}")
         out_df = transform(slice_df)
         obs = Observation(f"lineage-{part}")
-        out_df = out_df.observe(obs, F.count(F.lit(1)).alias("n_out"))
+        out_df = out_df.observe(obs, F.expr("count(1) AS n_out"))
         part_path = os.path.join(out_path, f"{partition_col}={part}")
         out_df.write.mode("overwrite").parquet(part_path)
         log.append(

@@ -175,7 +175,7 @@ def q_cell_hist(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = corpus(spark, sf_dir)
     pts = spatial.parse_geo_spans(docs, kinds=("geo", "raster_tile"))
     enc = (
-        pts.withColumn("cell_r9", cells.cell_expr(F.col("lat"), F.col("lon"), 9))
+        pts.withColumn("cell_r9", F.expr(cells.cell_sql("lat", "lon", 9)))
         .withColumn("cell_r7", cells.parent_expr(F.col("cell_r9"), 2))
         .withColumn("cell_r5", cells.parent_expr(F.col("cell_r9"), 4))
     )

@@ -17,6 +17,9 @@ the Spark-native equivalent of that persistence layer.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
+
+from geodata_spark.sqltext import ident, lit
 
 
 def iceberg_catalog(spark: SparkSession, catalog: str | None = None) -> str | None:
@@ -119,8 +122,6 @@ def write_table(
         target = f"{cat}.{table}"
         writer = df.writeTo(target).using("iceberg")
         if partition_by:
-            from pyspark.sql import functions as F
-
             writer = writer.partitionedBy(*[F.col(c) for c in partition_by])
         if mode == "append":
             # create on first write; append otherwise.  An existence
@@ -252,11 +253,10 @@ def merge_upsert(
     duplicate.  Cross-partition moves need a delete in the old
     partition first.
     """
-    from pyspark.sql import functions as F
+    from pyspark.errors import AnalysisException
 
     parts = [r[0] for r in updates.select(partition_col).distinct().collect()]
     data_cols = [c for c in updates.columns if c not in (partition_col, seq_col)]
-    from pyspark.errors import AnalysisException
 
     # Only the READ sits in the try: a select/union failure (schema
     # drift between target and updates) must propagate — treating it
@@ -269,18 +269,21 @@ def merge_upsert(
     if target is None:
         merged = updates
     else:
+        touched = f"{ident(partition_col)} IN ({', '.join(lit(p) for p in parts)})"
         merged = (
-            target.filter(F.col(partition_col).isin(parts))
+            target.filter(touched if parts else "false")
             .select(updates.columns)
             .unionByName(updates)
         )
     ordered = [seq_col] + [c for c in data_cols if c not in key_cols]
     surv = merged.groupBy(partition_col, *key_cols).agg(
-        F.max(F.struct(*ordered)).alias("_s")
+        F.expr(f"max(struct({', '.join(ident(c) for c in ordered)})) AS _s")
     )
-    out = surv.select(
-        partition_col, *key_cols, *[F.col(f"_s.{c}") for c in ordered]
-    ).select(updates.columns)
+    # one projection back to the update batch's column order
+    out = surv.selectExpr(*[
+        ident(c) if c == partition_col or c in key_cols else f"_s.{ident(c)} AS {ident(c)}"
+        for c in updates.columns
+    ])
     # per-write option, NOT the session conf: scoping dynamic mode to
     # this writer cannot leak into (or be clobbered by) concurrent
     # writes in the same session

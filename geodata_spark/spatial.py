@@ -33,7 +33,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from geodata_spark import cells, geometry
+from geodata_spark import cells, geometry, sqltext
 from geodata_spark.zones import ZONES
 
 GEO_REF_RE = r"^(?:geo|tile):([0-9.+-]+),([0-9.+-]+)@h([0-9]+)#[a-z0-9=&_]*val=([0-9.]+)$"
@@ -46,67 +46,62 @@ def explode_spans(docs: DataFrame) -> DataFrame:
     (the per-row invariant vs the reference) remains checkable after
     any shuffle.
     """
-    return docs.select(
-        "doc_id",
-        F.posexplode("spans").alias("span_idx", "span"),
-    ).select(
-        "doc_id",
-        "span_idx",
-        F.col("span.kind").alias("kind"),
-        F.col("span.text").alias("text"),
-        F.col("span.media_ref").alias("media_ref"),
-        F.col("span.offset").alias("offset"),
+    return docs.selectExpr("doc_id", "posexplode(spans) AS (span_idx, span)").selectExpr(
+        "doc_id", "span_idx", "span.kind AS kind", "span.text AS text",
+        "span.media_ref AS media_ref", "span.offset AS offset",
     )
+
+
+_HOUR_SQL = "CAST(substring_index(substring_index(span.media_ref, '#', 1), '@h', -1) AS BIGINT)"
+#: the typed fields of ``span.media_ref`` as ``expr AS name`` items
+#: (lat, lon, hour, val, ts); :mod:`sql_surface`'s ``geo_points`` view
+#: renders the same text
+GEO_FIELDS_SQL = [
+    "CAST(substring_index(substring_index(span.media_ref, ',', 1), ':', -1) AS DOUBLE) AS lat",
+    "CAST(substring_index(substring_index(span.media_ref, '@', 1), ',', -1) AS DOUBLE) AS lon",
+    f"{_HOUR_SQL} AS hour",
+    "CAST(substring_index(span.media_ref, '=', -1) AS DOUBLE) AS val",
+    f"timestamp'2011-01-01 00:00:00' + make_interval(0, 0, 0, 0, CAST({_HOUR_SQL} AS INT)) AS ts",
+]
 
 
 def parse_geo_spans(docs: DataFrame, kinds: tuple[str, ...] = ("geo",)) -> DataFrame:
     """Explode + parse geo-referenced media_refs into typed columns.
 
-    All parsing is JVM-side — no Python.  Fields are cut with
-    ``substring_index`` chains (plain byte scans) rather than a regex
-    ``split``: split pays a regex engine pass plus an 8-element array
-    allocation per evaluation, and the optimizer DUPLICATES parse
-    expressions (the pushed ``isnotnull(join-key)`` filter and the
-    projection each carry their own copy — plan-visible as split()
-    appearing in both Filter and Project), so the per-evaluation cost
-    is paid up to 6x per row.  Independent per-field byte scans make
-    every copy cheap; measured 1.36x on the scan+parse stage and 1.2x
-    on the whole flagship (r8).  Format (both `geo:` and `tile:`)::
+    Output: (doc_id, span_idx, kind, offset, lat, lon, hour, val, ts),
+    one row per span whose kind is in ``kinds``, in array order
+    (``span_idx`` is the span's position in ``spans``).  Format (both
+    ``geo:`` and ``tile:``)::
 
         geo:{lat},{lon}@h{hour}#var={name}&val={val}
         lat  = between first ':' and first ','
         lon  = between first ',' and first '@'
         hour = between '@h' and first '#'
         val  = after the last '='
+        ts   = 2011-01-01T00:00 + hour hours
 
-    Output: (doc_id, span_idx, kind, offset, lat, lon, hour, ts, val).
+    The plan is three steps of SQL text (``posexplode``, the kind
+    filter, one projection of :data:`GEO_FIELDS_SQL`), each parsed
+    once; Column algebra would pay a py4j round trip per operator.
+    Fields are cut with ``substring_index`` chains (plain byte scans),
+    not a regex ``split``: the optimizer copies a parse expression into
+    every filter and projection that uses it, and a split pays a regex
+    pass and an array allocation per copy (measured 1.36x on the
+    scan+parse stage, r8).  All parsing is JVM-side.
+
     Malformed refs are guarded by the ``kind`` filter (structurally
     valid by construction of the corpus); ``GEO_REF_RE`` remains the
-    validation pattern for audit paths.
+    validation pattern for audit paths.  Kinds are quoted as SQL
+    string literals (:func:`sqltext.lit`), whatever they hold.
     """
-    spans = explode_spans(docs).filter(F.col("kind").isin(*kinds))
-    m = F.col("media_ref")
-    # two select passes, not six withColumns: every withColumn copies +
-    # re-analyzes the whole plan on the driver, which dominated cold
-    # query latency
-    parsed = spans.select(
-        "doc_id",
-        "span_idx",
-        "kind",
-        "offset",
-        F.substring_index(F.substring_index(m, ",", 1), ":", -1)
-        .cast("double").alias("lat"),
-        F.substring_index(F.substring_index(m, "@", 1), ",", -1)
-        .cast("double").alias("lon"),
-        F.substring_index(F.substring_index(m, "#", 1), "@h", -1)
-        .cast("long").alias("hour"),
-        F.substring_index(m, "=", -1).cast("double").alias("val"),
-    )
-    return parsed.select(
-        "doc_id", "span_idx", "kind", "offset", "lat", "lon", "hour", "val",
-        F.expr(
-            "timestamp'2011-01-01 00:00:00' + make_interval(0,0,0,0, CAST(hour AS INT))"
-        ).alias("ts"),
+    kind_in = f"span.kind IN ({', '.join(sqltext.lit(k) for k in kinds)})" if kinds else "false"
+    return (
+        docs.selectExpr("doc_id", "posexplode(spans) AS (span_idx, span)")
+        .filter(kind_in)
+        .selectExpr(
+            "doc_id", "span_idx", "span.kind AS kind", "span.offset AS offset",
+            *GEO_FIELDS_SQL,
+        )
     )
 
 
@@ -337,10 +332,9 @@ def pip_zone_sql(
         for ring in rings:
             r = pip_ring_sql(lat, lon, ring)
             inside = r if inside is None else f"({inside} <> {r})"
-        # SQL-escape the zone id literal: a quote in a caller-supplied
-        # id must not break (or reshape) the generated expression
-        zid_sql = str(zid).replace("'", "''")
-        branches.append(f"WHEN {zone_col} = '{zid_sql}' THEN {inside}")
+        # a quote or backslash in a caller-supplied id must not break
+        # (or reshape) the generated expression
+        branches.append(f"WHEN {zone_col} = {sqltext.lit(str(zid))} THEN {inside}")
     assert branches
     return f"(CASE {' '.join(branches)} ELSE false END)"
 
@@ -390,16 +384,26 @@ def join_zones(
     (the cover's full/boundary contract is grain-independent — full
     cells prove membership, boundary cells fall through to the same
     exact PIP), different physical key.  The point-side encode is
-    :func:`hexgrid.with_hex7_id`, Catalyst projections in the scan
-    stage with no Python stage; the cover still broadcasts.  Its full
-    cells are compacted, so each point probes its ancestor at every
-    res the cover holds (bit truncation in the JVM, one row each) and
-    the output's ``cell_hex{res}`` is the point's own id.  The JVM's
-    trigonometry may differ from numpy's in the last ulp, so a point
-    within an ulp of a cell edge may get the neighbouring id; it still
-    lies in one of the zone's full or boundary cells (the cover's
-    margin is at least a circumradius), and boundary rows keep the
-    exact PIP test, so membership does not change.
+    :func:`hexgrid.with_hex7_probe`: the Catalyst encode of
+    :func:`hexgrid.with_hex7_id`, in the scan stage with no Python
+    stage, whose last projection also emits the probe keys.  The
+    cover's full cells are compacted, so each point probes its ancestor
+    at every res the cover holds (bit truncation in the JVM, one
+    generated row each) and the output's ``cell_hex{res}`` is the
+    point's own id, carried beside the probe.  The cover still
+    broadcasts.  The JVM's trigonometry may differ from numpy's in the
+    last ulp, so a point within an ulp of a cell edge may get the
+    neighbouring id; it still lies in one of the zone's full or
+    boundary cells (the cover's margin is at least a circumradius), and
+    boundary rows keep the exact PIP test, so membership does not
+    change.
+
+    Output columns: the key (``cell_r{res}`` or ``cell_hex{res}``,
+    the point's own cell id), then the point's columns in order
+    (a column of the key's name is replaced), then ``zone_id``.  Each
+    step is built from SQL text (the grid key is
+    :func:`cells.cell_sql`), with column names quoted by
+    :func:`sqltext.ident`.
 
     A point whose ``lat_col`` or ``lon_col`` is NULL, NaN or ±inf is
     in no zone, at both grains: it is dropped by the cover join.
@@ -411,63 +415,53 @@ def join_zones(
     if strategy == "auto":
         strategy = "expr" if _total_vertices(zones) <= 2048 else "udf"
     cover = zone_cover_df(spark, zones, res, grain=grain)
+    lat, lon = sqltext.ident(lat_col), sqltext.ident(lon_col)
+    cell_col = f"cell_hex{res}" if grain == "hex" else f"cell_r{res}"
+    pcols = [sqltext.ident(c) for c in points.columns if c != cell_col]
     if grain == "hex":
         from geodata_spark import hexgrid as HG
 
         # a point without a finite position has a NULL id: no match
-        cell_col = f"cell_hex{res}"
-        pts = HG.with_hex7_id(points, lat_col, lon_col, res, cell_col)
         with _COVER_LOCK:
             cover_ids = _cover_columns(zones, res, grain, cell_col)[cell_col]
+        # compacted full cells: the point probes its ancestor at every
+        # res the cover holds.  A point matches at most one compacted
+        # full row per zone and boundary rows are res-``res`` only, so
+        # the rows are those of the plain equi-join on the point's id,
+        # which the output's key column gets back from ``__h7_id``.
         levels = np.unique(HG.hex7_res_np(cover_ids.to_numpy())).tolist()
+        pts = HG.with_hex7_probe(points, lat_col, lon_col, res, levels, cell_col)
+        key = f"__h7_id AS {cell_col}"
     else:
         # A point without a finite position gets key -1, which no cover
         # row holds (cover ids are non-negative), so it matches no zone;
         # the encode would raise on NaN.  The key is then not nullable,
         # so the optimizer infers no isnotnull(key) filter to push below
         # the encode, which would evaluate it twice.
-        cell_col = f"cell_r{res}"
-        lat, lon = F.col(lat_col), F.col(lon_col)
-        finite = (F.abs(lat) < F.lit(float("inf"))) & (F.abs(lon) < F.lit(float("inf")))
-        cell = F.when(finite, cells.cell_expr(lat, lon, res))
-        pts = points.withColumn(cell_col, F.coalesce(cell, F.lit(-1).cast("long")))
-        levels = [res]
-    if levels == [res]:
-        joined = pts.join(F.broadcast(cover), cell_col)
-    else:
-        # compacted full cells: probe the point's ancestor at every res
-        # the cover holds.  A point matches at most one compacted full
-        # row per zone and boundary rows are res-``res`` only, so the
-        # rows are those of the plain equi-join; the key column then
-        # gets the point's own id back.
-        probe = ", ".join(HG.hex7_parent_sql("_hex_id", r) for r in levels)
-        pts = pts.withColumnRenamed(cell_col, "_hex_id").selectExpr(
-            "*", f"explode(array({probe})) AS {cell_col}"
-        )
-        joined = (
-            pts.join(F.broadcast(cover), cell_col)
-            .withColumn(cell_col, F.col("_hex_id"))
-            .drop("_hex_id")
-        )
-
+        key = cell_col
+        finite = f"abs({lat}) < CAST('Infinity' AS DOUBLE) AND abs({lon}) < CAST('Infinity' AS DOUBLE)"
+        cell = f"coalesce(CASE WHEN {finite} THEN {cells.cell_sql(lat, lon, res)} END, -1L)"
+        pts = points.selectExpr(*pcols, f"{cell} AS {cell_col}")
+    joined = pts.join(F.broadcast(cover), cell_col)
     if strategy == "expr":
-        keep = F.expr(
+        joined = joined.filter(
             f"CASE WHEN NOT boundary THEN true "
-            f"ELSE {pip_zone_sql(lat_col, lon_col, 'zone_id', zones)} END"
+            f"ELSE {pip_zone_sql(lat, lon, 'zone_id', zones)} END"
         )
-        return joined.filter(keep).drop("boundary")
-
-    pip = pip_udf(spark, zones)
-    # Split interior/boundary BEFORE the UDF: a disjunction like
-    # (~boundary) | pip(...) would evaluate the Python UDF for every
-    # row (ExtractPythonUDFs hoists the UDF above the whole filter);
-    # the union keeps the hot interior path 100% JVM-side and sends
-    # only the boundary sliver to Python.
-    interior = joined.filter(~F.col("boundary"))
-    boundary = joined.filter(F.col("boundary")).filter(
-        pip(F.col("zone_id"), F.col(lat_col), F.col(lon_col))
-    )
-    return interior.unionByName(boundary).drop("boundary")
+    else:
+        pip = pip_udf(spark, zones)
+        # Split interior/boundary BEFORE the UDF: a disjunction like
+        # (~boundary) | pip(...) would evaluate the Python UDF for every
+        # row (ExtractPythonUDFs hoists the UDF above the whole filter);
+        # the union keeps the hot interior path 100% JVM-side and sends
+        # only the boundary sliver to Python.
+        interior = joined.filter("NOT boundary")
+        boundary = joined.filter("boundary").filter(
+            pip(F.col("zone_id"), F.col(lat_col), F.col(lon_col))
+        )
+        joined = interior.unionByName(boundary)
+    # key first (the point's own id), the point's columns, zone_id
+    return joined.selectExpr(key, *pcols, "zone_id")
 
 
 def extract_zone_cells(

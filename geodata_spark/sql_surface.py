@@ -17,8 +17,9 @@ Views registered by :func:`register_views`:
 - ``corpus`` — the synthetic interleaved text+media document table
   (doc_id, spans:array<struct>);
 - ``geo_points`` — a PURE-SQL view over ``corpus`` (posexplode +
-  split + cell encode), proving the span-parse path is expressible in
-  the SQL dialect, not just Catalyst column objects;
+  ``substring_index`` field cuts + cell encode), proving the
+  span-parse path is expressible in the SQL dialect, not just Catalyst
+  column objects;
 - ``zone_cover`` — the broadcastable (zone_id, cell, boundary) cover
   table.
 
@@ -34,7 +35,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from geodata_spark import cells, zonal
 from geodata_spark.pipeline import text as TX
-from geodata_spark.spatial import pip_zone_sql, zone_cover_df
+from geodata_spark.spatial import GEO_FIELDS_SQL, pip_zone_sql, zone_cover_df
 from geodata_spark.zones import ZONES
 
 # register_views skip-cache, keyed per SparkSession (weakly: a closed
@@ -52,26 +53,18 @@ DRIVER_TABLES = (
 
 
 def geo_points_view_sql(res: int = 9, src: str = "corpus") -> str:
-    """Pure Spark-SQL text of the span-parse path (spatial.parse_geo_spans)
-    plus the cell encode — posexplode, one split, integer cell id."""
-    cell = cells.cell_sql("lat", "lon", res)
+    """Pure Spark-SQL text of the span-parse path plus the cell encode:
+    posexplode, the field cuts of :data:`spatial.GEO_FIELDS_SQL` (the
+    text ``spatial.parse_geo_spans`` parses) and :func:`cells.cell_sql`."""
+    fields = ",\n         ".join(GEO_FIELDS_SQL)
     return f"""
-SELECT doc_id, span_idx, kind, offset, lat, lon, hour, val,
-       timestamp'2011-01-01 00:00:00'
-         + make_interval(0, 0, 0, 0, CAST(hour AS INT)) AS ts,
-       {cell} AS cell_r{res}
+SELECT doc_id, span_idx, kind, offset, lat, lon, hour, val, ts,
+       {cells.cell_sql("lat", "lon", res)} AS cell_r{res}
 FROM (
   SELECT doc_id, span_idx, span.kind AS kind, span.offset AS offset,
-         CAST(p[1] AS DOUBLE) AS lat,
-         CAST(p[2] AS DOUBLE) AS lon,
-         CAST(substring(p[3], 2, 12) AS BIGINT) AS hour,
-         CAST(element_at(p, -1) AS DOUBLE) AS val
-  FROM (
-    SELECT doc_id, span_idx, span,
-           split(span.media_ref, '[:,@#&=]') AS p
-    FROM {src}
-    LATERAL VIEW posexplode(spans) s AS span_idx, span
-  )
+         {fields}
+  FROM {src}
+  LATERAL VIEW posexplode(spans) s AS span_idx, span
   WHERE span.kind = 'geo'
 )
 """

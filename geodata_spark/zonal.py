@@ -20,6 +20,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from geodata_spark.sqltext import ident
+
 EARTH_R_KM = 6371.0088
 
 
@@ -100,7 +102,6 @@ def zonal_weighted_mean(
     so the hazard is visible at call time, not in a skewed-stage
     post-mortem.
     """
-    v, w = F.col(value_col), F.col(weight_col)
     if salt_buckets is not None and salt_cols is None:
         import warnings
 
@@ -115,11 +116,13 @@ def zonal_weighted_mean(
             stacklevel=2,
         )
     if salt_buckets is None:
+        vq, wq = ident(value_col), ident(weight_col)
         return df.groupBy(*keys).agg(
-            (F.sum(v * w) / F.sum(w)).alias(out_col),
-            F.sum(w).alias("weight_sum"),
-            F.count(F.lit(1)).alias("n_points"),
+            F.expr(f"sum({vq} * {wq}) / sum({wq}) AS {ident(out_col)}"),
+            F.expr(f"sum({wq}) AS weight_sum"),
+            F.expr("count(1) AS n_points"),
         )
+    v, w = F.col(value_col), F.col(weight_col)
     scols = salt_cols if salt_cols is not None else [*keys, value_col, weight_col]
     salted = df.withColumn(
         "_salt", F.pmod(F.xxhash64(*[F.col(c) for c in scols]), F.lit(salt_buckets))

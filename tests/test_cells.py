@@ -22,9 +22,9 @@ def test_parent_hierarchy_np_vs_expr(spark):
         [(18.25, 73.3125), (53.75, 135.8125), (36.125, 105.125)], ["lat", "lon"]
     )
     out = (
-        df.withColumn("c9", cells.cell_expr(F.col("lat"), F.col("lon"), 9))
-        .withColumn("c7", cells.cell_expr(F.col("lat"), F.col("lon"), 7))
-        .withColumn("c5", cells.cell_expr(F.col("lat"), F.col("lon"), 5))
+        df.selectExpr(
+            "*", *[f"{cells.cell_sql('lat', 'lon', r)} AS c{r}" for r in (9, 7, 5)]
+        )
         .withColumn("p7", cells.parent_expr(F.col("c9"), 2))
         .withColumn("p5", cells.parent_expr(F.col("c9"), 4))
         .collect()
@@ -40,7 +40,7 @@ def test_parent_hierarchy_np_vs_expr(spark):
 
 def test_decode_expr_center(spark):
     df = spark.createDataFrame([(40.0, 100.0)], ["lat", "lon"])
-    c = cells.cell_expr(F.col("lat"), F.col("lon"), 9)
+    c = F.expr(cells.cell_sql("lat", "lon", 9))
     res, yi, xi, clat, clon = cells.decode_expr(c)
     row = df.select(
         res.alias("res"), clat.alias("clat"), clon.alias("clon")
@@ -52,20 +52,34 @@ def test_decode_expr_center(spark):
 
 
 def test_cell_sql_matches_expr(spark, duck):
-    pts = [(18.25, 73.3125), (53.75, 135.8125), (36.125, 105.125), (-12.3, 45.6)]
-    sdf = spark.createDataFrame(pts, ["lat", "lon"]).select(
-        cells.cell_expr(F.col("lat"), F.col("lon"), 6).alias("c6"),
-        cells.cell_expr(F.col("lat"), F.col("lon"), 9).alias("c9"),
+    """One formula text, three engines: Spark's parse of cell_sql, the
+    DuckDB oracles' and the numpy twin give the same key, including
+    points on cell edges and at the domain corners."""
+    import pytest
+
+    pts = [(18.25, 73.3125), (53.75, 135.8125), (36.125, 105.125), (-12.3, 45.6),
+           (-90.0, -180.0), (89.75, 179.75), (0.0, -0.0), (40.0, 100.0)]
+    sdf = spark.createDataFrame(pts, ["lat", "lon"]).selectExpr(
+        "lat", "lon",
+        f"{cells.cell_sql('lat', 'lon', 6)} AS c6",
+        f"{cells.cell_sql('lat', 'lon', 9)} AS c9",
     )
-    values = ", ".join(f"({la!r}, {lo!r})" for la, lo in pts)
+    assert [f.dataType.simpleString() for f in sdf.schema.fields[2:]] == ["bigint", "bigint"]
+    values = ", ".join(f"({la!r}::DOUBLE, {lo!r}::DOUBLE)" for la, lo in pts)
     sql = (
-        f"SELECT {cells.cell_sql('lat', 'lon', 6)} AS c6, "
+        f"SELECT lat, lon, {cells.cell_sql('lat', 'lon', 6)} AS c6, "
         f"{cells.cell_sql('lat', 'lon', 9)} AS c9 "
         f"FROM (VALUES {values}) t(lat, lon)"
     )
     got = sorted(tuple(r) for r in sdf.collect())
     want = sorted(tuple(r) for r in duck.execute(sql).fetchall())
     assert got == want
+    lat, lon = np.array(pts).T
+    np_rows = sorted(zip(lat.tolist(), lon.tolist(), cells.cell_id_np(lat, lon, 6).tolist(),
+                         cells.cell_id_np(lat, lon, 9).tolist()))
+    assert got == np_rows
+    with pytest.raises(ValueError):
+        cells.cell_sql("lat", "lon", 10)
 
 
 def test_s2_tokens_sane():

@@ -89,7 +89,7 @@ def test_geo_points_view_is_pure_sql_and_matches_parser(spark, views):
     docs = Q.corpus(spark, SF_ORACLE)
     want = (
         spatial.parse_geo_spans(docs)
-        .withColumn("cell_r9", cells.cell_expr(F.col("lat"), F.col("lon"), 9))
+        .withColumn("cell_r9", F.expr(cells.cell_sql("lat", "lon", 9)))
     )
     got = spark.table("geo_points").select(*want.columns)
     assert _rows(got) == _rows(want)

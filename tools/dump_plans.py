@@ -74,9 +74,10 @@ NOTES = {
     ),
     "zonal_wavg_hex": (
         "hex-grain flagship: no Python stage — the hex encode is "
-        "Catalyst projections in the scan stage; broadcast "
-        "hex-polyfill cover join, CASE-short-circuit PIP still in "
-        "codegen, two-phase hash agg"
+        "Catalyst projections in the scan stage, its id feeding ONE "
+        "Generate of the ancestor probe keys (one per res the "
+        "compacted cover holds); broadcast hex-polyfill cover join, "
+        "CASE-short-circuit PIP still in codegen, two-phase hash agg"
     ),
     "zorder_stats": (
         "Z-order key audit: the Morton key is ONE codegen expression "

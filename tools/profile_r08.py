@@ -95,7 +95,7 @@ def main() -> None:
         def rollup():
             pts = spatial.parse_geo_spans(spark.read.parquet(path),
                                           kinds=("geo", "raster_tile"))
-            enc = pts.withColumn("cell_r9", cells.cell_expr(F.col("lat"), F.col("lon"), 9))
+            enc = pts.withColumn("cell_r9", F.expr(cells.cell_sql("lat", "lon", 9)))
             return enc.groupBy(cells.parent_expr(F.col("cell_r9"), 4).alias("cell_r5")).agg(
                 F.count(F.lit(1)).alias("n"), F.sum("val").alias("v"))
 
