@@ -474,20 +474,6 @@ def hex7_neighbors_np(cell: np.ndarray) -> np.ndarray:
     return out
 
 
-def hex7_disk_np(cell: np.ndarray, k: int = 1) -> np.ndarray:
-    """(N,) ids → (N, M) ids of the k-disk (cell + rings 1..k), via
-    repeated :func:`hex7_neighbors_np`.  M = 7^k-ish with duplicates
-    (interior disks have 1+3k(k+1) distinct ids; callers dedup —
-    Spark-side via ``array_distinct``, numpy via ``np.unique``)."""
-    cur = np.asarray(cell, dtype=np.int64)[:, None]
-    out = [cur]
-    for _ in range(k):
-        nxt = hex7_neighbors_np(cur.ravel()).reshape(cur.shape[0], -1)
-        out.append(nxt)
-        cur = nxt
-    return np.concatenate(out, axis=1)
-
-
 # axial disk offsets: all (di, dj) with hex distance <= k, memoized
 _DISK_OFFSETS: dict[int, np.ndarray] = {}
 
@@ -512,7 +498,8 @@ def hex7_local_disk_np(cell: np.ndarray, k: int, res: int | None = None) -> np.n
     """(N,) ids → (N, 1+3k(k+1)) k-disk ids in each cell's OWN face
     lattice — pure integer algebra, no re-encode, no float.
 
-    Unlike :func:`hex7_disk_np` (canonical re-homing), this disk lives
+    Unlike a disk of repeated :func:`hex7_neighbors_np` steps (which
+    re-encodes each neighbour to its canonical face), this disk lives
     entirely in one face's unbroken gnomonic lattice, so the standard
     hexagonal covering bound holds with no face-edge caveat: the disk
     region contains every point within k·(√3/2) lattice units of the

@@ -64,7 +64,6 @@ def knn_join(
     s_lat: str = "lat",
     s_lon: str = "lon",
     target_key: list[str] | None = None,
-    metric: str = "sqeuclidean_deg",
     grain: str = "grid",
     hex_ring: int = 2,
     hex_margin_rad: float = 0.035,

@@ -12,18 +12,18 @@ Scale shapes:
 - **MinHash+LSH** — K hash-min signature per doc (all Catalyst
   expressions: per-seed hash + ``min`` aggregations), banded into
   b buckets of r rows; candidate pairs only within a bucket.
-- **SimHash** — 64-bit sign-aggregate of token hashes, computed as
+- **SimHash** — 60-bit sign-aggregate of token hashes, computed as
   pure Catalyst sign-sum aggregations (one hash agg, no collect_list,
   no Python) and bit-packed with literal powers of two.
 - **embedding near-dup** — cosine over candidate pairs from
   random-hyperplane buckets (similarity.py).
 
-Hash modes: ``xxhash64`` (default — cheapest, JVM-native) and
-``md5_60`` — a 60-bit engine-portable hash
-(``hex(md5(x || ':' || seed))[:15]`` → integer) that DuckDB reproduces
-bit-for-bit, making the *entire* LSH pipeline (signatures → bands →
-candidates → verified pairs) SQL-oracle-checkable.  The pipeline shape
-is identical in both modes; only the hash primitive differs.
+One hash, ``md5_60``: the top 60 bits of
+``md5(x || ':' || seed)`` as a non-negative integer.  DuckDB reproduces
+it bit for bit (:func:`hash60_sql`, :func:`mh_base32_sql`), so the
+*entire* LSH pipeline (signatures → bands → candidates → verified
+pairs), SimHash and the packing/sampling operators of
+``pipeline.packing`` are SQL-oracle-checkable.
 """
 
 from __future__ import annotations
@@ -43,30 +43,24 @@ from geodata_spark.pipeline.text import normalize_sql
 # hash primitives
 # ---------------------------------------------------------------------------
 
-def hash60(col: Column, seed: int, mode: str = "xxhash64") -> Column:
-    """Seeded integer hash of a string column.
-
-    ``xxhash64``: full 64-bit, JVM-native (production default).
-    ``md5_60``: top 60 bits of md5(col || ':' || seed) — identical
-    arithmetic exists in DuckDB (``('0x' || substr(md5(..),1,15))::BIGINT``),
-    so oracle queries are bit-reproducible. Non-negative by construction.
+def hash60(col: Column, seed: int) -> Column:
+    """Seeded integer hash of a string column: the top 60 bits of
+    md5(col || ':' || seed) — identical arithmetic exists in DuckDB
+    (``('0x' || substr(md5(..),1,15))::BIGINT``), so oracle queries are
+    bit-reproducible. Non-negative by construction.
     """
-    if mode == "xxhash64":
-        return F.xxhash64(col, F.lit(seed))
-    if mode == "md5_60":
-        return F.conv(
-            F.substring(F.md5(F.concat_ws(":", col, F.lit(str(seed)))), 1, 15), 16, 10
-        ).cast("long")
-    raise ValueError(f"unknown hash mode {mode!r}")
+    return F.conv(
+        F.substring(F.md5(F.concat_ws(":", col, F.lit(str(seed)))), 1, 15), 16, 10
+    ).cast("long")
 
 
 def hash60_sql(expr: str, seed: int) -> str:
-    """DuckDB twin of :func:`hash60` in ``md5_60`` mode."""
+    """DuckDB twin of :func:`hash60`."""
     return f"CAST(('0x' || substr(md5({expr} || ':{seed}'), 1, 15)) AS BIGINT)"
 
 
-def _hash_bits(mode: str) -> int:
-    return 64 if mode == "xxhash64" else 60
+# bit width of every :func:`hash60` value
+HASH_BITS = 60
 
 
 # ---------------------------------------------------------------------------
@@ -431,23 +425,18 @@ def mh_perm_consts(j: int) -> tuple[int, int]:
     return a, b
 
 
-def _mh_base32(col: Column, mode: str) -> Column:
+def _mh_base32(col: Column) -> Column:
     """32-bit non-negative base hash of a shingle (one call per row)."""
-    if mode == "xxhash64":
-        return F.xxhash64(col).bitwiseAND(F.lit(0xFFFFFFFF))
-    if mode == "md5_60":
-        return F.conv(F.substring(F.md5(col), 1, 8), 16, 10).cast("long")
-    raise ValueError(f"unknown hash mode {mode!r}")
+    return F.conv(F.substring(F.md5(col), 1, 8), 16, 10).cast("long")
 
 
 def mh_base32_sql(expr: str) -> str:
-    """DuckDB twin of :func:`_mh_base32` in ``md5_60`` mode."""
+    """DuckDB twin of :func:`_mh_base32`."""
     return f"CAST(('0x' || substr(md5({expr}), 1, 8)) AS BIGINT)"
 
 
 def minhash_signatures(docs: DataFrame, k: int = 64, n: int = 3,
                        id_col: str = "doc_id", text_col: str = "text",
-                       hash_mode: str = "xxhash64",
                        max_shingle_freq: int | None = None) -> DataFrame:
     """K-permutation MinHash signature per doc — pure Catalyst.
 
@@ -456,7 +445,7 @@ def minhash_signatures(docs: DataFrame, k: int = 64, n: int = 3,
     aggregation with K min() columns.
     """
     sh = with_shingles(docs, n, id_col, text_col, max_shingle_freq)
-    h = _mh_base32(F.col("shingle"), hash_mode)
+    h = _mh_base32(F.col("shingle"))
     based = sh.select("id", h.alias("_h32"))
     mins = []
     for j in range(k):
@@ -468,19 +457,15 @@ def minhash_signatures(docs: DataFrame, k: int = 64, n: int = 3,
     return agg.select("id", F.array(*[f"h{j}" for j in range(k)]).alias("signature"))
 
 
-def _band_bucket(slots: list[Column], hash_mode: str) -> Column:
-    """Bucket id for one band: hash of the band's signature slots.
-
-    md5 of the comma-joined decimal strings in ``md5_60`` mode (string
-    form is engine-portable); xxhash64 of the raw longs otherwise.
+def _band_bucket(slots: list[Column]) -> Column:
+    """Bucket id for one band: md5 of the band's signature slots as
+    comma-joined decimal strings (the string form is engine-portable).
     """
-    if hash_mode == "md5_60":
-        return F.md5(F.concat_ws(",", *[s.cast("string") for s in slots]))
-    return F.xxhash64(*slots).cast("string")
+    return F.md5(F.concat_ws(",", *[s.cast("string") for s in slots]))
 
 
-def lsh_candidate_pairs(signatures: DataFrame, bands: int = 16, rows: int = 4,
-                        hash_mode: str = "xxhash64") -> DataFrame:
+def lsh_candidate_pairs(signatures: DataFrame, bands: int = 16,
+                        rows: int = 4) -> DataFrame:
     """Band the signature; docs sharing any band bucket are candidates."""
     assert bands * rows <= 1024
     banded = signatures.select(
@@ -491,8 +476,7 @@ def lsh_candidate_pairs(signatures: DataFrame, bands: int = 16, rows: int = 4,
                     F.struct(
                         F.lit(b).alias("band"),
                         _band_bucket(
-                            [F.col("signature").getItem(b * rows + r) for r in range(rows)],
-                            hash_mode,
+                            [F.col("signature").getItem(b * rows + r) for r in range(rows)]
                         ).alias("bucket"),
                     )
                     for b in range(bands)
@@ -513,7 +497,6 @@ def lsh_candidate_pairs(signatures: DataFrame, bands: int = 16, rows: int = 4,
 def minhash_dedup(docs: DataFrame, threshold: float = 0.5, k: int = 64,
                   bands: int = 16, rows: int = 4, n: int = 3,
                   id_col: str = "doc_id", text_col: str = "text",
-                  hash_mode: str = "xxhash64",
                   max_shingle_freq: int | None = None) -> DataFrame:
     """LSH candidates verified by exact shingle Jaccard ≥ threshold.
 
@@ -528,8 +511,8 @@ def minhash_dedup(docs: DataFrame, threshold: float = 0.5, k: int = 64,
     cap the corpus-wide shingle frequencies are part of the semantics,
     so that path keeps the full-corpus shingle table.
     """
-    sigs = minhash_signatures(docs, k, n, id_col, text_col, hash_mode, max_shingle_freq)
-    cands = lsh_candidate_pairs(sigs, bands, rows, hash_mode).localCheckpoint()
+    sigs = minhash_signatures(docs, k, n, id_col, text_col, max_shingle_freq)
+    cands = lsh_candidate_pairs(sigs, bands, rows).localCheckpoint()
     if max_shingle_freq is None:
         ids = (
             cands.select(F.col("id_a").alias(id_col))
@@ -572,35 +555,34 @@ def minhash_jaccard_estimate(signatures: DataFrame, k: int = 64) -> DataFrame:
 # SimHash — pure Catalyst sign-sum aggregation (no collect_list, no UDF)
 # ---------------------------------------------------------------------------
 
-def simhash(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text",
-            hash_mode: str = "xxhash64") -> DataFrame:
-    """64-bit SimHash per document (token grain, multiplicities count).
+def simhash(docs: DataFrame, id_col: str = "doc_id",
+            text_col: str = "text") -> DataFrame:
+    """60-bit SimHash per document (token grain, multiplicities count).
 
     Per-bit votes are plain ``sum(CASE WHEN bit THEN 1 ELSE -1)`` hash
     aggregations (map-side partials apply — no per-doc token list is
     ever materialized), then bit-packed by summing distinct powers of
-    two.  Bit 63 in 64-bit mode packs as the int64 sign-bit literal.
+    two; the result is non-negative.
     """
-    nbits = _hash_bits(hash_mode)
     norm = F.expr(normalize_sql(text_col, "spark"))
     toks = F.explode(F.split(norm, " ")).alias("tok")
     th = (
         docs.select(F.col(id_col).alias("id"), toks)
         .filter(F.length("tok") > 0)
-        .select("id", hash60(F.col("tok"), 0, hash_mode).alias("h"))
+        .select("id", hash60(F.col("tok"), 0).alias("h"))
     )
     votes = th.groupBy("id").agg(
         *[
             F.sum(
                 F.when(F.shiftrightunsigned(F.col("h"), b).bitwiseAND(F.lit(1)) == 1, 1).otherwise(-1)
             ).alias(f"v{b}")
-            for b in range(nbits)
+            for b in range(HASH_BITS)
         ]
     )
-    terms = []
-    for b in range(nbits):
-        weight = F.lit(-(1 << 63)) if b == 63 else F.lit(1 << b)
-        terms.append(F.when(F.col(f"v{b}") > 0, weight).otherwise(F.lit(0)))
+    terms = [
+        F.when(F.col(f"v{b}") > 0, F.lit(1 << b)).otherwise(F.lit(0))
+        for b in range(HASH_BITS)
+    ]
     packed = terms[0]
     for t in terms[1:]:
         packed = packed + t
@@ -612,15 +594,14 @@ def hamming64(a: Column, b: Column) -> Column:
 
 
 def simhash_neardup_pairs(docs: DataFrame, max_hamming: int = 8,
-                          prefix_bits: int = 12, hash_mode: str = "xxhash64",
-                          **kw) -> DataFrame:
+                          prefix_bits: int = 12, **kw) -> DataFrame:
     """Near-dup pairs by SimHash with prefix-bucket candidate pruning.
 
     Multi-probe on 4 rotated prefixes so a ≤max_hamming pair is caught
     unless all its differing bits fall in every probed prefix
     (recall knob; exact variant would use all C(64/k) blocks).
     """
-    sh = simhash(docs, hash_mode=hash_mode, **kw)
+    sh = simhash(docs, **kw)
     probes = []
     for p in range(4):
         rot = F.shiftrightunsigned(F.col("simhash"), p * 16)
@@ -646,7 +627,7 @@ def simhash_neardup_pairs(docs: DataFrame, max_hamming: int = 8,
 
 
 # ---------------------------------------------------------------------------
-# DuckDB oracle twins (md5_60 mode) — generated to mirror the pipelines
+# DuckDB oracle twins — generated to mirror the pipelines
 # ---------------------------------------------------------------------------
 
 def shingles_cte(doc_filter: str = "TRUE", n: int = 3) -> str:

@@ -21,8 +21,11 @@ Two operators a training-data pipeline needs downstream of dedup:
 
 - :func:`dataset_split` — deterministic train/val/test assignment by
   integer hash bucket of the document id: stable across runs, engines
-  and retries, no RNG state.  ``md5_60`` hash mode makes both
-  operators bit-reproducible in DuckDB (same design as pipeline.dedup).
+  and retries, no RNG state.
+
+The hash-keyed operators (packing order, splits, sampling gates) use
+:func:`pipeline.dedup.hash60` (60-bit md5), so each is bit-reproducible
+in DuckDB through ``hash60_sql``.
 """
 
 from __future__ import annotations
@@ -31,7 +34,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from geodata_spark.pipeline.dedup import _hash_bits, hash60, hash60_sql
+from geodata_spark.pipeline.dedup import HASH_BITS, hash60, hash60_sql
 from geodata_spark.pipeline.text import token_count_sql
 
 _SEED = 7
@@ -41,7 +44,6 @@ def pack_chunks(
     docs: DataFrame,
     context_len: int = 2048,
     n_shards: int = 16,
-    hash_mode: str = "xxhash64",
     id_col: str = "doc_id",
     text_col: str = "text",
 ) -> DataFrame:
@@ -61,11 +63,11 @@ def pack_chunks(
     advice).  The bin count rounds up to the next power of two.
     """
     tok = F.expr(token_count_sql(text_col, "spark")).cast("long")
-    h = hash60(F.col(id_col).cast("string"), _SEED, hash_mode)
-    # smallest s with 2^(bits - s) >= n_shards; shiftright is an
-    # arithmetic shift, monotone over the full signed range xxhash64
-    # emits, so shard order == hash order by construction
-    shift = max(0, _hash_bits(hash_mode) - max(1, (int(n_shards) - 1).bit_length()))
+    h = hash60(F.col(id_col).cast("string"), _SEED)
+    # smallest s with 2^(bits - s) >= n_shards; the hash is
+    # non-negative, so the shift is monotone and shard order == hash
+    # order by construction
+    shift = max(0, HASH_BITS - max(1, (int(n_shards) - 1).bit_length()))
     d = docs.select(
         F.col(id_col).alias("_id"), tok.alias("_tok"), h.alias("_h")
     ).withColumn("_shard", F.shiftright(F.col("_h"), shift))
@@ -97,7 +99,6 @@ def pack_chunks(
 
 def pack_chunks_sql(
     context_len: int = 2048,
-    n_shards: int = 16,
     id_col: str = "doc_id",
     text_col: str = "text",
     table: str = "documents",
@@ -132,11 +133,10 @@ def dataset_split(
     docs: DataFrame,
     train_pct: int = 80,
     val_pct: int = 10,
-    hash_mode: str = "xxhash64",
     id_col: str = "doc_id",
 ) -> DataFrame:
     """Attach a deterministic ``split`` column (train/val/test)."""
-    bucket = F.pmod(hash60(F.col(id_col).cast("string"), _SEED, hash_mode), F.lit(100))
+    bucket = F.pmod(hash60(F.col(id_col).cast("string"), _SEED), F.lit(100))
     split = (
         F.when(bucket < train_pct, F.lit("train"))
         .when(bucket < train_pct + val_pct, F.lit("val"))
@@ -159,7 +159,6 @@ def stratified_sample(
     stratum_col: str,
     rates_pct: dict[str, int],
     default_pct: int = 100,
-    hash_mode: str = "xxhash64",
     id_col: str = "doc_id",
 ) -> DataFrame:
     """Deterministic per-stratum subsampling (training-data mixing).
@@ -177,8 +176,7 @@ def stratified_sample(
     evaluates inside the scan stage.
     """
     bucket = F.pmod(
-        hash60(F.concat(F.lit("sample|"), F.col(id_col).cast("string")),
-               _SEED, hash_mode),
+        hash60(F.concat(F.lit("sample|"), F.col(id_col).cast("string")), _SEED),
         F.lit(100),
     )
     thr = F.lit(int(default_pct))
@@ -193,7 +191,7 @@ def stratified_sample_sql(
     default_pct: int = 100,
     id_col: str = "doc_id",
 ) -> str:
-    """DuckDB predicate twin of :func:`stratified_sample` (md5_60)."""
+    """DuckDB predicate twin of :func:`stratified_sample`."""
     salted = f"'sample|' || CAST({id_col} AS VARCHAR)"
     b = f"({hash60_sql(salted, _SEED)} % 100)"
     cases = " ".join(
@@ -278,7 +276,6 @@ def mixture_sample(
     domain_col: str = "lang",
     size_col: str = "n_chars",
     id_col: str = "doc_id",
-    hash_mode: str = "xxhash64",
 ) -> DataFrame:
     """Token-budget mixture sampling: derive per-domain keep rates so
     the kept corpus approaches ``budget_chars`` split across domains
@@ -313,8 +310,7 @@ def mixture_sample(
         ).cast("long").alias("rate_pct"),
     )
     bucket = F.pmod(
-        hash60(F.concat(F.lit("sample|"), F.col(id_col).cast("string")),
-               _SEED, hash_mode),
+        hash60(F.concat(F.lit("sample|"), F.col(id_col).cast("string")), _SEED),
         F.lit(100),
     )
     return (
@@ -339,8 +335,8 @@ def mixture_sample_sql(
     id_col: str = "doc_id",
     table: str = "documents",
 ) -> str:
-    """DuckDB twin of :func:`mixture_sample` (md5_60 gate), returning
-    kept rows + rate_pct."""
+    """DuckDB twin of :func:`mixture_sample`, returning kept rows +
+    rate_pct."""
     w = _mix_w_sql(weights_pct, domain_col)
     salted = f"'sample|' || CAST({id_col} AS VARCHAR)"
     gate = f"({hash60_sql(salted, _SEED)} % 100)"

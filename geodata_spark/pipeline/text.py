@@ -10,7 +10,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-PUNCT_CLASS = r"[.,;:!?()\x27\x22-]"
 STOPWORDS = {
     "en": ["the", "a", "and", "of", "to"],
     "de": ["der", "die", "das", "und", "ist"],

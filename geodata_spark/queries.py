@@ -1015,18 +1015,18 @@ SELECT query_id, rank, vec_id, cosine_r6 FROM ranked WHERE rank <= 5
 def q_minhash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash(64)+LSH(16x4) near-dup pairs verified at Jaccard ≥ 0.3.
 
-    md5_60 hash mode makes the whole pipeline — signatures, banding,
+    The md5_60 hash makes the whole pipeline — signatures, banding,
     bucket candidates, exact-Jaccard verification — bit-reproducible in
     DuckDB, so the driver hash-checks the full pair list (not a count).
     """
     docs = _docs(spark, sf_dir).withColumn("doc_id", F.col("doc_id").cast("long"))
-    return DD.minhash_dedup(docs, threshold=0.3, hash_mode="md5_60")
+    return DD.minhash_dedup(docs, threshold=0.3)
 
 
 def q_simhash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SimHash near-dup pairs (full list, md5_60 → exact DuckDB twin)."""
     docs = _docs(spark, sf_dir).withColumn("doc_id", F.col("doc_id").cast("long"))
-    return DD.simhash_neardup_pairs(docs, max_hamming=16, hash_mode="md5_60")
+    return DD.simhash_neardup_pairs(docs, max_hamming=16)
 
 
 # ---------------------------------------------------------------------------
@@ -2523,10 +2523,10 @@ def q_pack_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
     """LLM-pretraining sequence packing (concat-and-chunk, 2048-token
     context) — distributed two-phase prefix sum (shard-local running
     offsets + broadcast shard bases) vs the oracle's single global
-    running sum over the identical total order; md5_60 hash mode makes
+    running sum over the identical total order; the md5_60 hash makes
     layout order and chunk cuts bit-identical across engines."""
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    return PK.pack_chunks(docs, context_len=2048, n_shards=16, hash_mode="md5_60")
+    return PK.pack_chunks(docs, context_len=2048, n_shards=16)
 
 
 def q_dataset_split(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2534,7 +2534,7 @@ def q_dataset_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-(split, lang) doc and token counts — stable across runs,
     engines and retries (no RNG state)."""
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    out = PK.dataset_split(docs, hash_mode="md5_60")
+    out = PK.dataset_split(docs)
     return out.groupBy("split", "lang").agg(
         F.count(F.lit(1)).alias("n_docs"),
         F.sum(F.expr(TX.token_count_sql("text", "spark")).cast("long")).alias("n_tokens"),
@@ -3171,9 +3171,7 @@ def q_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
         .otherwise(F.lit("long"))
     )
     d = docs.withColumn("stratum", stratum)
-    kept = PK.stratified_sample(
-        d, "stratum", _STRATA_RATES, hash_mode="md5_60"
-    )
+    kept = PK.stratified_sample(d, "stratum", _STRATA_RATES)
     return kept.select("doc_id", "stratum")
 
 
@@ -3253,7 +3251,7 @@ def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     utterly different algorithms (iterative join fixpoint vs recursive
     set expansion), same labelling."""
     docs = _docs(spark, sf_dir).withColumn("doc_id", F.col("doc_id").cast("long"))
-    pairs = DD.minhash_dedup(docs, threshold=0.3, hash_mode="md5_60")
+    pairs = DD.minhash_dedup(docs, threshold=0.3)
     out = DD.connected_components(pairs)
     return out.select(
         F.col("node").cast("long").alias("doc_id"),
@@ -4149,10 +4147,7 @@ def q_mixture_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     report the per-domain audit (rate, kept docs, kept chars).  Rate
     arithmetic is pure integer ⇒ exact; the corpus never shuffles —
     one domain-sized agg, broadcast rates, scan-stage gate."""
-    kept = PK.mixture_sample(
-        _docs(spark, sf_dir), _MIX_WEIGHTS, budget_chars=60000,
-        hash_mode="md5_60",
-    )
+    kept = PK.mixture_sample(_docs(spark, sf_dir), _MIX_WEIGHTS, budget_chars=60000)
     return kept.groupBy("lang").agg(
         F.min("rate_pct").alias("rate_pct"),
         F.count(F.lit(1)).cast("long").alias("kept_docs"),
@@ -5635,7 +5630,7 @@ def q_dedup_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     once and never shuffled."""
     docs = _docs(spark, sf_dir).withColumn("doc_id",
                                            F.col("doc_id").cast("long"))
-    pairs = DD.minhash_dedup(docs, threshold=0.3, hash_mode="md5_60")
+    pairs = DD.minhash_dedup(docs, threshold=0.3)
     comp = DD.connected_components(pairs)
     sizes = comp.groupBy("component").agg(
         F.count(F.lit(1)).cast("long").alias("cluster_size")

@@ -66,9 +66,6 @@ def lon_wraparound(df: DataFrame, lon_col: str = "lon") -> DataFrame:
     )
 
 
-LON_WRAPAROUND_SQL = "(CASE WHEN lon > 180.0 THEN lon - 360.0 ELSE lon END)"
-
-
 def trim_variables(df: DataFrame, variables: list[str],
                    keys: tuple[str, ...] = ("ts", "hour", "lat", "lon")) -> DataFrame:
     """S13 — keep only configured variables (dataset.py:377-393).

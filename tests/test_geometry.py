@@ -88,6 +88,30 @@ def test_cover_vs_pip_consistency():
             assert got.all(), f"full cell center outside zone {zid}"
 
 
+def test_inside_point_cell_in_cover_both_grains():
+    """Every point inside a zone has its res-9 grid cell in
+    ``polygon_cover``'s full ∪ boundary and its res-5 hex id in
+    ``hex7_polyfill``'s full ∪ boundary: the cover never drops a point
+    the exact PIP would keep.  Seeded random points around each zone
+    plus every zone vertex."""
+    from geodata_spark import cells, hexgrid
+
+    rng = np.random.default_rng(20261019)
+    for zid, rings in ZONES.items():
+        allv = np.concatenate(rings)
+        lo, hi = allv.min(axis=0) - 1.0, allv.max(axis=0) + 1.0
+        pts = np.concatenate([rng.uniform(lo, hi, size=(2000, 2)), allv])
+        inside = geometry.points_in_rings(pts[:, 0], pts[:, 1], rings)
+        lon, lat = pts[inside, 0], pts[inside, 1]
+        assert inside.sum() > 100, zid
+        full, boundary = geometry.polygon_cover(rings, 9)
+        grid = np.isin(cells.cell_id_np(lat, lon, 9), np.concatenate([full, boundary]))
+        assert grid.all(), (zid, "grid", pts[inside][~grid][:5])
+        full, boundary = hexgrid.hex7_polyfill(rings, 5)
+        hexes = np.isin(hexgrid.hex7_id_np(lat, lon, 5), np.concatenate([full, boundary]))
+        assert hexes.all(), (zid, "hex", pts[inside][~hexes][:5])
+
+
 def test_wkb_roundtrip():
     for zid, wkb, crs in zones_wkb_rows():
         rings = parse_wkb(wkb)

@@ -284,12 +284,12 @@ def test_simhash_is_pure_catalyst(spark):
 
 
 def test_simhash_md5_mode_matches_python(spark):
-    """md5_60 simhash equals an independent Python recomputation."""
+    """The 60-bit md5 simhash equals an independent Python recomputation."""
     import hashlib
 
     rows = [(1, "the quick brown fox"), (2, "lorem ipsum dolor sit amet")]
     df = spark.createDataFrame(rows, "doc_id long, text string")
-    got = {r.id: r.simhash for r in DD.simhash(df, hash_mode="md5_60").collect()}
+    got = {r.id: r.simhash for r in DD.simhash(df).collect()}
 
     def h60(s):
         return int(hashlib.md5(f"{s}:0".encode()).hexdigest()[:15], 16)
@@ -316,7 +316,7 @@ def test_pack_chunks_invariants_and_parallel_window(spark):
 
     docs = spark.read.parquet(f"{SF_ORACLE}/documents.parquet")
     L = 2048
-    out = PK.pack_chunks(docs, context_len=L, n_shards=16, hash_mode="md5_60")
+    out = PK.pack_chunks(docs, context_len=L, n_shards=16)
     pdf = out.toPandas().sort_values("chunk_id").reset_index(drop=True)
     total_tok = docs.selectExpr(
         f"sum(CAST({token_count_sql('text', 'spark')} AS BIGINT)) AS s"
@@ -332,23 +332,20 @@ def test_pack_chunks_invariants_and_parallel_window(spark):
     # shards are monotone hash-range bins, so the packed layout is
     # INDEPENDENT of n_shards: resizing the cluster's parallelism knob
     # must never re-cut a single chunk (round-3 advice)
-    for n_shards, mode in [(4, "md5_60"), (64, "md5_60"), (16, "xxhash64")]:
+    for n_shards in (4, 64):
         alt = (
-            PK.pack_chunks(docs, context_len=L, n_shards=n_shards, hash_mode=mode)
+            PK.pack_chunks(docs, context_len=L, n_shards=n_shards)
             .toPandas().sort_values("chunk_id").reset_index(drop=True)
         )
-        if mode == "md5_60":
-            assert alt.equals(pdf), f"layout changed at n_shards={n_shards}"
-        else:  # different hash → different layout, but same invariants
-            assert alt.n_tokens.sum() == total_tok
+        assert alt.equals(pdf), f"layout changed at n_shards={n_shards}"
 
 
 def test_dataset_split_deterministic_and_partitions(spark):
     from geodata_spark.pipeline import packing as PK
 
     docs = spark.read.parquet(f"{SF_ORACLE}/documents.parquet")
-    a = PK.dataset_split(docs, hash_mode="md5_60").groupBy("split").count().collect()
-    b = PK.dataset_split(docs, hash_mode="md5_60").groupBy("split").count().collect()
+    a = PK.dataset_split(docs).groupBy("split").count().collect()
+    b = PK.dataset_split(docs).groupBy("split").count().collect()
     da, db = ({r["split"]: r["count"] for r in x} for x in (a, b))
     assert da == db and set(da) == {"train", "val", "test"}
     n = sum(da.values())
@@ -700,9 +697,7 @@ def test_mixture_sample_rates_and_determinism(spark):
     df = spark.createDataFrame(rows, "doc_id long, lang string, n_chars long")
     # budget 6000, weights en 50 / de 50 -> target 3000 chars each:
     # rate_en = 6000*50 // 10000 = 30, rate_de = 6000*50 // 5000 = 60
-    kept = PK.mixture_sample(
-        df, {"en": 50, "de": 50}, budget_chars=6000, hash_mode="md5_60"
-    )
+    kept = PK.mixture_sample(df, {"en": 50, "de": 50}, budget_chars=6000)
     out = kept.groupBy("lang").count().collect()
     rates = {r.lang: r for r in kept.select("lang", "rate_pct").distinct().collect()}
     assert rates["en"].rate_pct == 30 and rates["de"].rate_pct == 60
@@ -713,13 +708,12 @@ def test_mixture_sample_rates_and_determinism(spark):
     df2 = spark.createDataFrame(
         [(1, "rare", 10), (2, "rare", 10)], "doc_id long, lang string, n_chars long"
     )
-    kept2 = PK.mixture_sample(df2, {"rare": 100}, budget_chars=10**6,
-                              hash_mode="md5_60")
+    kept2 = PK.mixture_sample(df2, {"rare": 100}, budget_chars=10**6)
     assert kept2.count() == 2 and kept2.select("rate_pct").first().rate_pct == 100
     # determinism: same call keeps the identical doc set
     ids1 = sorted(r.doc_id for r in kept.select("doc_id").collect())
     ids2 = sorted(r.doc_id for r in PK.mixture_sample(
-        df, {"en": 50, "de": 50}, budget_chars=6000, hash_mode="md5_60"
+        df, {"en": 50, "de": 50}, budget_chars=6000
     ).select("doc_id").collect())
     assert ids1 == ids2
 
@@ -1033,7 +1027,7 @@ def test_dedup_apply_invariants(spark, docs):
     corpus.write.mode("overwrite").parquet(os.path.join(d, "documents.parquet"))
     kept = {r.doc_id: r.cluster_size for r in q_dedup_apply(spark, d).collect()}
     pairs = DD.minhash_dedup(corpus.withColumn("doc_id", F.col("doc_id").cast("long")),
-                             threshold=0.3, hash_mode="md5_60")
+                             threshold=0.3)
     comp = {r.node: r.component for r in DD.connected_components(pairs).collect()}
     n_corpus = corpus.count()
     clustered = set(comp)

@@ -116,18 +116,17 @@ def main() -> None:
             "doc_id", F.col("doc_id").cast("long"))
         print("docs:", docs.count())
         timed("shingles", lambda: DD.with_shingles(docs))
-        timed("minhash signatures", lambda: DD.minhash_signatures(
-            docs, hash_mode="md5_60"))
+        timed("minhash signatures", lambda: DD.minhash_signatures(docs))
         timed("lsh cands (no ckpt)", lambda: DD.lsh_candidate_pairs(
-            DD.minhash_signatures(docs, hash_mode="md5_60"), hash_mode="md5_60"))
+            DD.minhash_signatures(docs)))
 
         def full_pairs():
-            return DD.minhash_dedup(docs, threshold=0.3, hash_mode="md5_60")
+            return DD.minhash_dedup(docs, threshold=0.3)
 
         timed("minhash_dedup pairs", full_pairs, reps=2)
 
         def cc():
-            pairs = DD.minhash_dedup(docs, threshold=0.3, hash_mode="md5_60")
+            pairs = DD.minhash_dedup(docs, threshold=0.3)
             return DD.connected_components(pairs)
 
         timed("pairs + connected_components", cc, reps=2)
