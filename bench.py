@@ -201,10 +201,7 @@ def flagship_prepared(spark, n_docs: int):
     pts = spark.read.parquet(ensure_prepared(spark, n_docs))
     cover = spatial.zone_cover_df(spark, ZONES, 9)
     joined = pts.join(F.broadcast(cover), "cell_r9")
-    keep = F.when(~F.col("boundary"), F.lit(True)).otherwise(
-        spatial.pip_zone_expr("lat", "lon", "zone_id", ZONES)
-    )
-    zoned = joined.filter(keep).drop("boundary")
+    zoned = joined.filter(spatial.pip_sql("lat", "lon")).drop("boundary", "edges")
     weighted = zoned.withColumn(
         "w", zonal.oracle_area_weight_expr(F.col("lat"))
     ).withColumn("day_idx", (F.col("hour") / F.lit(24)).cast("int"))

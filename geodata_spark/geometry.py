@@ -35,10 +35,13 @@ from geodata_spark import cells
 def points_in_polygon(px: np.ndarray, py: np.ndarray, poly: np.ndarray) -> np.ndarray:
     """Even-odd PIP for arrays of points against one polygon.
 
-    ``poly`` is (N,2) of (x, y).  Points exactly on an edge are
-    implementation-defined (the engine guarantees query points are
-    grid-cell centers, which by construction never lie on zone
-    boundaries — see synth.py grid geometry).
+    ``poly`` is (N,2) of (x, y), closed by its last-to-first edge.  A
+    point is inside when a rightward ray from it crosses an odd number
+    of edges; edge ``k`` counts when ``(y1 > py) != (y2 > py)`` and
+    ``px < (x2 - x1) * (py - y1) / (y2 - y1) + x1``, in that IEEE op
+    order.  That rule also decides points on an edge or a vertex, and
+    the engine's zone join (``spatial.pip_sql``) evaluates the same
+    rule, so the two agree on every point, on-edge ones included.
     """
     px = np.asarray(px, dtype=np.float64)
     py = np.asarray(py, dtype=np.float64)
@@ -137,7 +140,8 @@ def polygon_cover(rings: list[np.ndarray], res: int, eps: float = 1e-9
     """Classify grid cells of the rings' bbox: (full_ids, boundary_ids).
 
     full      — clip area equals cell area (cell entirely inside)
-    boundary  — 0 < clip area < cell area (needs exact PIP per point)
+    boundary  — an edge runs through the cell, or 0 < clip area < cell
+                area (needs exact PIP per point)
 
     Runs on the driver; zones are small (the reference's zone sets are
     province lists — ``mask.py:644-648``), so the output is broadcast.
@@ -146,11 +150,10 @@ def polygon_cover(rings: list[np.ndarray], res: int, eps: float = 1e-9
     boundaries conservatively (classified boundary, exact PIP decides).
 
     Plan-time cost: a cell needs the per-cell Sutherland-Hodgman clip
-    only if some ring edge intersects its (eps-inflated) rectangle — a
-    vectorized Liang-Barsky test finds those; every other cell is
-    provably uniform, so one vectorized center PIP classifies it
-    full/outside.  O(cells·edges) numpy instead of O(cells) Python
-    clips: ~50× on a res-9 province cover.
+    only if ring edges merely graze its rectangle (within ``eps``) — a
+    vectorized Liang-Barsky test finds those and the cells edges run
+    through; every other cell is provably uniform, so one vectorized
+    center PIP classifies it full/outside.
     """
     allv = np.vstack(rings)
     lat_min, lat_max = allv[:, 1].min(), allv[:, 1].max()
@@ -162,8 +165,12 @@ def polygon_cover(rings: list[np.ndarray], res: int, eps: float = 1e-9
     cell_area = (la1[0] - la0[0]) * (lo1[0] - lo0[0])
 
     # edge-adjacency prefilter (inflated rects: borderline grazes fall
-    # through to the exact clip below rather than being missed)
+    # through to the exact clip below rather than being missed).  A cell
+    # an edge runs through (deflated rect) is boundary whatever its
+    # clipped area: a zero-area part (a collinear ring, a spike) still
+    # holds points the ray cast puts inside, to the last ulp.
     near = np.zeros(len(ids), dtype=bool)
+    crossed = np.zeros(len(ids), dtype=bool)
     for ring in rings:
         closed = np.vstack([np.asarray(ring, dtype=np.float64), ring[:1]])
         for k in range(len(closed) - 1):
@@ -171,15 +178,19 @@ def polygon_cover(rings: list[np.ndarray], res: int, eps: float = 1e-9
             near |= _segment_hits_rects(
                 x0, y0, x1, y1, lo0 - eps, lo1 + eps, la0 - eps, la1 + eps
             )
+            crossed |= _segment_hits_rects(
+                x0, y0, x1, y1, lo0 + eps, lo1 - eps, la0 + eps, la1 - eps
+            )
 
     # uniform cells: no edge touches them → center PIP decides in bulk
     far = ~near
     cxf, cyf = (lo0[far] + lo1[far]) / 2.0, (la0[far] + la1[far]) / 2.0
     full = list(ids[far][points_in_rings(cxf, cyf, rings)])
 
-    boundary = []
+    boundary = list(ids[crossed])
+    grazed = near & ~crossed
     for cid, a0, a1, o0, o1 in zip(
-        ids[near], la0[near], la1[near], lo0[near], lo1[near]
+        ids[grazed], la0[grazed], la1[grazed], lo0[grazed], lo1[grazed]
     ):
         covered = 0.0
         for ring in rings:

@@ -718,6 +718,18 @@ def hex7_polyfill(rings: list[np.ndarray], res: int) -> tuple[np.ndarray, np.nda
     return np.concatenate(fulls), np.concatenate(bounds)
 
 
+def hex7_extent_np(cell: np.ndarray, res: int) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """(lat, lon, radius) in degrees of each res-``res`` cell: its
+    centre, and the largest distance from it to a neighbour centre in
+    its own face lattice, in degree space.  That is the radius
+    :func:`hex7_polyfill` classifies with (at least 1.7x the
+    circumradius), so the disc holds the cell and a margin."""
+    disk = hex7_local_disk_np(cell, 1, res)  # column 0 is the cell
+    lat, lon = (v.reshape(disk.shape) for v in hex7_center_np(disk.ravel()))
+    rad = np.hypot(lat[:, 1:] - lat[:, :1], lon[:, 1:] - lon[:, :1]).max(axis=1, initial=0.0)
+    return lat[:, 0], lon[:, 0], rad
+
+
 def hex7_parent_np(cell: np.ndarray, res: int, parent_res: int) -> np.ndarray:
     """Parent id by digit truncation (set digits past parent_res to 7)."""
     cell = np.asarray(cell, dtype=np.int64)

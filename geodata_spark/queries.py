@@ -5262,8 +5262,8 @@ def q_areal_interp(spark: SparkSession, sf_dir: str) -> DataFrame:
     differ between engines), and the matrix form is what a user
     composes with any downstream attribute.
 
-    Plan: lattice → codegen CASE PIP (broadcast zone cover) + hex
-    encode in the same scan stage → ONE map-side-combined count on
+    Plan: lattice → broadcast zone-cover join and its edge PIP filter
+    + hex encode in the same scan stage → ONE map-side-combined count on
     (zone, hex); n_cells(A) re-aggregates that tiny result — the
     lattice is scanned once.  Overlapping zones (east_tri/coast_l)
     contribute independent rows, matching the reference's independent
@@ -5571,8 +5571,8 @@ FROM d WHERE d2zdx2 IS NOT NULL AND d2zdy2 IS NOT NULL
 def q_zonal_majority(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Zonal MAJORITY: dominant MODIS land-use class per zone — the
     categorical sibling of the zonal means (ArcGIS "zonal statistics:
-    majority").  Cells join zones via the broadcast codegen CASE PIP,
-    then per-(zone, class) counts and the max(struct(count, −class))
+    majority").  Cells join zones via the broadcast cover and its edge
+    PIP, then per-(zone, class) counts and the max(struct(count, −class))
     winner — the focal_majority total-order trick at zone grain, no
     rank window.  All integers ⇒ bit-exact oracle; overlapping zones
     count their shared cells in BOTH (independent per-zone masks)."""

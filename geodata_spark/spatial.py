@@ -12,14 +12,16 @@ The engine's counterpart of the reference's rasterize/clip pipeline:
 Plan shape (scale rationale): the polygon set is tiny (province-scale
 zone lists), the point/span table is the 10^12-row side.  The polygons
 are therefore compiled **on the driver** into a cover table
-(zone_id, cell_r{res}, boundary) via the Sutherland-Hodgman planner
-(geometry.polygon_cover) and **broadcast**; membership becomes a
-broadcast hash equi-join on the cell id, fully JVM-side at both grains
-(the hex encode is Catalyst projections, :func:`hexgrid.with_hex7_id`).
-Rows in *boundary* cells (a thin O(perimeter) sliver) take the exact
-PIP test — compiled into Catalyst by default, or an Arrow UDF for big
-polygon sets — the analog of the reference's per-boundary-pixel
-geometry_mask test (``mask.py:593-599``).
+(zone_id, cell_r{res}, boundary, edges) via the Sutherland-Hodgman
+planner (geometry.polygon_cover) and **broadcast**; membership becomes
+a broadcast hash equi-join on the cell id, fully JVM-side at both
+grains (the hex encode is Catalyst projections,
+:func:`hexgrid.with_hex7_id`).  Rows in *boundary* cells (a thin
+O(perimeter) sliver) take the exact PIP test over the polygon edges
+their cover row carries (:func:`pip_sql`) — the analog of the
+reference's per-boundary-pixel geometry_mask test
+(``mask.py:593-599``).  It is one SQL text for any zone size; its cost
+scales with the edges per boundary cell.
 """
 
 from __future__ import annotations
@@ -28,16 +30,12 @@ import threading
 from collections import OrderedDict
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from geodata_spark import cells, geometry, sqltext
 from geodata_spark.zones import ZONES
-
-GEO_REF_RE = r"^(?:geo|tile):([0-9.+-]+),([0-9.+-]+)@h([0-9]+)#[a-z0-9=&_]*val=([0-9.]+)$"
-
 
 def explode_spans(docs: DataFrame) -> DataFrame:
     """documents(doc_id, spans) → one row per span, order preserved.
@@ -90,8 +88,7 @@ def parse_geo_spans(docs: DataFrame, kinds: tuple[str, ...] = ("geo",)) -> DataF
     scan+parse stage, r8).  All parsing is JVM-side.
 
     Malformed refs are guarded by the ``kind`` filter (structurally
-    valid by construction of the corpus); ``GEO_REF_RE`` remains the
-    validation pattern for audit paths.  Kinds are quoted as SQL
+    valid by construction of the corpus).  Kinds are quoted as SQL
     string literals (:func:`sqltext.lit`), whatever they hold.
     """
     kind_in = f"span.kind IN ({', '.join(sqltext.lit(k) for k in kinds)})" if kinds else "false"
@@ -108,12 +105,23 @@ def parse_geo_spans(docs: DataFrame, kinds: tuple[str, ...] = ("geo",)) -> DataF
 # Both cover memos are LRU-bounded at this many entries.  The registry
 # uses two covers per session (grid res 9, hex res 5); the larger, grid
 # res 9 over ZONES, is 33,094 rows; hex res 5 is 30,290 rows (its full
-# cells compacted): 0.5 MB of planned columns and 3.1 MB of checkpoint
-# blocks per session.
+# cells compacted).
 COVER_CACHE_LIMIT = 8
 
+# A cover's edge lists hold at most this many edges in all.  The cover
+# is a forced broadcast and an edge is five doubles, so the bound keeps
+# its edges near 50 MB.  ZONES holds 248 at grid res 9 and 29,388 at
+# hex res 5.
+COVER_EDGE_LIMIT = 1_000_000
+
+# Degrees around a grid cell's band: a point lies in its cell up to the
+# rounding of lat + 90, a crossing east of its edge up to a few ulps
+_GRID_BAND_PAD = 1e-9
+
+_EDGE_FIELDS = ("y1", "y2", "x1", "dx", "dy")
+
 # (catalog hash, res, grain) -> planned cover columns
-_COVER_CACHE: OrderedDict[tuple, pd.DataFrame] = OrderedDict()
+_COVER_CACHE: OrderedDict[tuple, "pa.Table"] = OrderedDict()
 # (session id, catalog hash, res, grain) -> checkpointed cover DataFrame.
 # The id is safe as a key: the cached DataFrame keeps its session alive.
 _COVER_DF_CACHE: OrderedDict[tuple, DataFrame] = OrderedDict()
@@ -148,9 +156,41 @@ def _zones_key(zones: dict[str, list[np.ndarray]]) -> str:
     return h.hexdigest()
 
 
+def _ring_edges(rings: list[np.ndarray]) -> np.ndarray:
+    """(6, E): y1, y2, x1, dx, dy and east end of the rings' edges, as
+    :func:`geometry.points_in_polygon` takes them, less the horizontal
+    ones, which never toggle its ray test."""
+    parts = []
+    for ring in rings:
+        r = np.asarray(ring, dtype=np.float64)
+        x1, y1 = r[:, 0], r[:, 1]
+        x2, y2 = np.roll(x1, -1), np.roll(y1, -1)
+        e = np.stack([y1, y2, x1, x2 - x1, y2 - y1, np.maximum(x1, x2)])
+        parts.append(e[:, y1 != y2])
+    return np.concatenate(parts, axis=1)
+
+
+def _crossing_edges(
+    edges: np.ndarray, south: np.ndarray, north: np.ndarray, west: np.ndarray
+) -> tuple[np.ndarray, np.ndarray]:
+    """Per cell, the edges a rightward ray from the cell can cross: a
+    crossing needs ``y_min <= lat < y_max`` and ``lon < x`` on the edge,
+    so the others meet no band ``[south, north]`` or end west of
+    ``west``.  Returns (edges per cell, edge indices in cell order)."""
+    y1, y2, east = edges[0], edges[1], edges[5]
+    lo, hi = np.minimum(y1, y2), np.maximum(y1, y2)
+    hits = [
+        np.flatnonzero((lo[k] <= north) & (hi[k] >= south) & (east[k] >= west))
+        for k in range(edges.shape[1])
+    ]
+    cell = np.concatenate([np.empty(0, np.int64), *hits])
+    edge = np.repeat(np.arange(edges.shape[1]), [len(h) for h in hits])
+    return np.bincount(cell, minlength=len(west)), edge[np.argsort(cell, kind="stable")]
+
+
 def _cover_columns(
     zones: dict[str, list[np.ndarray]], res: int, grain: str, cell_col: str
-) -> pd.DataFrame:
+) -> "pa.Table":
     """Memoized cover planning: the cover of a zone set at a resolution
     is a deterministic plan artifact (like a prepared statement) —
     real deployments build it once per zone catalog and reuse it across
@@ -158,34 +198,65 @@ def _cover_columns(
     ``grain="hex"`` plans the cover on the aperture-7 hexagonal index
     (hexgrid.hex7_polyfill — same full/boundary contract) and compacts
     each zone's full cells (hexgrid.hex7_compact_np).  Rows are per
-    zone in catalog order, full cells then boundary cells, held as
-    three columns.  Call under ``_COVER_LOCK``."""
+    zone in catalog order, full cells then boundary cells, in an Arrow
+    table.  A boundary cell's band is its extent padded by
+    ``_GRID_BAND_PAD`` at grid grain, and at hex grain the disc of
+    :func:`hexgrid.hex7_extent_np` (a margin of at least 0.7
+    circumradius).  Call under ``_COVER_LOCK``."""
+    import pyarrow as pa
+
     key = (_zones_key(zones), res, grain)
     cols = _lru_get(_COVER_CACHE, key)
-    if cols is None:
-        if grain == "hex":
-            from geodata_spark import hexgrid as HG
+    if cols is not None:
+        return cols
+    from geodata_spark import hexgrid as HG
 
-            def cover_fn(rings):
-                full, boundary = HG.hex7_polyfill(rings, res)
-                return HG.hex7_compact_np(full), boundary
+    zids, ids, flags, counts, values = [], [], [], [], []
+    for zid, rings in zones.items():
+        if grain == "hex":
+            full, boundary = HG.hex7_polyfill(rings, res)
+            full = HG.hex7_compact_np(full)
+            clat, clon, rad = HG.hex7_extent_np(boundary, res)
+            band = (clat - rad, clat + rad, clon - rad)
         else:
-            cover_fn = lambda rings: geometry.polygon_cover(rings, res)  # noqa: E731
-        zids, ids, flags = [], [], []
-        for zid, rings in zones.items():
-            for part, boundary in zip(cover_fn(rings), (False, True)):
-                # repeat one str reference; np.full would copy it per row
-                zids.append(np.repeat(np.array([zid], dtype=object), len(part)))
-                ids.append(np.asarray(part, dtype=np.int64))
-                flags.append(np.full(len(part), boundary))
-        cols = pd.DataFrame(
-            {
-                "zone_id": np.concatenate(zids),
-                cell_col: np.concatenate(ids),
-                "boundary": np.concatenate(flags),
-            }
+            full, boundary = geometry.polygon_cover(rings, res)
+            south, north, west, _ = cells.cell_bounds_np(boundary)
+            band = (south - _GRID_BAND_PAD, north + _GRID_BAND_PAD, west - _GRID_BAND_PAD)
+        edges = _ring_edges(rings)
+        n_edges, edge_idx = _crossing_edges(edges, *band)
+        n = len(full) + len(boundary)
+        # repeat one str reference; np.full would copy it per row
+        zids.append(np.repeat(np.array([zid], dtype=object), n))
+        ids.append(np.concatenate([full, boundary]).astype(np.int64))
+        flags.append(np.arange(n) >= len(full))
+        counts.append(np.concatenate([np.zeros(len(full), np.int64), n_edges]))
+        values.append(edges[:5, edge_idx])
+    per_zone = [int(c.sum()) for c in counts]
+    if sum(per_zone) > COVER_EDGE_LIMIT:
+        top = int(np.argmax(per_zone))
+        raise ValueError(
+            f"zone cover at {grain} res {res}: {len(zones)} zones give "
+            f"{sum(per_zone)} crossing edges on their boundary cells, above "
+            f"COVER_EDGE_LIMIT = {COVER_EDGE_LIMIT}; zone {list(zones)[top]!r} "
+            f"alone gives {per_zone[top]}"
         )
-        _lru_put(_COVER_CACHE, key, cols)
+    offsets = np.concatenate([[0], np.cumsum(np.concatenate(counts))]).astype(np.int32)
+    # non-null fields and items, as zone_cover_df's schema declares them
+    fields = [pa.field(f, pa.float64(), nullable=False) for f in _EDGE_FIELDS]
+    edge_col = pa.ListArray.from_arrays(
+        offsets,
+        pa.StructArray.from_arrays(list(np.concatenate(values, axis=1)), fields=fields),
+        type=pa.list_(pa.field("element", pa.struct(fields), nullable=False)),
+    )
+    cols = pa.table(
+        {
+            "zone_id": pa.array(np.concatenate(zids), pa.string()),
+            cell_col: np.concatenate(ids),
+            "boundary": np.concatenate(flags),
+            "edges": edge_col,
+        }
+    )
+    _lru_put(_COVER_CACHE, key, cols)
     return cols
 
 
@@ -195,12 +266,16 @@ def zone_cover_df(
     res: int = 9,
     grain: str = "grid",
 ) -> DataFrame:
-    """(zone_id, cell_r{res}, boundary) cover table, built on the driver.
+    """(zone_id, cell_r{res}, boundary, edges) cover table, built on the
+    driver.
 
     Zones are small; the output is meant to sit on the broadcast side
     of the membership join.  ``boundary=true`` rows are res-``res``
-    cells that require the exact PIP test.  ``boundary=false`` rows
-    prove membership by cell containment alone:
+    cells that require the exact PIP test (:func:`pip_sql`); ``edges``
+    holds every edge of the zone's rings a rightward ray from the cell
+    can cross, as ``struct(y1, y2, x1, dx = x2 - x1, dy = y2 - y1)``.
+    ``boundary=false`` rows hold no edges and prove membership by cell
+    containment alone:
 
     - ``grain="grid"``: res-``res`` square cells, matched by equality
       with the point's ``cell_r{res}``.
@@ -216,6 +291,11 @@ def zone_cover_df(
 
     In both grains a ``(zone_id, cell)`` pair appears once, and full
     and boundary rows of a zone never overlap.
+
+    The broadcast grows with the edges per boundary cell (a zone of
+    thousands of vertices gives a cell the edges of its latitude band).
+    Above ``COVER_EDGE_LIMIT`` edges it raises ``ValueError`` naming the
+    zone and edge counts; plan at a finer resolution or split zones.
 
     The cover is materialized once per (session, catalog, res, grain):
     the first call runs one local-checkpoint job, and every later call
@@ -243,14 +323,16 @@ def zone_cover_df(
         hit = _lru_get(_COVER_DF_CACHE, key)
         if hit is not None:
             return hit
+        edge = T.StructType([T.StructField(f, T.DoubleType(), False) for f in _EDGE_FIELDS])
         schema = T.StructType(
             [
                 T.StructField("zone_id", T.StringType(), False),
                 T.StructField(cell_col, T.LongType(), False),
                 T.StructField("boundary", T.BooleanType(), False),
+                T.StructField("edges", T.ArrayType(edge, False), False),
             ]
         )
-        # Arrow path: per-tuple Python serialization in createDataFrame
+        # from Arrow: per-tuple Python serialization in createDataFrame
         # dominated plan-build latency for covers of O(10^4+) rows
         df = spark.createDataFrame(
             _cover_columns(zones, res, grain, cell_col), schema
@@ -259,96 +341,28 @@ def zone_cover_df(
         return df
 
 
-def pip_udf(spark: SparkSession, zones: dict[str, list[np.ndarray]] | None = None):
-    """Arrow-vectorized PIP: (zone_id, lat, lon) → bool.
+def pip_sql(lat: str, lon: str) -> str:
+    """Exact zone membership of a row joined to a cover, as SQL text
+    over the cover's ``boundary`` and ``edges`` columns and the SQL
+    snippets ``lat`` and ``lon`` (usually quoted column names).
 
-    The polygon set is broadcast once (pickled rings), not re-captured
-    per task via closure.  Batches are grouped by zone inside the UDF
-    so each polygon's ray cast runs over a contiguous numpy slab.
+    A full row is a member.  A boundary row sums its edges' crossings,
+    each the IEEE op sequence of :func:`geometry.points_in_polygon`; the
+    parity of the sum over all rings is the XOR over rings of
+    :func:`geometry.points_in_rings`, and an edge the ray cannot cross
+    adds 0.  So the test equals ``points_in_rings`` bit for bit, on
+    edges and vertices too, and its text is the same for any zone.
+    ``aggregate`` runs interpreted, on boundary rows only; the cost
+    scales with the edges per boundary cell.
     """
-    from geodata_spark.deploy import ensure_py_files
-
-    ensure_py_files(spark)
-    zones = zones or ZONES
-    bc = spark.sparkContext.broadcast({z: [r.copy() for r in rs] for z, rs in zones.items()})
-
-    @F.pandas_udf(T.BooleanType())
-    def _pip(zone_id: pd.Series, lat: pd.Series, lon: pd.Series) -> pd.Series:
-        out = np.zeros(len(zone_id), dtype=bool)
-        la = lat.to_numpy(np.float64)
-        lo = lon.to_numpy(np.float64)
-        zs = zone_id.to_numpy()
-        for z in pd.unique(zs):
-            m = zs == z
-            out[m] = geometry.points_in_rings(lo[m], la[m], bc.value[z])
-        return pd.Series(out, index=zone_id.index)
-
-    return _pip
-
-
-def pip_ring_sql(lat: str, lon: str, ring: np.ndarray) -> str:
-    """Even-odd ray cast for ONE fixed ring, as SQL text.
-
-    For each non-horizontal edge, an indicator of a rightward-ray
-    crossing; inside = (Σ indicators) mod 2 == 1.  Arithmetic is the
-    exact same IEEE op sequence as :func:`geometry.points_in_polygon`,
-    so the two paths agree on every input including on-edge points.
-    Polygons are static plan constants → the whole test stays inside
-    whole-stage codegen (no Python, no broadcast-pickle).
-
-    SQL text, not Column algebra: building this expression op-by-op
-    costs ~2 py4j round trips per operator (~0.65 s of driver latency
-    per plan build for the zone fixtures); one ``F.expr`` parse is a
-    single round trip.
-    """
-    ring = np.asarray(ring, dtype=np.float64)
-    terms: list[str] = []
-    n = len(ring)
-    for k in range(n):
-        x1, y1 = float(ring[k][0]), float(ring[k][1])
-        x2, y2 = float(ring[(k + 1) % n][0]), float(ring[(k + 1) % n][1])
-        if y1 == y2:
-            continue  # horizontal edge never toggles
-        cond = (
-            f"(({y1!r} > {lat}) <> ({y2!r} > {lat})) AND "
-            f"({lon} < ({(x2 - x1)!r} * ({lat} - {y1!r}) / {(y2 - y1)!r} + {x1!r}))"
-        )
-        terms.append(f"(CASE WHEN {cond} THEN 1 ELSE 0 END)")
-    if not terms:
-        return "false"
-    return f"((({' + '.join(terms)}) % 2) = 1)"
-
-
-def pip_zone_sql(
-    lat: str, lon: str, zone_col: str, zones: dict[str, list[np.ndarray]]
-) -> str:
-    """Dispatch :func:`pip_ring_sql` on a zone_id column (CASE chain).
-
-    Even-odd composition over rings (XOR = ``<>``) for multipolygons.
-    """
-    branches = []
-    for zid, rings in zones.items():
-        inside = None
-        for ring in rings:
-            r = pip_ring_sql(lat, lon, ring)
-            inside = r if inside is None else f"({inside} <> {r})"
-        # a quote or backslash in a caller-supplied id must not break
-        # (or reshape) the generated expression
-        branches.append(f"WHEN {zone_col} = {sqltext.lit(str(zid))} THEN {inside}")
-    assert branches
-    return f"(CASE {' '.join(branches)} ELSE false END)"
-
-
-def pip_zone_expr(
-    lat: str, lon: str, zone_col: str, zones: dict[str, list[np.ndarray]]
-) -> Column:
-    """Catalyst Column form of :func:`pip_zone_sql` (args are SQL
-    snippets, usually column names)."""
-    return F.expr(pip_zone_sql(lat, lon, zone_col, zones))
-
-
-def _total_vertices(zones: dict[str, list[np.ndarray]]) -> int:
-    return sum(len(r) for rs in zones.values() for r in rs)
+    cross = (
+        f"CASE WHEN ((__e.y1 > {lat}) <> (__e.y2 > {lat})) "
+        f"AND ({lon} < (__e.dx * ({lat} - __e.y1) / __e.dy + __e.x1)) THEN 1 ELSE 0 END"
+    )
+    return (
+        f"CASE WHEN NOT boundary THEN true "
+        f"ELSE aggregate(edges, 0, (__n, __e) -> __n + {cross}) % 2 = 1 END"
+    )
 
 
 def join_zones(
@@ -358,7 +372,6 @@ def join_zones(
     res: int = 9,
     lat_col: str = "lat",
     lon_col: str = "lon",
-    strategy: str = "auto",
     grain: str = "grid",
     hex_encode: str = "row",
 ) -> DataFrame:
@@ -368,16 +381,13 @@ def join_zones(
     the reference's independent per-zone shape masks).  Points in no
     zone are dropped — the analog of nodata outside the mask.
 
-    strategy:
-      ``expr`` — compile the boundary-cell PIP into Catalyst (default
-        when total polygon vertices ≤ 2048): ONE scan, zero Python,
-        whole-stage codegen end to end.  The CASE short-circuits, so
-        interior rows never evaluate a single edge test.
-      ``udf``  — Arrow-vectorized PIP for big polygon sets; the plan
-        splits interior (pure JVM) from the O(perimeter) boundary
-        sliver, which alone crosses into Python.  Costs a second scan
-        of the input (two union branches) — prefer ``expr`` whenever
-        the polygon budget allows.
+    One scan and no Python stage: the points join the broadcast cover
+    (:func:`zone_cover_df`) on their cell id, and :func:`pip_sql`
+    keeps full-cell rows and tests boundary-cell rows against the
+    edges their cover row carries.  The result equals
+    :func:`geometry.points_in_rings` for any zone size.  Its cost
+    scales with the edges per boundary cell, and the broadcast with
+    the edges per cover (bounded by ``COVER_EDGE_LIMIT``).
 
     ``grain="hex"`` keys the membership join on the aperture-7
     hexagonal index instead of the square grid: identical output rows
@@ -395,8 +405,8 @@ def join_zones(
     last ulp, so a point within an ulp of a cell edge may get the
     neighbouring id; it still lies in one of the zone's full or
     boundary cells (the cover's margin is at least a circumradius), and
-    boundary rows keep the exact PIP test, so membership does not
-    change.
+    boundary rows keep the exact PIP test, whose edges cover the cell
+    with a margin, so membership does not change.
 
     Output columns: the key (``cell_r{res}`` or ``cell_hex{res}``,
     the point's own cell id), then the point's columns in order
@@ -412,8 +422,6 @@ def join_zones(
     ``"row"`` and ``"dim"`` encode in one pass over the input.
     """
     zones = zones or ZONES
-    if strategy == "auto":
-        strategy = "expr" if _total_vertices(zones) <= 2048 else "udf"
     cover = zone_cover_df(spark, zones, res, grain=grain)
     lat, lon = sqltext.ident(lat_col), sqltext.ident(lon_col)
     cell_col = f"cell_hex{res}" if grain == "hex" else f"cell_r{res}"
@@ -423,13 +431,13 @@ def join_zones(
 
         # a point without a finite position has a NULL id: no match
         with _COVER_LOCK:
-            cover_ids = _cover_columns(zones, res, grain, cell_col)[cell_col]
+            cover_ids = _cover_columns(zones, res, grain, cell_col)[cell_col].to_numpy()
         # compacted full cells: the point probes its ancestor at every
         # res the cover holds.  A point matches at most one compacted
         # full row per zone and boundary rows are res-``res`` only, so
         # the rows are those of the plain equi-join on the point's id,
         # which the output's key column gets back from ``__h7_id``.
-        levels = np.unique(HG.hex7_res_np(cover_ids.to_numpy())).tolist()
+        levels = np.unique(HG.hex7_res_np(cover_ids)).tolist()
         pts = HG.with_hex7_probe(points, lat_col, lon_col, res, levels, cell_col)
         key = f"__h7_id AS {cell_col}"
     else:
@@ -442,24 +450,7 @@ def join_zones(
         finite = f"abs({lat}) < CAST('Infinity' AS DOUBLE) AND abs({lon}) < CAST('Infinity' AS DOUBLE)"
         cell = f"coalesce(CASE WHEN {finite} THEN {cells.cell_sql(lat, lon, res)} END, -1L)"
         pts = points.selectExpr(*pcols, f"{cell} AS {cell_col}")
-    joined = pts.join(F.broadcast(cover), cell_col)
-    if strategy == "expr":
-        joined = joined.filter(
-            f"CASE WHEN NOT boundary THEN true "
-            f"ELSE {pip_zone_sql(lat, lon, 'zone_id', zones)} END"
-        )
-    else:
-        pip = pip_udf(spark, zones)
-        # Split interior/boundary BEFORE the UDF: a disjunction like
-        # (~boundary) | pip(...) would evaluate the Python UDF for every
-        # row (ExtractPythonUDFs hoists the UDF above the whole filter);
-        # the union keeps the hot interior path 100% JVM-side and sends
-        # only the boundary sliver to Python.
-        interior = joined.filter("NOT boundary")
-        boundary = joined.filter("boundary").filter(
-            pip(F.col("zone_id"), F.col(lat_col), F.col(lon_col))
-        )
-        joined = interior.unionByName(boundary)
+    joined = pts.join(F.broadcast(cover), cell_col).filter(pip_sql(lat, lon))
     # key first (the point's own id), the point's columns, zone_id
     return joined.selectExpr(key, *pcols, "zone_id")
 
@@ -468,39 +459,22 @@ def extract_zone_cells(
     spark: SparkSession,
     zones: dict[str, list[np.ndarray]] | None = None,
     res: int = 9,
-    strategy: str = "auto",
 ) -> DataFrame:
     """Per-zone cell table — the discrete ``extract_shapes`` semi-join.
 
     Returns (zone_id, cell_r{res}, interior) where interior cells are
     wholly inside the zone.  Boundary cells are resolved by testing the
     cell *center*, matching rasterio's all_touched=False default in the
-    reference's clip (``mask.py:682``).
-
-    Uses the same strategy switch as :func:`join_zones`: zone sets up
-    to 2048 total vertices compile the center PIP into Catalyst (zero
-    Python anywhere in the plan); bigger sets fall back to the
-    Arrow-vectorized UDF.  The cover table is small, so this is about
-    plan consistency, not wall time.
+    reference's clip (``mask.py:682``), with :func:`pip_sql` over the
+    cover's own edges, as :func:`join_zones` tests points: no Python
+    stage, and a cost that scales with the edges per boundary cell.
     """
     zones = zones or ZONES
-    if strategy == "auto":
-        strategy = "expr" if _total_vertices(zones) <= 2048 else "udf"
     cover = zone_cover_df(spark, zones, res)
     cell_col = f"cell_r{res}"
     _, _, _, clat, clon = cells.decode_expr(F.col(cell_col))
     withc = cover.withColumn("_clat", clat).withColumn("_clon", clon)
-    if strategy == "expr":
-        keep = F.expr(
-            f"CASE WHEN NOT boundary THEN true "
-            f"ELSE {pip_zone_sql('_clat', '_clon', 'zone_id', zones)} END"
-        )
-    else:
-        pip = pip_udf(spark, zones)
-        keep = (~F.col("boundary")) | pip(
-            F.col("zone_id"), F.col("_clat"), F.col("_clon")
-        )
     return (
-        withc.filter(keep)
+        withc.filter(pip_sql("_clat", "_clon"))
         .select("zone_id", cell_col, (~F.col("boundary")).alias("interior"))
     )

@@ -20,8 +20,8 @@ Views registered by :func:`register_views`:
   ``substring_index`` field cuts + cell encode), proving the
   span-parse path is expressible in the SQL dialect, not just Catalyst
   column objects;
-- ``zone_cover`` — the broadcastable (zone_id, cell, boundary) cover
-  table.
+- ``zone_cover`` — the broadcastable (zone_id, cell, boundary, edges)
+  cover table.
 
 Scale note: views are metadata only — registering them costs nothing
 at 100 TB, and the SQL texts compile to the SAME physical plans as
@@ -35,7 +35,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from geodata_spark import cells, zonal
 from geodata_spark.pipeline import text as TX
-from geodata_spark.spatial import GEO_FIELDS_SQL, pip_zone_sql, zone_cover_df
+from geodata_spark.spatial import GEO_FIELDS_SQL, pip_sql, zone_cover_df
 from geodata_spark.zones import ZONES
 
 # register_views skip-cache, keyed per SparkSession (weakly: a closed
@@ -139,19 +139,19 @@ def register_views(
 
 def zonal_daily_wavg_sql(res: int = 9) -> str:
     """SQL twin of queries.q_zonal_daily_wavg: broadcast cover join,
-    CASE-short-circuited PIP on boundary cells only, zonal daily
-    weighted mean.  Identical physical shape to the DataFrame path —
-    the BROADCAST hint keeps the cover on the build side."""
-    pip = pip_zone_sql("lat", "lon", "zone_id", ZONES)
+    the exact PIP of :func:`spatial.pip_sql` (the text
+    ``spatial.join_zones`` filters with) on boundary rows only, zonal
+    daily weighted mean.  Identical physical shape to the DataFrame
+    path — the BROADCAST hint keeps the cover on the build side."""
     return f"""
 WITH zoned AS (
   SELECT /*+ BROADCAST(z) */ g.lat, g.lon, g.hour, g.val, z.zone_id,
-         z.boundary
+         z.boundary, z.edges
   FROM geo_points g JOIN zone_cover z ON g.cell_r{res} = z.cell_r{res}
 ),
 kept AS (
   SELECT lat, lon, hour, val, zone_id FROM zoned
-  WHERE CASE WHEN NOT boundary THEN true ELSE {pip} END
+  WHERE {pip_sql("lat", "lon")}
 ),
 weighted AS (
   SELECT zone_id, CAST(hour div 24 AS INT) AS day_idx, val,

@@ -55,12 +55,12 @@ def streaming_zonal_daily(docs_stream: DataFrame, spark: SparkSession,
     """The flagship zonal daily weighted mean as a streaming query.
 
     Same operators as the batch path (explode → parse → broadcast zone
-    cover join → windowed weighted aggregation); the PIP stays the
-    Catalyst expression strategy, so the streaming plan is stateful
+    cover join → windowed weighted aggregation); the PIP is a stateless
+    filter over the cover's edges, so the streaming plan is stateful
     only at the final windowed aggregation.
     """
     pts = spatial.parse_geo_spans(docs_stream)
-    zoned = spatial.join_zones(pts, spark, ZONES, res=9, strategy="expr")
+    zoned = spatial.join_zones(pts, spark, ZONES, res=9)
     weighted = zoned.withColumn("w", zonal.oracle_area_weight_expr(F.col("lat")))
     return (
         weighted.withWatermark("ts", watermark)

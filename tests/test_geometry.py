@@ -168,22 +168,23 @@ def test_polygon_cover_prefilter_equivalence():
 
 
 def test_extract_zone_cells_expr_path_has_no_python_stage(spark):
-    """Small zone sets route through the compiled-expr PIP on BOTH
-    join_zones and extract_zone_cells (VERDICT r4: the asymmetry was
-    unmotivated) — the fixture zones' plan must contain no Python
-    eval stage, and expr/udf strategies must agree row-for-row."""
-    from geodata_spark import spatial
-    from geodata_spark.zones import ZONES
+    """extract_zone_cells keeps every full cell and each boundary cell
+    whose centre its zone holds, as geometry.points_in_rings decides
+    from the centre Spark computes, with no Python stage in the plan."""
+    from geodata_spark import cells, spatial
 
-    expr_df = spatial.extract_zone_cells(spark, ZONES, res=7, strategy="expr")
-    plan = expr_df._jdf.queryExecution().executedPlan().toString()
+    df = spatial.extract_zone_cells(spark, ZONES, res=7)
+    plan = df._jdf.queryExecution().executedPlan().toString()
     assert "Python" not in plan and "ArrowEval" not in plan
-    # auto == expr for the fixture zones (<= 2048 vertices)
-    auto_plan = (
-        spatial.extract_zone_cells(spark, ZONES, res=7)
-        ._jdf.queryExecution().executedPlan().toString()
-    )
-    assert "Python" not in auto_plan
-    udf_df = spatial.extract_zone_cells(spark, ZONES, res=7, strategy="udf")
-    rows = lambda df: sorted(map(tuple, df.collect()))
-    assert rows(expr_df) == rows(udf_df)
+    want = set()
+    for zid, rings in ZONES.items():
+        full, boundary = geometry.polygon_cover(rings, 7)
+        want |= {(zid, int(c), True) for c in full}
+        # cells.decode_expr's centre: (index + 0.5) * edge - offset
+        rem = boundary - 7 * cells._RES_SHIFT
+        yi, xi = rem // cells.Y_SHIFT, rem % cells.Y_SHIFT
+        edge = cells.EDGE_DEG[7]
+        inside = geometry.points_in_rings((xi + 0.5) * edge - 180.0, (yi + 0.5) * edge - 90.0, rings)
+        want |= {(zid, int(c), False) for c in boundary[inside]}
+    got = {(r.zone_id, r.cell_r7, r.interior) for r in df.collect()}
+    assert got == want and any(not i for _, _, i in got)

@@ -84,13 +84,13 @@ def _plan(df) -> str:
 
 
 def test_flagship_plan_single_scan_no_python(spark, corpus_parquet):
-    """expr PIP strategy: ONE parquet scan, broadcast join, zero Python."""
+    """ONE parquet scan, broadcast cover join, zero Python."""
     from geodata_spark import spatial, zonal
     from geodata_spark.zones import ZONES
 
     docs = spark.read.parquet(corpus_parquet)
     pts = spatial.parse_geo_spans(docs)
-    zoned = spatial.join_zones(pts, spark, ZONES, res=9, strategy="expr")
+    zoned = spatial.join_zones(pts, spark, ZONES, res=9)
     w = zoned.withColumn("w", zonal.oracle_area_weight_expr(F.col("lat")))
     out = zonal.zonal_weighted_mean(
         w, "val", "w", ["zone_id"], salt_buckets=8, salt_cols=["lat", "lon", "hour"]
@@ -99,7 +99,7 @@ def test_flagship_plan_single_scan_no_python(spark, corpus_parquet):
     assert plan.count("FileScan parquet") + plan.count("Scan parquet") >= 1
     assert "BroadcastHashJoin" in plan, "zone cover must broadcast"
     assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan, (
-        "expr strategy must not touch Python"
+        "the zone join must not touch Python"
     )
     # partial + final hash aggregation (map-side combine present)
     assert plan.count("HashAggregate") >= 4  # salted: 2 per phase
@@ -531,14 +531,14 @@ def test_hex_knn_plan_ring_equi_join(spark):
 
 def test_hex_zone_join_broadcasts_cover(spark):
     """Hex-grain zone membership keeps the flagship's physical shape:
-    broadcast cover join + codegen PIP, and no Python stage (the hex
-    encode is Catalyst projections)."""
+    broadcast cover join + the edge PIP filter, and no Python stage
+    (the hex encode is Catalyst projections)."""
     from geodata_spark import spatial
     from geodata_spark.synth import synth_documents
 
     docs = synth_documents(spark, 200)
     pts = spatial.parse_geo_spans(docs)
-    out = spatial.join_zones(pts, spark, res=5, grain="hex", strategy="expr")
+    out = spatial.join_zones(pts, spark, res=5, grain="hex")
     plan = _plan(out)
     assert "BroadcastHashJoin" in plan, "hex zone cover must broadcast"
     assert "CartesianProduct" not in plan

@@ -1,6 +1,6 @@
 """The zonal path built from SQL text: pinned output schemas, a build
 bound in py4j round trips, safe quoting of caller-supplied names and
-values, and the PIP SQL text against the numpy ray cast."""
+values, and the zone join's PIP against the numpy ray cast."""
 
 from __future__ import annotations
 
@@ -46,15 +46,14 @@ def test_parse_geo_spans_schema_batch_and_streaming(spark, docs_path):
 
 
 @pytest.mark.parametrize("grain,res", [("grid", 8), ("hex", 4)])
-@pytest.mark.parametrize("strategy", ["expr", "udf"])
-def test_join_zones_schema_and_key(spark, grain, res, strategy):
+def test_join_zones_schema_and_key(spark, grain, res):
     """Key column first, holding the point's own cell id (at hex grain
     too, where the join probes the ancestors of a compacted cover),
     then the point's columns in order, then zone_id."""
     pts = spark.range(300).selectExpr(
         "id", "29.13D + (id % 20) * 0.251D AS lat", "'x' AS tag", "98.71D + (id div 20) * 0.607D AS lon"
     )
-    out = spatial.join_zones(pts, spark, TINY, res=res, grain=grain, strategy=strategy)
+    out = spatial.join_zones(pts, spark, TINY, res=res, grain=grain)
     key = f"cell_hex{res}" if grain == "hex" else f"cell_r{res}"
     assert _schema(out) == [
         (key, "bigint"), ("id", "bigint"), ("lat", "double"), ("tag", "string"),
@@ -152,39 +151,60 @@ def test_sqltext_lit_matches_f_lit(spark):
         sqltext.lit(object())
 
 
+# degenerate rings, each a zone of its own but the hole.  The ray cast
+# puts some points of the collinear ring's edges inside by rounding
+# (its vertices are not dyadic), so its cells must reach the exact PIP
+DEGENERATE = {
+    "dup_vertex": [np.array([(101.0, 31.0), (103.5, 31.25), (103.5, 31.25), (102.0, 33.5)])],
+    "collinear": [np.array([(100.1, 30.3), (102.7, 31.9), (101.4, 31.1)])],
+    "flat": [np.array([(100.0, 32.0), (103.0, 32.0), (101.0, 32.0)])],
+    "holed": [
+        np.array([(104.5, 30.5), (107.5, 30.5), (107.5, 33.5), (104.5, 33.5)]),
+        np.array([(105.5, 31.5), (106.5, 31.5), (106.0, 32.5)]),
+    ],
+}
+
+
 def _pip_cases(rng):
-    """(zone_id, lon, lat) rows: random points around every ZONES zone,
-    every vertex, points on every edge (horizontal ones too) and their
-    midpoints, and the same for a zone id holding a quote."""
-    zones = dict(ZONES)
-    zones["o'hare \\ tri"] = ZONES["east_tri"]
-    rows = []
-    for zid, rings in zones.items():
+    """(zones, lon, lat): random points around every ZONES zone and
+    every degenerate ring, every vertex, points on every edge
+    (horizontal ones too) and their midpoints; ZONES' east_tri again
+    under an id holding a quote and a backslash."""
+    zones = {**ZONES, "o'hare \\ tri": ZONES["east_tri"], **DEGENERATE}
+    pts = []
+    for rings in zones.values():
         allv = np.concatenate(rings)
         lo, hi = allv.min(axis=0) - 1.0, allv.max(axis=0) + 1.0
-        pts = rng.uniform(lo, hi, size=(300, 2))
+        pts.append(rng.uniform(lo, hi, size=(300, 2)))
         for ring in rings:
             nxt = np.roll(ring, -1, axis=0)
             t = rng.uniform(0.0, 1.0, size=(len(ring), 4))
             on_edge = (ring[:, None, :] + t[..., None] * (nxt - ring)[:, None, :]).reshape(-1, 2)
-            pts = np.concatenate([pts, ring, (ring + nxt) / 2.0, on_edge])
-        rows += [(zid, float(x), float(y)) for x, y in pts]
-    return zones, rows
+            pts += [ring, (ring + nxt) / 2.0, on_edge]
+    pts = np.concatenate(pts)
+    return zones, pts[:, 0], pts[:, 1]
 
 
-def test_pip_zone_sql_matches_numpy(spark):
-    """Spark's pip_zone_sql equals geometry.points_in_rings point for
-    point, on vertices and edges included (the same IEEE op sequence)."""
-    zones, rows = _pip_cases(np.random.default_rng(20261019))
-    df = spark.createDataFrame(rows, "zone_id string, lon double, lat double")
-    inside = spatial.pip_zone_sql("lat", "lon", "zone_id", zones)
-    out = df.selectExpr("zone_id", "lon", "lat", f"{inside} AS inside").toPandas()
-    assert len(out) == len(rows)
-    for zid, part in out.groupby("zone_id"):
-        want = geometry.points_in_rings(part["lon"].to_numpy(), part["lat"].to_numpy(), zones[zid])
-        assert (part["inside"].to_numpy() == want).all(), zid
-    # the quoted id dispatches to its own rings, not to the ELSE branch
-    assert out.loc[out["zone_id"] == "o'hare \\ tri", "inside"].any()
+@pytest.mark.parametrize("grain,res", [("grid", 9), ("hex", 5)])
+def test_join_zones_pip_matches_numpy(spark, grain, res):
+    """join_zones gives each point exactly the zones
+    geometry.points_in_rings puts it in, on vertices and edges and for
+    degenerate rings included (the same IEEE op sequence)."""
+    zones, lon, lat = _pip_cases(np.random.default_rng(20261019))
+    df = spark.createDataFrame(
+        [(i, float(x), float(y)) for i, (x, y) in enumerate(zip(lon, lat))],
+        "idx long, lon double, lat double",
+    )
+    got = {(r.idx, r.zone_id) for r in spatial.join_zones(df, spark, zones, res=res, grain=grain).collect()}
+    want = {
+        (int(i), zid)
+        for zid, rings in zones.items()
+        for i in np.flatnonzero(geometry.points_in_rings(lon, lat, rings))
+    }
+    assert got == want
+    # the quoted id has its own rows; the degenerate zones have some
+    assert {i for i, z in got if z == "o'hare \\ tri"} == {i for i, z in got if z == "east_tri"} != set()
+    assert {z for _, z in got} >= {"dup_vertex", "collinear", "holed"}
 
 
 def test_hex_encode_keeps_caller_cache_and_catalog(spark):

@@ -8,6 +8,7 @@ from types import SimpleNamespace
 import numpy as np
 import pandas as pd
 import pytest
+from pyspark.sql import types as T
 
 from geodata_spark import geometry, hexgrid, spatial
 from geodata_spark.zones import ZONES
@@ -30,10 +31,22 @@ def points(spark):
     )
 
 
+def _all_edges(rings):
+    """Every non-horizontal edge of the rings as (y1, y2, x1, dx, dy):
+    a superset of any cell's crossing edges."""
+    out = []
+    for ring in rings:
+        for (x1, y1), (x2, y2) in zip(ring, np.roll(ring, -1, axis=0)):
+            if y1 != y2:
+                out.append((float(y1), float(y2), float(x1), float(x2 - x1), float(y2 - y1)))
+    return out
+
+
 def _literal_cover(spark, res, grain, compact=True):
     """The cover as built before memoization: Python row tuples through
-    createDataFrame, no checkpoint.  Hex full cells are compacted per
-    zone, as the memoized cover stores them, unless ``compact=False``."""
+    createDataFrame, no checkpoint, and on every boundary row all of
+    its zone's edges.  Hex full cells are compacted per zone, as the
+    memoized cover stores them, unless ``compact=False``."""
     cell_col = f"cell_hex{res}" if grain == "hex" else f"cell_r{res}"
     rows = []
     for zid, rings in TINY.items():
@@ -43,11 +56,17 @@ def _literal_cover(spark, res, grain, compact=True):
                 full = hexgrid.hex7_compact_np(full)
         else:
             full, boundary = geometry.polygon_cover(rings, res)
-        rows.extend((zid, int(c), False) for c in full)
-        rows.extend((zid, int(c), True) for c in boundary)
-    pdf = pd.DataFrame(rows, columns=["zone_id", cell_col, "boundary"])
-    schema = f"zone_id string not null, {cell_col} bigint not null, boundary boolean not null"
-    return pdf, spark.createDataFrame(pdf, schema)
+        rows.extend((zid, int(c), False, []) for c in full)
+        rows.extend((zid, int(c), True, _all_edges(rings)) for c in boundary)
+    pdf = pd.DataFrame(rows, columns=["zone_id", cell_col, "boundary", "edges"])
+    edge = T.StructType([T.StructField(f, T.DoubleType(), False) for f in ("y1", "y2", "x1", "dx", "dy")])
+    schema = T.StructType([
+        T.StructField("zone_id", T.StringType(), False),
+        T.StructField(cell_col, T.LongType(), False),
+        T.StructField("boundary", T.BooleanType(), False),
+        T.StructField("edges", T.ArrayType(edge, False), False),
+    ])
+    return pdf, spark.createDataFrame(rows, schema)
 
 
 def _same_rows(a, b):
@@ -59,10 +78,18 @@ def test_cover_rows_unchanged(spark, grain, res):
     pdf, old = _literal_cover(spark, res, grain)
     cover = spatial.zone_cover_df(spark, TINY, res, grain)
     assert cover.schema == old.schema
-    assert cover.count() == len(pdf) > 0 and _same_rows(cover, old)
+    cols = cover.columns[:3]
+    assert cover.count() == len(pdf) > 0 and _same_rows(cover.select(cols), old.select(cols))
     # the planned columns hold the old rows in the old order
     key = (spatial._zones_key(TINY), res, grain)
-    pd.testing.assert_frame_equal(spatial._COVER_CACHE[key], pdf)
+    planned = spatial._COVER_CACHE[key]
+    pd.testing.assert_frame_equal(planned.select(cols).to_pandas(), pdf[cols])
+    # full rows carry no edges; boundary rows some of their zone's edges
+    for zid, boundary, edges in zip(
+        pdf["zone_id"], pdf["boundary"], planned.column("edges").to_pylist()
+    ):
+        got = [tuple(e.values()) for e in edges]
+        assert bool(got) == boundary and set(got) <= set(_all_edges(TINY[zid]))
 
 
 def test_cover_plan_scans_checkpoint(spark, points):
@@ -77,7 +104,7 @@ def test_cover_plan_scans_checkpoint(spark, points):
 def test_hex_cover_full_cells_are_compacted():
     # TINY at hex res 4 compacts to coarser full cells, so the join tests
     # below run the ancestor probe
-    cols = spatial._cover_columns(TINY, 4, "hex", "cell_hex4")
+    cols = spatial._cover_columns(TINY, 4, "hex", "cell_hex4").to_pandas()
     full = cols.loc[~cols["boundary"], "cell_hex4"].to_numpy()
     bound = cols.loc[cols["boundary"], "cell_hex4"].to_numpy()
     assert set(hexgrid.hex7_res_np(bound).tolist()) == {4}
@@ -90,23 +117,46 @@ def test_hex_cover_full_cells_are_compacted():
 
 def test_zones_hex_cover_rows():
     # ZONES at hex res 5: 196,690 reachable full cells compact to 8,734
-    # rows at res 1-5, next to 21,556 boundary cells
+    # rows at res 1-5, next to 21,556 boundary cells holding 29,388 edges
     cols = spatial._cover_columns(ZONES, 5, "hex", "cell_hex5")
+    edges = cols.column("edges")
+    cols = cols.select(["zone_id", "cell_hex5", "boundary"]).to_pandas()
     ids = cols["cell_hex5"].to_numpy()
     assert hexgrid._reachable(ids).all()
     assert not cols.duplicated(["zone_id", "cell_hex5"]).any()
     assert (len(cols), int(cols["boundary"].sum())) == (30290, 21556)
+    assert sum(len(e) for e in edges.to_pylist()) == 29388
+    # grid res 9: 124 boundary cells, 248 edges
+    grid = spatial._cover_columns(ZONES, 9, "grid", "cell_r9")
+    assert int(grid.column("boundary").to_numpy().sum()) == 124
+    assert len(grid.column("edges").combine_chunks().flatten()) == 248
+
+
+def test_cover_edge_limit(spark, monkeypatch):
+    """A cover holding more than COVER_EDGE_LIMIT edges raises before
+    anything is memoized, naming its zone and edge counts."""
+    # a catalog no other test plans: a memoized cover is not re-planned
+    shifted = {zid: [ring + 0.125 for ring in rings] for zid, rings in TINY.items()}
+    monkeypatch.setattr(spatial, "COVER_EDGE_LIMIT", 10)
+    with pytest.raises(
+        ValueError, match=r"grid res 9: 2 zones give \d+ crossing edges .* = 10; zone '\w+' alone"
+    ):
+        spatial.zone_cover_df(spark, shifted, 9)
+    assert (spatial._zones_key(shifted), 9, "grid") not in spatial._COVER_CACHE
+    monkeypatch.setattr(spatial, "COVER_EDGE_LIMIT", 1000)
+    assert spatial.zone_cover_df(spark, shifted, 9).count() > 0
 
 
 @pytest.mark.parametrize("grain,res", GRAINS)
-@pytest.mark.parametrize("strategy", ["expr", "udf"])
-def test_join_output_matches_literal_cover(spark, points, monkeypatch, grain, res, strategy):
-    new = spatial.join_zones(points, spark, TINY, res=res, strategy=strategy, grain=grain)
-    # the reference is the plain equi-join on an uncompacted cover
+def test_join_output_matches_literal_cover(spark, points, monkeypatch, grain, res):
+    new = spatial.join_zones(points, spark, TINY, res=res, grain=grain)
+    # the reference is the plain equi-join on an uncompacted cover whose
+    # boundary rows carry all their zone's edges: extra edges never
+    # change the parity
     pdf, old_cover = _literal_cover(spark, res, grain, compact=False)
     monkeypatch.setattr(spatial, "zone_cover_df", lambda *a, **k: old_cover)
     monkeypatch.setattr(spatial, "_cover_columns", lambda *a, **k: pdf)
-    old = spatial.join_zones(points, spark, TINY, res=res, strategy=strategy, grain=grain)
+    old = spatial.join_zones(points, spark, TINY, res=res, grain=grain)
     assert new.columns == old.columns
     assert new.count() > 0 and _same_rows(new, old)
 
@@ -160,18 +210,74 @@ def test_stopped_session_entries_are_dropped(spark, monkeypatch):
     assert ("stopped",) not in spatial._COVER_DF_CACHE
 
 
-@pytest.mark.parametrize("strategy", ["expr", "udf"])
-def test_join_zones_drops_non_finite_points(spark, strategy):
+def test_join_zones_drops_non_finite_points(spark):
     """A point with a NULL, NaN or ±inf coordinate is in no zone, at
-    both grains and with both PIP strategies (the grid encode used to
-    raise ARITHMETIC_OVERFLOW on NaN, and the hex UDF gave all of them
-    one real id)."""
+    both grains (the grid encode used to raise ARITHMETIC_OVERFLOW on
+    NaN, and the hex UDF gave all of them one real id)."""
     good = [(31.0, 101.0), (30.5, 104.5), (29.5, 99.0)]
     bad = [(float("nan"), 101.0), (31.0, float("nan")), (float("inf"), 101.0),
            (31.0, float("-inf")), (None, 101.0), (31.0, None)]
     df = spark.createDataFrame(good + bad, "lat double, lon double")
     rows = {}
     for grain, res in GRAINS:
-        out = spatial.join_zones(df, spark, TINY, res=res, grain=grain, strategy=strategy)
+        out = spatial.join_zones(df, spark, TINY, res=res, grain=grain)
         rows[grain] = sorted((r.zone_id, r.lat, r.lon) for r in out.collect())
     assert rows["grid"] == rows["hex"] == [("rect", 31.0, 101.0), ("tri", 30.5, 104.5)]
+
+
+def _star(rng, n, cx, cy, r_out, r_in):
+    """A seeded n-vertex star: vertices at sorted random angles about
+    (cx, cy), alternately near ``r_out`` and ``r_in`` degrees out."""
+    ang = np.sort(rng.uniform(0.0, 2.0 * np.pi, n))
+    rad = np.where(np.arange(n) % 2 == 0, r_out, r_in) * rng.uniform(0.8, 1.2, n)
+    return np.stack([cx + rad * np.cos(ang), cy + rad * np.sin(ang)], axis=1)
+
+
+def _star_catalogs():
+    rng = np.random.default_rng(2000)
+    one = {"star2000": [_star(rng, 2000, 100.0, 30.0, 1.5, 0.6)]}
+    eight = {
+        f"star601_{k}": [_star(rng, 601, 102.5 + (k % 4) * 1.1, 29.0 + (k // 4) * 2.0, 0.6, 0.25)]
+        for k in range(8)
+    }
+    return rng, [one, eight]
+
+
+@pytest.mark.parametrize("grain,res", [("grid", 9), ("hex", 5)])
+def test_join_zones_many_vertex_zones(spark, grain, res):
+    """Zones of thousands of vertices take the same exact PIP: a
+    2,000-vertex star, and eight 601-vertex stars, give the rows
+    geometry.points_in_rings gives, on vertices and edges included,
+    with no Python stage.  Codegen fallback is off while they run, so
+    a generated class that fails to compile raises instead of logging
+    an error and running interpreted."""
+    rng, catalogs = _star_catalogs()
+    conf = {"spark.sql.codegen.fallback": "false", "spark.sql.codegen.factoryMode": "CODEGEN_ONLY"}
+    try:
+        for k, v in conf.items():
+            spark.conf.set(k, v)
+        for zones in catalogs:
+            rings = [r for rs in zones.values() for r in rs]
+            allv = np.concatenate(rings)
+            pts = [rng.uniform(allv.min(axis=0), allv.max(axis=0), size=(8000, 2)), allv]
+            for ring in rings:
+                t = rng.uniform(0.0, 1.0, size=(len(ring), 1))
+                pts.append(ring + t * (np.roll(ring, -1, axis=0) - ring))
+            lon, lat = np.concatenate(pts).T
+            df = spark.createDataFrame(
+                [(i, float(x), float(y)) for i, (x, y) in enumerate(zip(lon, lat))],
+                "idx long, lon double, lat double",
+            )
+            out = spatial.join_zones(df, spark, zones, res=res, grain=grain)
+            plan = out._jdf.queryExecution().executedPlan().toString()
+            assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
+            got = {(r.idx, r.zone_id) for r in out.collect()}
+            want = {
+                (int(i), zid)
+                for zid, rs in zones.items()
+                for i in np.flatnonzero(geometry.points_in_rings(lon, lat, rs))
+            }
+            assert got == want and len(want) > 1000
+    finally:
+        for k in conf:
+            spark.conf.unset(k)

@@ -1,8 +1,9 @@
 #!/usr/bin/env python
 """Write BENCH/PLANS.md: the executed physical plans of the headline
-queries, annotated with what to look for.  The plan SHAPES are pinned
-by tests (tests/test_sources_plans.py etc.); this artifact makes them
-readable without running anything.
+queries, annotated with what to look for.  The plans come from the
+engine's own session (session.get_spark), the session the plan tests
+(tests/test_sources_plans.py etc.) pin shapes in; this artifact makes
+them readable without running anything.
 
 Usage: python tools/dump_plans.py
 """
@@ -20,8 +21,11 @@ SF = "/root/testdata/sf0.001"
 NOTES = {
     "zonal_daily_wavg": (
         "flagship: ONE parquet scan, span explode + kind filter, "
-        "broadcast zone-cover join, CASE-short-circuit PIP in codegen "
-        "(no Python stage), PLAIN partial+final hash aggregation — "
+        "broadcast zone-cover join whose condition is the PIP: it sums "
+        "the crossings of the edges each boundary row carries "
+        "(aggregate runs interpreted, on boundary rows only; no Python "
+        "stage), "
+        "PLAIN partial+final hash aggregation — "
         "map-side combine reduces each task to <=|groups| rows before "
         "the shuffle, so the hot cell never reaches a reducer as a "
         "hot key (salting dropped r7: its second phase measured 14% "
@@ -76,8 +80,8 @@ NOTES = {
         "hex-grain flagship: no Python stage — the hex encode is "
         "Catalyst projections in the scan stage, its id feeding ONE "
         "Generate of the ancestor probe keys (one per res the "
-        "compacted cover holds); broadcast hex-polyfill cover join, "
-        "CASE-short-circuit PIP still in codegen, two-phase hash agg"
+        "compacted cover holds); broadcast hex-polyfill cover join "
+        "with the same edge-parity PIP as its condition, two-phase hash agg"
     ),
     "zorder_stats": (
         "Z-order key audit: the Morton key is ONE codegen expression "
@@ -227,7 +231,7 @@ NOTES = {
         "corpus is scanned once and never shuffled"
     ),
     "zonal_majority": (
-        "broadcast codegen CASE PIP join, one map-side-combined "
+        "broadcast cover join with its edge PIP, one map-side-combined "
         "(zone, class) count, winner via max(struct) in the tiny "
         "per-zone agg — no rank window"
     ),
@@ -258,7 +262,7 @@ NOTES = {
         "the category CASE is pure projection"
     ),
     "areal_interp": (
-        "ONE lattice scan (codegen CASE PIP + hex encode in the same "
+        "ONE lattice scan (cover join with its edge PIP + hex encode in the same "
         "stage), one map-side-combined count on (zone, hex); zone "
         "totals re-aggregate the tiny matrix; broadcast pop dim"
     ),
@@ -292,23 +296,19 @@ NOTES = {
 
 
 def main() -> None:
-    from pyspark.sql import SparkSession
+    from geodata_spark.session import get_spark
 
-    spark = (
-        SparkSession.builder.master("local[4]")
-        .config("spark.sql.shuffle.partitions", "4")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
+    # the engine's own session (its optimizer exclusions included), so
+    # the plans shown are the plans the engine runs
+    spark = get_spark("dump_plans", master="local[4]", shuffle_partitions=4)
     spark.sparkContext.setLogLevel("ERROR")
     import __spark_entry__ as E
 
     qs = E.queries()
     out = [
         "# PLANS — executed physical plans of the headline queries\n",
-        f"\nGenerated by tools/dump_plans.py at sf0.001 ({SF}); the shapes",
-        "\nshown here are pinned by the plan tests in tests/.\n",
+        f"\nGenerated by tools/dump_plans.py at sf0.001 ({SF}) in the engine's",
+        "\nsession (session.get_spark), whose plans the plan tests in tests/ pin.\n",
     ]
     for name, note in NOTES.items():
         df = qs[name](spark, SF)
