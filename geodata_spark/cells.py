@@ -20,9 +20,9 @@ Two ID schemes are provided:
             (the DuckDB oracle), and the scheme used by every join in
             the engine.
 ``s2``    — genuine S2 cell tokens (face + Hilbert curve position),
-            batch-encoded by an Arrow-vectorized pandas UDF (numpy
-            implementation of the public S2 quadratic projection).
-            Provided for interop; not on the hot join path.
+            encoded in numpy (:func:`s2_token_np`, the public S2
+            quadratic projection).  Provided for interop; not on the
+            hot join path.
 
 Cell id layout (grid scheme), one BIGINT::
 
@@ -36,10 +36,8 @@ Parent at res r-1 is ``yi//2, xi//2`` — pure integer arithmetic.
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 MIN_RES = 5
 MAX_RES = 9
@@ -143,7 +141,7 @@ def cells_in_bbox(lat_min: float, lat_max: float, lon_min: float, lon_max: float
 
 
 # ---------------------------------------------------------------------------
-# S2 tokens — real S2 cell math, Arrow-vectorized pandas UDF
+# S2 tokens — real S2 cell math in numpy
 # ---------------------------------------------------------------------------
 # Implements the public S2 geometry scheme: lat/lon -> unit sphere ->
 # cube face + (u,v) -> quadratic (s,t) -> leaf (i,j) -> Hilbert curve
@@ -256,16 +254,3 @@ def s2_token_np(lat: np.ndarray, lon: np.ndarray, level: int) -> np.ndarray:
         tok = format(int(c), "016x").rstrip("0")
         out[k] = tok or "0"
     return out
-
-
-def s2_token_udf(level: int):
-    """Arrow-vectorized pandas UDF: (lat, lon) → S2 token at ``level``."""
-
-    @F.pandas_udf(T.StringType())
-    def _enc(lat: pd.Series, lon: pd.Series) -> pd.Series:
-        return pd.Series(
-            s2_token_np(lat.to_numpy(np.float64), lon.to_numpy(np.float64), level),
-            index=lat.index,
-        )
-
-    return _enc

@@ -1,4 +1,4 @@
-"""Aperture-7 hexagonal cell index (H3-style), numpy and Catalyst.
+"""Aperture-7 hexagonal cell index (H3-style), numpy and the JVM.
 
 The north_star asks for H3 (res 5-9) cell encoding next to S2.  The
 engine ships the full published H3 *pipeline* from scratch in numpy —
@@ -6,11 +6,10 @@ lat/lon → icosahedron face via max-dot-product → gnomonic projection
 → hex IJK rounding → aperture-7 digit extraction with Class II/III
 alternation (the algorithm documented at h3geo.org/docs/core-library;
 reference analog: the grid discretization in cutout.py:340-344) — as
-:func:`hex7_id_np` / :func:`hex7_token_np`, with a Catalyst twin
-(:func:`with_hex7_id`) for Spark plans, plus canonical-H3 twins
-(:func:`h3_token_udf`) gated on the ``h3`` wheel.
+:func:`hex7_id_np` / :func:`hex7_token_np`, with a compiled JVM twin
+(:func:`with_hex7_id`, ``jvm/Hex7Id.java``) for Spark plans.
 
-Why two paths instead of one canonical encoder:
+Why not canonical H3:
 
 * Canonical H3 tokens require Uber's base-cell numbering — the
   ``baseCellData`` (122 rows) and ``faceIjkBaseCells`` (20x3x3x3)
@@ -18,9 +17,7 @@ Why two paths instead of one canonical encoder:
   are published *data*, not derivable math; this image has neither
   the ``h3`` wheel nor network access, so vendoring them blind would
   be unverifiable (and near-copying a table we cannot even test
-  against).  The gate mirrors the rasterio/xarray treatment
-  (sources.py): canonical tokens light up when the wheel is present,
-  and tests pin the documented token fixtures behind the gate.
+  against).
 * The from-scratch ``hex7`` scheme is the same math on a canonical
   golden-ratio icosahedron with a derived face numbering.  It is a
   genuine hexagonal index — uniform 6-neighbor distance, ~7x children
@@ -35,7 +32,7 @@ edge are split between the two faces (no base-cell overage
 machinery), and vertex cells are split five ways instead of forming
 pentagons.  For bucketing/dedup/rollup workloads — the engine's use
 of cell ids — a deterministic split cell is harmless; for contiguity-
-critical uses, install the ``h3`` wheel and use the canonical UDFs.
+critical uses, canonical H3 (the ``h3`` wheel) is the tool.
 
 Hierarchy contract (same as canonical H3): encode at the FINEST res
 you need, then coarsen with :func:`hex7_parent_np` — that truncation
@@ -60,23 +57,22 @@ Token layout (64-bit, rendered as 16 hex chars):
               7 — the same convention that gives canonical H3 tokens
               their trailing f's.
 
-Scale shape: encoding is a stateless map over (lat, lon) — a few
-Catalyst projections (:func:`with_hex7_id`), no Python stage, no
-shuffle, no state; at 100 TB it pipelines inside the scan stage's
-whole-stage codegen like the S2/grid encoders.
+Scale shape: encoding is a stateless map over (lat, lon) — one
+compiled JVM function in one projection (:func:`with_hex7_id`), no
+Python stage, no shuffle, no state; at 100 TB it pipelines inside the
+scan stage's whole-stage codegen like the grid encoder.
 """
 
 from __future__ import annotations
 
-import json
 import math
-import uuid
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from geodata_spark import deploy
 from geodata_spark.sqltext import ident
 
 # ---------------------------------------------------------------------------
@@ -783,262 +779,71 @@ def hex7_token_expr(cell):
 
 
 # ---------------------------------------------------------------------------
-# Catalyst encode: hex7_id_np as SQL projections (no Python stage)
+# JVM encode: hex7_id_np as one compiled Spark function (no Python stage)
 # ---------------------------------------------------------------------------
-
-def _sql_dbl(v: float) -> str:
-    return f"{float(v)!r}D" if v >= 0 else f"({float(v)!r}D)"
-
-
-_SQL_FINITE = "abs({}) < CAST('Infinity' AS DOUBLE)"  # false for NULL and NaN too
-# (v + 1.5 * 2^52) - 1.5 * 2^52 is rint(v), half to even, for |v| < 2^51
-# in IEEE arithmetic; Spark's rint is nullable and compiles larger
-_SQL_RINT_SHIFT = f"{3 << 51}D"
-_SQL_SEVENTH = _sql_dbl(1.0 / 7.0)
 
 # face f's centre is exactly the negated centre of face 19 - f, so
 # numpy's dot with face 19 - f is exactly minus its dot with face f
 assert (_FACE_CENTER[::-1] == -_FACE_CENTER).all()
 
-# per face (centre, e1, e2).  Spark's SQL parser takes ~0.1 ms per
-# 17-digit double literal, so the 180 constants are one JSON string,
-# which the optimizer folds into a literal.
-_FACE_FRAMES_SQL = "from_json('{}', 'array<array<double>>')".format(json.dumps(
-    [[float(v) for v in (*c, *e1, *e2)] for c, e1, e2 in zip(_FACE_CENTER, _FACE_E1, _FACE_E2)]
-))
-
-# walk levels inlined into one projection; codegen's subexpression
-# elimination evaluates the shared inner levels once
-_WALK_LEVELS_PER_PROJECTION = 3
+# per face (centre, e1, e2) as big-endian doubles, the frames Hex7Id reads
+_FACE_FRAMES = np.hstack([_FACE_CENTER, _FACE_E1, _FACE_E2]).astype(">f8").tobytes()
 
 
-def _sql_rint(v: str) -> str:
-    return f"(({v}) + {_SQL_RINT_SHIFT} - {_SQL_RINT_SHIFT})"
-
-
-def _hex7_id_projections(lat: str, lon: str, res: int) -> list[list[str]]:
-    """:func:`hex7_id_np` as SQL text: a list of projections, each a
-    list of ``expr AS name`` items added to the columns before it.  The
-    last one yields ``__h7_id``.
-
-    Op for op the numpy chain, except where the result is provably the
-    same:
-
-    * ``np.radians`` is a multiply by pi/180, as here;
-    * the face dots are ``(x*c0 + y*c1) + z*c2``, the order of numpy's
-      BLAS product and of ``np.sum`` over three terms; face 19 - f's dot
-      is minus face f's, so ten dots give all twenty, and the face is
-      the first maximum, whose dot is the gnomonic denominator;
-    * ``np.round`` is rounding half to even (:data:`_SQL_RINT_SHIFT`);
-    * the walk keeps axial (a, b) = (i - k, j - k), which normalizing
-      leaves unchanged.  C ``lround(n / 7.0)`` for an integer ``n``
-      (never a tie) is the nearest integer to ``n * (1/7)``, which is
-      within 2^-40 of ``n / 7`` for ``|n| < 2^45``;
-    * the digit at level r is ``4i + 2j + k`` of the unit residual
-      (i, j, k) = normalize(da, db, 0), which is ``v mod 7`` for
-      ``v = 4 da + 2 db`` in -6..6.
-
-    A non-finite input is replaced by (0, 0) and its face nulled at the
-    end, and each nullable Spark function (``cos``, ``/``, ...) is
-    wrapped in ``coalesce``: non-nullable expressions compile to much
-    smaller code, which keeps the generated methods of a query stage
-    under the JIT's 8,000-byte limit.
-    """
-    rad = _sql_dbl(math.pi / 180.0)
-    phi, lam = (
-        f"coalesce(IF({_SQL_FINITE.format(v)}, {v}, 0D), 0D) * {rad}" for v in (lat, lon)
-    )
-    dots = [
-        f"(__h7_x * __h7_fr[{f}][0] + __h7_y * __h7_fr[{f}][1]) + __h7_z * __h7_fr[{f}][2]"
-        for f in range(10)
-    ]
-    face = "CASE {} ELSE 19 END".format(" ".join(
-        [f"WHEN __h7_d{f} >= __h7_g THEN {f}" for f in range(10)]
-        + [f"WHEN __h7_d{19 - f} <= -__h7_g THEN {f}" for f in range(10, 19)]
-    ))
-    t = [f"(__h7_{v} / __h7_g - __h7_c[{n}])" for n, v in enumerate("xyz")]
-    u, v = (
-        f"coalesce(({t[0]} * __h7_c[{k}] + {t[1]} * __h7_c[{k + 1}]) + {t[2]} * __h7_c[{k + 2}], 0D)"
-        for k in (3, 6)
-    )
-    # gnomonic plane → lattice: polar form, Class III rotation, scale
-    rs = f"hypot(__h7_u, __h7_v) * {_sql_dbl(_SQRT7 ** res / _RES0_U)}"
-    theta = "atan2(__h7_v, __h7_u)"
-    if _is_class_iii(res):
-        theta = f"{theta} - {_sql_dbl(_AP7_ROT)}"
-    aj = f"coalesce({rs} * sin({theta}) / {_sql_dbl(_SIN60)}, 0D)"
-    # cube-coordinate round, as _hex2d_to_ijk
-    s = "(-__h7_ai - __h7_aj)"
-    rq, rr, rs_ = _sql_rint("__h7_ai"), _sql_rint("__h7_aj"), _sql_rint(s)
-    dq, dr, ds = f"abs({rq} - __h7_ai)", f"abs({rr} - __h7_aj)", f"abs({rs_} - {s})"
-    fix_q = f"({dq} > {dr} AND {dq} > {ds})"
-    projections = [
-        [
-            f"{_FACE_FRAMES_SQL} AS __h7_fr",
-            f"coalesce(cos({phi}) * cos({lam}), 0D) AS __h7_x",
-            f"coalesce(cos({phi}) * sin({lam}), 0D) AS __h7_y",
-            f"coalesce(sin({phi}), 0D) AS __h7_z",
-        ],
-        [f"{d} AS __h7_d{f}" for f, d in enumerate(dots)]
-        + [f"greatest({', '.join(f'abs({d})' for d in dots)}) AS __h7_g"],
-        [f"{face} AS __h7_f", f"__h7_fr[{face}] AS __h7_c"],
-        [f"{u} AS __h7_u", f"{v} AS __h7_v"],
-        [f"{aj} AS __h7_aj", f"coalesce({rs} * cos({theta}), 0D) + {aj} * 0.5D AS __h7_ai"],
-        [
-            f"IF({fix_q}, -{rr} - {rs_}, {rq}) AS __h7_a{res}",
-            f"IF(NOT {fix_q} AND {dr} > {ds}, -{rq} - {rs_}, {rr}) AS __h7_b{res}",
-        ],
-    ]
-    # walk up to res 0, a few levels inlined per projection
-    a, b, items = f"__h7_a{res}", f"__h7_b{res}", []
-    for r in range(res, 0, -1):
-        if _is_class_iii(r):
-            a, b = f"(3D * {a} - {b})", f"({a} + 2D * {b})"
-        else:
-            a, b = f"(2D * {a} + {b})", f"(3D * {b} - {a})"
-        a, b = _sql_rint(f"{a} * {_SQL_SEVENTH}"), _sql_rint(f"{b} * {_SQL_SEVENTH}")
-        items += [f"{a} AS __h7_a{r - 1}", f"{b} AS __h7_b{r - 1}"]
-        if len(items) == 2 * _WALK_LEVELS_PER_PROJECTION or r == 1:
-            projections.append(items)
-            a, b, items = f"__h7_a{r - 1}", f"__h7_b{r - 1}", []
-    # digits from consecutive levels, then the id: everything below the
-    # face field is an integer under 2^52, exact in a double
-    low = []
-    for r in range(res, 0, -1):
-        a, b, pa, pb = f"__h7_a{r}", f"__h7_b{r}", f"__h7_a{r - 1}", f"__h7_b{r - 1}"
-        v = (
-            f"(4D * {a} + 2D * {b} - 6D * {pa} - 10D * {pb})" if _is_class_iii(r)
-            else f"(4D * {a} + 2D * {b} - 14D * {pa})"
-        )
-        floor7 = _sql_rint(f"({v} - 3D) * {_SQL_SEVENTH}")  # floor(v / 7), v in -6..6
-        low.append(f"({v} - 7D * {floor7}) * {8 ** (15 - r)}")
-    m = "least(__h7_a0, __h7_b0, 0D)"
-    low += [
-        f"least(__h7_a0 - {m}, 3D) * {2 ** 50}",
-        f"least(__h7_b0 - {m}, 3D) * {2 ** 48}",
-        f"least(-{m}, 3D) * {2 ** 46}",
-    ]
-    stamp = res << 57
-    for rr in range(res + 1, 16):
-        stamp |= 7 << (45 - 3 * rr)
-    finite = f"{_SQL_FINITE.format(lat)} AND {_SQL_FINITE.format(lon)}"
-    projections.append([
-        f"{stamp}L | shiftleft(CAST(IF({finite}, __h7_f, NULL) AS BIGINT), 52)"
-        f" | CAST({' + '.join(low)} AS BIGINT) AS __h7_id"
-    ])
-    return projections
-
-
-def _hex7_select(df, lat_col: str, lon_col: str, res: int, final: list[str]):
-    """``df`` through the encode's projections, then ``SELECT final``,
-    as one ``spark.sql`` text: ``final`` may use ``df``'s columns and
-    ``__h7_id``, the id.  One parse and one analysis, where a
-    ``selectExpr`` per projection analyzes the growing plan ten times."""
+def _hex7_sql(df, lat_col: str, lon_col: str, res: int) -> str:
+    """SQL text of the id of ``(lat_col, lon_col)`` at ``res``: a call of
+    the session's ``hex7_r{res}`` function (``jvm/Hex7Id.java``, built
+    with every constant from this module's numpy geometry)."""
     if not 0 <= res <= 15:
         raise ValueError(f"res must be 0..15, got {res}")
-    view = f"__h7_src_{uuid.uuid4().hex}"
-    sql = f"SELECT * FROM {view}"
-    for items in _hex7_id_projections(ident(lat_col), ident(lon_col), res):
-        sql = f"SELECT *, {', '.join(items)} FROM ({sql})"
-    spark = df.sparkSession
-    df.createOrReplaceTempView(view)
-    try:
-        return spark.sql(f"SELECT {', '.join(final)} FROM ({sql})")
-    finally:
-        # the session catalog's drop: Catalog.dropTempView also uncaches
-        # the view's plan, which is the caller's ``df`` if it is cached
-        spark._jsparkSession.sessionState().catalog().dropTempView(view)
+    name = deploy.java_udf(
+        df.sparkSession, f"hex7_r{res}", "geodata_spark.jvm.Hex7Id", "long",
+        res, _FACE_FRAMES, float(_SQRT7 ** res / _RES0_U),
+        float(_AP7_ROT) if _is_class_iii(res) else 0.0, float(_SIN60), _parent_bits(res)[1],
+    )
+    return f"{name}(CAST({ident(lat_col)} AS DOUBLE), CAST({ident(lon_col)} AS DOUBLE))"
 
 
 def with_hex7_probe(df, lat_col: str, lon_col: str, res: int, levels: list[int], out_col: str):
     """``df``'s columns other than ``out_col``, ``__h7_id`` (the point's
-    res-``res`` id) and ``out_col``: one row per level in ``levels``,
-    holding the point's ancestor at that res.
-
-    The key leaves through the generator: the optimizer traces a join
-    key down through projections by inlining their aliases (dynamic
-    partition pruning), which copies each walk level once per use,
-    exponentially in ``res``; it stops at a generator.  ``__h7_id``
-    rides beside it as a plain column, never a join key."""
+    res-``res`` id, as :func:`with_hex7_id`) and ``out_col``: one row
+    per level in ``levels``, holding the point's ancestor at that res.
+    The generator is the join's probe; ``__h7_id`` rides beside it as a
+    plain column, never a join key."""
     probes = ", ".join(
         "__h7_id" if r == res else hex7_parent_sql("__h7_id", r) for r in levels
     )
     cols = [ident(c) for c in df.columns if c != out_col]
-    return _hex7_select(
-        df, lat_col, lon_col, res,
-        [*cols, "__h7_id", f"explode(array({probes})) AS {ident(out_col)}"],
+    return df.selectExpr(*cols, f"{_hex7_sql(df, lat_col, lon_col, res)} AS __h7_id").selectExpr(
+        *cols, "__h7_id", f"explode(array({probes})) AS {ident(out_col)}"
     )
 
 
 def with_hex7_id(df, lat_col: str, lon_col: str, res: int, out_col: str):
     """``df`` plus ``out_col``: the hex7 id (LONG) of ``(lat_col,
-    lon_col)`` at ``res``, equal to :func:`hex7_id_np`, computed by
-    Catalyst expressions alone — no Python stage, whole-stage codegen.
-    ``out_col`` replaces a column of that name, as ``withColumn`` does.
-    The plan is built from one SQL text (:func:`_hex7_select`).
+    lon_col)`` at ``res``, equal to :func:`hex7_id_np`, computed by one
+    compiled JVM function (``geodata_spark/jvm/Hex7Id.java``) in one
+    projection — no Python stage, whole-stage codegen.  ``out_col``
+    replaces a column of that name, as ``withColumn`` does.  The first
+    call in a session compiles or reuses the jar and registers the
+    function (:func:`deploy.java_udf`).
 
     A NULL, NaN or ±inf latitude or longitude gives a NULL id.
 
-    Exactness: the projections repeat numpy's operations in numpy's
-    order (see :func:`_hex7_id_projections`), so ids are bit-identical
-    wherever the JVM's ``sin``, ``cos``, ``atan2`` and ``hypot`` return
-    numpy's values.  They may differ in the last ulp; an id can then
-    differ only for a point within an ulp of a cell edge or a face
-    tie.  Zone membership does not depend on such an id: a zone cover's
-    margin is at least a cell's circumradius, so a point inside a zone
-    lies in one of its full or boundary cells either way, and boundary
-    rows keep the exact PIP test.
+    Exactness: the function repeats numpy's operations in numpy's
+    order, so ids are bit-identical wherever the JVM's ``sin``, ``cos``,
+    ``atan2`` and ``hypot`` return numpy's values.  They may differ in
+    the last ulp; an id can then differ only for a point within an ulp
+    of a cell edge or a face tie.  Zone membership does not depend on
+    such an id: a zone cover's margin is at least a cell's
+    circumradius, so a point inside a zone lies in one of its full or
+    boundary cells either way, and boundary rows keep the exact PIP
+    test.
 
     :func:`spatial.join_zones` uses the same encode with the cover's
-    ancestor probe fused into its last projection (:func:`with_hex7_probe`).
+    ancestor probe (:func:`with_hex7_probe`).
     """
-    # the id leaves through a one-element generator (see with_hex7_probe)
-    key = f"explode(array(__h7_id)) AS {ident(out_col)}"
-    cols = [key if c == out_col else ident(c) for c in df.columns]
-    if out_col not in df.columns:
-        cols.append(key)
-    return _hex7_select(df, lat_col, lon_col, res, cols)
-
-
-# ---------------------------------------------------------------------------
-# canonical H3 (gated on the h3 wheel, like rasterio/xarray in sources.py)
-# ---------------------------------------------------------------------------
-
-def _h3_mod():
-    try:
-        import h3  # noqa: PLC0415
-    except ImportError as e:  # pragma: no cover - exercised via gate test
-        raise NotImplementedError(
-            "canonical H3 tokens need the `h3` wheel (not in this image; "
-            "no network to fetch Uber's base-cell convention tables). "
-            "Install h3 to activate; with_hex7_id is the from-scratch "
-            "aperture-7 index with the same plumbing."
-        ) from e
-    return h3
-
-
-def h3_token_udf(res: int):
-    """Canonical H3 tokens via the ``h3`` wheel (vectorized per Arrow
-    batch).  Raises NotImplementedError when the wheel is absent."""
-    _h3_mod()  # fail fast at definition site, not inside executors
-
-    @F.pandas_udf(T.StringType())
-    def _enc(lat: pd.Series, lon: pd.Series) -> pd.Series:
-        h3 = _h3_mod()
-        fn = getattr(h3, "latlng_to_cell", None) or getattr(h3, "geo_to_h3")
-        return pd.Series(
-            [fn(la, lo, res) for la, lo in zip(lat, lon)], index=lat.index
-        )
-
-    return _enc
-
-
-def with_hex_columns(df, lat_col: str = "lat", lon_col: str = "lon",
-                     resolutions: tuple[int, ...] = (5, 6, 7, 8, 9)):
-    """Attach ``hex7_r{res}`` id columns for each requested res."""
-    for r in resolutions:
-        df = with_hex7_id(df, lat_col, lon_col, r, f"hex7_r{r}")
-    return df
+    return df.withColumn(out_col, F.expr(_hex7_sql(df, lat_col, lon_col, res)))
 
 
 # ---------------------------------------------------------------------------

@@ -84,8 +84,8 @@ def q_zonal_wavg_hex(spark: SparkSession, sf_dir: str) -> DataFrame:
     (the north_star's H3-grain spatial join, end to end)."""
     docs = corpus(spark, sf_dir)
     pts = spatial.parse_geo_spans(docs)
-    # The hex encode is Catalyst projections in the scan stage (no
-    # Python worker).  Cover res stays 5: its compacted
+    # The hex encode is one compiled JVM function in the scan stage
+    # (no Python worker).  Cover res stays 5: its compacted
     # cover is 30,290 rows there (hex7_polyfill ~1.3 s once per catalog
     # on 4 vCPUs); res 6 is 80,549 rows but a 13.7 s build, and the
     # boundary-sliver win does not pay for that.
@@ -2899,7 +2899,7 @@ def q_events_asof_binned(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_hex_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Corpus-integrated hexagonal rollup: geo spans → hex7 res-5 cell
-    (Catalyst projections inside the scan stage) → count + dyadic sum
+    (one compiled JVM function inside the scan stage) → count + dyadic sum
     per cell.
 
     Oracle: the corpus grid is the finite deterministic NY×NX lattice,

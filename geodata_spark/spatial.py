@@ -15,7 +15,7 @@ are therefore compiled **on the driver** into a cover table
 (zone_id, cell_r{res}, boundary, edges) via the Sutherland-Hodgman
 planner (geometry.polygon_cover) and **broadcast**; membership becomes
 a broadcast hash equi-join on the cell id, fully JVM-side at both
-grains (the hex encode is Catalyst projections,
+grains (the hex encode is one compiled JVM function,
 :func:`hexgrid.with_hex7_id`).  Rows in *boundary* cells (a thin
 O(perimeter) sliver) take the exact PIP test over the polygon edges
 their cover row carries (:func:`pip_sql`) — the analog of the
@@ -394,9 +394,9 @@ def join_zones(
     (the cover's full/boundary contract is grain-independent — full
     cells prove membership, boundary cells fall through to the same
     exact PIP), different physical key.  The point-side encode is
-    :func:`hexgrid.with_hex7_probe`: the Catalyst encode of
+    :func:`hexgrid.with_hex7_probe`: the JVM encode of
     :func:`hexgrid.with_hex7_id`, in the scan stage with no Python
-    stage, whose last projection also emits the probe keys.  The
+    stage, followed by the generator of the probe keys.  The
     cover's full cells are compacted, so each point probes its ancestor
     at every res the cover holds (bit truncation in the JVM, one
     generated row each) and the output's ``cell_hex{res}`` is the

@@ -96,16 +96,6 @@ def test_s2_tokens_sane():
     assert len(set(t10)) == 3
 
 
-def test_s2_udf_matches_np(spark):
-    pts = [(40.0, 100.0), (-33.86, 151.21), (67.5, -42.0)]
-    sdf = spark.createDataFrame(pts, ["lat", "lon"])
-    udf = cells.s2_token_udf(12)
-    got = [r.tok for r in sdf.select(udf("lat", "lon").alias("tok")).collect()]
-    lat = np.array([p[0] for p in pts])
-    lon = np.array([p[1] for p in pts])
-    assert got == list(cells.s2_token_np(lat, lon, 12))
-
-
 def test_s2_tokens_ground_truth_fixtures():
     """Known (lat, lon, level) → token pins from the public S2 spec.
 

@@ -676,10 +676,8 @@ def test_areal_interp_shares_sum_to_pop(spark):
     attribute (mass preservation); overlapping zones contribute
     independent rows; every weight denominator is the zone's full
     lattice cell count."""
-    from geodata_spark.deploy import ensure_py_files
     from geodata_spark.queries import _AREAL_POP, q_areal_interp
 
-    ensure_py_files(spark)  # hex encode UDF runs on workers
     pdf = q_areal_interp(spark, "unused").toPandas()
     assert set(pdf.columns) == {"zone_id", "hex5", "n_cells_ab",
                                 "n_cells_a", "pop_share_r6"}

@@ -2,9 +2,8 @@
 
 Mirrors the S2 treatment in test_cells.py: hand-derived spec pins from
 the construction (face centers → all-zero digit tokens, unit lattice
-offsets → known digit sequences), global invariants, Catalyst ≡ numpy, and
-the canonical-H3 gate (documented Uber tokens behind ``import h3``,
-NotImplementedError contract when the wheel is absent).
+offsets → known digit sequences), global invariants, and the JVM
+encode ≡ numpy.
 """
 
 from __future__ import annotations
@@ -139,10 +138,15 @@ def _near_edges_and_vertices(seed: int, n: int = 300) -> tuple[np.ndarray, np.nd
 
 
 def test_with_hex7_id_matches_numpy(spark):
-    """The Catalyst encode equals hex7_id_np bit for bit at every res
-    on the corpus lattice (the hex5_grid_dim fixture's domain), 100k
-    uniform points, points near every icosahedron edge and vertex,
-    the hex_cells points and the face centres."""
+    """The JVM encode equals hex7_id_np bit for bit at every res on the
+    corpus lattice (the hex5_grid_dim fixture's domain), 100k uniform
+    points, points near every icosahedron edge and vertex, the
+    hex_cells points, the face centres and equator points of faces 18
+    and 19, whose gnomonic v is exactly 0.0 (u < 0 and u > 0) or, at
+    latitude -0.0 with u > 0, exactly -0.0: Spark's atan2 maps -0.0 to
+    0.0 and numpy's does not.  (From a (lat, lon) input v is never
+    -0.0 with u < 0.)  The input is an uncached local relation, which
+    the optimizer evaluates on the driver."""
     import pandas as pd
 
     from geodata_spark.synth import DLAT, DLON, LAT0, LON0, NX, NY
@@ -151,34 +155,39 @@ def test_with_hex7_id_matches_numpy(spark):
     yy, xx = np.meshgrid(np.arange(NY), np.arange(NX), indexing="ij")
     edge_lat, edge_lon = _near_edges_and_vertices(17)
     idx = np.arange(24)
+    equator = np.linspace(-45.0, 45.0, 181)
     lat = np.concatenate([
         LAT0 + DLAT * yy.ravel(), rng.uniform(-90, 90, 100_000), edge_lat,
         -78.0 + idx * 6.7, np.degrees(np.arcsin(H._FACE_CENTER[:, 2])),
+        np.zeros(len(equator)), np.full(len(equator), -0.0),
     ])
     lon = np.concatenate([
         LON0 + DLON * xx.ravel(), rng.uniform(-180, 180, 100_000), edge_lon,
         -168.0 + idx * 14.3, np.degrees(np.arctan2(H._FACE_CENTER[:, 1], H._FACE_CENTER[:, 0])),
+        equator, equator,
     ])
+    # (u, v) in the encode's order of operations
+    p = H._to_xyz(lat, lon)
+    face = H._geo_to_face_xy(lat, lon)[0]
+    c, e1, e2 = H._FACE_CENTER[face], H._FACE_E1[face], H._FACE_E2[face]
+    t = p / ((p[:, 0] * c[:, 0] + p[:, 1] * c[:, 1]) + p[:, 2] * c[:, 2])[:, None] - c
+    u, v = ((t[:, 0] * e[:, 0] + t[:, 1] * e[:, 1]) + t[:, 2] * e[:, 2] for e in (e1, e2))
+    assert ((v == 0.0) & (u < 0.0)).sum() > 100 and (np.signbit(v) & (v == 0.0)).sum() > 40
     df = spark.createDataFrame(pd.DataFrame({"n": np.arange(len(lat)), "lat": lat, "lon": lon}))
-    df = df.cache()
-    try:
-        for res in range(16):
-            got = (
-                H.with_hex7_id(df, "lat", "lon", res, "id").select("n", "id")
-                .toPandas().sort_values("n")["id"].to_numpy()
-            )
-            want = H.hex7_id_np(lat, lon, res)
-            bad = np.nonzero(got != want)[0]
-            assert len(bad) == 0, (res, len(bad), lat[bad[:3]], lon[bad[:3]])
-    finally:
-        df.unpersist()
+    for res in range(16):
+        got = (
+            H.with_hex7_id(df, "lat", "lon", res, "id").select("n", "id")
+            .toPandas().sort_values("n")["id"].to_numpy()
+        )
+        want = H.hex7_id_np(lat, lon, res)
+        bad = np.nonzero(got != want)[0]
+        assert len(bad) == 0, (res, len(bad), lat[bad[:3]], lon[bad[:3]])
 
 
 def test_with_hex7_id_null_and_columns(spark):
     """NULL, NaN and ±inf coordinates give a NULL id (no ANSI cast
     error); other columns keep their order and an existing ``out_col``
-    is replaced in place; with_hex_columns and hex7_token_expr build on
-    the same encode."""
+    is replaced in place; hex7_token_expr builds on the same encode."""
     import pyspark.sql.functions as F
 
     rows = [(1, 10.0, 20.0), (2, float("nan"), 20.0), (3, 10.0, float("inf")),
@@ -191,8 +200,6 @@ def test_with_hex7_id_null_and_columns(spark):
     assert got[1:] == [None] * 4
     tok = H.with_hex7_id(df, "lat", "lon", 7, "c").select(H.hex7_token_expr(F.col("c")))
     assert [r[0] for r in tok.collect()][0] == H.hex7_token_np(np.array([10.0]), np.array([20.0]), 7)[0]
-    wide = H.with_hex_columns(df, resolutions=(5, 9))
-    assert wide.columns == ["n", "lat", "lon", "hex7_r5", "hex7_r9"]
     with pytest.raises(ValueError):
         H.with_hex7_id(df, "lat", "lon", 16, "c")
 
@@ -212,24 +219,6 @@ def test_with_hex7_id_compiles_under_the_jit_limit(spark):
     finally:
         spark.conf.set("spark.sql.adaptive.enabled", conf)
     assert sizes and max(sizes) < 8000, sizes
-
-
-def test_canonical_h3_gate():
-    """Without the h3 wheel the canonical UDF must raise the
-    documented NotImplementedError at DEFINITION time (not inside an
-    executor); with the wheel, the documented Uber example tokens
-    must come back (publicly pinned in the H3 docs/README)."""
-    try:
-        import h3  # noqa: F401
-        have = True
-    except ImportError:
-        have = False
-    if not have:
-        with pytest.raises(NotImplementedError, match="h3. wheel"):
-            H.h3_token_udf(9)
-        return
-    fn = getattr(h3, "latlng_to_cell", None) or getattr(h3, "geo_to_h3")
-    assert fn(37.3615593, -122.0553238, 5) == "85283473fffffff"
 
 
 # ---------------------------------------------------------------------------

@@ -532,7 +532,7 @@ def test_hex_knn_plan_ring_equi_join(spark):
 def test_hex_zone_join_broadcasts_cover(spark):
     """Hex-grain zone membership keeps the flagship's physical shape:
     broadcast cover join + the edge PIP filter, and no Python stage
-    (the hex encode is Catalyst projections)."""
+    (the hex encode is one compiled JVM function)."""
     from geodata_spark import spatial
     from geodata_spark.synth import synth_documents
 

@@ -1,7 +1,7 @@
 """The north rule's deployment contract, executed for real:
 ``spark-submit --py-files geodata_spark.zip`` from a neutral CWD, the
 package importable ONLY from the zip (no repo checkout on the
-"cluster")."""
+"cluster"), its Java hex encode compiled from the zip's source."""
 
 from __future__ import annotations
 
@@ -69,3 +69,6 @@ def test_spark_submit_py_files_end_to_end(tmp_path):
     assert lines, proc.stdout[-2000:]
     out = json.loads(lines[-1])
     assert out["query"] == "zonal_daily_wavg" and out["rows"] > 0
+    # the hex-grain flagship shares the flagship's oracle, so its rows
+    # are the same groups; its encode is registered at runtime
+    assert out["hex_rows"] == out["rows"]

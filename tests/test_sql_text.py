@@ -6,6 +6,7 @@ from __future__ import annotations
 
 import datetime
 import decimal
+import re
 
 import numpy as np
 import pytest
@@ -208,9 +209,10 @@ def test_join_zones_pip_matches_numpy(spark, grain, res):
 
 
 def test_hex_encode_keeps_caller_cache_and_catalog(spark):
-    """The encode's one SQL text runs over a temporary view: dropping
-    it afterwards must not uncache the caller's DataFrame (the public
-    Catalog.dropTempView would), nor leave the view behind."""
+    """The encode keeps the caller's cached DataFrame cached and in its
+    plans, the probe's columns and rows are the id and its ancestors,
+    and a ``newSession()`` (which does not see the parent's functions)
+    encodes too, inside a whole-stage-codegen projection."""
     df = spark.range(50).selectExpr("id", "id * 1.5D AS lat", "id * 2.5D AS lon").cache()
     try:
         out = hexgrid.with_hex7_id(df, "lat", "lon", 5, "h")
@@ -218,7 +220,6 @@ def test_hex_encode_keeps_caller_cache_and_catalog(spark):
         assert df.is_cached
         for d in (out, probe):
             assert "InMemoryRelation" in d._jdf.queryExecution().optimizedPlan().toString()
-        assert not [t for t in spark.catalog.listTables() if t.name.startswith("__h7_")]
         assert probe.columns == ["id", "lat", "lon", "__h7_id", "p"]
         rows = probe.collect()
         own = {r.id: (r.lat, r.lon, r["__h7_id"]) for r in rows}
@@ -229,3 +230,10 @@ def test_hex_encode_keeps_caller_cache_and_catalog(spark):
         assert sorted(r.p for r in rows) == want
     finally:
         df.unpersist()
+    fresh = spark.newSession()
+    enc = hexgrid.with_hex7_id(
+        fresh.range(50).selectExpr("id", "id * 1.5D AS lat", "id * 2.5D AS lon"), "lat", "lon", 5, "h"
+    )
+    assert re.search(r"\*\(\d+\) Project \[.*hex7_r5\(", enc._jdf.queryExecution().executedPlan().toString())
+    got = enc.toPandas().sort_values("id")
+    assert (got["h"].to_numpy() == hexgrid.hex7_id_np(got["lat"].to_numpy(), got["lon"].to_numpy(), 5)).all()

@@ -39,20 +39,6 @@ BBOXES = {
 }
 
 
-def _session(cores: int):
-    from pyspark.sql import SparkSession
-
-    return (
-        SparkSession.builder.master(f"local[{cores}]")
-        .appName(f"bench_layout_{cores}")
-        .config("spark.sql.shuffle.partitions", str(cores))
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", "8g")
-        .getOrCreate()
-    )
-
-
 def _bbox_agg(spark, path, lat_r, lon_r):
     from pyspark.sql import functions as F
 
@@ -87,6 +73,7 @@ def main() -> None:
     from pyspark.sql import functions as F
 
     from geodata_spark import layout, spatial
+    from geodata_spark.session import get_spark
     from geodata_spark.synth import synth_documents
 
     tmp = tempfile.mkdtemp(prefix="bench_layout_")
@@ -94,7 +81,7 @@ def main() -> None:
     sorted_p = os.path.join(tmp, "zsorted")
 
     # build both layouts once, with a 32-core session
-    spark = _session(32)
+    spark = get_spark("bench_layout_32", master="local[32]")
     pts = (
         spatial.parse_geo_spans(synth_documents(spark, args.docs))
         .select("lat", "lon", "val")
@@ -120,7 +107,7 @@ def main() -> None:
 
     timings = {}
     for cores in (8, 32):
-        spark = _session(cores)
+        spark = get_spark(f"bench_layout_{cores}", master=f"local[{cores}]")
         for name, (lat_r, lon_r) in BBOXES.items():
             for label, path in (("shuffled", unsorted_p), ("z-order", sorted_p)):
                 _bbox_agg(spark, path, lat_r, lon_r)  # warm (fs cache, codegen)

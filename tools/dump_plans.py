@@ -70,15 +70,15 @@ NOTES = {
         "over the candidate disk only"
     ),
     "hex_rollup_multi": (
-        "hierarchical rollup: ONE Catalyst encode at res 5, one "
+        "hierarchical rollup: ONE JVM encode (hex7_r5) at res 5, one "
         "fact-cardinality shuffle, then the (res, token) triple "
         "explodes on the small aggregate and re-aggregates once — "
         "no GROUPING SETS fact-table Expand, no per-level union "
         "recompute"
     ),
     "zonal_wavg_hex": (
-        "hex-grain flagship: no Python stage — the hex encode is "
-        "Catalyst projections in the scan stage, its id feeding ONE "
+        "hex-grain flagship: no Python stage — the hex encode is one "
+        "compiled JVM function (hex7_r5) in the scan stage, its id feeding ONE "
         "Generate of the ancestor probe keys (one per res the "
         "compacted cover holds); broadcast hex-polyfill cover join "
         "with the same edge-parity PIP as its condition, two-phase hash agg"

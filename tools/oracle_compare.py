@@ -65,7 +65,8 @@ def _compare_one(name, q, sql, spark, con, np):
 def main() -> int:
     import duckdb
     import numpy as np
-    from pyspark.sql import SparkSession
+
+    from geodata_spark.session import get_spark
 
     argv = sys.argv[1:]
     json_out = None
@@ -74,13 +75,7 @@ def main() -> int:
         json_out = argv[i + 1]
         argv = argv[:i] + argv[i + 2:]
 
-    spark = (
-        SparkSession.builder.master("local[8]")
-        .config("spark.sql.shuffle.partitions", "8")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
+    spark = get_spark("oracle_compare", master="local[8]")
     spark.sparkContext.setLogLevel("ERROR")
     import __spark_entry__ as E
 

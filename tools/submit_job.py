@@ -9,8 +9,11 @@ Run as::
 
 The script imports ``geodata_spark`` ONLY from the --py-files zip
 (its own directory does not contain the package), runs the flagship
-zonal aggregation, and prints one JSON line — the minimal proof that
-the engine deploys to a cluster with no repo checkout on any node.
+zonal aggregation at grid and at hex grain, and prints one JSON line
+with both row counts — the minimal proof that the engine deploys to a
+cluster with no repo checkout on any node, its JVM hex encode
+included (compiled from the zip's Java source and registered in this
+session, which ``session.get_spark`` did not build).
 tests/test_spark_submit.py executes this for real against a local
 master from a neutral CWD.
 """
@@ -31,8 +34,9 @@ def main() -> None:
     # package arrives via --py-files on driver and executors alike
     from geodata_spark import queries as Q
 
-    rows = Q.q_zonal_daily_wavg(spark, sf_dir).collect()
-    print(json.dumps({"query": "zonal_daily_wavg", "rows": len(rows)}))
+    rows = len(Q.q_zonal_daily_wavg(spark, sf_dir).collect())
+    hex_rows = len(Q.q_zonal_wavg_hex(spark, sf_dir).collect())
+    print(json.dumps({"query": "zonal_daily_wavg", "rows": rows, "hex_rows": hex_rows}))
     spark.stop()
 
 
