@@ -23,6 +23,7 @@ import shutil
 import subprocess
 import tempfile
 import threading
+import time
 import zipfile
 from functools import reduce
 
@@ -34,11 +35,29 @@ _FUNCTIONS = "_geodata_spark_functions"
 _SHIPPED = (".py", ".java")
 _JAVA_SOURCE = "jvm/Hex7Id.java"
 _LOCK = threading.Lock()
+_ZIP_PREFIX = "geodata_spark_pyfiles_"
+_JAR_PREFIX = "geodata_spark_jvm_"
+# a build of another stamp not modified for this long is no one's
+_STALE_S = 3600.0
+
+
+def _drop_stale(prefix: str, keep: str) -> None:
+    """Delete the temp dir's ``prefix*`` files other than ``keep`` that
+    have not been modified for :data:`_STALE_S`: builds of older stamps
+    and temporaries a killed build left."""
+    now = time.time()
+    for path in glob.glob(os.path.join(glob.escape(tempfile.gettempdir()), prefix + "*")):
+        try:
+            if path != keep and now - os.path.getmtime(path) > _STALE_S:
+                os.remove(path)
+        except OSError:  # gone already: another process pruned it
+            pass
 
 
 def package_zip_path() -> str:
     """Build (or reuse) a zip of the geodata_spark package: its Python
-    modules and the Java source :func:`java_udf` compiles."""
+    modules and the Java source :func:`java_udf` compiles.  A build
+    deletes zips of other stamps unmodified for an hour."""
     import geodata_spark
 
     pkg_dir = os.path.dirname(os.path.abspath(geodata_spark.__file__))
@@ -49,7 +68,7 @@ def package_zip_path() -> str:
         if f.endswith(_SHIPPED)
     )
     zpath = os.path.join(
-        tempfile.gettempdir(), f"geodata_spark_pyfiles_{int(stamp)}.zip"
+        tempfile.gettempdir(), f"{_ZIP_PREFIX}{int(stamp)}.zip"
     )
     if not os.path.exists(zpath):
         tmp = zpath + f".tmp{os.getpid()}"
@@ -63,6 +82,7 @@ def package_zip_path() -> str:
                         )
                         zf.write(full, rel)
         os.replace(tmp, zpath)
+        _drop_stale(_ZIP_PREFIX, zpath)
     return zpath
 
 
@@ -80,12 +100,13 @@ def jar_path() -> str:
 
     The source is read through the package loader, so this works from
     the ``--py-files`` zip too; the jar is cached in the temp dir under
-    the source's sha256."""
+    the source's sha256.  A build deletes jars of other hashes
+    unmodified for an hour."""
     import pyspark
 
     src = pkgutil.get_data("geodata_spark", _JAVA_SOURCE)
     jpath = os.path.join(
-        tempfile.gettempdir(), f"geodata_spark_jvm_{hashlib.sha256(src).hexdigest()}.jar"
+        tempfile.gettempdir(), f"{_JAR_PREFIX}{hashlib.sha256(src).hexdigest()}.jar"
     )
     if os.path.exists(jpath):
         return jpath
@@ -116,6 +137,7 @@ def jar_path() -> str:
                     full = os.path.join(dp, f)
                     zf.write(full, os.path.relpath(full, out))
         os.replace(tmp, jpath)
+    _drop_stale(_JAR_PREFIX, jpath)
     return jpath
 
 

@@ -12,13 +12,21 @@ a later migration is a metadata import (``add_files``), not a rewrite.
 Replaces nothing in the reference (its sink is a local netCDF tree,
 ``src/geodata/dataset.py`` + ``cutout.py`` per-month files); this is
 the Spark-native equivalent of that persistence layer.
+
+:func:`merge_upsert` keeps a ``_manifest.json`` at the table root
+(``geodata_spark.manifest``): the data schema and file list after its
+last commit, so its next target read runs no schema-inference job while
+no one else has written the table.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
+from geodata_spark import manifest
+from geodata_spark.fixpoint import job_description
 from geodata_spark.sqltext import ident, lit
 
 
@@ -231,14 +239,25 @@ def merge_upsert(
 
     1. the touched-partition list comes from one tiny distinct on the
        update batch (bounded by the batch's partition fan-out, the
-       only ``collect``);
+       only ``collect``), with each value's directory name;
     2. the target read prunes to those partitions (pushed partition
-       filter on the scan);
+       filter on the scan; a NULL value is matched with ``IS NULL``).
+       It uses the schema the table's ``_manifest.json`` records, so no
+       inference job runs, when the manifest's file list equals the
+       scan's listing; otherwise it infers
+       (``geodata_spark.manifest.Table.read``);
     3. survivors come from ONE hash aggregation (``max(struct(...))``,
        map-side combinable) — no window sort;
     4. the write runs in dynamic partition-overwrite mode, so
        untouched partitions are never rewritten (their files stay
-       byte-identical) and re-running the same merge is idempotent.
+       byte-identical) and re-running the same merge is idempotent;
+    5. after the commit, ``_manifest.json`` is rewritten from the
+       listing the target read holds, with the rewritten directories
+       listed again, when the written data schema equals the schema
+       read (a table whose schema the batch changed keeps inferring).
+
+    The collect and the write run as labelled jobs.  Returns the
+    touched partition values sorted, NULL last.
 
     Iceberg note: with a configured catalog (``iceberg_catalog``) the
     same plan becomes ``MERGE INTO`` against snapshot isolation; this
@@ -255,42 +274,66 @@ def merge_upsert(
     """
     from pyspark.errors import AnalysisException
 
-    parts = [r[0] for r in updates.select(partition_col).distinct().collect()]
-    data_cols = [c for c in updates.columns if c not in (partition_col, seq_col)]
+    pc = ident(partition_col)
+    table = manifest.Table(spark, target_path)
+    with job_description(spark, "sinks.merge_upsert: touched partitions") as sc:
+        rows = updates.selectExpr(pc, f"CAST({pc} AS STRING)").distinct().collect()
+        parts = [r[0] for r in rows]
+        data_cols = [c for c in updates.columns if c not in (partition_col, seq_col)]
 
-    # Only the READ sits in the try: a select/union failure (schema
-    # drift between target and updates) must propagate — treating it
-    # as "first merge" would overwrite touched partitions with
-    # updates-only rows and silently drop every pre-existing key.
-    try:
-        target = spark.read.parquet(target_path)
-    except AnalysisException:  # first merge: target does not exist yet
-        target = None
-    if target is None:
-        merged = updates
-    else:
-        touched = f"{ident(partition_col)} IN ({', '.join(lit(p) for p in parts)})"
-        merged = (
-            target.filter(touched if parts else "false")
-            .select(updates.columns)
-            .unionByName(updates)
+        # Only the READ sits in the try: a select/union failure (schema
+        # drift between target and updates) must propagate — treating it
+        # as "first merge" would overwrite touched partitions with
+        # updates-only rows and silently drop every pre-existing key.
+        try:
+            target, held = table.read(partition_col)
+        except AnalysisException:  # first merge: target does not exist yet
+            target, held = None, []
+        if target is None:
+            merged = updates
+        else:
+            values = [lit(p) for p in parts if p is not None]
+            touched = [f"{pc} IN ({', '.join(values)})"] if values else []
+            if any(not r[1] for r in rows):  # NULL and '' share Spark's NULL directory
+                touched.append(f"{pc} IS NULL")
+            merged = (
+                target.filter(" OR ".join(touched) or "false")
+                .select(updates.columns)
+                .unionByName(updates)
+            )
+        ordered = [seq_col] + [c for c in data_cols if c not in key_cols]
+        surv = merged.groupBy(partition_col, *key_cols).agg(
+            F.expr(f"max(struct({', '.join(ident(c) for c in ordered)})) AS _s")
         )
-    ordered = [seq_col] + [c for c in data_cols if c not in key_cols]
-    surv = merged.groupBy(partition_col, *key_cols).agg(
-        F.expr(f"max(struct({', '.join(ident(c) for c in ordered)})) AS _s")
-    )
-    # one projection back to the update batch's column order
-    out = surv.selectExpr(*[
-        ident(c) if c == partition_col or c in key_cols else f"_s.{ident(c)} AS {ident(c)}"
-        for c in updates.columns
-    ])
-    # per-write option, NOT the session conf: scoping dynamic mode to
-    # this writer cannot leak into (or be clobbered by) concurrent
-    # writes in the same session
-    (
-        out.write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy(partition_col)
-        .parquet(target_path)
-    )
-    return {"touched_partitions": sorted(parts), "n_touched": len(parts)}
+        # one projection back to the update batch's column order
+        out = surv.selectExpr(*[
+            ident(c) if c == partition_col or c in key_cols else f"_s.{ident(c)} AS {ident(c)}"
+            for c in updates.columns
+        ])
+        # per-write option, NOT the session conf: scoping dynamic mode to
+        # this writer cannot leak into (or be clobbered by) concurrent
+        # writes in the same session
+        sc.setJobDescription("sinks.merge_upsert: write")
+        (
+            out.write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
+            .partitionBy(partition_col)
+            .parquet(target_path)
+        )
+    written = _data_fields(out.schema, partition_col)
+    if held is not None and (target is None or _data_fields(target.schema, partition_col) == written):
+        dirs = sorted({manifest.part_dir(partition_col, r[1]) for r in rows})
+        fresh = table.list_dirs(dirs)
+        if fresh is not None:
+            kept = [f for f in held if f[0].split("/", 1)[0] not in dirs]
+            schema = StructType([f for f in out.schema if f.name != partition_col])
+            table.write(schema, kept + fresh)
+    return {
+        "touched_partitions": sorted(parts, key=lambda p: (p is None, p)),
+        "n_touched": len(parts),
+    }
+
+
+def _data_fields(schema: StructType, partition_col: str) -> list:
+    """(name, type) of each column of ``schema`` but ``partition_col``."""
+    return [(f.name, f.dataType) for f in schema if f.name != partition_col]

@@ -175,3 +175,21 @@ def test_snapshot_id_stable_across_calls(spark, tmp_path):
     )
     assert r1["snapshot_id"] == r2["snapshot_id"]
     assert r1["snapshot_id"].startswith("snap-")
+
+
+def test_run_partitioned_null_partition(spark, tmp_path):
+    """A NULL partition value is sliced with IS NULL, runs last and reads
+    back as NULL, from a DataFrame (content fingerprint) and from a bare
+    scan (file fingerprint) alike."""
+    from geodata_spark import manifest
+
+    df = spark.createDataFrame([(d, k) for d in (1, None) for k in range(3)], "day int, k long")
+    src_path = str(tmp_path / "src")
+    df.write.partitionBy("day").parquet(src_path)
+    want = sorted(((k, d) for d in (1, None) for k in range(3)), key=repr)
+    for name, src in (("rows", df), ("files", spark.read.parquet(src_path))):
+        out = str(tmp_path / name)
+        res = lineage.run_partitioned(spark, src, lambda d: d.drop("day"), out, "day")
+        assert res["completed"] == ["1", manifest.NULL_KEY]
+        got = lineage.read_output(spark, out, "day").select("k", "day").collect()
+        assert sorted(((r.k, r.day) for r in got), key=repr) == want, name

@@ -230,3 +230,31 @@ def test_merge_upsert_partition_cow(spark, tmp_path):
     }
     assert final[(2, 0)] == (7, "new-2-0")     # stale lost
     assert final[(2, 1)] == (7, "zzz")         # tie -> max struct wins
+
+
+def test_merge_upsert_null_partition(spark, tmp_path):
+    """A batch into the NULL partition keeps that partition's other
+    rows; a batch mixing NULL and non-NULL values returns them NULL
+    last."""
+    tgt = str(tmp_path / "tbl")
+    cols = "day long, k long, seq long, v string"
+    base = spark.createDataFrame(
+        [(None, k, 0, f"n{k}") for k in range(3)] + [(1, 10, 0, "a")], cols
+    )
+    sinks.merge_upsert(spark, tgt, base, ["k"], "day", "seq")
+    res = sinks.merge_upsert(
+        spark, tgt, spark.createDataFrame([(None, 0, 1, "new")], cols), ["k"], "day", "seq"
+    )
+    assert res["touched_partitions"] == [None]
+    got = {(r.day, r.k): (r.seq, r.v) for r in spark.read.parquet(tgt).collect()}
+    assert got == {
+        (None, 0): (1, "new"), (None, 1): (0, "n1"), (None, 2): (0, "n2"), (1, 10): (0, "a")
+    }
+    mixed = spark.createDataFrame([(None, 1, 2, "m"), (2, 20, 2, "b"), (1, 10, 2, "c")], cols)
+    res = sinks.merge_upsert(spark, tgt, mixed, ["k"], "day", "seq")
+    assert res["touched_partitions"] == [1, 2, None]
+    got = {(r.day, r.k): (r.seq, r.v) for r in spark.read.parquet(tgt).collect()}
+    assert got == {
+        (None, 0): (1, "new"), (None, 1): (2, "m"), (None, 2): (0, "n2"),
+        (1, 10): (2, "c"), (2, 20): (2, "b"),
+    }
