@@ -199,9 +199,9 @@ def flagship_prepared(spark, n_docs: int):
     from geodata_spark.zones import ZONES
 
     pts = spark.read.parquet(ensure_prepared(spark, n_docs))
-    cover = spatial.zone_cover_df(spark, ZONES, 9)
-    joined = pts.join(F.broadcast(cover), "cell_r9")
-    zoned = joined.filter(spatial.pip_sql("lat", "lon")).drop("boundary", "edges")
+    # the table's stored cell_r9 is the membership key
+    fn, _ = spatial.zone_member(spark, ZONES, 9)
+    zoned = pts.selectExpr("*", f"explode({fn}(cell_r9, lat, lon)) AS zone_id")
     weighted = zoned.withColumn(
         "w", zonal.oracle_area_weight_expr(F.col("lat"))
     ).withColumn("day_idx", (F.col("hour") / F.lit(24)).cast("int"))
@@ -808,8 +808,8 @@ def scaling() -> dict:
             f"""# BENCH — flagship throughput & scaling
 
 Flagship job: interleaved-document corpus ({n:,} docs, parquet) →
-explode + parse geo spans → broadcast zone-cover join (Catalyst-
-compiled PIP on boundary cells) → plain partial+final zonal daily
+explode + parse geo spans → zone membership function (compiled JVM
+lookup, exact PIP on boundary cells) → plain partial+final zonal daily
 weighted mean.  Fresh JVM per run; full-size warmup pass; best of
 {rounds} interleaved trials per parallelism level; identical input for
 all runs (the in-sandbox proxy for N vs 4N executors per BASELINE.json

@@ -8,17 +8,18 @@ package by module path.  :func:`ensure_py_files` reproduces the
 --py-files behavior at runtime: zip the package once and register it
 with ``SparkContext.addPyFile`` (idempotent per session).
 
-The hex encode is one Java class shipped as source in the package;
-:func:`java_udf` compiles it (so the driver needs a JDK 17+ ``javac``),
-adds the jar and registers the function in the session.
+The package's JVM functions (the hex encode, zone membership) are
+Java classes shipped as source in ``jvm/``; :func:`jar_path` compiles
+them into one jar (so the driver needs a JDK 17+ ``javac``) and
+:func:`java_udf` adds it and registers a function in the session.
 """
 
 from __future__ import annotations
 
 import glob
 import hashlib
+import importlib.resources
 import os
-import pkgutil
 import shutil
 import subprocess
 import tempfile
@@ -28,17 +29,20 @@ import zipfile
 from functools import reduce
 
 from pyspark.sql import SparkSession
+from pyspark.sql.types import DataType
 
 _SENT = "_geodata_spark_pyfiles_shipped"
 _JAR_SENT = "_geodata_spark_jar_added"
 _FUNCTIONS = "_geodata_spark_functions"
 _SHIPPED = (".py", ".java")
-_JAVA_SOURCE = "jvm/Hex7Id.java"
 _LOCK = threading.Lock()
 _ZIP_PREFIX = "geodata_spark_pyfiles_"
 _JAR_PREFIX = "geodata_spark_jvm_"
 # a build of another stamp not modified for this long is no one's
 _STALE_S = 3600.0
+# the Spark jars the Java sources compile against: the function
+# interfaces, Broadcast, and the Logging trait Broadcast extends
+_COMPILE_JARS = ("spark-sql-api_*.jar", "spark-core_*.jar", "spark-common-utils_*.jar")
 
 
 def _drop_stale(prefix: str, keep: str) -> None:
@@ -95,41 +99,53 @@ def ensure_py_files(spark: SparkSession) -> None:
     setattr(sc, _SENT, True)
 
 
-def jar_path() -> str:
-    """Build (or reuse) the jar of the package's Java source.
+def _java_sources() -> dict[str, bytes]:
+    """The package's ``jvm/*.java`` by file name, read through the
+    package loader, so this works from the ``--py-files`` zip too."""
+    jvm = importlib.resources.files("geodata_spark") / "jvm"
+    return {f.name: f.read_bytes() for f in jvm.iterdir() if f.name.endswith(".java")}
 
-    The source is read through the package loader, so this works from
-    the ``--py-files`` zip too; the jar is cached in the temp dir under
-    the source's sha256.  A build deletes jars of other hashes
+
+def jar_path() -> str:
+    """Build (or reuse) the one jar of the package's Java sources.
+
+    The jar is cached in the temp dir under the sha256 of every source
+    (names and contents).  A build deletes jars of other hashes
     unmodified for an hour."""
     import pyspark
 
-    src = pkgutil.get_data("geodata_spark", _JAVA_SOURCE)
-    jpath = os.path.join(
-        tempfile.gettempdir(), f"{_JAR_PREFIX}{hashlib.sha256(src).hexdigest()}.jar"
-    )
+    srcs = _java_sources()
+    digest = hashlib.sha256()
+    for name in sorted(srcs):
+        digest.update(name.encode() + b"\0" + srcs[name] + b"\0")
+    jpath = os.path.join(tempfile.gettempdir(), f"{_JAR_PREFIX}{digest.hexdigest()}.jar")
     if os.path.exists(jpath):
         return jpath
     java_home = os.environ.get("JAVA_HOME")
     javac = (java_home and shutil.which("javac", path=os.path.join(java_home, "bin"))) or shutil.which("javac")
     if not javac:
-        raise RuntimeError(f"the hex encode compiles {_JAVA_SOURCE} and needs a JDK 17+: no javac")
+        raise RuntimeError("the package's JVM functions compile from jvm/*.java and need a JDK 17+: no javac")
     # spark-submit runs pyspark from a zip under SPARK_HOME
     home = os.environ.get("SPARK_HOME") or os.path.dirname(pyspark.__file__)
-    api = glob.glob(os.path.join(home, "jars", "spark-sql-api_*.jar"))
-    if not api:
-        raise RuntimeError(f"no spark-sql-api jar under {home}/jars to compile {_JAVA_SOURCE}")
+    classpath = []
+    for pattern in _COMPILE_JARS:
+        found = glob.glob(os.path.join(glob.escape(home), "jars", pattern))
+        if not found:
+            raise RuntimeError(f"no {pattern} under {home}/jars to compile jvm/*.java")
+        classpath += found
     with tempfile.TemporaryDirectory() as work:
-        java = os.path.join(work, os.path.basename(_JAVA_SOURCE))
-        with open(java, "wb") as f:
-            f.write(src)
+        files = []
+        for name, src in sorted(srcs.items()):
+            files.append(os.path.join(work, name))
+            with open(files[-1], "wb") as f:
+                f.write(src)
         out = os.path.join(work, "classes")
         proc = subprocess.run(
-            [javac, "--release", "17", "-cp", os.pathsep.join(api), "-d", out, java],
+            [javac, "--release", "17", "-cp", os.pathsep.join(classpath), "-d", out, *files],
             capture_output=True, text=True,
         )
         if proc.returncode != 0:
-            raise RuntimeError(f"javac failed on {_JAVA_SOURCE}:\n{proc.stderr}")
+            raise RuntimeError(f"javac failed on jvm/*.java:\n{proc.stderr}")
         tmp = jpath + f".tmp{os.getpid()}"
         with zipfile.ZipFile(tmp, "w") as zf:
             for dp, _, fs in os.walk(out):
@@ -141,10 +157,10 @@ def jar_path() -> str:
     return jpath
 
 
-def java_udf(spark: SparkSession, name: str, cls: str, return_type: str, *args) -> str:
+def java_udf(spark: SparkSession, name: str, cls: str, return_type: DataType, *args) -> str:
     """Register ``new cls(*args)`` (a ``UDF1``..``UDF22`` of the
-    package's Java source) as the function ``name`` returning the DDL
-    type ``return_type`` in ``spark``, and return ``name``.
+    package's Java sources) as the function ``name`` returning
+    ``return_type`` in ``spark``, and return ``name``.
 
     The jar is added once per SparkContext and the function registered
     once per session (a ``newSession()`` does not see its parent's
@@ -164,6 +180,17 @@ def java_udf(spark: SparkSession, name: str, cls: str, return_type: str, *args) 
             jss.sharedState().jarClassLoader()
         )
         fn = reduce(getattr, cls.split("."), jvm)(*args)
-        jss.udf().register(name, fn, jss.parseDataType(f'"{return_type}"'))
+        jss.udf().register(name, fn, jss.parseDataType(return_type.json()))
         done.add(name)
     return name
+
+
+def drop_java_udf(spark: SparkSession, name: str) -> None:
+    """Drop the function ``name`` that :func:`java_udf` registered in
+    ``spark``; a later :func:`java_udf` call registers it anew.  Plans
+    built before keep the function object they resolved."""
+    with _LOCK:
+        done = spark.__dict__.get(_FUNCTIONS, set())
+        if name in done:
+            spark.sql(f"DROP TEMPORARY FUNCTION IF EXISTS {name}")
+            done.discard(name)

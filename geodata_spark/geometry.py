@@ -40,8 +40,9 @@ def points_in_polygon(px: np.ndarray, py: np.ndarray, poly: np.ndarray) -> np.nd
     of edges; edge ``k`` counts when ``(y1 > py) != (y2 > py)`` and
     ``px < (x2 - x1) * (py - y1) / (y2 - y1) + x1``, in that IEEE op
     order.  That rule also decides points on an edge or a vertex, and
-    the engine's zone join (``spatial.pip_sql``) evaluates the same
-    rule, so the two agree on every point, on-edge ones included.
+    the engine's zone membership function (``spatial.zone_member``,
+    ``jvm/ZoneMember.java``) evaluates the same rule, so the two agree
+    on every point, on-edge ones included.
     """
     px = np.asarray(px, dtype=np.float64)
     py = np.asarray(py, dtype=np.float64)

@@ -797,7 +797,7 @@ def _hex7_sql(df, lat_col: str, lon_col: str, res: int) -> str:
     if not 0 <= res <= 15:
         raise ValueError(f"res must be 0..15, got {res}")
     name = deploy.java_udf(
-        df.sparkSession, f"hex7_r{res}", "geodata_spark.jvm.Hex7Id", "long",
+        df.sparkSession, f"hex7_r{res}", "geodata_spark.jvm.Hex7Id", T.LongType(),
         res, _FACE_FRAMES, float(_SQRT7 ** res / _RES0_U),
         float(_AP7_ROT) if _is_class_iii(res) else 0.0, float(_SIN60), _parent_bits(res)[1],
     )
@@ -808,8 +808,8 @@ def with_hex7_probe(df, lat_col: str, lon_col: str, res: int, levels: list[int],
     """``df``'s columns other than ``out_col``, ``__h7_id`` (the point's
     res-``res`` id, as :func:`with_hex7_id`) and ``out_col``: one row
     per level in ``levels``, holding the point's ancestor at that res.
-    The generator is the join's probe; ``__h7_id`` rides beside it as a
-    plain column, never a join key."""
+    The generator is the zone lookup's probe (:func:`spatial.join_zones`);
+    ``__h7_id`` rides beside it as a plain column, never a lookup key."""
     probes = ", ".join(
         "__h7_id" if r == res else hex7_parent_sql("__h7_id", r) for r in levels
     )
@@ -883,8 +883,8 @@ def hex7_compact_np(cells: np.ndarray) -> np.ndarray:
     Why it matters at scale: a polyfill cover of a large zone is
     dominated by interior cells whose parents are fully inside;
     compacting the broadcast cover shrinks it ~7× per level of
-    interior depth, and membership tests join against ancestors at
-    EVERY resolution present (cheap: one parent projection per res).
+    interior depth, and membership looks up ancestors at EVERY
+    resolution present (cheap: one parent projection per res).
     Driver-side, model-sized — covers broadcast by contract."""
     cur = np.unique(np.asarray(cells, dtype=np.int64))
     done: list[np.ndarray] = []

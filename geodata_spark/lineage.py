@@ -42,6 +42,8 @@ import threading
 import time
 from concurrent.futures import ThreadPoolExecutor
 
+from py4j.protocol import Py4JJavaError
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
@@ -238,6 +240,18 @@ def read_output(spark: SparkSession, out_path: str, partition_col: str) -> DataF
     the inferred schema after a write the manifest does not describe,
     without a manifest, or when the recorded output has a column named
     ``partition_col``.  Both give the same columns, in the same order,
-    of the same types."""
-    pattern = f"{manifest.escape(partition_col)}=*"
-    return manifest.Table(spark, out_path).read(partition_col, pattern)[0]
+    of the same types.
+
+    The scan reads the root, not a ``<col>=*`` glob: Spark probes a
+    glob for a streaming sink's ``_spark_metadata`` and logs the failed
+    probe's stack.  A root that holds more than partition directories
+    (visible files beside them) reads the glob, as before."""
+    table = manifest.Table(spark, out_path)
+    head = f"{manifest.escape(partition_col)}="
+    try:
+        df, files = table.read(partition_col)
+        if files and all(f[0].startswith(head) and "/" in f[0] for f in files):
+            return df
+    except (AnalysisException, Py4JJavaError):  # missing, or mixed layouts
+        pass
+    return table.read(partition_col, f"{head}*")[0]

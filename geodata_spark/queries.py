@@ -4475,7 +4475,7 @@ def q_zone_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     y = a + b·hour per zone — the "is this region warming" pre-analysis
     over the engine's own zonal series.  All reductions are exact
     dyadic sums EXCEPT the zonal mean's division, so slope/intercept
-    round to 6 dp.  Shapes: grid→zone broadcast cover join, one agg per
+    round to 6 dp.  Shapes: grid→zone membership function, one agg per
     (zone, hour), then a zone-keyed agg over the tiny series — the
     same two-shuffle cascade at any scale."""
     gv = synth_grid_vars(
@@ -5262,9 +5262,9 @@ def q_areal_interp(spark: SparkSession, sf_dir: str) -> DataFrame:
     differ between engines), and the matrix form is what a user
     composes with any downstream attribute.
 
-    Plan: lattice → broadcast zone-cover join and its edge PIP filter
-    + hex encode in the same scan stage → ONE map-side-combined count on
-    (zone, hex); n_cells(A) re-aggregates that tiny result — the
+    Plan: lattice → zone membership function (exact edge PIP on
+    boundary cells) + hex encode in the same scan stage → ONE
+    map-side-combined count on (zone, hex); n_cells(A) re-aggregates that tiny result — the
     lattice is scanned once.  Overlapping zones (east_tri/coast_l)
     contribute independent rows, matching the reference's independent
     per-zone shape masks."""
@@ -5571,10 +5571,10 @@ FROM d WHERE d2zdx2 IS NOT NULL AND d2zdy2 IS NOT NULL
 def q_zonal_majority(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Zonal MAJORITY: dominant MODIS land-use class per zone — the
     categorical sibling of the zonal means (ArcGIS "zonal statistics:
-    majority").  Cells join zones via the broadcast cover and its edge
-    PIP, then per-(zone, class) counts and the max(struct(count, −class))
-    winner — the focal_majority total-order trick at zone grain, no
-    rank window.  All integers ⇒ bit-exact oracle; overlapping zones
+    majority").  Cells get their zones from the membership function
+    (spatial.join_zones), then per-(zone, class) counts and the
+    max(struct(count, −class)) winner — the focal_majority total-order
+    trick at zone grain, no rank window.  All integers ⇒ bit-exact oracle; overlapping zones
     count their shared cells in BOTH (independent per-zone masks)."""
     from geodata_spark.synth import synth_mask_layers
 

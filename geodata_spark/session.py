@@ -34,13 +34,17 @@ def driver_memory_conf(env: Mapping[str, str], phys_bytes: int) -> dict[str, str
     tiny -Xms triggers a growth/GC storm on the first allocation-heavy
     stage (observed 15x first-run outliers at local[32]).  That -Xms is
     8g at most and never above the effective heap, which a JVM would
-    refuse."""
+    refuse.  They do not pre-touch it (``-XX:+AlwaysPreTouch``): a
+    pre-touched -Xms is resident from the start, so two default
+    sessions on one host would each hold half of it before any work;
+    untouched, the reserved heap costs memory only as it is used.  Pass
+    ``SPARK_DRIVER_JAVA_OPTS`` to pre-touch, as a benchmark may."""
     heap = env.get("SPARK_DRIVER_MEM", f"{min(24 << 10, phys_bytes // 2 >> 20)}m")
     xms_mb = max(1, min(8 << 10, _jvm_bytes(heap) >> 20))
     return {
         "spark.driver.memory": heap,
         "spark.driver.extraJavaOptions": env.get(
-            "SPARK_DRIVER_JAVA_OPTS", f"-Xms{xms_mb}m -XX:+UseG1GC -XX:+AlwaysPreTouch"
+            "SPARK_DRIVER_JAVA_OPTS", f"-Xms{xms_mb}m -XX:+UseG1GC"
         ),
     }
 

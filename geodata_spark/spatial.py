@@ -1,4 +1,4 @@
-"""Spatial join operators: span parsing, zone cover join, PIP.
+"""Spatial join operators: span parsing, zone membership, PIP.
 
 The engine's counterpart of the reference's rasterize/clip pipeline:
 
@@ -7,26 +7,31 @@ The engine's counterpart of the reference's rasterize/clip pipeline:
 - ``extract_shapes`` (per-zone clip / semi-join, ``mask.py:607-705``)
   →  :func:`extract_zone_cells`
 - ``cutout.mask(dataset)`` grid-aligned overlay (``cutout.py:440-500``)
-  →  broadcast equi-join on cell id
+  →  a per-point membership lookup on cell id
 
 Plan shape (scale rationale): the polygon set is tiny (province-scale
 zone lists), the point/span table is the 10^12-row side.  The polygons
 are therefore compiled **on the driver** into a cover table
 (zone_id, cell_r{res}, boundary, edges) via the Sutherland-Hodgman
-planner (geometry.polygon_cover) and **broadcast**; membership becomes
-a broadcast hash equi-join on the cell id, fully JVM-side at both
-grains (the hex encode is one compiled JVM function,
-:func:`hexgrid.with_hex7_id`).  Rows in *boundary* cells (a thin
-O(perimeter) sliver) take the exact PIP test over the polygon edges
-their cover row carries (:func:`pip_sql`) — the analog of the
-reference's per-boundary-pixel geometry_mask test
-(``mask.py:593-599``).  It is one SQL text for any zone size; its cost
-scales with the edges per boundary cell.
+planner (geometry.polygon_cover), packed into bytes and **broadcast
+once per SparkContext**; membership is one compiled JVM function
+(:func:`zone_member`, ``jvm/ZoneMember.java``) that looks up the
+point's cell key in the sorted cover.  A query is then one projection
+and an ``explode`` of the zone ids: no join, no per-query broadcast,
+no Python stage, at both grains (the hex encode is one compiled JVM
+function too, :func:`hexgrid.with_hex7_id`).  Rows in *boundary*
+cells (a thin O(perimeter) sliver) take the exact PIP test over the
+polygon edges their cover row carries — the analog of the reference's
+per-boundary-pixel geometry_mask test (``mask.py:593-599``).  No SQL
+text grows with the zone count or size; the cost scales with the
+edges per boundary cell.
 """
 
 from __future__ import annotations
 
+import struct
 import threading
+import weakref
 from collections import OrderedDict
 
 import numpy as np
@@ -102,15 +107,15 @@ def parse_geo_spans(docs: DataFrame, kinds: tuple[str, ...] = ("geo",)) -> DataF
     )
 
 
-# Both cover memos are LRU-bounded at this many entries.  The registry
+# The cover memos are LRU-bounded at this many entries.  The registry
 # uses two covers per session (grid res 9, hex res 5); the larger, grid
 # res 9 over ZONES, is 33,094 rows; hex res 5 is 30,290 rows (its full
 # cells compacted).
 COVER_CACHE_LIMIT = 8
 
 # A cover's edge lists hold at most this many edges in all.  The cover
-# is a forced broadcast and an edge is five doubles, so the bound keeps
-# its edges near 50 MB.  ZONES holds 248 at grid res 9 and 29,388 at
+# is broadcast and an edge is five doubles, so the bound keeps its
+# edges near 40 MB.  ZONES holds 248 at grid res 9 and 29,388 at
 # hex res 5.
 COVER_EDGE_LIMIT = 1_000_000
 
@@ -125,9 +130,13 @@ _COVER_CACHE: OrderedDict[tuple, "pa.Table"] = OrderedDict()
 # (session id, catalog hash, res, grain) -> checkpointed cover DataFrame.
 # The id is safe as a key: the cached DataFrame keeps its session alive.
 _COVER_DF_CACHE: OrderedDict[tuple, DataFrame] = OrderedDict()
+# (SparkContext id, catalog hash, res, grain) -> _Member: the cover's
+# broadcast and the sessions its membership function is registered in.
+# The id is safe as a key: the entry keeps its SparkContext alive.
+_MEMBER_CACHE: OrderedDict[tuple, "_Member"] = OrderedDict()
 # join_zones runs from lineage's partition threads: one lock guards
-# both memos, and holding it across a build runs one planner and one
-# checkpoint job per key however many threads ask at once
+# the memos, and holding it across a build runs one planner, one
+# checkpoint job and one broadcast per key however many threads ask
 _COVER_LOCK = threading.Lock()
 
 
@@ -138,10 +147,13 @@ def _lru_get(cache: OrderedDict, key: tuple):
     return hit
 
 
-def _lru_put(cache: OrderedDict, key: tuple, value) -> None:
+def _lru_put(cache: OrderedDict, key: tuple, value) -> list:
+    """Insert ``value`` and return the entries evicted to make room."""
     cache[key] = value
+    evicted = []
     while len(cache) > COVER_CACHE_LIMIT:
-        cache.popitem(last=False)
+        evicted.append(cache.popitem(last=False)[1])
+    return evicted
 
 
 def _zones_key(zones: dict[str, list[np.ndarray]]) -> str:
@@ -269,9 +281,11 @@ def zone_cover_df(
     """(zone_id, cell_r{res}, boundary, edges) cover table, built on the
     driver.
 
-    Zones are small; the output is meant to sit on the broadcast side
-    of the membership join.  ``boundary=true`` rows are res-``res``
-    cells that require the exact PIP test (:func:`pip_sql`); ``edges``
+    Zones are small.  The table is the cover :func:`zone_member`
+    packs into its function, as rows for SQL and for
+    :func:`extract_zone_cells`; :func:`join_zones` does not scan it.
+    ``boundary=true`` rows are res-``res`` cells that require the exact
+    PIP test; ``edges``
     holds every edge of the zone's rings a rightward ray from the cell
     can cross, as ``struct(y1, y2, x1, dx = x2 - x1, dy = y2 - y1)``.
     ``boundary=false`` rows hold no edges and prove membership by cell
@@ -292,7 +306,7 @@ def zone_cover_df(
     In both grains a ``(zone_id, cell)`` pair appears once, and full
     and boundary rows of a zone never overlap.
 
-    The broadcast grows with the edges per boundary cell (a zone of
+    The cover grows with the edges per boundary cell (a zone of
     thousands of vertices gives a cell the edges of its latitude band).
     Above ``COVER_EDGE_LIMIT`` edges it raises ``ValueError`` naming the
     zone and edge counts; plan at a finer resolution or split zones.
@@ -308,7 +322,9 @@ def zone_cover_df(
     Known failure mode: a local checkpoint lives only in the executors'
     block managers and has no lineage to recompute from.  Losing an
     executor that holds a cover block fails every later query that
-    uses the cover until the session is restarted.
+    scans this table (:func:`extract_zone_cells`, the ``zone_cover``
+    SQL view) until the session is restarted.  :func:`join_zones` does
+    not scan it: its function's broadcast keeps the driver's copy.
     """
     zones = zones or ZONES
     cell_col = f"cell_hex{res}" if grain == "hex" else f"cell_r{res}"
@@ -341,28 +357,125 @@ def zone_cover_df(
         return df
 
 
-def pip_sql(lat: str, lon: str) -> str:
-    """Exact zone membership of a row joined to a cover, as SQL text
-    over the cover's ``boundary`` and ``edges`` columns and the SQL
-    snippets ``lat`` and ``lon`` (usually quoted column names).
+class _Member:
+    """A cover's membership function: the broadcast of its packed
+    bytes, the resolutions its keys hold, the function's name and the
+    sessions it is registered in."""
 
-    A full row is a member.  A boundary row sums its edges' crossings,
-    each the IEEE op sequence of :func:`geometry.points_in_polygon`; the
-    parity of the sum over all rings is the XOR over rings of
-    :func:`geometry.points_in_rings`, and an edge the ray cannot cross
-    adds 0.  So the test equals ``points_in_rings`` bit for bit, on
-    edges and vertices too, and its text is the same for any zone.
-    ``aggregate`` runs interpreted, on boundary rows only; the cost
-    scales with the edges per boundary cell.
-    """
-    cross = (
-        f"CASE WHEN ((__e.y1 > {lat}) <> (__e.y2 > {lat})) "
-        f"AND ({lon} < (__e.dx * ({lat} - __e.y1) / __e.dy + __e.x1)) THEN 1 ELSE 0 END"
+    def __init__(self, sc, broadcast, levels: list[int], name: str):
+        self.sc, self.broadcast, self.levels, self.name = sc, broadcast, levels, name
+        self.sessions: "weakref.WeakSet[SparkSession]" = weakref.WeakSet()
+
+    def evict(self) -> None:
+        """Drop the function from its sessions and the executors' copies
+        of the cover.  The broadcast is unpersisted, never destroyed: a
+        plan built before still runs, fetching the driver's copy."""
+        from geodata_spark import deploy
+
+        for spark in list(self.sessions):
+            if spark.sparkContext._jsc is not None:
+                deploy.drop_java_udf(spark, self.name)
+        if self.sc._jsc is not None:
+            self.broadcast.unpersist(False)
+
+
+def _pack_cover(cols: "pa.Table", cell_col: str) -> bytes:
+    """A planned cover as the big-endian bytes ``jvm/ZoneMember.java``
+    reads: the zone ids, then per row sorted by key its key, zone
+    index, edge range and boundary flag, then five doubles per edge."""
+    zids = cols.column("zone_id").to_numpy(zero_copy_only=False)
+    names, zone = np.unique(zids, return_inverse=True)
+    keys = cols.column(cell_col).to_numpy()
+    order = np.argsort(keys, kind="stable")
+    edges = cols.column("edges").combine_chunks()
+    offsets = edges.offsets.to_numpy()
+    values = edges.values  # the child the offsets index, unsliced
+    table = np.stack([values.field(f).to_numpy() for f in _EDGE_FIELDS], axis=1)
+    head = [struct.pack(">i", len(names))]
+    for name in names:
+        b = str(name).encode()
+        head += [struct.pack(">i", len(b)), b]
+    return b"".join(
+        head
+        + [
+            struct.pack(">i", len(keys)),
+            keys[order].astype(">i8").tobytes(),
+            zone[order].astype(">i4").tobytes(),
+            offsets[:-1][order].astype(">i4").tobytes(),
+            offsets[1:][order].astype(">i4").tobytes(),
+            cols.column("boundary").to_numpy(zero_copy_only=False)[order].astype(np.uint8).tobytes(),
+            struct.pack(">i", len(table)),
+            table.astype(">f8").tobytes(),
+        ]
     )
-    return (
-        f"CASE WHEN NOT boundary THEN true "
-        f"ELSE aggregate(edges, 0, (__n, __e) -> __n + {cross}) % 2 = 1 END"
-    )
+
+
+def zone_member_name(zones: dict[str, list[np.ndarray]] | None, res: int, grain: str = "grid") -> str:
+    """The name :func:`zone_member` registers a cover's function under:
+    it depends only on the catalog (``None`` is ZONES), res and grain."""
+    return f"zone_member_{grain}{res}_{_zones_key(zones or ZONES)[:16]}"
+
+
+def zone_member(
+    spark: SparkSession,
+    zones: dict[str, list[np.ndarray]] | None = None,
+    res: int = 9,
+    grain: str = "grid",
+) -> tuple[str, list[int]]:
+    """The name of ``spark``'s zone-membership function for a cover, and
+    the resolutions of the cover's keys (one at grid grain; every res
+    of a compacted hex cover).
+
+    ``name(key, lat, lon)`` (BIGINT, DOUBLE, DOUBLE) returns the ids of
+    the zones whose cover rows at ``key`` contain the point: every full
+    row, and each boundary row whose edges the point's rightward ray
+    crosses an odd number of times.  That test is the IEEE op sequence
+    of :func:`geometry.points_in_polygon`, so membership equals
+    :func:`geometry.points_in_rings` bit for bit, on edges and vertices
+    too, for any zone size.  A NULL key has no zones; a NULL or NaN
+    coordinate only the zones of full rows.
+
+    The function is ``jvm/ZoneMember.java`` over one broadcast of the
+    packed cover, made once per (SparkContext, catalog, res, grain) and
+    registered once per session (:func:`deploy.java_udf`), so a query
+    ships no cover and runs no job to build one.  Broadcasts are
+    LRU-bounded by ``COVER_CACHE_LIMIT``: an eviction drops the
+    function from its sessions and unpersists the broadcast, without
+    destroying it.  SQL text may name the function
+    (:func:`zone_member_name`) once this registered it in the session."""
+    from geodata_spark import deploy
+
+    zones = zones or ZONES
+    zkey = _zones_key(zones)
+    cell_col = f"cell_hex{res}" if grain == "hex" else f"cell_r{res}"
+    sc = spark.sparkContext
+    key = (id(sc), zkey, res, grain)
+    with _COVER_LOCK:
+        # SparkContext.stop() clears _jsc: its broadcasts are gone
+        for k in [k for k, m in _MEMBER_CACHE.items() if m.sc._jsc is None]:
+            del _MEMBER_CACHE[k]
+        member = _lru_get(_MEMBER_CACHE, key)
+        if member is None:
+            cols = _cover_columns(zones, res, grain, cell_col)
+            if grain == "hex":
+                from geodata_spark import hexgrid as HG
+
+                levels = np.unique(HG.hex7_res_np(cols.column(cell_col).to_numpy())).tolist()
+            else:
+                levels = [res]
+            member = _Member(
+                sc, sc._jsc.broadcast(_pack_cover(cols, cell_col)), levels,
+                zone_member_name(zones, res, grain),
+            )
+            for old in _lru_put(_MEMBER_CACHE, key, member):
+                old.evict()
+        if spark not in member.sessions:
+            deploy.java_udf(
+                spark, member.name, "geodata_spark.jvm.ZoneMember",
+                T.ArrayType(T.StringType(), False), member.broadcast,
+            )
+            member.sessions.add(spark)
+        return member.name, member.levels
 
 
 def join_zones(
@@ -381,63 +494,64 @@ def join_zones(
     the reference's independent per-zone shape masks).  Points in no
     zone are dropped — the analog of nodata outside the mask.
 
-    One scan and no Python stage: the points join the broadcast cover
-    (:func:`zone_cover_df`) on their cell id, and :func:`pip_sql`
-    keeps full-cell rows and tests boundary-cell rows against the
-    edges their cover row carries.  The result equals
-    :func:`geometry.points_in_rings` for any zone size.  Its cost
-    scales with the edges per boundary cell, and the broadcast with
-    the edges per cover (bounded by ``COVER_EDGE_LIMIT``).
+    One scan, one projection and no join: each point's cell key goes
+    through the session's membership function (:func:`zone_member`),
+    and ``explode`` of the zone ids it returns gives the rows.  The
+    function holds the cover as one broadcast per SparkContext, so the
+    query plans no ``BroadcastExchange``, runs no job to collect the
+    cover, and has no Python stage.  The result equals
+    :func:`geometry.points_in_rings` for any zone size; its cost scales
+    with the edges per boundary cell, and the broadcast with the edges
+    per cover (bounded by ``COVER_EDGE_LIMIT``).
 
-    ``grain="hex"`` keys the membership join on the aperture-7
-    hexagonal index instead of the square grid: identical output rows
-    (the cover's full/boundary contract is grain-independent — full
-    cells prove membership, boundary cells fall through to the same
-    exact PIP), different physical key.  The point-side encode is
+    ``grain="hex"`` keys membership on the aperture-7 hexagonal index
+    instead of the square grid: identical output rows (the cover's
+    full/boundary contract is grain-independent — full cells prove
+    membership, boundary cells fall through to the same exact PIP),
+    different key.  The point-side encode is
     :func:`hexgrid.with_hex7_probe`: the JVM encode of
-    :func:`hexgrid.with_hex7_id`, in the scan stage with no Python
-    stage, followed by the generator of the probe keys.  The
-    cover's full cells are compacted, so each point probes its ancestor
-    at every res the cover holds (bit truncation in the JVM, one
-    generated row each) and the output's ``cell_hex{res}`` is the
-    point's own id, carried beside the probe.  The cover still
-    broadcasts.  The JVM's trigonometry may differ from numpy's in the
-    last ulp, so a point within an ulp of a cell edge may get the
-    neighbouring id; it still lies in one of the zone's full or
-    boundary cells (the cover's margin is at least a circumradius), and
-    boundary rows keep the exact PIP test, whose edges cover the cell
-    with a margin, so membership does not change.
+    :func:`hexgrid.with_hex7_id`, in the scan stage, followed by the
+    generator of the probe keys.  The cover's full cells are compacted,
+    so each point probes its ancestor at every res the cover holds (bit
+    truncation in the JVM, one generated row each), the function runs
+    on each probe key, and the output's ``cell_hex{res}`` is the
+    point's own id, carried beside the probe.  The JVM's trigonometry
+    may differ from numpy's in the last ulp, so a point within an ulp
+    of a cell edge may get the neighbouring id; it still lies in one of
+    the zone's full or boundary cells (the cover's margin is at least a
+    circumradius), and boundary rows keep the exact PIP test, whose
+    edges cover the cell with a margin, so membership does not change.
 
     Output columns: the key (``cell_r{res}`` or ``cell_hex{res}``,
     the point's own cell id), then the point's columns in order
     (a column of the key's name is replaced), then ``zone_id``.  Each
     step is built from SQL text (the grid key is
     :func:`cells.cell_sql`), with column names quoted by
-    :func:`sqltext.ident`.
+    :func:`sqltext.ident`; no text grows with the zone count.
 
     A point whose ``lat_col`` or ``lon_col`` is NULL, NaN or ±inf is
-    in no zone, at both grains: it is dropped by the cover join.
+    in no zone, at both grains: its key matches no cover row.
+
+    Known failure mode: the driver keeps the broadcast's copy of the
+    cover, so a lost executor costs a re-fetch, not the query; a
+    stopped SparkContext takes the broadcast with it, and the next call
+    in a new context broadcasts again.
 
     ``hex_encode`` is accepted for compatibility and ignored: both
     ``"row"`` and ``"dim"`` encode in one pass over the input.
     """
-    zones = zones or ZONES
-    cover = zone_cover_df(spark, zones, res, grain=grain)
+    fn, levels = zone_member(spark, zones, res, grain)
     lat, lon = sqltext.ident(lat_col), sqltext.ident(lon_col)
     cell_col = f"cell_hex{res}" if grain == "hex" else f"cell_r{res}"
     pcols = [sqltext.ident(c) for c in points.columns if c != cell_col]
     if grain == "hex":
         from geodata_spark import hexgrid as HG
 
-        # a point without a finite position has a NULL id: no match
-        with _COVER_LOCK:
-            cover_ids = _cover_columns(zones, res, grain, cell_col)[cell_col].to_numpy()
-        # compacted full cells: the point probes its ancestor at every
-        # res the cover holds.  A point matches at most one compacted
-        # full row per zone and boundary rows are res-``res`` only, so
-        # the rows are those of the plain equi-join on the point's id,
-        # which the output's key column gets back from ``__h7_id``.
-        levels = np.unique(HG.hex7_res_np(cover_ids)).tolist()
+        # a point without a finite position has a NULL id: no zones.
+        # A point matches at most one compacted full row per zone and
+        # boundary rows are res-``res`` only, so the probes give the
+        # rows of the plain lookup of the point's id, which the
+        # output's key column gets back from ``__h7_id``.
         pts = HG.with_hex7_probe(points, lat_col, lon_col, res, levels, cell_col)
         key = f"__h7_id AS {cell_col}"
     else:
@@ -450,9 +564,9 @@ def join_zones(
         finite = f"abs({lat}) < CAST('Infinity' AS DOUBLE) AND abs({lon}) < CAST('Infinity' AS DOUBLE)"
         cell = f"coalesce(CASE WHEN {finite} THEN {cells.cell_sql(lat, lon, res)} END, -1L)"
         pts = points.selectExpr(*pcols, f"{cell} AS {cell_col}")
-    joined = pts.join(F.broadcast(cover), cell_col).filter(pip_sql(lat, lon))
+    zone = f"explode({fn}({cell_col}, CAST({lat} AS DOUBLE), CAST({lon} AS DOUBLE))) AS zone_id"
     # key first (the point's own id), the point's columns, zone_id
-    return joined.selectExpr(key, *pcols, "zone_id")
+    return pts.selectExpr(key, *pcols, zone)
 
 
 def extract_zone_cells(
@@ -465,16 +579,18 @@ def extract_zone_cells(
     Returns (zone_id, cell_r{res}, interior) where interior cells are
     wholly inside the zone.  Boundary cells are resolved by testing the
     cell *center*, matching rasterio's all_touched=False default in the
-    reference's clip (``mask.py:682``), with :func:`pip_sql` over the
-    cover's own edges, as :func:`join_zones` tests points: no Python
-    stage, and a cost that scales with the edges per boundary cell.
+    reference's clip (``mask.py:682``), through the membership function
+    :func:`join_zones` calls (:func:`zone_member`): no Python stage, and
+    a cost that scales with the edges per boundary cell.  The rows come
+    from :func:`zone_cover_df`, whose failure mode applies.
     """
     zones = zones or ZONES
     cover = zone_cover_df(spark, zones, res)
+    fn, _ = zone_member(spark, zones, res)
     cell_col = f"cell_r{res}"
     _, _, _, clat, clon = cells.decode_expr(F.col(cell_col))
     withc = cover.withColumn("_clat", clat).withColumn("_clon", clon)
     return (
-        withc.filter(pip_sql("_clat", "_clon"))
+        withc.filter(f"NOT boundary OR array_contains({fn}({cell_col}, _clat, _clon), zone_id)")
         .select("zone_id", cell_col, (~F.col("boundary")).alias("interior"))
     )

@@ -20,12 +20,13 @@ Views registered by :func:`register_views`:
   ``substring_index`` field cuts + cell encode), proving the
   span-parse path is expressible in the SQL dialect, not just Catalyst
   column objects;
-- ``zone_cover`` — the broadcastable (zone_id, cell, boundary, edges)
-  cover table.
+- ``zone_cover`` — the (zone_id, cell, boundary, edges) cover table;
+  and the cover's membership function
+  (:func:`spatial.zone_member`), which the zonal texts call.
 
 Scale note: views are metadata only — registering them costs nothing
 at 100 TB, and the SQL texts compile to the SAME physical plans as
-the DataFrame twins (broadcast hints included), so there is no
+the DataFrame twins, so there is no
 second, slower execution path to maintain.
 """
 
@@ -33,9 +34,9 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from geodata_spark import cells, zonal
+from geodata_spark import cells, spatial, zonal
 from geodata_spark.pipeline import text as TX
-from geodata_spark.spatial import GEO_FIELDS_SQL, pip_sql, zone_cover_df
+from geodata_spark.spatial import GEO_FIELDS_SQL, zone_cover_df
 from geodata_spark.zones import ZONES
 
 # register_views skip-cache, keyed per SparkSession (weakly: a closed
@@ -99,6 +100,8 @@ def register_views(
     """
     from geodata_spark import queries as Q  # local import: Q imports this module's deps
 
+    # outside the skip-cache: a cover eviction drops the function
+    spatial.zone_member(spark, ZONES, res)
     cached = _REGISTERED.get(spark)
     if (
         corpus is None
@@ -138,25 +141,22 @@ def register_views(
 # ---------------------------------------------------------------------------
 
 def zonal_daily_wavg_sql(res: int = 9) -> str:
-    """SQL twin of queries.q_zonal_daily_wavg: broadcast cover join,
-    the exact PIP of :func:`spatial.pip_sql` (the text
-    ``spatial.join_zones`` filters with) on boundary rows only, zonal
-    daily weighted mean.  Identical physical shape to the DataFrame
-    path — the BROADCAST hint keeps the cover on the build side."""
+    """SQL twin of queries.q_zonal_daily_wavg: a ``LATERAL VIEW
+    explode`` of the cover's membership function (the one
+    ``spatial.join_zones`` calls, registered by :func:`register_views`),
+    then the zonal daily weighted mean.  Identical physical shape to the
+    DataFrame path: no join, no cover broadcast per query."""
+    fn = spatial.zone_member_name(ZONES, res)
     return f"""
 WITH zoned AS (
-  SELECT /*+ BROADCAST(z) */ g.lat, g.lon, g.hour, g.val, z.zone_id,
-         z.boundary, z.edges
-  FROM geo_points g JOIN zone_cover z ON g.cell_r{res} = z.cell_r{res}
-),
-kept AS (
-  SELECT lat, lon, hour, val, zone_id FROM zoned
-  WHERE {pip_sql("lat", "lon")}
+  SELECT g.lat, g.lon, g.hour, g.val, z.zone_id
+  FROM geo_points g
+  LATERAL VIEW explode({fn}(g.cell_r{res}, g.lat, g.lon)) z AS zone_id
 ),
 weighted AS (
   SELECT zone_id, CAST(hour div 24 AS INT) AS day_idx, val,
          {zonal.ORACLE_AREA_WEIGHT_SQL} AS w
-  FROM kept
+  FROM zoned
 )
 SELECT zone_id, day_idx,
        sum(val * w) / sum(w) AS wavg,

@@ -54,10 +54,11 @@ def streaming_zonal_daily(docs_stream: DataFrame, spark: SparkSession,
                           watermark: str = "2 hours") -> DataFrame:
     """The flagship zonal daily weighted mean as a streaming query.
 
-    Same operators as the batch path (explode → parse → broadcast zone
-    cover join → windowed weighted aggregation); the PIP is a stateless
-    filter over the cover's edges, so the streaming plan is stateful
-    only at the final windowed aggregation.
+    Same operators as the batch path (explode → parse → zone
+    membership function → windowed weighted aggregation); membership
+    is a stateless projection over the session's cover broadcast, so
+    the streaming plan is stateful only at the final windowed
+    aggregation.
     """
     pts = spatial.parse_geo_spans(docs_stream)
     zoned = spatial.join_zones(pts, spark, ZONES, res=9)

@@ -1,11 +1,13 @@
 """deploy's temp-dir builds: building a new package zip or jar deletes
-stale builds of other stamps and nothing else."""
+stale builds of other stamps and nothing else; the one jar holds every
+Java source and is keyed by all of them."""
 
 from __future__ import annotations
 
 import os
 import tempfile
 import time
+import zipfile
 
 from geodata_spark import deploy
 
@@ -32,3 +34,19 @@ def test_builds_drop_stale_stamps(tmp_path, monkeypatch):
         os.path.basename(zpath), os.path.basename(jpath),
         "geodata_spark_pyfiles_3.zip", "geodata_spark_jvm_1.jar", "other_1.zip",
     ])
+
+
+def test_jar_is_keyed_by_every_source(tmp_path, monkeypatch):
+    monkeypatch.setenv("TMPDIR", str(tmp_path))
+    monkeypatch.setattr(tempfile, "tempdir", None)
+    srcs = deploy._java_sources()
+    assert sorted(srcs) == ["Hex7Id.java", "ZoneMember.java"]
+    first = deploy.jar_path()
+    with zipfile.ZipFile(first) as zf:
+        classes = set(zf.namelist())
+    assert {"geodata_spark/jvm/Hex7Id.class", "geodata_spark/jvm/ZoneMember.class"} <= classes
+    # a change to the second source alone builds a new jar
+    changed = dict(srcs, **{"ZoneMember.java": srcs["ZoneMember.java"] + b"\n// changed\n"})
+    monkeypatch.setattr(deploy, "_java_sources", lambda: changed)
+    second = deploy.jar_path()
+    assert second != first and os.path.exists(second) and os.path.exists(first)

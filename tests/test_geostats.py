@@ -857,11 +857,13 @@ def test_weibull_wind_fit_properties(spark):
 def test_r7_query_plan_shapes(spark):
     """Scale-shape pins for the round-7 operator batch: no cartesian
     anywhere; od_matrix = exactly its two keyed exchanges (user
-    window + pair agg); areal_interp and zonal_majority join via
-    broadcast only; bloom's screen stage carries no join for the
-    scan-side probe (the bitset is a codegen literal)."""
+    window + pair agg); areal_interp joins via broadcast only;
+    zonal_majority joins nothing (zone membership is the compiled
+    function, with no cover broadcast); bloom's screen stage carries
+    no join for the scan-side probe (the bitset is a codegen literal)."""
     from geodata_spark.queries import (q_areal_interp, q_bloom_decontam,
                                        q_od_matrix, q_zonal_majority)
+    from geodata_spark import spatial
 
     sf = "/root/testdata/sf0.001"
 
@@ -878,7 +880,8 @@ def test_r7_query_plan_shapes(spark):
 
     p_zm = plan(q_zonal_majority(spark, sf))
     assert "CartesianProduct" not in p_zm
-    assert "BroadcastHashJoin" in p_zm and "SortMergeJoin" not in p_zm
+    assert spatial.zone_member_name(None, 9) in p_zm
+    assert "Join" not in p_zm and "BroadcastExchange" not in p_zm
 
     p_bl = plan(q_bloom_decontam(spark, sf))
     assert "CartesianProduct" not in p_bl

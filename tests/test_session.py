@@ -6,7 +6,7 @@ import pytest
 from geodata_spark.session import driver_memory_conf
 
 GIB = 1 << 30
-PRE_TOUCH = "-XX:+UseG1GC -XX:+AlwaysPreTouch"
+GC = "-XX:+UseG1GC"
 
 
 def _conf(env, phys=64 * GIB):
@@ -15,8 +15,8 @@ def _conf(env, phys=64 * GIB):
 
 
 def test_default_heap_is_half_the_host_at_most_24g():
-    assert _conf({}, 15 * GIB) == ("7680m", f"-Xms7680m {PRE_TOUCH}")
-    assert _conf({}, 64 * GIB) == ("24576m", f"-Xms8192m {PRE_TOUCH}")
+    assert _conf({}, 15 * GIB) == ("7680m", f"-Xms7680m {GC}")
+    assert _conf({}, 64 * GIB) == ("24576m", f"-Xms8192m {GC}")
 
 
 @pytest.mark.parametrize("mem, xms", [
@@ -25,7 +25,16 @@ def test_default_heap_is_half_the_host_at_most_24g():
 ])
 def test_xms_is_capped_at_the_heap(mem, xms):
     # a JVM refuses an -Xms above its -Xmx (JAVA_GATEWAY_EXITED)
-    assert _conf({"SPARK_DRIVER_MEM": mem}) == (mem, f"-Xms{xms} {PRE_TOUCH}")
+    assert _conf({"SPARK_DRIVER_MEM": mem}) == (mem, f"-Xms{xms} {GC}")
+
+
+def test_default_does_not_pre_touch_the_heap():
+    # a pre-touched -Xms of half the host is resident from the start:
+    # two default sessions could not share the host
+    for env in ({}, {"SPARK_DRIVER_MEM": "2g"}):
+        opts = _conf(env, 15 * GIB)[1].split()
+        assert "-XX:+AlwaysPreTouch" not in opts
+        assert any(o.startswith("-Xms") for o in opts)
 
 
 def test_java_opts_override_is_kept_verbatim():

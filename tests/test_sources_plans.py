@@ -84,7 +84,8 @@ def _plan(df) -> str:
 
 
 def test_flagship_plan_single_scan_no_python(spark, corpus_parquet):
-    """ONE parquet scan, broadcast cover join, zero Python."""
+    """ONE parquet scan, zone membership as the compiled function with
+    no cover broadcast, zero Python."""
     from geodata_spark import spatial, zonal
     from geodata_spark.zones import ZONES
 
@@ -97,7 +98,8 @@ def test_flagship_plan_single_scan_no_python(spark, corpus_parquet):
     )
     plan = _plan(out)
     assert plan.count("FileScan parquet") + plan.count("Scan parquet") >= 1
-    assert "BroadcastHashJoin" in plan, "zone cover must broadcast"
+    assert spatial.zone_member_name(ZONES, 9) in plan, "membership is the compiled function"
+    assert "BroadcastExchange" not in plan, "the cover ships once per session, not per query"
     assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan, (
         "the zone join must not touch Python"
     )
@@ -529,10 +531,11 @@ def test_hex_knn_plan_ring_equi_join(spark):
     assert plan.count("ArrowEvalPython") >= 2  # disk UDF + face-cells UDF
 
 
-def test_hex_zone_join_broadcasts_cover(spark):
+def test_hex_zone_join_calls_member_function(spark):
     """Hex-grain zone membership keeps the flagship's physical shape:
-    broadcast cover join + the edge PIP filter, and no Python stage
-    (the hex encode is one compiled JVM function)."""
+    the compiled membership function on each probe key, no cover
+    broadcast per query, and no Python stage (the hex encode is one
+    compiled JVM function too)."""
     from geodata_spark import spatial
     from geodata_spark.synth import synth_documents
 
@@ -540,7 +543,8 @@ def test_hex_zone_join_broadcasts_cover(spark):
     pts = spatial.parse_geo_spans(docs)
     out = spatial.join_zones(pts, spark, res=5, grain="hex")
     plan = _plan(out)
-    assert "BroadcastHashJoin" in plan, "hex zone cover must broadcast"
+    assert spatial.zone_member_name(None, 5, "hex") in plan
+    assert "BroadcastExchange" not in plan and "Join" not in plan
     assert "CartesianProduct" not in plan
     assert plan.count("ArrowEvalPython") == plan.count("BatchEvalPython") == 0
 

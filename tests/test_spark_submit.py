@@ -1,7 +1,7 @@
 """The north rule's deployment contract, executed for real:
 ``spark-submit --py-files geodata_spark.zip`` from a neutral CWD, the
 package importable ONLY from the zip (no repo checkout on the
-"cluster"), its Java hex encode compiled from the zip's source."""
+"cluster"), its Java functions compiled from the zip's sources."""
 
 from __future__ import annotations
 
@@ -72,3 +72,6 @@ def test_spark_submit_py_files_end_to_end(tmp_path):
     # the hex-grain flagship shares the flagship's oracle, so its rows
     # are the same groups; its encode is registered at runtime
     assert out["hex_rows"] == out["rows"]
+    # a grid zone join, exact against numpy, through the compiled
+    # membership function
+    assert out["grid_join_exact"] is True

@@ -38,17 +38,19 @@ def test_sql_zonal_daily_wavg_matches_dataframe(spark, views):
     assert a == b and len(a) > 0
 
 
-def test_sql_zonal_plan_broadcasts_cover(spark, views):
+def test_sql_zonal_plan_calls_member_function(spark, views):
     """The SQL text must compile to the same physical shape as the
-    DataFrame path: broadcast cover join, no Python, single corpus
-    pass for the membership join."""
+    DataFrame path: the compiled membership function, no cover
+    broadcast per query, no Python."""
+    from geodata_spark import spatial
     from geodata_spark import sql_surface as S
 
     plan = (
         spark.sql(S.zonal_daily_wavg_sql())
         ._jdf.queryExecution().executedPlan().toString()
     )
-    assert "BroadcastHashJoin" in plan
+    assert spatial.zone_member_name(None, 9) in plan
+    assert "BroadcastExchange" not in plan
     assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
 
 

@@ -175,6 +175,39 @@ def test_read_output_reads_like_the_inferred_read(spark, tmp_path, monkeypatch, 
     assert _rows(got) == _rows(inferred)
 
 
+def test_read_output_reads_the_root_not_a_glob(spark, tmp_path):
+    """read_output scans the output root, not a ``<col>=*`` glob (whose
+    metadata probe fails and logs a stack), with the rows and schema of
+    the glob read: after a run, after a foreign write of a new
+    partition, and with a visible file beside the partitions, which
+    reads the glob after inferring the root's schema."""
+    path, out = str(tmp_path / "t"), str(tmp_path / "out")
+    _table(spark, path)
+    lineage.run_partitioned(spark, spark.read.parquet(path), _per_day, out, "day")
+
+    def roots(df):
+        index = df._jdf.queryExecution().analyzed().relation().location()
+        return index.rootPaths().mkString("\n").split("\n")
+
+    def foreign_partition():
+        spark.createDataFrame([(7, 1, "x")], "k long, n long, v string").write.parquet(
+            os.path.join(out, "day=9")
+        )
+
+    def stray_file():
+        (tmp_path / "out" / "notes.txt").write_text("not a partition")
+
+    for jobs, root_read, then in ((0, True, foreign_partition), (1, True, stray_file), (2, False, None)):
+        n_jobs, got = _count_jobs(spark, lambda: lineage.read_output(spark, out, "day"))
+        assert n_jobs == jobs
+        assert (roots(got) == ["file:" + out]) == root_read
+        inferred = spark.read.option("basePath", out).parquet(os.path.join(out, "day=*"))
+        assert _schema(got) == _schema(inferred)
+        assert _rows(got) == _rows(inferred)
+        if then:
+            then()
+
+
 def test_ingest_cycle_labels_every_job(spark, tmp_path):
     """An upsert, a re-aggregation (file-list and content fingerprints)
     and a read-back run no job without a description."""

@@ -1,5 +1,7 @@
 """zone_cover_df: a session-resident checkpoint, memoized per session,
-LRU-bounded, with the same rows and join output as a literal cover."""
+LRU-bounded, with the same rows as a literal cover; and the membership
+function join_zones calls: one cover broadcast per SparkContext, with
+the join output of a literal cover."""
 
 import sys
 from concurrent.futures import ThreadPoolExecutor
@@ -8,9 +10,10 @@ from types import SimpleNamespace
 import numpy as np
 import pandas as pd
 import pytest
+from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from geodata_spark import geometry, hexgrid, spatial
+from geodata_spark import cells, geometry, hexgrid, spatial
 from geodata_spark.zones import ZONES
 
 # two small zones: a rectangle and a triangle sharing its east edge
@@ -93,12 +96,16 @@ def test_cover_rows_unchanged(spark, grain, res):
 
 
 def test_cover_plan_scans_checkpoint(spark, points):
+    """The cover table scans its checkpoint; the join scans no cover at
+    all: it calls the membership function, with no cover broadcast."""
     cover = spatial.zone_cover_df(spark, TINY, 4, "hex")
     assert "LocalRelation" not in cover._jdf.queryExecution().optimizedPlan().toString()
     joined = spatial.join_zones(points, spark, TINY, res=4, grain="hex")
     plan = joined._jdf.queryExecution().executedPlan().toString()
-    assert "LocalTableScan" not in plan
-    assert "ExistingRDD" in plan and "BroadcastHashJoin" in plan
+    assert "LocalTableScan" not in plan and "ExistingRDD" not in plan
+    assert spatial.zone_member_name(TINY, 4, "hex") in plan
+    assert "BroadcastExchange" not in plan and "Join" not in plan
+    assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
 
 
 def test_hex_cover_full_cells_are_compacted():
@@ -147,18 +154,97 @@ def test_cover_edge_limit(spark, monkeypatch):
     assert spatial.zone_cover_df(spark, shifted, 9).count() > 0
 
 
+# the exact PIP as SQL over a literal cover row's ``boundary`` and
+# ``edges``: the op sequence of geometry.points_in_polygon per edge
+_LITERAL_PIP = (
+    "CASE WHEN NOT boundary THEN true ELSE aggregate(edges, 0, (n, e) -> n + "
+    "CASE WHEN ((e.y1 > lat) <> (e.y2 > lat)) AND (lon < (e.dx * (lat - e.y1) / e.dy + e.x1)) "
+    "THEN 1 ELSE 0 END) % 2 = 1 END"
+)
+
+
 @pytest.mark.parametrize("grain,res", GRAINS)
-def test_join_output_matches_literal_cover(spark, points, monkeypatch, grain, res):
+def test_join_output_matches_literal_cover(spark, points, grain, res):
     new = spatial.join_zones(points, spark, TINY, res=res, grain=grain)
     # the reference is the plain equi-join on an uncompacted cover whose
     # boundary rows carry all their zone's edges: extra edges never
     # change the parity
-    pdf, old_cover = _literal_cover(spark, res, grain, compact=False)
-    monkeypatch.setattr(spatial, "zone_cover_df", lambda *a, **k: old_cover)
-    monkeypatch.setattr(spatial, "_cover_columns", lambda *a, **k: pdf)
-    old = spatial.join_zones(points, spark, TINY, res=res, grain=grain)
+    _, old_cover = _literal_cover(spark, res, grain, compact=False)
+    cell_col = old_cover.columns[1]
+    if grain == "hex":
+        pts = hexgrid.with_hex7_id(points, "lat", "lon", res, cell_col)
+    else:
+        pts = points.withColumn(cell_col, F.expr(cells.cell_sql("lat", "lon", res)))
+    old = pts.join(old_cover, cell_col).filter(_LITERAL_PIP)
+    old = old.select(cell_col, *points.columns, "zone_id")
     assert new.columns == old.columns
     assert new.count() > 0 and _same_rows(new, old)
+
+
+def _member(spark, zones, res, grain="grid"):
+    return spatial._MEMBER_CACHE[(id(spark.sparkContext), spatial._zones_key(zones), res, grain)]
+
+
+def _rows(df):
+    return sorted(map(tuple, df.collect()))
+
+
+def test_unpersisted_cover_broadcast_keeps_rows(spark, points):
+    """The driver keeps the broadcast's copy: after the executors' copies
+    are dropped, the join and the cell extract return the same rows."""
+    queries = [
+        lambda: spatial.join_zones(points, spark, TINY, res=8),
+        lambda: spatial.join_zones(points, spark, TINY, res=4, grain="hex"),
+        lambda: spatial.extract_zone_cells(spark, TINY, res=8),
+    ]
+    before = [_rows(q()) for q in queries]
+    assert all(before)
+    for res, grain in [(8, "grid"), (4, "hex")]:
+        _member(spark, TINY, res, grain).broadcast.unpersist(True)
+    assert [_rows(q()) for q in queries] == before
+
+
+def test_member_eviction_keeps_built_plans(spark, points, monkeypatch):
+    """An LRU eviction drops the session's function and unpersists the
+    broadcast without destroying it: a DataFrame built before still
+    runs, and the next call registers the function anew."""
+    monkeypatch.setattr(spatial, "COVER_CACHE_LIMIT", 1)
+    built = spatial.join_zones(points, spark, TINY, res=8)
+    want = _rows(built)
+    name = spatial.zone_member_name(TINY, 8)
+    assert spark.catalog.functionExists(name)
+    spatial.join_zones(points, spark, TINY, res=7)  # evicts res 8
+    assert not spark.catalog.functionExists(name)
+    assert len(spatial._MEMBER_CACHE) == 1
+    assert _rows(built) == want
+    assert _rows(spatial.join_zones(points, spark, TINY, res=8)) == want
+    assert spark.catalog.functionExists(name)
+
+
+def test_member_is_per_context_and_registered_per_session(spark, points):
+    spatial.join_zones(points, spark, TINY, res=8)
+    member = _member(spark, TINY, 8)
+    other = spark.newSession()
+    assert not other.catalog.functionExists(member.name)
+    assert _rows(spatial.join_zones(points, other, TINY, res=8)) == _rows(
+        spatial.join_zones(points, spark, TINY, res=8)
+    )
+    assert _member(spark, TINY, 8) is member and set(member.sessions) >= {spark, other}
+
+
+def _jobs(spark) -> int:
+    return spark.sparkContext._jsc.sc().dagScheduler().numTotalJobs()
+
+
+def test_second_zonal_query_runs_no_cover_job(spark, points):
+    """Once a session has used a cover, a zonal query builds with no job
+    and runs in one: no cover collect, no broadcast job."""
+    spatial.join_zones(points, spark, TINY, res=8).count()
+    lo = _jobs(spark)
+    out = spatial.join_zones(points, spark, TINY, res=8)
+    assert _jobs(spark) == lo
+    assert len(out.collect()) > 0
+    assert _jobs(spark) == lo + 1
 
 
 def test_memo_is_per_session(spark):

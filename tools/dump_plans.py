@@ -21,10 +21,11 @@ SF = "/root/testdata/sf0.001"
 NOTES = {
     "zonal_daily_wavg": (
         "flagship: ONE parquet scan, span explode + kind filter, "
-        "broadcast zone-cover join whose condition is the PIP: it sums "
-        "the crossings of the edges each boundary row carries "
-        "(aggregate runs interpreted, on boundary rows only; no Python "
-        "stage), "
+        "zone membership as one compiled JVM function "
+        "(zone_member_grid9_*) exploded in the scan stage: it looks up "
+        "the point's cell in the cover broadcast once per session and "
+        "sums the crossings of the edges each boundary row carries "
+        "(no join, no BroadcastExchange, no Python stage), "
         "PLAIN partial+final hash aggregation — "
         "map-side combine reduces each task to <=|groups| rows before "
         "the shuffle, so the hot cell never reaches a reducer as a "
@@ -80,8 +81,9 @@ NOTES = {
         "hex-grain flagship: no Python stage — the hex encode is one "
         "compiled JVM function (hex7_r5) in the scan stage, its id feeding ONE "
         "Generate of the ancestor probe keys (one per res the "
-        "compacted cover holds); broadcast hex-polyfill cover join "
-        "with the same edge-parity PIP as its condition, two-phase hash agg"
+        "compacted cover holds), each probe through the same compiled "
+        "membership function (zone_member_hex5_*) over the hex-polyfill "
+        "cover; no join, two-phase hash agg"
     ),
     "zorder_stats": (
         "Z-order key audit: the Morton key is ONE codegen expression "
@@ -231,7 +233,7 @@ NOTES = {
         "corpus is scanned once and never shuffled"
     ),
     "zonal_majority": (
-        "broadcast cover join with its edge PIP, one map-side-combined "
+        "zone membership function with its edge PIP, one map-side-combined "
         "(zone, class) count, winner via max(struct) in the tiny "
         "per-zone agg — no rank window"
     ),
@@ -262,7 +264,7 @@ NOTES = {
         "the category CASE is pure projection"
     ),
     "areal_interp": (
-        "ONE lattice scan (cover join with its edge PIP + hex encode in the same "
+        "ONE lattice scan (membership function with its edge PIP + hex encode in the same "
         "stage), one map-side-combined count on (zone, hex); zone "
         "totals re-aggregate the tiny matrix; broadcast pop dim"
     ),
