@@ -28,6 +28,7 @@ from pyspark.sql.window import Window
 
 from geodata_spark import convert as conv
 from geodata_spark import zonal
+from geodata_spark.manifest import read_parquet
 from geodata_spark.synth import DLAT, DLON, LAT0, LON0
 
 
@@ -311,4 +312,4 @@ class Cutout:
 
     @staticmethod
     def read(spark, path: str, **geom) -> "Cutout":
-        return Cutout(spark.read.parquet(path), **geom)
+        return Cutout(read_parquet(spark, path), **geom)

@@ -58,13 +58,15 @@ Columns = dict[str, np.ndarray]
 LocalStep = Callable[[Columns], Iterator[Columns]]
 
 
-def collect_at_most(df: DataFrame, n: int) -> pa.Table | None:
+def collect_at_most(df: DataFrame, n: int, what: str) -> pa.Table | None:
     """``df`` as one Arrow table, or None when it holds more than ``n``
     rows; at most ``n + 1`` rows reach the driver.  ``limit(n + 1)``
     runs CollectLimit's incremental partition scan: one job when the
     first partitions hold ``n + 1`` rows or all of them, otherwise a
-    few, each scanning more partitions than the last."""
-    table = df.limit(n + 1).toArrow()
+    few, each scanning more partitions than the last.  The jobs are
+    labelled ``what``; the caller's job description is restored."""
+    with job_description(df.sparkSession, what):
+        table = df.limit(n + 1).toArrow()
     return None if table.num_rows > n else table
 
 

@@ -206,8 +206,7 @@ def watershed(
         "CAST(y_idx AS BIGINT) AS y_idx", "CAST(x_idx AS BIGINT) AS x_idx",
         f"CAST({value_col} AS DOUBLE) AS _z",
     )
-    with fp.job_description(spark, "watershed local"):
-        cols = fp.collect_at_most(base, fp.LOCAL_MAX_ROWS)
+    cols = fp.collect_at_most(base, fp.LOCAL_MAX_ROWS, "watershed local")
     what = "watershed: pointer doubling"
     if cols is None:
         d8 = flow_direction_d8(layer, value_col).select(

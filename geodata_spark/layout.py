@@ -29,6 +29,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from geodata_spark.manifest import read_parquet
+
 # 16 bits per axis → 32-bit key: ~600 m cells at the equator, enough
 # that row-group envelopes (not key precision) bound pruning.
 BITS = 16
@@ -169,7 +171,7 @@ def compact_spatial(
     files = _parquet_files(path)
     bytes_in = sum(os.path.getsize(f) for f in files)
     n_out = max(1, math.ceil(bytes_in / target_file_bytes))
-    df = spark.read.parquet(path)
+    df = read_parquet(spark, path)
     write_spatial_sorted(
         df,
         out_path,

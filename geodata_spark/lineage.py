@@ -239,8 +239,8 @@ def read_output(spark: SparkSession, out_path: str, partition_col: str) -> DataF
     schema-inference job, when its file list equals the listing; with
     the inferred schema after a write the manifest does not describe,
     without a manifest, or when the recorded output has a column named
-    ``partition_col``.  Both give the same columns, in the same order,
-    of the same types.
+    like a partition column (``manifest.Table.read``).  Both give the
+    same columns, in the same order, of the same types.
 
     The scan reads the root, not a ``<col>=*`` glob: Spark probes a
     glob for a streaming sink's ``_spark_metadata`` and logs the failed
@@ -249,9 +249,9 @@ def read_output(spark: SparkSession, out_path: str, partition_col: str) -> DataF
     table = manifest.Table(spark, out_path)
     head = f"{manifest.escape(partition_col)}="
     try:
-        df, files = table.read(partition_col)
+        df, files = table.read()
         if files and all(f[0].startswith(head) and "/" in f[0] for f in files):
             return df
     except (AnalysisException, Py4JJavaError):  # missing, or mixed layouts
         pass
-    return table.read(partition_col, f"{head}*")[0]
+    return table.read(f"{head}*")[0]

@@ -1,21 +1,42 @@
-"""File listings and the ``_manifest.json`` of package-written parquet tables.
+"""The one parquet read of the package, and the file listings and
+``_manifest.json`` it reads by.
 
-Two costs of the ingest cycle come from table metadata, not data:
+Every package read of parquet is :func:`read_parquet` (its listing:
+:meth:`Table.read`).  Two costs come from table metadata, not data:
 
 - **Schema inference.** ``spark.read.parquet(path)`` without a schema
-  runs a Spark job that reads a footer.  :meth:`Table.write` records, after a
-  package writer's commit, the table's data schema (partition columns
-  left out, so their types still come from path inference) and its file
-  list as ``(relative path, size, modification time in ms)``.
-  :meth:`Table.read` reads with the recorded schema, and runs no job,
-  when the scan's own listing equals the recorded list.  Any other
-  listing means a write the manifest does not describe: a foreign write,
-  or a crash between a commit and its manifest write.  That listing, a
-  missing or unparsable manifest, or a recorded column named like the
-  partition column falls back to the inferred read.
+  runs a Spark job that reads the files' footers.  The read instead
+  reads with a recorded schema, and runs no job, when the scan's own
+  listing, ``(relative path, size, modification time in ms)`` per file,
+  equals the recorded one.  It looks in two places:
+
+  1. the table's ``_manifest.json``, which :meth:`Table.write` records
+     after a package writer's commit: the data schema (partition
+     columns left out, so their types still come from path inference)
+     and the file list;
+  2. otherwise, an in-process record of the last read of the same
+     qualified path, ``basePath`` pattern and values of the session
+     confs that parquet schema conversion reads (:data:`INFER_CONFS`).
+     The record holds the data schema and a sha256 of the listing, so
+     its size does not grow with the file count; at most
+     :data:`READ_CACHE_LIMIT` are kept, least recently used out.
+
+  Any other listing (a first read, a foreign write, a crash between a
+  commit and its manifest write) infers the schema in one job,
+  labelled ``infer the schema of <path>``, and records it.  A recorded
+  schema with a column named like a partition column of the scan is
+  not used: Spark would order the columns unlike the inferred read.
 - **Partition fingerprints.** :func:`partition_files` groups a bare
   scan's listing by partition directory, so ``lineage`` can fingerprint
   partitions by their files without reading a row.
+
+:func:`parquet_rows` keeps a row count in the same record, so counting
+unchanged files runs no job either.
+
+Known failure mode: a file rewritten in place with the same size in the
+same millisecond keeps its listing, so a later read uses the old
+record's schema and row count.  This is the contract of
+``lineage.partition_fingerprint``'s file fingerprint too.
 
 Every listing comes from Hadoop ``FileStatus`` text: one ``mkString`` of
 the file index's ``allFiles()``, or of ``listStatus`` over the
@@ -28,9 +49,13 @@ of the old file and the rename sees none and infers.
 
 from __future__ import annotations
 
+import hashlib
 import json
 import re
+import threading
 import uuid
+from collections import OrderedDict
+from dataclasses import dataclass
 
 from py4j.protocol import Py4JError, Py4JJavaError
 from pyspark.sql import DataFrame, SparkSession
@@ -50,6 +75,18 @@ _STATUS = re.compile(
     r"(?:; length=(\d+); replication=\d+; blocksize=\d+)?; modification_time=(\d+); "
 )
 _INTEGRAL_OR_STRING = ("byte", "short", "integer", "long", "string")
+# the session confs parquet schema inference reads (``ParquetToSparkSchemaConverter``,
+# summary files, schema merging, name matching): part of a record's key
+INFER_CONFS = (
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.mergeSchema",
+    "spark.sql.parquet.respectSummaryFiles",
+    "spark.sql.caseSensitive",
+)
+# in-process read records kept, least recently used out
+READ_CACHE_LIMIT = 256
 
 # (path relative to the table root, size in bytes, modification time in ms)
 File = tuple[str, int, int]
@@ -78,28 +115,36 @@ def _hidden(name: str) -> bool:
 
 def _parse_listing(text: str, root: str) -> list[File] | None:
     """The visible files of ``FileStatus`` lines under ``root`` (a
-    qualified path); None when a line does not parse or lies outside."""
-    out, prefix = [], root.rstrip("/") + "/"
+    qualified path; a file root lists as itself, with relative path
+    ``""``); None when a line does not parse or lies outside."""
+    out, root = [], root.rstrip("/")
     for line in filter(None, text.split("\n")):
         m = _STATUS.match(line)
-        if m is None or not m.group(1).startswith(prefix):
+        if m is None or not (m.group(1) == root or m.group(1).startswith(root + "/")):
             return None
         if m.group(2) == "true":
             continue
-        rel = m.group(1)[len(prefix):]
-        if not any(_hidden(seg) for seg in rel.split("/")):
+        rel = m.group(1)[len(root) + 1:]
+        if not any(_hidden(seg) for seg in rel.split("/") if seg):
             out.append((rel, int(m.group(3)), int(m.group(4))))
     return sorted(out)
 
 
-def _file_index(df: DataFrame):
-    """The file index of a bare file scan (the analyzed plan is one file
-    relation that Spark lists itself), else None."""
+def _relation(df: DataFrame):
+    """The relation of a bare file scan whose files Spark lists itself
+    (the analyzed plan is one ``HadoopFsRelation`` over an
+    ``InMemoryFileIndex``), else None."""
     try:
-        index = df._jdf.queryExecution().analyzed().relation().location()
+        relation = df._jdf.queryExecution().analyzed().relation()
+        index = relation.location()
     except Py4JError:  # no relation, or not a file relation
         return None
-    return index if index.getClass().getSimpleName() == "InMemoryFileIndex" else None
+    return relation if index.getClass().getSimpleName() == "InMemoryFileIndex" else None
+
+
+def _file_index(df: DataFrame):
+    relation = _relation(df)
+    return None if relation is None else relation.location()
 
 
 def scan_files(df: DataFrame, root: str) -> list[File] | None:
@@ -130,9 +175,79 @@ def partition_files(df: DataFrame, col: str) -> dict[str, list[File]] | None:
     return out
 
 
+@dataclass
+class _Record:
+    """What a read of one listing learned: the data schema, a sha256 of
+    the listing and, once counted, the row count."""
+
+    schema: StructType
+    digest: str
+    rows: int | None = None
+
+
+_RECORDS: "OrderedDict[tuple, _Record]" = OrderedDict()
+_RECORDS_LOCK = threading.Lock()
+
+
+def _digest(files: list[File]) -> str:
+    return hashlib.sha256(repr(files).encode()).hexdigest()
+
+
+def _lower(names) -> set[str]:
+    """Names as Spark's case-insensitive resolver compares them (also
+    used when the session is case-sensitive: it only makes the overlap
+    test stricter)."""
+    return {n.lower() for n in names}
+
+
+def _get(key: tuple) -> _Record | None:
+    with _RECORDS_LOCK:
+        rec = _RECORDS.get(key)
+        if rec is not None:
+            _RECORDS.move_to_end(key)
+        return rec
+
+
+def _keep(key: tuple, schema: StructType, files: list[File]) -> _Record:
+    """Record ``schema`` for the listing ``files`` under ``key``; the
+    row count survives when the listing is unchanged."""
+    digest = _digest(files)
+    with _RECORDS_LOCK:
+        old = _RECORDS.pop(key, None)
+        rows = old.rows if old is not None and old.digest == digest else None
+        rec = _RECORDS[key] = _Record(schema, digest, rows)
+        while len(_RECORDS) > READ_CACHE_LIMIT:
+            _RECORDS.popitem(last=False)
+        return rec
+
+
+def _listing(df: DataFrame, root: str) -> tuple[list[File] | None, set[str]]:
+    """The files a bare scan lists, relative to ``root``, and its
+    partition column names (lower case)."""
+    index = _file_index(df)
+    if index is None:
+        return None, set()
+    parts = json.loads(index.partitionSchema().json())["fields"]
+    return _parse_listing(index.allFiles().mkString("\n"), root), _lower(f["name"] for f in parts)
+
+
+def read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` with no schema-inference job while
+    the files are unchanged: :meth:`Table.read`, the package's one
+    parquet read.  ``path`` is a table directory or one file."""
+    return Table(spark, path).read()[0]
+
+
+def parquet_rows(spark: SparkSession, path: str) -> int:
+    """The row count of the parquet at ``path``; no job runs while its
+    files are unchanged (:meth:`Table.rows`)."""
+    return Table(spark, path).rows()
+
+
 class Table:
-    """A table directory on its Hadoop file system: its manifest, and
-    reads and listings relative to its qualified root."""
+    """A table directory (or one parquet file) on its Hadoop file
+    system: its manifest, and reads and listings relative to its
+    qualified root."""
 
     def __init__(self, spark: SparkSession, root: str):
         self.spark, self.root = spark, root
@@ -143,13 +258,17 @@ class Table:
 
     def load(self) -> dict | None:
         """The manifest, or None when missing or unparsable."""
+        mpath = self._path(f"{self.qroot}/{NAME}")
         try:
-            stream = self.fs.open(self._path(f"{self.qroot}/{NAME}"))
+            # a missing file costs one call here, not an exception's round trips
+            if not self.fs.exists(mpath):
+                return None
+            stream = self.fs.open(mpath)
             try:
                 data = stream.readAllBytes()
             finally:
                 stream.close()
-        except Py4JJavaError:  # missing, or a checksum mismatch
+        except Py4JJavaError:  # gone since, or a checksum mismatch
             return None
         try:
             doc = json.loads(data)
@@ -160,31 +279,61 @@ class Table:
         except (ValueError, KeyError, TypeError):  # not JSON, or not a manifest
             return None
 
-    def read(
-        self, partition_col: str, pattern: str | None = None
-    ) -> tuple[DataFrame, list[File] | None]:
-        """Read the parquet table (only the paths matching ``pattern``
-        under the root, when given) and return it with its listing.
+    def read(self, pattern: str | None = None) -> tuple[DataFrame, list[File] | None]:
+        """Read the parquet table or file (only the paths matching
+        ``pattern`` under the root, with the root as ``basePath``, when
+        given) and return it with its listing (None when it could not
+        be parsed).
 
-        The recorded schema is used when the manifest's file list equals
-        the scan's, so no job runs; otherwise the schema is inferred (one
-        job, labelled).  The listing is None when it could not be parsed.
-        Raises what ``spark.read.parquet`` raises for a missing table."""
+        With the schema of the manifest, else of the in-process record,
+        when its file list equals the scan's: no job runs.  Otherwise
+        the schema is inferred (one job, labelled) and recorded.  Same
+        columns (names, order, types, nullability) and rows as
+        ``spark.read.parquet`` either way; see the module docstring for
+        the one failure mode.  Raises what ``spark.read.parquet`` raises
+        for a missing path."""
+        return self._read(pattern)[:2]
+
+    def rows(self) -> int:
+        """The row count of the table, kept in the read's record: no
+        job runs while the listing is unchanged."""
+        df, files, rec = self._read(None)
+        if rec is not None and rec.rows is not None:
+            return rec.rows
+        with job_description(self.spark, f"count the rows of {self.root}"):
+            n = df.count()
+        if rec is not None:
+            with _RECORDS_LOCK:
+                rec.rows = n
+        return n
+
+    def _read(self, pattern: str | None):
         spark, root = self.spark, self.root
         path = root if pattern is None else f"{root.rstrip('/')}/{pattern}"
 
-        def reader():
-            return spark.read if pattern is None else spark.read.option("basePath", root)
+        def scan(schema: StructType | None = None) -> DataFrame:
+            reader = spark.read if pattern is None else spark.read.option("basePath", root)
+            return (reader if schema is None else reader.schema(schema)).parquet(path)
 
-        m = self.load()
-        if m is not None and partition_col not in m["schema"].fieldNames():
-            df = reader().schema(m["schema"]).parquet(path)
-            files = scan_files(df, self.qroot)
-            if files == m["files"]:
-                return df, files
+        key = (self.qroot, pattern, tuple(spark.conf.get(k) for k in INFER_CONFS))
+        m, rec = self.load(), _get(key)
+        recorded = [] if m is None else [(m["schema"], lambda fs: fs == m["files"])]
+        if rec is not None:
+            recorded.append((rec.schema, lambda fs: _digest(fs) == rec.digest))
+        for schema, matches in recorded:
+            df = scan(schema)
+            files, parts = _listing(df, self.qroot)
+            if files is not None and matches(files) and not parts & _lower(schema.fieldNames()):
+                return df, files, _keep(key, schema, files)
         with job_description(spark, f"infer the schema of {root}"):
-            df = reader().parquet(path)
-        return df, scan_files(df, self.qroot)
+            df = scan()
+        files, parts = _listing(df, self.qroot)
+        if files is None:
+            return df, None, None
+        data = StructType.fromJson(json.loads(_relation(df).dataSchema().json()))
+        # a data column named like a partition column: not recordable
+        keep = None if parts & _lower(data.fieldNames()) else _keep(key, data, files)
+        return df, files, keep
 
     def list_dirs(self, dirs: list[str]) -> list[File] | None:
         """The visible files directly inside ``dirs`` (relative to the

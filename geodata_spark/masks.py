@@ -37,6 +37,7 @@ from pyspark.sql import types as T
 from geodata_spark import fixpoint as fp
 from geodata_spark.cells import Y_SHIFT
 from geodata_spark.fixpoint import fixpoint, lookup, min_label_rounds
+from geodata_spark.manifest import read_parquet
 
 
 # ---------------------------------------------------------------------------
@@ -277,10 +278,10 @@ def filter_area(
             yield {"cell": cell, "label": label}
 
     what = "filter_area: connected components"
-    with fp.job_description(layer.sparkSession, "filter_area local"):
-        cols = fp.collect_at_most(
-            nonzero.select(F.col("_cc_key").alias("cell"), y_col, x_col), fp.LOCAL_MAX_ROWS
-        )
+    cols = fp.collect_at_most(
+        nonzero.select(F.col("_cc_key").alias("cell"), y_col, x_col), fp.LOCAL_MAX_ROWS,
+        "filter_area local",
+    )
     if cols is None:
         active, _ = fixpoint(
             active, hook_and_jump,
@@ -391,7 +392,7 @@ def save_mask(stacked: DataFrame, path: str) -> None:
 
 
 def load_mask(spark, path: str) -> DataFrame:
-    return spark.read.parquet(path)
+    return read_parquet(spark, path)
 
 
 # ---------------------------------------------------------------------------

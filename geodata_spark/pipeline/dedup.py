@@ -786,8 +786,7 @@ def connected_components(
         F.greatest(F.col(id_a), F.col(id_b)).alias("v"),
     )
     what = "connected_components"
-    with fp.job_description(pairs.sparkSession, f"{what} local"):
-        table = fp.collect_at_most(ends, fp.LOCAL_MAX_ROWS)
+    table = fp.collect_at_most(ends, fp.LOCAL_MAX_ROWS, f"{what} local")
     if table is None:
         return _cc_star(ends, max_iter, what)
     # least/greatest are NULL only where both ids are: such a pair is a

@@ -54,8 +54,9 @@ MAX_CELLS = 4096
 
 def _collect_bounded(df: DataFrame, limit: int, what: str) -> pa.Table:
     """``df`` as an Arrow table, or ValueError when it holds more than
-    ``limit`` rows; at most ``limit + 1`` rows reach the driver."""
-    table = fp.collect_at_most(df, limit)
+    ``limit`` rows; at most ``limit + 1`` rows reach the driver.  Its
+    jobs are labelled ``what``."""
+    table = fp.collect_at_most(df, limit, what)
     if table is None:
         raise ValueError(
             f"{what}: more than {limit} rows, too many to hold on the "
@@ -882,8 +883,7 @@ def kmeans_lloyd(
             f"kmeans_lloyd: k={k} exceeds the input's {len(cents)} rows"
         )
     dim = len(cents[0]) if cents else 0
-    with fp.job_description(vecs.sparkSession, "kmeans_lloyd local"):
-        table = fp.collect_at_most(emb, fp.LOCAL_MAX_ROWS // max(dim, k, 1))
+    table = fp.collect_at_most(emb, fp.LOCAL_MAX_ROWS // max(dim, k, 1), "kmeans_lloyd local")
     V = None if table is None or not cents else _local_vectors(table.column("v"), dim)
     if V is not None:
         cluster, d2, cents = _lloyd_local(V, cents, iters)

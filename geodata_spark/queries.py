@@ -16,6 +16,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from geodata_spark import cells, layout, spatial, zonal
+from geodata_spark.manifest import parquet_rows, read_parquet
 from geodata_spark.synth import (
     N_DOCS_MULTIPLIER,
     documents_sql_cte,
@@ -27,10 +28,9 @@ _CORPUS_CTE = documents_sql_cte(N_DOCS_MULTIPLIER)
 
 
 def corpus_size(spark: SparkSession, sf_dir: str) -> int:
-    """Corpus size scales with the driver's documents table row count."""
-    return (
-        spark.read.parquet(f"{sf_dir}/documents.parquet").count() * N_DOCS_MULTIPLIER
-    )
+    """Corpus size scales with the driver's documents table row count
+    (counted once per listing of the file: ``manifest.parquet_rows``)."""
+    return parquet_rows(spark, f"{sf_dir}/documents.parquet") * N_DOCS_MULTIPLIER
 
 
 def corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -881,7 +881,7 @@ from geodata_spark.pipeline import text as TX  # noqa: E402
 
 
 def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/documents.parquet")
+    return read_parquet(spark, f"{sf_dir}/documents.parquet")
 
 
 def q_text_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -982,7 +982,7 @@ WHERE CAST(i.n_inter AS DOUBLE) / CAST(sa.n_sh + sb.n_sh - i.n_inter AS DOUBLE) 
 def q_ann_brute_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact cosine top-5 for the first 10 query vectors (similarity
     baseline; ANN variants are pytest-validated against this)."""
-    vecs = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    vecs = read_parquet(spark, f"{sf_dir}/embeddings.parquet")
     queries = vecs.filter(F.col("vec_id") < 10).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
     )
@@ -1038,7 +1038,7 @@ def q_events_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     top-k; raw parquet doubles, no arithmetic → byte-identical)."""
     from pyspark.sql.window import Window
 
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
+    ev = read_parquet(spark, f"{sf_dir}/events.parquet")
     w = Window.partitionBy("event_type").orderBy(
         F.col("value").desc(), F.col("event_id").asc()
     )
@@ -1066,7 +1066,7 @@ def q_events_topk_twophase(spark: SparkSession, sf_dir: str) -> DataFrame:
     salted zonal agg cannot provide (see ranking.py)."""
     from geodata_spark.ranking import topk_per_group
 
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
+    ev = read_parquet(spark, f"{sf_dir}/events.parquet")
     out = topk_per_group(
         ev,
         ["event_type"],
@@ -1089,7 +1089,7 @@ def q_events_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
     algorithms, same rows."""
     from geodata_spark.temporal import asof_join
 
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
+    ev = read_parquet(spark, f"{sf_dir}/events.parquet")
     clicks = ev.filter(F.col("event_type") == "click").select(
         "event_id", "user_id", "ts"
     )
@@ -1134,7 +1134,7 @@ def q_events_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     analytic windows: lag + running sum)."""
     from pyspark.sql.window import Window
 
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
+    ev = read_parquet(spark, f"{sf_dir}/events.parquet")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     # parquet stores TIMESTAMP_NTZ; session TZ is UTC so NTZ→TS→epoch
     # agrees with DuckDB's epoch(ts) on the naive value
@@ -1179,7 +1179,7 @@ def q_events_sessions_swin(spark: SparkSession, sf_dir: str) -> DataFrame:
     greater splits — identical to the lag-formulation's ``> 1800`` —
     so this shares `events_sessions`' oracle: built-in, hand-rolled
     analytic, and SQL oracle all agree row-for-row."""
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
+    ev = read_parquet(spark, f"{sf_dir}/events.parquet")
     sw = ev.groupBy(
         "user_id",
         F.session_window(F.col("ts").cast("timestamp"), "30 minutes").alias("sw"),
@@ -1270,7 +1270,7 @@ def q_events_ntile(spark: SparkSession, sf_dir: str) -> DataFrame:
     histogram builds on."""
     from pyspark.sql.window import Window
 
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
+    ev = read_parquet(spark, f"{sf_dir}/events.parquet")
     w = Window.partitionBy("event_type").orderBy("value", "event_id")
     t = ev.withColumn("decile", F.ntile(10).over(w))
     return t.groupBy("event_type", "decile").agg(
@@ -1356,7 +1356,7 @@ def q_table_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact NDVs for approx_count_distinct (HLL, mergeable — bounded
     error pinned in tests/test_tpch.py); exact stays here as the
     oracle-checkable row."""
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
+    li = read_parquet(spark, f"{sf_dir}/lineitem.parquet")
     return li.agg(
         F.count(F.lit(1)).alias("n_rows"),
         F.min("l_quantity").alias("qty_min"),
@@ -1391,7 +1391,7 @@ def q_events_pivot(spark: SparkSession, sf_dir: str) -> DataFrame:
     data-dependent — both wrong at 100 TB).  Catalyst compiles it to
     one conditional-aggregate pass, the same CASE shape as the
     oracle."""
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
+    ev = read_parquet(spark, f"{sf_dir}/events.parquet")
     types = ["click", "error", "purchase", "signup", "view"]
     out = (
         ev.groupBy("user_id")
@@ -1986,7 +1986,7 @@ def q_ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     (assignment, probe selection, in-cell ranking) against an exact
     SQL twin.  Recall vs brute force is pytest-covered; this pins the
     pipeline's mechanics bit-for-bit."""
-    vecs = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    vecs = read_parquet(spark, f"{sf_dir}/embeddings.parquet")
     queries = vecs.filter(F.col("vec_id") < 10).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
     )
@@ -2038,7 +2038,7 @@ def q_ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     reproduced in SQL with the same seeded plane literals.  Sign
     agreement across engines holds to ~1e-14 dot precision (flip
     probability ~1e-10 over this corpus)."""
-    vecs = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    vecs = read_parquet(spark, f"{sf_dir}/embeddings.parquet")
     queries = vecs.filter(F.col("vec_id") < 10).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
     )
@@ -2525,7 +2525,7 @@ def q_pack_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
     offsets + broadcast shard bases) vs the oracle's single global
     running sum over the identical total order; the md5_60 hash makes
     layout order and chunk cuts bit-identical across engines."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = read_parquet(spark, f"{sf_dir}/documents.parquet")
     return PK.pack_chunks(docs, context_len=2048, n_shards=16)
 
 
@@ -2533,7 +2533,7 @@ def q_dataset_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic hash-bucket train/val/test split (80/10/10) with
     per-(split, lang) doc and token counts — stable across runs,
     engines and retries (no RNG state)."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = read_parquet(spark, f"{sf_dir}/documents.parquet")
     out = PK.dataset_split(docs)
     return out.groupBy("split", "lang").agg(
         F.count(F.lit(1)).alias("n_docs"),
@@ -2559,7 +2559,7 @@ def q_embed_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     plane literals, so bucketing, candidate set and cosines are all
     cross-engine checked; recall vs brute force is a pytest property
     (the threshold/plane-count trade-off is the documented knob)."""
-    vecs = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    vecs = read_parquet(spark, f"{sf_dir}/embeddings.parquet")
     return SIM.embedding_neardup_pairs(
         vecs, dim=64, threshold=0.4, n_planes=6, n_tables=8, seed=42
     )
@@ -2874,7 +2874,7 @@ def q_events_asof_binned(spark: SparkSession, sf_dir: str) -> DataFrame:
     give their plain twins)."""
     from geodata_spark.temporal import asof_join
 
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
+    ev = read_parquet(spark, f"{sf_dir}/events.parquet")
     clicks = ev.filter(F.col("event_type") == "click").select(
         "event_id", "user_id", "ts"
     )
@@ -3164,7 +3164,7 @@ def q_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     mixing: keep 25% of short docs, 50% mid, 100% long) —
     packing.stratified_sample, md5-hash gated so both engines and any
     cluster size keep the identical document set."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = read_parquet(spark, f"{sf_dir}/documents.parquet")
     stratum = (
         F.when(F.length("text") < 600, F.lit("short"))
         .when(F.length("text") < 900, F.lit("mid"))
@@ -3192,7 +3192,7 @@ def q_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs."""
     from geodata_spark.temporal import interval_join
 
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
+    ev = read_parquet(spark, f"{sf_dir}/events.parquet")
     epoch = F.col("ts").cast("timestamp").cast("long")
     views = ev.filter(F.col("event_type") == "view").select(
         "user_id",
@@ -3291,7 +3291,7 @@ def q_tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     (pipeline.text.tfidf_top_terms).  Ratio-form smoothed IDF keeps the
     score a single IEEE division of exact integers — bit-exact across
     engines where a log would not be."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = read_parquet(spark, f"{sf_dir}/documents.parquet")
     return TX.tfidf_top_terms(docs, top_k=3)
 
 
@@ -3337,7 +3337,7 @@ def q_doc_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
     context-window prep (pipeline.packing.chunk_docs: pure scan-stage
     explode, no shuffle; chunk boundaries byte-deterministic).  width
     200 / stride 150 ⇒ 50 chars of overlap between adjacent chunks."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = read_parquet(spark, f"{sf_dir}/documents.parquet")
     return PK.chunk_docs(docs, width=200, stride=150)
 
 
@@ -3346,7 +3346,7 @@ def q_top_bigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     bigrams built array-side with zip_with (no positional self-join),
     global top-k planned as TakeOrderedAndProject, never a
     single-partition rank window."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = read_parquet(spark, f"{sf_dir}/documents.parquet")
     return TX.top_bigrams(docs, top_k=20)
 
 
@@ -3839,7 +3839,7 @@ def q_events_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     Output: step index, event type, users reaching the step, and the
     fraction of step-1 users (exact integer division)."""
     steps = ["signup", "view", "click", "purchase"]
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet").select(
+    ev = read_parquet(spark, f"{sf_dir}/events.parquet").select(
         "user_id", "event_type", "ts"
     )
     cur = ev.filter(F.col("event_type") == steps[0]).groupBy("user_id").agg(
@@ -4351,7 +4351,7 @@ def q_retention_cohorts(spark: SparkSession, sf_dir: str) -> DataFrame:
     the standard product-analytics triangle.  Two aggs, both keyed on
     user/cohort; day arithmetic on date_trunc'd timestamps is exact.
     ``retained_frac`` is one integer division ⇒ bit-exact oracle."""
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet").select(
+    ev = read_parquet(spark, f"{sf_dir}/events.parquet").select(
         "user_id", F.to_date("ts").alias("day")
     )
     first = ev.groupBy("user_id").agg(F.min("day").alias("cohort_day"))
@@ -4413,7 +4413,7 @@ def q_event_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
     distinct types (one agg), pair counts via a self-join on user_id
     restricted to type_a < type_b (5 types ⇒ ≤10 pairs out), never a
     cross join of users."""
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet").select(
+    ev = read_parquet(spark, f"{sf_dir}/events.parquet").select(
         "user_id", "event_type"
     ).distinct()
     # LAZY total-user count: a broadcast 1-row aggregate (the
@@ -4618,7 +4618,7 @@ def q_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     run every round on the driver after one Arrow collect, ≤ ~90 B per
     unit of n·max(dim, k) there, so ≤ ~90 MB of driver memory; larger
     ones run the Spark rounds."""
-    vecs = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    vecs = read_parquet(spark, f"{sf_dir}/embeddings.parquet")
     out = SIM.kmeans_lloyd(vecs, k=4, iters=3)
     return out.select(F.col("id").alias("vec_id"), "cluster", "d2_r6")
 
@@ -5110,7 +5110,7 @@ def q_ann_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     the 100 TB ANN pass reads ~3% of the raw bytes.  Production knobs
     differ (m=8, ksub=256, iters more); the oracle pins the small
     fixture shape, bench.py times the production shape."""
-    vecs = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    vecs = read_parquet(spark, f"{sf_dir}/embeddings.parquet")
     codes, books = SIM.pq_train_encode(vecs, m=4, ksub=4, iters=2)
     queries = vecs.filter(F.col("vec_id") < 8).select(
         F.col("vec_id").alias("query_id"),
@@ -5133,7 +5133,7 @@ def q_ann_pq_refine(spark: SparkSession, sf_dir: str) -> DataFrame:
     to the embedding store — a point lookup, never a second corpus
     scan; at 100 TB the full-precision bytes touched are
     shortlist/n of the corpus."""
-    vecs = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    vecs = read_parquet(spark, f"{sf_dir}/embeddings.parquet")
     codes, books = SIM.pq_train_encode(vecs, m=4, ksub=4, iters=2)
     queries = vecs.filter(F.col("vec_id") < 8).select(
         F.col("vec_id").alias("query_id"),
@@ -5187,7 +5187,7 @@ def q_od_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     dependency on the oracle side)."""
     from pyspark.sql.window import Window
 
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
+    ev = read_parquet(spark, f"{sf_dir}/events.parquet")
     zone = F.regexp_extract("props", r'"k": (\d+)', 1).cast("long")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     epoch = F.col("ts").cast("timestamp").cast("long")
@@ -5826,7 +5826,7 @@ def q_ann_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     similarity.ivfpq_topk_sql).  The fixture shape is small
     (8 cells / probe 4 / m=4 / ksub=4 / shortlist 12); bench.py
     times the production shape and recall in the crossover study."""
-    vecs = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    vecs = read_parquet(spark, f"{sf_dir}/embeddings.parquet")
     cents = SIM.ivf_centroids(vecs, 8)
     # layout=False: in-plan assignment, never written — skip the
     # cell-clustering exchange the stored-index build path wants
@@ -5858,7 +5858,7 @@ def q_dau_wau(spark: SparkSession, sf_dir: str) -> DataFrame:
     deduplicated, tiny vs events), no self-join, no HLL approximation.
     Output days are restricted to the observed range (a trailing
     window needs no warm-up rows past the data)."""
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
+    ev = read_parquet(spark, f"{sf_dir}/events.parquet")
     ud = ev.select(
         "user_id",
         F.datediff(F.to_date("ts"), F.lit("2024-01-01")).alias("day"),

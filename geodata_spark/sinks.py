@@ -166,7 +166,7 @@ def read_table(
         return spark.table(f"{cat}.{table}")
     if path is None:
         raise ValueError("no Iceberg catalog configured and no fallback path given")
-    return spark.read.parquet(path)
+    return manifest.read_parquet(spark, path)
 
 
 def write_bucketed(
@@ -242,9 +242,9 @@ def merge_upsert(
        only ``collect``), with each value's directory name;
     2. the target read prunes to those partitions (pushed partition
        filter on the scan; a NULL value is matched with ``IS NULL``).
-       It uses the schema the table's ``_manifest.json`` records, so no
-       inference job runs, when the manifest's file list equals the
-       scan's listing; otherwise it infers
+       It uses the schema the table's ``_manifest.json`` (else the
+       in-process read record) holds, so no inference job runs, when
+       its file list equals the scan's listing; otherwise it infers
        (``geodata_spark.manifest.Table.read``);
     3. survivors come from ONE hash aggregation (``max(struct(...))``,
        map-side combinable) — no window sort;
@@ -286,7 +286,7 @@ def merge_upsert(
         # as "first merge" would overwrite touched partitions with
         # updates-only rows and silently drop every pre-existing key.
         try:
-            target, held = table.read(partition_col)
+            target, held = table.read()
         except AnalysisException:  # first merge: target does not exist yet
             target, held = None, []
         if target is None:

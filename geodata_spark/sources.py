@@ -34,6 +34,8 @@ import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from geodata_spark.manifest import read_parquet
+
 #: canonical coordinate names (reference: datasets/era5.py:53-79)
 CANON_RENAMES = {"latitude": "lat", "longitude": "lon", "y": "lat", "x": "lon", "time": "ts"}
 
@@ -111,7 +113,7 @@ def write_partitioned(df: DataFrame, path: str, partition_by: tuple[str, ...]) -
 
 
 def read_cutout(spark: SparkSession, path: str) -> DataFrame:
-    return rename_canonical(spark.read.parquet(path))
+    return rename_canonical(read_parquet(spark, path))
 
 
 # ---------------------------------------------------------------------------

@@ -311,12 +311,13 @@ def zone_cover_df(
     Above ``COVER_EDGE_LIMIT`` edges it raises ``ValueError`` naming the
     zone and edge counts; plan at a finer resolution or split zones.
 
-    The cover is materialized once per (session, catalog, res, grain):
-    the first call runs one local-checkpoint job, and every later call
-    in that session returns the same DataFrame, whose plan scans the
-    checkpoint (``Scan ExistingRDD``).  A literal ``LocalRelation``
-    instead would be re-optimized and shipped inside the tasks of
-    every query that uses it.  Memos are LRU-bounded by
+    The cover is checkpointed once per (session, catalog, res, grain),
+    lazily: building it runs no job, the first job that reads it writes
+    the checkpoint's blocks, and every later call in that session
+    returns the same DataFrame, whose plan scans the checkpoint
+    (``Scan ExistingRDD``).  A literal ``LocalRelation`` instead would
+    be re-optimized and shipped inside the tasks of every query that
+    uses it.  Memos are LRU-bounded by
     ``COVER_CACHE_LIMIT``; entries of stopped sessions are dropped.
 
     Known failure mode: a local checkpoint lives only in the executors'
@@ -352,7 +353,7 @@ def zone_cover_df(
         # dominated plan-build latency for covers of O(10^4+) rows
         df = spark.createDataFrame(
             _cover_columns(zones, res, grain, cell_col), schema
-        ).localCheckpoint(eager=True)
+        ).localCheckpoint(eager=False)
         _lru_put(_COVER_DF_CACHE, key, df)
         return df
 

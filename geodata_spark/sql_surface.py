@@ -35,6 +35,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from geodata_spark import cells, spatial, zonal
+from geodata_spark.manifest import read_parquet
 from geodata_spark.pipeline import text as TX
 from geodata_spark.spatial import GEO_FIELDS_SQL, zone_cover_df
 from geodata_spark.zones import ZONES
@@ -85,9 +86,11 @@ def register_views(
     surface at real data.
 
     Idempotent per (session, sf_dir): re-registering is skipped (views
-    are stable within a session; corpus sizing costs a Spark count()
-    action, which a batch of ``sql_*`` registry queries should pay
-    once, not per query).  Pass a non-None ``corpus`` to force — a
+    are stable within a session).  Registering in another session runs
+    no Spark job once the tables have been read: their schemas and the
+    corpus size come from the read records (``manifest.read_parquet``,
+    ``manifest.parquet_rows``), and the ``zone_cover`` checkpoint is
+    lazy.  Pass a non-None ``corpus`` to force — a
     caller-supplied corpus never populates the cache, so later
     default-corpus calls re-register the canonical views instead of
     silently inheriting the custom ones.
@@ -113,7 +116,7 @@ def register_views(
 
     names: list[str] = []
     for t in DRIVER_TABLES:
-        spark.read.parquet(f"{sf_dir}/{t}.parquet").createOrReplaceTempView(t)
+        read_parquet(spark, f"{sf_dir}/{t}.parquet").createOrReplaceTempView(t)
         names.append(t)
     c = corpus if corpus is not None else Q.corpus(spark, sf_dir)
     c.createOrReplaceTempView("corpus")

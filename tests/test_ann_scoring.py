@@ -208,6 +208,26 @@ def test_probe_and_centroid_bounds(spark, dup_vecs, dup_queries, monkeypatch):
         SIM.ivf_assign(dup_vecs, cents)
 
 
+def test_ivf_topk_build_labels_every_job(spark, dup_vecs, dup_queries):
+    """Building an IVF top-k runs its three bounded collects (IVF
+    centroids, query set, probe plan), each with a description."""
+    sc = spark.sparkContext._jsc.sc()
+    sc.listenerBus().waitUntilEmpty()
+    lo = sc.dagScheduler().numTotalJobs()
+    SIM.ivf_topk(dup_vecs, dup_queries, n_cells=4, n_probe=2, k=3)
+    hi = sc.dagScheduler().numTotalJobs()
+    sc.listenerBus().waitUntilEmpty()
+    store = sc.statusStore()
+    descs = [store.job(j).description() for j in range(lo, hi)]
+    assert hi - lo >= 3
+    assert all(d.isDefined() for d in descs), [store.job(j).name() for j in range(lo, hi)]
+    assert {d.get() for d in descs} == {
+        "IVF centroids (similarity.MAX_CELLS)",
+        "query set (similarity.MAX_QUERIES)",
+        "IVF probe plan (similarity.MAX_PROBE_ROWS)",
+    }
+
+
 def test_centroid_matrix_literal_round_trips_doubles(spark):
     """kmeans_lloyd's one-SQL-text centroid matrix gives back every
     double bit for bit, signed zero and non-finite values included, as

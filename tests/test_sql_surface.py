@@ -142,3 +142,17 @@ def test_register_views_cache_is_session_scoped(spark, views):
     assert sib.table("corpus").count() == 1
     S.register_views(sib, SF_ORACLE)
     assert sib.table("corpus").count() > 1
+
+
+def test_register_views_in_a_second_session_runs_no_job(spark, views):
+    """Once its inputs have been read, registering runs no Spark job:
+    the tables' schemas and the corpus size come from their read
+    records, and the ``zone_cover`` view's checkpoint is lazy."""
+    from geodata_spark import sql_surface as S
+
+    sc = spark.sparkContext._jsc.sc()
+    sib = spark.newSession()
+    lo = sc.dagScheduler().numTotalJobs()
+    names = S.register_views(sib, SF_ORACLE)
+    assert sc.dagScheduler().numTotalJobs() - lo == 0
+    assert set(names) == set(views)

@@ -139,7 +139,7 @@ def test_merge_upsert_reads_like_the_inferred_read(spark, tmp_path, monkeypatch,
             m.setattr(manifest.Table, "write", lambda *a, **k: None)
             _table(spark, path, days=(2,), keys=1, seq=1)
     _break(state, spark, path)
-    n_jobs, (df, files) = _count_jobs(spark, lambda: manifest.Table(spark, path).read("day"))
+    n_jobs, (df, files) = _count_jobs(spark, lambda: manifest.Table(spark, path).read())
     assert n_jobs == (0 if state == "manifest" else 1)
     inferred = spark.read.parquet(path)
     assert _schema(df) == _schema(inferred)
@@ -151,7 +151,7 @@ def test_merge_upsert_reads_like_the_inferred_read(spark, tmp_path, monkeypatch,
     want.update({(3, 0): (5, "new"), (4, 0): (5, "new4")})
     sinks.merge_upsert(spark, path, upd, ["k"], "day", "seq")
     assert {(r.day, r.k): (r.seq, r.v) for r in spark.read.parquet(path).collect()} == want
-    n_jobs, _ = _count_jobs(spark, lambda: manifest.Table(spark, path).read("day"))
+    n_jobs, _ = _count_jobs(spark, lambda: manifest.Table(spark, path).read())
     assert n_jobs == 0
 
 
@@ -241,3 +241,143 @@ def test_ingest_cycle_labels_every_job(spark, tmp_path):
 def test_unparsable_manifest_reads_as_none(spark, tmp_path, text):
     (tmp_path / manifest.NAME).write_text(text)
     assert manifest.Table(spark, str(tmp_path)).load() is None
+
+
+# -- the one parquet read: schemas recorded per file listing -----------------
+
+
+def _write_file(path, n=6, extra=False):
+    import pandas as pd
+
+    cols = {"k": list(range(n)), "v": [f"v{i}" for i in range(n)]}
+    if extra:
+        cols["w"] = [float(i) for i in range(n)]
+    pd.DataFrame(cols).to_parquet(path, index=False)
+
+
+def _write_dir(spark, path, extra=False):
+    cols = "day int, k long, v string" + (", w double" if extra else "")
+    data = [(d, k, f"v{k}") + ((float(k),) if extra else ()) for d in (1, 2) for k in range(3)]
+    spark.createDataFrame(data, cols).write.mode("overwrite").partitionBy("day").parquet(path)
+
+
+def _exact_schema(df) -> list:
+    return [(f.name, f.dataType, f.nullable) for f in df.schema]
+
+
+@pytest.mark.parametrize("layout", ["file", "partitioned"])
+def test_second_read_runs_no_job_and_reads_like_spark(spark, tmp_path, layout):
+    path = str(tmp_path / ("t.parquet" if layout == "file" else "t"))
+    write = _write_file if layout == "file" else (lambda p, **kw: _write_dir(spark, p, **kw))
+    write(path)
+    for jobs in (1, 0, 0):
+        n_jobs, df = _count_jobs(spark, lambda: manifest.read_parquet(spark, path))
+        assert n_jobs == jobs
+        inferred = spark.read.parquet(path)
+        assert _exact_schema(df) == _exact_schema(inferred)
+        assert _rows(df) == _rows(inferred)
+    # a rewrite that adds a column changes size and mtime: one job, new schema
+    write(path, extra=True)
+    n_jobs, df = _count_jobs(spark, lambda: manifest.read_parquet(spark, path))
+    assert n_jobs == 1 and "w" in df.columns
+    assert _exact_schema(df) == _exact_schema(spark.read.parquet(path))
+    assert _rows(df) == _rows(spark.read.parquet(path))
+
+
+def test_a_changed_parquet_conf_misses_the_record(spark, tmp_path):
+    import pandas as pd
+
+    path = str(tmp_path / "b.parquet")
+    pd.DataFrame({"k": [1, 2], "b": [b"x", b"yz"]}).to_parquet(path, index=False)
+    manifest.read_parquet(spark, path)
+    key = "spark.sql.parquet.binaryAsString"
+    spark.conf.set(key, "true")
+    try:
+        n_jobs, df = _count_jobs(spark, lambda: manifest.read_parquet(spark, path))
+        assert n_jobs == 1
+        assert _exact_schema(df) == _exact_schema(spark.read.parquet(path))
+        assert dict(_schema(df))["b"].simpleString() == "string"
+    finally:
+        spark.conf.unset(key)
+    n_jobs, df = _count_jobs(spark, lambda: manifest.read_parquet(spark, path))
+    assert n_jobs == 0 and dict(_schema(df))["b"].simpleString() == "binary"
+
+
+def test_a_data_column_named_like_a_partition_is_not_recorded(spark, tmp_path):
+    path = str(tmp_path / "t")
+    df = spark.createDataFrame([(1, 1, "a"), (2, 2, "b")], "day int, k long, v string")
+    df.write.parquet(os.path.join(path, "day=1"))  # ``day`` is also a data column
+    for _ in range(2):
+        n_jobs, got = _count_jobs(spark, lambda: manifest.read_parquet(spark, path))
+        assert n_jobs == 1
+        assert _exact_schema(got) == _exact_schema(spark.read.parquet(path))
+
+
+def test_read_records_are_lru_bounded(spark, tmp_path, monkeypatch):
+    monkeypatch.setattr(manifest, "READ_CACHE_LIMIT", 2)
+    paths = [str(tmp_path / f"t{i}.parquet") for i in range(3)]
+    for p in paths:
+        _write_file(p)
+        manifest.read_parquet(spark, p)
+    assert len(manifest._RECORDS) <= 2
+    # the least recently used went first
+    assert _count_jobs(spark, lambda: manifest.read_parquet(spark, paths[2]))[0] == 0
+    assert _count_jobs(spark, lambda: manifest.read_parquet(spark, paths[0]))[0] == 1
+
+
+def test_concurrent_reads_agree(spark, tmp_path):
+    from concurrent.futures import ThreadPoolExecutor
+
+    path = str(tmp_path / "t")
+    _write_dir(spark, path)
+    with ThreadPoolExecutor(max_workers=4) as pool:
+        dfs = list(pool.map(lambda _: manifest.read_parquet(spark, path), range(8)))
+    assert {tuple(_exact_schema(df)) for df in dfs} == {tuple(_exact_schema(spark.read.parquet(path)))}
+    assert _count_jobs(spark, lambda: manifest.read_parquet(spark, path))[0] == 0
+
+
+def test_corpus_size_counts_once_per_listing(spark, tmp_path):
+    import pyarrow.parquet as pq
+
+    from geodata_spark import queries
+    from geodata_spark.synth import N_DOCS_MULTIPLIER
+    from tests.conftest import SF_SMOKE
+
+    docs = pq.read_table(os.path.join(SF_SMOKE, "documents.parquet"))
+    pq.write_table(docs, str(tmp_path / "documents.parquet"))
+    sf = str(tmp_path)
+    assert queries.corpus_size(spark, sf) == docs.num_rows * N_DOCS_MULTIPLIER
+    n_jobs, n = _count_jobs(spark, lambda: queries.corpus_size(spark, sf))
+    assert n_jobs == 0 and n == docs.num_rows * N_DOCS_MULTIPLIER
+    pq.write_table(docs.slice(0, docs.num_rows // 2), str(tmp_path / "documents.parquet"))
+    assert queries.corpus_size(spark, sf) == (docs.num_rows // 2) * N_DOCS_MULTIPLIER
+
+
+def test_every_package_parquet_read_goes_through_the_read_function():
+    """No module reads through ``<session>.read`` but :meth:`Table._read`,
+    so every parquet read keeps its schema record."""
+    import ast
+
+    import geodata_spark
+
+    root = os.path.dirname(geodata_spark.__file__)
+    found = []
+    for d, _, names in os.walk(root):
+        for name in names:
+            if not name.endswith(".py"):
+                continue
+            tree = ast.parse(open(os.path.join(d, name)).read())
+            called = {id(n.func) for n in ast.walk(tree) if isinstance(n, ast.Call)}
+            allowed: set[int] = set()
+            for node in ast.walk(tree):
+                if isinstance(node, ast.ClassDef) and node.name == "Table" and name == "manifest.py":
+                    for fn in node.body:
+                        if isinstance(fn, ast.FunctionDef) and fn.name == "_read":
+                            allowed = {id(n) for n in ast.walk(fn)}
+            found += [
+                f"{os.path.relpath(os.path.join(d, name), root)}:{n.lineno}"
+                for n in ast.walk(tree)
+                if isinstance(n, ast.Attribute) and n.attr == "read"
+                and id(n) not in called and id(n) not in allowed
+            ]
+    assert found == []
