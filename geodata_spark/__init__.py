@@ -10,10 +10,13 @@ DataFrame operators over a catalog of interleaved text+media documents
                                   media_ref:string, offset:int>>)
 
 Architecture is Spark-first: logical plans are declared with the
-DataFrame API and optimized by Catalyst; Python appears only in
-Arrow-vectorized pandas UDFs (cell-token encoding, point-in-polygon on
-boundary cells, per-cell model fits).  See SURVEY.md for the operator
-inventory and the mapping to the reference implementation.
+DataFrame API and optimized by Catalyst.  The hex cell encode and zone
+membership (point-in-polygon on boundary cells) are compiled Java UDFs
+(``jvm/Hex7Id.java``, ``jvm/ZoneMember.java``); Python runs on workers
+only in Arrow-batched stages (per-cell model fits and solves, the ANN
+kernels, hyperplane signatures, multimodal feature extraction).  See
+SURVEY.md for the operator inventory and the mapping to the reference
+implementation.
 """
 
 from geodata_spark.session import get_spark  # noqa: F401

@@ -29,7 +29,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from geodata_spark.manifest import read_parquet
 
 # 16 bits per axis → 32-bit key: ~600 m cells at the equator, enough
 # that row-group envelopes (not key precision) bound pruning.
@@ -137,50 +136,6 @@ def _parquet_files(path: str) -> list[str]:
     return sorted(
         glob.glob(os.path.join(path, "**", "*.parquet"), recursive=True)
     )
-
-
-def compact_spatial(
-    spark,
-    path: str,
-    out_path: str,
-    target_file_bytes: int = 128 << 20,
-    lat_col: str = "lat",
-    lon_col: str = "lon",
-) -> dict:
-    """Small-file compaction that PRESERVES spatial clustering.
-
-    Long-lived tables accrete small files (per-micro-batch appends,
-    over-parallel writers); at 100 TB the resulting task-per-file
-    scheduling and footer-per-file metadata overhead dominate scan
-    cost long before the bytes do.  Compaction here is just the sorted
-    writer re-run at the right file count: output file count is sized
-    from the tree's actual on-disk bytes / ``target_file_bytes`` (so a
-    128 MB target yields HDFS-block-sized files), and rewriting
-    through the Z-order range partitioner means the compacted tree
-    keeps — or regains, if the input was appended unsorted — its
-    row-group pruning power.  Returns {files_in, files_out, bytes_in}
-    so callers (and tests) can assert the consolidation happened.
-
-    The one shuffle is the range exchange on the key; at 100 TB run it
-    per partition-directory (e.g. per day) so each compaction touches
-    only new data.
-    """
-    import math
-    import os
-
-    files = _parquet_files(path)
-    bytes_in = sum(os.path.getsize(f) for f in files)
-    n_out = max(1, math.ceil(bytes_in / target_file_bytes))
-    df = read_parquet(spark, path)
-    write_spatial_sorted(
-        df,
-        out_path,
-        lat_col=lat_col,
-        lon_col=lon_col,
-        num_files=n_out,
-        block_bytes=min(target_file_bytes, 128 << 20),
-    )
-    return {"files_in": len(files), "files_out": n_out, "bytes_in": bytes_in}
 
 
 def rowgroup_prune_stats(

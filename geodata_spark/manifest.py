@@ -147,12 +147,6 @@ def _file_index(df: DataFrame):
     return None if relation is None else relation.location()
 
 
-def scan_files(df: DataFrame, root: str) -> list[File] | None:
-    """The files a bare scan ``df`` lists, relative to ``root``."""
-    index = _file_index(df)
-    return None if index is None else _parse_listing(index.allFiles().mkString("\n"), root)
-
-
 def partition_files(df: DataFrame, col: str) -> dict[str, list[File]] | None:
     """The files of a bare scan with one root, grouped by the value
     (unescaped; :data:`NULL_KEY` for NULL) of its integral or string

@@ -14,8 +14,6 @@ merge_layer(sum)   weighted pixel sum                     :func:`merge_layers_su
 crop_raster        bbox window                            :func:`crop_raster`        (mask.py:1073-1112)
 trim_raster        drop all-zero borders                  :func:`trim_raster`        (mask.py:1242-1306)
 filter_area        drop small connected regions           :func:`filter_area`        (mask.py:1309-1398)
-save/load          layer directory persistence            :func:`save_mask` / :func:`load_mask` (mask.py:786-933)
-get_bounds/res     layer extents                          :func:`layer_bounds`       (mask.py:258-293)
 ================  =====================================  ==============
 
 Scale notes: layer merges are hash aggregations on the cell id (no
@@ -37,7 +35,6 @@ from pyspark.sql import types as T
 from geodata_spark import fixpoint as fp
 from geodata_spark.cells import Y_SHIFT
 from geodata_spark.fixpoint import fixpoint, lookup, min_label_rounds
-from geodata_spark.manifest import read_parquet
 
 
 # ---------------------------------------------------------------------------
@@ -175,17 +172,6 @@ def trim_raster(layer: DataFrame) -> DataFrame:
         F.col("lat").between(F.col("lat0"), F.col("lat1"))
         & F.col("lon").between(F.col("lon0"), F.col("lon1"))
     ).drop("lat0", "lat1", "lon0", "lon1")
-
-
-def layer_bounds(layer: DataFrame) -> DataFrame:
-    """(lat_min, lat_max, lon_min, lon_max, n_cells) — A9 analog."""
-    return layer.agg(
-        F.min("lat").alias("lat_min"),
-        F.max("lat").alias("lat_max"),
-        F.min("lon").alias("lon_min"),
-        F.max("lon").alias("lon_max"),
-        F.count(F.lit(1)).alias("n_cells"),
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -385,15 +371,6 @@ def dilate(
 # ---------------------------------------------------------------------------
 # S11 — persistence
 # ---------------------------------------------------------------------------
-
-def save_mask(stacked: DataFrame, path: str) -> None:
-    """Persist a named mask (all layers) partitioned by layer name."""
-    stacked.write.mode("overwrite").partitionBy("layer").parquet(path)
-
-
-def load_mask(spark, path: str) -> DataFrame:
-    return read_parquet(spark, path)
-
 
 # ---------------------------------------------------------------------------
 # raster → vector: boundary contour segments

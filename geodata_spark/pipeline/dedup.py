@@ -159,13 +159,16 @@ def bloom_contamination_screen(
 
     # eval-set bits: k positions per DISTINCT bench shingle, computed
     # by the SAME Catalyst expressions as the corpus probe, collected
-    # (eval-set sized) and packed driver-side into m/64 long words
-    bits = [
-        r["b"]
-        for r in bench_sh.select(
-            F.explode(F.array(*positions(F.col("shingle")))).alias("b")
-        ).distinct().collect()
-    ]
+    # and packed driver-side into m/64 long words.  The collect is
+    # bounded by the bitset, not the eval set: distinct positions in
+    # [0, m_bits), so at most m_bits rows
+    with fp.job_description(benchmark.sparkSession, "bloom_contamination_screen: eval-set bits"):
+        bits = [
+            r["b"]
+            for r in bench_sh.select(
+                F.explode(F.array(*positions(F.col("shingle")))).alias("b")
+            ).distinct().collect()
+        ]
     words = [0] * (m_bits // 64)
     for b in bits:
         words[b >> 6] |= 1 << (b & 63)
@@ -532,23 +535,6 @@ def minhash_dedup(docs: DataFrame, threshold: float = 0.5, k: int = 64,
         # shingle table and stays a plain plan.
         sh = sh.localCheckpoint(eager=False)
     return _pair_jaccard(sh, cands, threshold).select("id_a", "id_b", "jaccard")
-
-
-def minhash_jaccard_estimate(signatures: DataFrame, k: int = 64) -> DataFrame:
-    """Pairwise estimated Jaccard = fraction of matching signature slots
-    (diagnostic; O(n²) — use on samples)."""
-    a = signatures.select(F.col("id").alias("id_a"), F.col("signature").alias("sig_a"))
-    b = signatures.select(F.col("id").alias("id_b"), F.col("signature").alias("sig_b"))
-    pairs = a.crossJoin(b).filter(F.col("id_a") < F.col("id_b"))
-    matches = F.size(
-        F.filter(
-            F.zip_with(F.col("sig_a"), F.col("sig_b"), lambda x, y: x == y),
-            lambda m: m,
-        )
-    )
-    return pairs.select(
-        "id_a", "id_b", (matches.cast("double") / F.lit(float(k))).alias("jaccard_est")
-    )
 
 
 # ---------------------------------------------------------------------------

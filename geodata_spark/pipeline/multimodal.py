@@ -1,19 +1,18 @@
 """Multimodal columns: binary payloads with typed metadata.
 
 Image/audio/video content rides as opaque ``binary`` columns next to
-typed metadata; decode / feature-extraction / resize / frame-sampling
-run as Arrow-batched pandas UDFs over ``mapInPandas``.  The image and
-audio codec libraries are NOT in this container, so the decode step is
-STUBBED (``decode_stub`` raises ``NotImplementedError``; the default
-pipeline uses ``fake_decode`` — a deterministic byte-level transform)
-— but the Spark-side plumbing is real and tested: schemas, batch
-iterator shape, partition behavior, and the deterministic feature
-output all match what a real codec drop-in would see.
+typed metadata.  Payloads are synthesized in SQL; decode and feature
+extraction run as an Arrow-batched ``mapInPandas`` stage.  The image
+and audio codec libraries are NOT in this container, so the decode
+step is STUBBED (``decode_stub`` raises ``NotImplementedError``; the
+default pipeline uses ``fake_decode`` — a deterministic byte-level
+transform) — but the Spark-side plumbing is real and tested: schemas,
+batch iterator shape, partition behavior, and the deterministic
+feature output all match what a real codec drop-in would see.
 """
 
 from __future__ import annotations
 
-import hashlib
 from collections.abc import Iterator
 
 import numpy as np
@@ -21,37 +20,39 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from geodata_spark.sqltext import ident
+
 #: output schema of the feature extraction stage
 FEATURE_SCHEMA = (
     "doc_id string, media_ref string, n_bytes long, "
     "width int, height int, n_frames int, feature array<float>"
 )
 
+#: length in bytes of every synthesized payload
+PAYLOAD_BYTES = 256
 
-def attach_payloads(
-    media_spans: DataFrame,
-    payload_bytes: int = 256,
-    ref_col: str = "media_ref",
-) -> DataFrame:
+
+def _keystream_sql(ref_sql: str, n: int) -> str:
+    """SQL for the first ``n`` bytes of the sha256 digest of ``ref_sql``
+    (NULL as ''), repeated: ``hashlib.sha256(ref.encode()).digest()``
+    tiled to ``n`` bytes."""
+    reps = -(-n // 32)
+    return f"substring(unhex(repeat(sha2(coalesce({ref_sql}, ''), 256), {reps})), 1, {n})"
+
+
+def attach_payloads(media_spans: DataFrame, ref_col: str = "media_ref") -> DataFrame:
     """Synthesize deterministic binary payloads from ``ref_col``.
 
     Stands in for fetching blobs from object storage; payload =
-    sha256-keystream of the ref, so every engine run (and the test
-    oracle) sees identical bytes.  Pass a content-level ``ref_col``
-    (e.g. the media path with doc-unique segments stripped) to model
-    the real-world case where many documents embed the SAME blob.
+    sha256-keystream of the ref (:data:`PAYLOAD_BYTES` long), one SQL
+    projection, so every engine run (and the test oracle) sees
+    identical bytes.  Pass a content-level ``ref_col`` (e.g. the media
+    path with doc-unique segments stripped) to model the real-world
+    case where many documents embed the SAME blob.
     """
-
-    @F.pandas_udf("binary")
-    def _payload(ref: pd.Series) -> pd.Series:
-        out = []
-        for r in ref:
-            h = hashlib.sha256((r or "").encode()).digest()
-            reps = (payload_bytes + len(h) - 1) // len(h)
-            out.append((h * reps)[:payload_bytes])
-        return pd.Series(out)
-
-    return media_spans.withColumn("payload", _payload(F.col(ref_col)))
+    return media_spans.withColumn(
+        "payload", F.expr(_keystream_sql(ident(ref_col), PAYLOAD_BYTES))
+    )
 
 
 def payload_digest(payload: "F.Column") -> "F.Column":
@@ -159,130 +160,3 @@ def extract_features(media: DataFrame, width: int = 8, height: int = 8,
             )
 
     return media.mapInPandas(op, schema=FEATURE_SCHEMA)
-
-
-def sample_frames(media: DataFrame, every_n: int = 2) -> DataFrame:
-    """Frame-sampling for video refs: deterministic keep-1-in-n on the
-    (doc_id, media_ref) hash — a row-level filter, no Python."""
-    return media.filter(
-        F.pmod(F.xxhash64("doc_id", "media_ref"), F.lit(every_n)) == 0
-    )
-
-
-def bilinear_resize(img: np.ndarray, out_h: int, out_w: int) -> np.ndarray:
-    """Real vectorized bilinear resample (half-pixel-center convention,
-    the OpenCV/PIL ``align_corners=False`` default).
-
-    This is the genuine resize KERNEL — only the codec in front of it
-    is stubbed (decode_stub/fake_decode): when a deployment drops
-    PIL/ffmpeg behind decode_stub, this same kernel resizes the real
-    frames unchanged.
-    """
-    h, w = img.shape
-    a = img.astype(np.float64)
-    ys = (np.arange(out_h) + 0.5) * (h / out_h) - 0.5
-    xs = (np.arange(out_w) + 0.5) * (w / out_w) - 0.5
-    y0f, x0f = np.floor(ys), np.floor(xs)
-    fy, fx = ys - y0f, xs - x0f
-    y0 = np.clip(y0f.astype(np.int64), 0, h - 1)
-    y1 = np.clip(y0f.astype(np.int64) + 1, 0, h - 1)
-    x0 = np.clip(x0f.astype(np.int64), 0, w - 1)
-    x1 = np.clip(x0f.astype(np.int64) + 1, 0, w - 1)
-    top = (1.0 - fx)[None, :] * a[np.ix_(y0, x0)] + fx[None, :] * a[np.ix_(y0, x1)]
-    bot = (1.0 - fx)[None, :] * a[np.ix_(y1, x0)] + fx[None, :] * a[np.ix_(y1, x1)]
-    return (1.0 - fy)[:, None] * top + fy[:, None] * bot
-
-
-RESIZED_SCHEMA = (
-    "doc_id string, media_ref string, width int, height int, pixels binary"
-)
-
-
-def resize_media(
-    media: DataFrame,
-    out_w: int,
-    out_h: int,
-    src_w: int = 8,
-    src_h: int = 8,
-) -> DataFrame:
-    """Decode → bilinear resize → re-encode as raw uint8 rows.
-
-    mapInPandas (iterator form): the fake decode is per-row numpy, the
-    resize is the real kernel above, and the output pixels travel as a
-    binary column — the batch shape a real image pipeline uses.
-    """
-
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for payload in pdf["payload"]:
-                img = fake_decode(bytes(payload), src_w, src_h)
-                r = np.clip(np.rint(bilinear_resize(img, out_h, out_w)), 0, 255)
-                out.append(r.astype(np.uint8).tobytes())
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "media_ref": pdf["media_ref"],
-                    "width": np.full(len(out), out_w, dtype=np.int32),
-                    "height": np.full(len(out), out_h, dtype=np.int32),
-                    "pixels": out,
-                }
-            )
-
-    return media.mapInPandas(op, schema=RESIZED_SCHEMA)
-
-
-def fake_video_decode(
-    payload: bytes, n_frames: int = 4, height: int = 8, width: int = 8
-) -> np.ndarray:
-    """Deterministic stand-in video decode: bytes → (n, h, w) uint8."""
-    need = n_frames * height * width
-    reps = (need + len(payload) - 1) // len(payload)
-    return np.frombuffer((payload * reps)[:need], dtype=np.uint8).reshape(
-        n_frames, height, width
-    )
-
-
-FRAME_SCHEMA = (
-    "doc_id string, media_ref string, frame_idx int, f_mean double, f_std double"
-)
-
-
-def sample_video_frames(
-    media: DataFrame,
-    stride: int = 2,
-    n_frames: int = 4,
-    height: int = 8,
-    width: int = 8,
-) -> DataFrame:
-    """Per-FRAME sampling: decode the (stubbed) video, keep every
-    ``stride``-th frame, emit one row per kept frame with per-frame
-    stats — the row-explosion shape of a real frame-sampling stage
-    (unlike the hash row-filter in :func:`sample_frames`, this
-    operates inside the decoded payload)."""
-
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, refs, idxs, means, stds = [], [], [], [], []
-            for doc_id, ref, payload in zip(
-                pdf["doc_id"], pdf["media_ref"], pdf["payload"]
-            ):
-                vid = fake_video_decode(bytes(payload), n_frames, height, width)
-                for k in range(0, n_frames, stride):
-                    f = vid[k].astype(np.float64)
-                    ids.append(doc_id)
-                    refs.append(ref)
-                    idxs.append(k)
-                    means.append(float(f.mean()))
-                    stds.append(float(f.std()))
-            yield pd.DataFrame(
-                {
-                    "doc_id": ids,
-                    "media_ref": refs,
-                    "frame_idx": np.array(idxs, dtype=np.int32),
-                    "f_mean": means,
-                    "f_std": stds,
-                }
-            )
-
-    return media.mapInPandas(op, schema=FRAME_SCHEMA)

@@ -382,20 +382,6 @@ def _hyperplanes(dim: int, n_planes: int, seed: int = 42) -> np.ndarray:
     return np.random.RandomState(seed).normal(size=(n_planes, dim)).astype(np.float64)
 
 
-def hyperplane_signature_udf(dim: int, n_planes: int = 16, seed: int = 42):
-    """Arrow UDF: embedding → sign-pattern bucket id (int)."""
-    planes = _hyperplanes(dim, n_planes, seed)
-
-    @F.pandas_udf(T.LongType())
-    def _sig(emb: pd.Series) -> pd.Series:
-        mat = np.stack(emb.to_numpy())
-        signs = (mat @ planes.T) > 0
-        weights = (1 << np.arange(n_planes)).astype(np.int64)
-        return pd.Series(signs @ weights)
-
-    return _sig
-
-
 def hyperplane_multisig_udf(dim: int, n_planes: int, n_tables: int, seed: int = 42):
     """Arrow UDF: embedding → array of all ``n_tables`` sign-pattern
     bucket ids in ONE pass.
@@ -403,9 +389,9 @@ def hyperplane_multisig_udf(dim: int, n_planes: int, n_tables: int, seed: int = 
     One (n_tables·n_planes × dim) matmul per Arrow batch replaces
     ``n_tables`` separate UDF invocations — so the vector table is
     scanned and Arrow-transferred once instead of ``n_tables`` times
-    (the round-2 judge's 8× scan-count finding).  Bucket values are
-    bit-identical to per-table :func:`hyperplane_signature_udf` because
-    each table's planes come from the same per-table seeded RNG.
+    (the round-2 judge's 8× scan-count finding).  Table ``t`` draws its
+    planes from its own seeded RNG (``seed + 1000·t``), so its bucket
+    ids do not depend on ``n_tables``.
     """
     all_planes = np.concatenate(
         [_hyperplanes(dim, n_planes, seed + 1000 * t) for t in range(n_tables)]
@@ -874,10 +860,11 @@ def kmeans_lloyd(
     # assignment), each of which would otherwise rescan the source and
     # redo the cast (r8)
     ).localCheckpoint(eager=False)
-    cents = [
-        [round(float(c), 6) for c in r.v]
-        for r in emb.orderBy("id").limit(k).collect()
-    ]
+    with fp.job_description(emb.sparkSession, "kmeans_lloyd init"):
+        cents = [
+            [round(float(c), 6) for c in r.v]
+            for r in emb.orderBy("id").limit(k).collect()
+        ]
     if len(cents) < k:
         raise ValueError(
             f"kmeans_lloyd: k={k} exceeds the input's {len(cents)} rows"

@@ -42,14 +42,6 @@ def _load_yaml(path: str) -> dict[str, Any]:
     return out
 
 
-def list_resources(kind: str) -> list[str]:
-    """Names (sans .yaml) available under ``resources/<kind>/``."""
-    d = os.path.join(RESOURCE_DIR, kind)
-    if not os.path.isdir(d):
-        return []
-    return sorted(f[:-5] for f in os.listdir(d) if f.endswith(".yaml"))
-
-
 def get_windturbineconfig(turbine: str | dict) -> dict:
     """Turbine name or dict → validated curve dict (V, POW, hub_height, P).
 

@@ -11,17 +11,17 @@ Catalyst pushes into the scan:
 =====  ==========================================  ====================
 ref    semantics                                     here
 =====  ==========================================  ====================
-S1-S3  per-month variable scan + rename/derive      read_cutout (+convert); read_netcdf
-       (era5.py:392-453, merra2.py:208-240)         (xarray-gated) → gridded_to_table →
-                                                    era5_prepare / merra2_prepare
-S4     meta scan (coords only)                      meta_scan — distinct on partition cols
+S1-S3  per-month variable scan + rename/derive      read_netcdf (classic files in-repo,
+       (era5.py:392-453, merra2.py:208-240)         NetCDF-4 xarray-gated) →
+                                                    gridded_to_table → era5_prepare /
+                                                    merra2_prepare
+S4     meta scan (coords only)                      meta_scan — distinct on coord cols
 S5     multi-file merge by coords                   multi_file_merge — unionByName
-S7     GeoTIFF raster → table                       raster_to_table (rasterio gated; numpy path real)
-S9     NetCDF sink per (year,month)                 write_partitioned
-S10    GeoTIFF sink                                 table_to_raster (numpy out)
+S7     GeoTIFF raster → table                       raster_to_table; read_geotiff (.tif)
+S10    GeoTIFF sink                                 table_to_raster (numpy out);
+                                                    write_geotiff_raster (.tif)
 S13    trim_variables                               trim_variables — column pruning
-P1     coord rename/canonicalize                    rename_canonical
-P2     spatial range filter                         spatial_subset (pushed predicate)
+P1     coord rename/canonicalize                    CANON_RENAMES, inside read_netcdf
 P3     longitude wraparound                         lon_wraparound
 P5     lat direction normalize                      not needed (no positional index)
 F29    MERRA2 spinup stream id                      spinup_stream_id
@@ -34,28 +34,9 @@ import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from geodata_spark.manifest import read_parquet
 
 #: canonical coordinate names (reference: datasets/era5.py:53-79)
 CANON_RENAMES = {"latitude": "lat", "longitude": "lon", "y": "lat", "x": "lon", "time": "ts"}
-
-
-def rename_canonical(df: DataFrame) -> DataFrame:
-    """P1 — rename lat/lon/time variants to canonical names."""
-    for old, new in CANON_RENAMES.items():
-        if old in df.columns and new not in df.columns:
-            df = df.withColumnRenamed(old, new)
-    return df
-
-
-def spatial_subset(df: DataFrame, lat_min: float, lat_max: float,
-                   lon_min: float, lon_max: float, pad: float = 0.1) -> DataFrame:
-    """P2 — bounding-box filter with the reference's 0.1° bound padding
-    (datasets/era5.py:357-370); a pushed-down range predicate."""
-    return df.filter(
-        F.col("lat").between(lat_min - pad, lat_max + pad)
-        & F.col("lon").between(lon_min - pad, lon_max + pad)
-    )
 
 
 def lon_wraparound(df: DataFrame, lon_col: str = "lon") -> DataFrame:
@@ -105,15 +86,6 @@ def multi_file_merge(parts: list[DataFrame]) -> DataFrame:
     keys = [c for c in ("ts", "hour", "lat", "lon") if c in out.columns]
     vals = [c for c in out.columns if c not in keys]
     return out.groupBy(*keys).agg(*[F.min(c).alias(c) for c in vals])
-
-
-def write_partitioned(df: DataFrame, path: str, partition_by: tuple[str, ...]) -> None:
-    """S9 — the cutout sink: partitioned parquet (Iceberg in deploy)."""
-    df.write.mode("overwrite").partitionBy(*partition_by).parquet(path)
-
-
-def read_cutout(spark: SparkSession, path: str) -> DataFrame:
-    return rename_canonical(read_parquet(spark, path))
 
 
 # ---------------------------------------------------------------------------

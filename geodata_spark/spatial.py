@@ -323,8 +323,8 @@ def zone_cover_df(
     Known failure mode: a local checkpoint lives only in the executors'
     block managers and has no lineage to recompute from.  Losing an
     executor that holds a cover block fails every later query that
-    scans this table (:func:`extract_zone_cells`, the ``zone_cover``
-    SQL view) until the session is restarted.  :func:`join_zones` does
+    scans this table (:func:`extract_zone_cells`) until the session is
+    restarted.  :func:`join_zones` does
     not scan it: its function's broadcast keeps the driver's copy.
     """
     zones = zones or ZONES

@@ -20,9 +20,9 @@ Views registered by :func:`register_views`:
   ``substring_index`` field cuts + cell encode), proving the
   span-parse path is expressible in the SQL dialect, not just Catalyst
   column objects;
-- ``zone_cover`` — the (zone_id, cell, boundary, edges) cover table;
-  and the cover's membership function
-  (:func:`spatial.zone_member`), which the zonal texts call.
+
+and the zone cover's membership function (:func:`spatial.zone_member`),
+which the zonal texts call.
 
 Scale note: views are metadata only — registering them costs nothing
 at 100 TB, and the SQL texts compile to the SAME physical plans as
@@ -37,7 +37,7 @@ from pyspark.sql import DataFrame, SparkSession
 from geodata_spark import cells, spatial, zonal
 from geodata_spark.manifest import read_parquet
 from geodata_spark.pipeline import text as TX
-from geodata_spark.spatial import GEO_FIELDS_SQL, zone_cover_df
+from geodata_spark.spatial import GEO_FIELDS_SQL
 from geodata_spark.zones import ZONES
 
 # register_views skip-cache, keyed per SparkSession (weakly: a closed
@@ -89,8 +89,7 @@ def register_views(
     are stable within a session).  Registering in another session runs
     no Spark job once the tables have been read: their schemas and the
     corpus size come from the read records (``manifest.read_parquet``,
-    ``manifest.parquet_rows``), and the ``zone_cover`` checkpoint is
-    lazy.  Pass a non-None ``corpus`` to force — a
+    ``manifest.parquet_rows``).  Pass a non-None ``corpus`` to force — a
     caller-supplied corpus never populates the cache, so later
     default-corpus calls re-register the canonical views instead of
     silently inheriting the custom ones.
@@ -124,8 +123,6 @@ def register_views(
     # the canonical cutout long table (gridded physical variables)
     Q._gv(spark).createOrReplaceTempView("gridv")
     names.append("gridv")
-    zone_cover_df(spark, ZONES, res).createOrReplaceTempView("zone_cover")
-    names.append("zone_cover")
     spark.sql(
         f"CREATE OR REPLACE TEMP VIEW geo_points AS {geo_points_view_sql(res)}"
     )

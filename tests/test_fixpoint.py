@@ -94,13 +94,14 @@ def test_local_finish_raises_at_the_bound(spark):
 
 
 @pytest.mark.parametrize(
-    "path", ["distributed", "watershed", "filter_area", "connected_components", "kmeans_lloyd"]
+    "path",
+    ["distributed", "watershed", "filter_area", "connected_components", "kmeans_lloyd", "bloom"],
 )
 def test_jobs_are_labelled_and_the_caller_description_restored(spark, request, path):
     from geodata_spark import fixpoint as fp
     from geodata_spark import masks
     from geodata_spark.hydro import watershed
-    from geodata_spark.pipeline.dedup import connected_components
+    from geodata_spark.pipeline.dedup import bloom_contamination_screen, connected_components
     from geodata_spark.pipeline.similarity import kmeans_lloyd
 
     if path == "distributed":
@@ -111,10 +112,13 @@ def test_jobs_are_labelled_and_the_caller_description_restored(spark, request, p
     snake = _raster_df(spark, [[1.0] * 8])
     path_graph = spark.createDataFrame([(i, i + 1) for i in range(12)], "id_a long, id_b long")
     vecs = spark.createDataFrame([(i, [float(i % 3)]) for i in range(6)], "vec_id long, embedding array<double>")
+    docs = spark.createDataFrame([(i, f"a b c d {i}") for i in range(4)], "doc_id long, text string")
 
     def run_and_raise():
         if path == "kmeans_lloyd":
             kmeans_lloyd(vecs, k=2, iters=2)
+        elif path == "bloom":
+            bloom_contamination_screen(docs, docs.limit(1))
         else:
             with pytest.raises(RuntimeError, match="did not converge"):
                 if path == "watershed":
@@ -131,10 +135,12 @@ def test_jobs_are_labelled_and_the_caller_description_restored(spark, request, p
     descs = _job_descriptions(spark, group, run_and_raise)
     if path == "distributed":
         assert descs == [f"fixpoint:dec round {i}" for i in range(3)]
-    elif path != "kmeans_lloyd":
-        assert descs == [f"{path} local"]  # the one collect; the rounds run in numpy
+    elif path == "kmeans_lloyd":
+        assert descs == ["kmeans_lloyd init", "kmeans_lloyd local"]  # the init, the vectors
+    elif path == "bloom":  # the eval-set bits: one collect, possibly several stages
+        assert descs and set(descs) == {"bloom_contamination_screen: eval-set bits"}
     else:
-        assert descs == [f"{group} caller", "kmeans_lloyd local"]  # the init, the vectors
+        assert descs == [f"{path} local"]  # the one collect; the rounds run in numpy
 
 
 # -- the driver path returns the distributed path's rows ---------------------
@@ -334,7 +340,7 @@ def test_kmeans_falls_back_on_null_ragged_or_non_finite_vectors(bad):
 def test_driver_builds_take_at_most_one_and_two_jobs(spark):
     from geodata_spark import masks
     from geodata_spark.hydro import watershed
-    from geodata_spark.pipeline.dedup import connected_components
+    from geodata_spark.pipeline.dedup import bloom_contamination_screen, connected_components
     from geodata_spark.pipeline.similarity import kmeans_lloyd
 
     dem = _raster_df(spark, [[float((y * 7 + x * 3) % 5) for x in range(9)] for y in range(8)])

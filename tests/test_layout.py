@@ -106,44 +106,3 @@ def test_spatial_sorted_write_prunes_rowgroups(spark, tmp_path):
     a = sorted(map(tuple, spark.read.parquet(unsorted_p).filter(cond).collect()))
     b = sorted(map(tuple, spark.read.parquet(sorted_p).filter(cond).collect()))
     assert a == b and len(a) > 0
-
-
-def test_compact_spatial_consolidates_and_regains_pruning(spark, tmp_path):
-    """A 32-file unsorted append tree compacts to few files whose
-    row groups prune a bbox again; rows survive bit-for-bit."""
-    import glob
-
-    from geodata_spark import spatial
-    from geodata_spark.synth import synth_documents
-
-    pts = (
-        spatial.parse_geo_spans(synth_documents(spark, 3000))
-        .select("lat", "lon", "val")
-    )
-    frag_p, out_p = str(tmp_path / "frag"), str(tmp_path / "compact")
-    # fragmented appends, key-agnostic order: worst-case input
-    pts.repartition(32, F.col("val")).write.mode("overwrite").parquet(frag_p)
-    frag_files = glob.glob(f"{frag_p}/*.parquet")
-    n_frag = len(frag_files)
-    assert n_frag >= 32
-
-    import os
-
-    bytes_frag = sum(os.path.getsize(f) for f in frag_files)
-    stats = layout.compact_spatial(
-        spark, frag_p, out_p, target_file_bytes=max(bytes_frag // 6, 1)
-    )
-    n_out = len(glob.glob(f"{out_p}/*.parquet"))
-    assert stats["files_in"] == n_frag and stats["bytes_in"] == bytes_frag
-    assert n_out <= stats["files_out"] <= 7 < n_frag / 4
-
-    a = sorted(map(tuple, spark.read.parquet(frag_p).collect()))
-    b = sorted(map(tuple, spark.read.parquet(out_p).collect()))
-    assert a == b
-
-    bbox_lat, bbox_lon = (20.0, 24.0), (74.0, 80.0)
-    s_frag = layout.rowgroup_prune_stats(frag_p, bbox_lat, bbox_lon)
-    s_out = layout.rowgroup_prune_stats(out_p, bbox_lat, bbox_lon)
-    frac_frag = s_frag["rows_touched"] / s_frag["rows_total"]
-    frac_out = s_out["rows_touched"] / s_out["rows_total"]
-    assert frac_out < frac_frag

@@ -55,7 +55,7 @@ def test_read_netcdf_gate_raises_without_xarray(spark, tmp_path):
 def _write_era5_fixture(path, nt=4, ny=3, nx=5, descending_lat=False):
     """Byte-valid classic-NetCDF ERA5-like month via the in-repo
     writer: record time dim, CF time units, full ERA5 variable set."""
-    from geodata_spark import netcdf3 as NC
+    from tests.nc3_writer import write_nc3
 
     coords, cubes = _fake_cube(nt, ny, nx)
     hours = np.arange(nt, dtype=np.int32)
@@ -70,7 +70,7 @@ def _write_era5_fixture(path, nt=4, ny=3, nx=5, descending_lat=False):
     for name, cube in cubes.items():
         c = cube[:, ::-1, :] if descending_lat else cube
         variables[name] = (("time", "latitude", "longitude"), c, {})
-    NC.write_nc3(
+    write_nc3(
         str(path),
         {"time": None, "latitude": ny, "longitude": nx},
         variables,
@@ -126,11 +126,11 @@ def test_read_netcdf_classic_descending_lat_and_bounds(spark, tmp_path):
 def test_read_netcdf_classic_skips_extra_dim_vars(spark, tmp_path):
     """ERA5T-style variables with extra dims are skipped with a
     warning, not fatal (reference behavior)."""
-    from geodata_spark import netcdf3 as NC
     from geodata_spark import sources
+    from tests.nc3_writer import write_nc3
 
     nt, ny, nx = 2, 2, 2
-    NC.write_nc3(
+    write_nc3(
         str(tmp_path / "extra.nc"),
         {"time": None, "latitude": ny, "longitude": nx, "expver": 2},
         {

@@ -11,6 +11,7 @@ import numpy as np
 import pytest
 
 from geodata_spark import netcdf3 as NC
+from tests.nc3_writer import write_nc3
 
 
 def test_roundtrip_all_types(tmp_path):
@@ -23,7 +24,7 @@ def test_roundtrip_all_types(tmp_path):
         "f": (("n",), np.linspace(0, 1, n, dtype=np.float32), {}),
         "d": (("n",), np.linspace(-1, 1, n, dtype=np.float64), {}),
     }
-    NC.write_nc3(p, {"n": n}, vars_)
+    write_nc3(p, {"n": n}, vars_)
     dims, _, got = NC.read_nc3(p)
     assert dims == {"n": n}
     for k, (vd, arr, _) in vars_.items():
@@ -43,7 +44,7 @@ def test_roundtrip_record_and_fixed_mix(tmp_path):
     a = np.arange(nt * ny, dtype=np.float64).reshape(nt, ny) / 8
     b = (np.arange(nt * ny, dtype=np.float32).reshape(nt, ny) % 5)
     fixed = np.array([1.5, 2.5, 3.5])
-    NC.write_nc3(
+    write_nc3(
         p,
         {"time": None, "y": ny},
         {
@@ -63,7 +64,7 @@ def test_roundtrip_record_and_fixed_mix(tmp_path):
 
 def test_attributes_roundtrip(tmp_path):
     p = str(tmp_path / "att.nc")
-    NC.write_nc3(
+    write_nc3(
         p,
         {"n": 2},
         {"v": (("n",), np.array([1.0, 2.0]),
@@ -110,7 +111,7 @@ def test_cdf2_64bit_offsets_read(tmp_path):
     v1 fixture's header into v2 form byte-by-byte and re-read."""
     p1 = str(tmp_path / "v1.nc")
     arr = np.array([10.0, 20.0, 30.0])
-    NC.write_nc3(p1, {"n": 3}, {"v": (("n",), arr, {})})
+    write_nc3(p1, {"n": 3}, {"v": (("n",), arr, {})})
     buf = open(p1, "rb").read()
     # v1 layout for this file: the single var's 4-byte begin is the
     # last 4 header bytes before the data payload (24 bytes of data)

@@ -9,12 +9,6 @@ from geodata_spark import resource as R
 from geodata_spark import sinks
 
 
-def test_list_resources():
-    assert "suzlon_s82_1500kw" in R.list_resources("windturbine")
-    assert "csi_huld" in R.list_resources("solarpanel")
-    assert R.list_resources("nonexistent_kind") == []
-
-
 def test_turbine_loader_matches_literal():
     """YAML curve == the literal dict convert.py has always used."""
     from geodata_spark import convert as C

@@ -25,7 +25,7 @@ def views(spark):
 
     names = S.register_views(spark, SF_ORACLE)
     assert set(S.DRIVER_TABLES) <= set(names)
-    assert {"corpus", "geo_points", "zone_cover"} <= set(names)
+    assert {"corpus", "geo_points"} <= set(names)
     return names
 
 
@@ -147,7 +147,7 @@ def test_register_views_cache_is_session_scoped(spark, views):
 def test_register_views_in_a_second_session_runs_no_job(spark, views):
     """Once its inputs have been read, registering runs no Spark job:
     the tables' schemas and the corpus size come from their read
-    records, and the ``zone_cover`` view's checkpoint is lazy."""
+    records."""
     from geodata_spark import sql_surface as S
 
     sc = spark.sparkContext._jsc.sc()

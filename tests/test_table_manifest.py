@@ -37,6 +37,12 @@ def _table(spark, path, days=(1, 2, 3), keys=3, seq=0):
     sinks.merge_upsert(spark, path, spark.createDataFrame(data, COLS), ["k"], "day", "seq")
 
 
+def _scan_files(df, root: str):
+    """The files a bare scan ``df`` lists, relative to ``root``."""
+    index = manifest._file_index(df)
+    return None if index is None else manifest._parse_listing(index.allFiles().mkString("\n"), root)
+
+
 def _per_day(df):
     return df.groupBy("k").agg(F.count("*").alias("n"), F.max("v").alias("v"))
 
@@ -105,7 +111,7 @@ def test_listing_parse_matches_os_stat(spark, tmp_path):
         if f.endswith(".parquet") and not f.startswith(".")
     )
     qroot = "file:" + path
-    listed = manifest.scan_files(spark.read.parquet(path), qroot)
+    listed = _scan_files(spark.read.parquet(path), qroot)
     dirs = manifest.Table(spark, path).list_dirs(["day=1", "day=3"])
     assert [f[0] for f in listed] == on_disk
     assert [f[0] for f in dirs] == [p for p in on_disk if p.startswith(("day=1/", "day=3/"))]
@@ -144,7 +150,7 @@ def test_merge_upsert_reads_like_the_inferred_read(spark, tmp_path, monkeypatch,
     inferred = spark.read.parquet(path)
     assert _schema(df) == _schema(inferred)
     assert _rows(df) == _rows(inferred)
-    assert [f[0] for f in files] == [f[0] for f in manifest.scan_files(inferred, "file:" + path)]
+    assert [f[0] for f in files] == [f[0] for f in _scan_files(inferred, "file:" + path)]
     # the next merge is right on either path, and records a manifest
     upd = spark.createDataFrame([(3, 0, 5, "new"), (4, 0, 5, "new4")], COLS)
     want = {(r.day, r.k): (r.seq, r.v) for r in inferred.collect()}
