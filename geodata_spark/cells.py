@@ -92,19 +92,6 @@ def parent_expr(cell: Column, steps: int = 1) -> Column:
     )
 
 
-def decode_expr(cell: Column) -> tuple[Column, Column, Column, Column, Column]:
-    """(res, yi, xi, center_lat, center_lon) columns from a grid cell id."""
-    res = F.floor(cell / F.lit(_RES_SHIFT)).cast("long")
-    rem = cell - res * F.lit(_RES_SHIFT)
-    yi = F.floor(rem / F.lit(Y_SHIFT)).cast("long")
-    xi = rem - yi * F.lit(Y_SHIFT)
-    # edge = 4 / 2^(res-5)  -> pow is fine here, res is small
-    edge = F.lit(4.0) / F.pow(F.lit(2.0), (res - F.lit(MIN_RES)).cast("double"))
-    clat = (yi.cast("double") + F.lit(0.5)) * edge - F.lit(90.0)
-    clon = (xi.cast("double") + F.lit(0.5)) * edge - F.lit(180.0)
-    return res, yi, xi, clat, clon
-
-
 # ---------------------------------------------------------------------------
 # numpy twins (used by the driver-side cover planner and tests)
 # ---------------------------------------------------------------------------

@@ -2,13 +2,12 @@
 
 Image/audio/video content rides as opaque ``binary`` columns next to
 typed metadata.  Payloads are synthesized in SQL; decode and feature
-extraction run as an Arrow-batched ``mapInPandas`` stage.  The image
-and audio codec libraries are NOT in this container, so the decode
-step is STUBBED (``decode_stub`` raises ``NotImplementedError``; the
-default pipeline uses ``fake_decode`` — a deterministic byte-level
-transform) — but the Spark-side plumbing is real and tested: schemas,
-batch iterator shape, partition behavior, and the deterministic
-feature output all match what a real codec drop-in would see.
+extraction run as an Arrow-batched ``mapInPandas`` stage.  No image
+or audio codec is a dependency, so the decode is ``fake_decode``, a
+deterministic byte-level transform; the Spark-side plumbing is real
+and tested: schemas, batch iterator shape, partition behavior, and the
+deterministic feature output all match what a real codec drop-in
+would see.
 """
 
 from __future__ import annotations
@@ -107,17 +106,6 @@ def media_exact_dedup(
     )
 
 
-def decode_stub(payload: bytes) -> np.ndarray:
-    """Real codec entry point — intentionally unimplemented here.
-
-    A deployment drops in PIL/ffmpeg behind this exact signature.
-    """
-    raise NotImplementedError(
-        "image/audio codecs are not available in this environment; "
-        "use fake_decode for deterministic testing"
-    )
-
-
 def fake_decode(payload: bytes, width: int = 8, height: int = 8) -> np.ndarray:
     """Deterministic stand-in decode: bytes → (h, w) uint8 'pixels'."""
     need = width * height
@@ -126,21 +114,18 @@ def fake_decode(payload: bytes, width: int = 8, height: int = 8) -> np.ndarray:
     return arr.reshape(height, width)
 
 
-def extract_features(media: DataFrame, width: int = 8, height: int = 8,
-                     use_stub: bool = False) -> DataFrame:
+def extract_features(media: DataFrame, width: int = 8, height: int = 8) -> DataFrame:
     """mapInPandas feature extraction: decode → 16-bin byte histogram.
 
     Iterator-of-batches form so a real decoder amortizes model/codec
     init once per partition (the pattern the reference's numba kernels
     map to — SURVEY §2.10 U6).
     """
-    decode = decode_stub if use_stub else fake_decode
-
     def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             feats, widths, heights, frames, sizes = [], [], [], [], []
             for payload in pdf["payload"]:
-                img = decode(bytes(payload), width, height)
+                img = fake_decode(bytes(payload), width, height)
                 hist, _ = np.histogram(img, bins=16, range=(0, 256))
                 feats.append((hist / max(1, img.size)).astype(np.float32))
                 widths.append(width)

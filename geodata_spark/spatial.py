@@ -11,9 +11,10 @@ The engine's counterpart of the reference's rasterize/clip pipeline:
 
 Plan shape (scale rationale): the polygon set is tiny (province-scale
 zone lists), the point/span table is the 10^12-row side.  The polygons
-are therefore compiled **on the driver** into a cover table
-(zone_id, cell_r{res}, boundary, edges) via the Sutherland-Hodgman
-planner (geometry.polygon_cover), packed into bytes and **broadcast
+are therefore planned **on the driver** into one cover per catalog
+(:func:`_plan_cover`: per row a zone, a cell key, a boundary flag and
+the edges a boundary cell needs) via the Sutherland-Hodgman planner
+(geometry.polygon_cover), memoized, packed into bytes and **broadcast
 once per SparkContext**; membership is one compiled JVM function
 (:func:`zone_member`, ``jvm/ZoneMember.java``) that looks up the
 point's cell key in the sorted cover.  A query is then one projection
@@ -24,7 +25,8 @@ cells (a thin O(perimeter) sliver) take the exact PIP test over the
 polygon edges their cover row carries — the analog of the reference's
 per-boundary-pixel geometry_mask test (``mask.py:593-599``).  No SQL
 text grows with the zone count or size; the cost scales with the
-edges per boundary cell.
+edges per boundary cell.  The clip (:func:`extract_zone_cells`) reads
+the same memoized cover on the driver, so it runs no job to build.
 """
 
 from __future__ import annotations
@@ -33,10 +35,10 @@ import struct
 import threading
 import weakref
 from collections import OrderedDict
+from typing import NamedTuple
 
 import numpy as np
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from geodata_spark import cells, geometry, sqltext
@@ -123,20 +125,15 @@ COVER_EDGE_LIMIT = 1_000_000
 # rounding of lat + 90, a crossing east of its edge up to a few ulps
 _GRID_BAND_PAD = 1e-9
 
-_EDGE_FIELDS = ("y1", "y2", "x1", "dx", "dy")
-
-# (catalog hash, res, grain) -> planned cover columns
-_COVER_CACHE: OrderedDict[tuple, "pa.Table"] = OrderedDict()
-# (session id, catalog hash, res, grain) -> checkpointed cover DataFrame.
-# The id is safe as a key: the cached DataFrame keeps its session alive.
-_COVER_DF_CACHE: OrderedDict[tuple, DataFrame] = OrderedDict()
+# (catalog hash, res, grain) -> planned _Cover
+_COVER_CACHE: OrderedDict[tuple, "_Cover"] = OrderedDict()
 # (SparkContext id, catalog hash, res, grain) -> _Member: the cover's
 # broadcast and the sessions its membership function is registered in.
 # The id is safe as a key: the entry keeps its SparkContext alive.
 _MEMBER_CACHE: OrderedDict[tuple, "_Member"] = OrderedDict()
 # join_zones runs from lineage's partition threads: one lock guards
-# the memos, and holding it across a build runs one planner, one
-# checkpoint job and one broadcast per key however many threads ask
+# the memos, and holding it across a build runs one planner and one
+# broadcast per key however many threads ask
 _COVER_LOCK = threading.Lock()
 
 
@@ -200,27 +197,61 @@ def _crossing_edges(
     return np.bincount(cell, minlength=len(west)), edge[np.argsort(cell, kind="stable")]
 
 
-def _cover_columns(
-    zones: dict[str, list[np.ndarray]], res: int, grain: str, cell_col: str
-) -> "pa.Table":
-    """Memoized cover planning: the cover of a zone set at a resolution
-    is a deterministic plan artifact (like a prepared statement) —
-    real deployments build it once per zone catalog and reuse it across
-    every query, so repeated plan builds must not re-run the planner.
-    ``grain="hex"`` plans the cover on the aperture-7 hexagonal index
-    (hexgrid.hex7_polyfill — same full/boundary contract) and compacts
-    each zone's full cells (hexgrid.hex7_compact_np).  Rows are per
-    zone in catalog order, full cells then boundary cells, in an Arrow
-    table.  A boundary cell's band is its extent padded by
-    ``_GRID_BAND_PAD`` at grid grain, and at hex grain the disc of
-    :func:`hexgrid.hex7_extent_np` (a margin of at least 0.7
-    circumradius).  Call under ``_COVER_LOCK``."""
-    import pyarrow as pa
+class _Cover(NamedTuple):
+    """A planned zone cover: one row per (zone, cell), in arrays.
 
+    Row ``i`` is zone ``zone[i]``'s cell ``key[i]``; its edges are the
+    columns ``offsets[i]:offsets[i + 1]`` of ``edges``, whose five rows
+    are ``y1, y2, x1, dx = x2 - x1, dy = y2 - y1``.  See
+    :func:`_plan_cover` for the contract."""
+
+    zone: np.ndarray  # object: zone id per row
+    key: np.ndarray  # int64: cell id per row
+    boundary: np.ndarray  # bool: the row needs the exact PIP test
+    offsets: np.ndarray  # int32, rows + 1: edge range per row
+    edges: np.ndarray  # float64, (5, E)
+
+
+def _plan_cover(zones: dict[str, list[np.ndarray]], res: int, grain: str) -> _Cover:
+    """The cover of a zone catalog at ``res``, planned on the driver and
+    memoized per (catalog, res, grain), LRU-bounded by
+    ``COVER_CACHE_LIMIT``: a plan artifact like a prepared statement,
+    built once per catalog and reused by every query.  Call under
+    ``_COVER_LOCK``.
+
+    Rows are per zone in catalog order, full cells then boundary cells.
+    ``boundary`` rows are res-``res`` cells that require the exact PIP
+    test; their edges are every edge of the zone's rings a rightward
+    ray from the cell can cross (the horizontal ones never can).  Full
+    rows hold no edges and prove membership by cell containment alone:
+
+    - ``grain="grid"``: res-``res`` square cells
+      (:func:`geometry.polygon_cover`), matched by equality with the
+      point's ``cell_r{res}``.  A boundary cell's band is its extent
+      padded by ``_GRID_BAND_PAD``.
+    - ``grain="hex"``: each zone's full hexagonal cells
+      (hexgrid.hex7_polyfill) compacted (hexgrid.hex7_compact_np), so
+      a full row may be an ancestor at any res up to ``res``; it holds
+      every res-``res`` descendant, and a point's res-``res`` id
+      matches at most one full row per zone.  Look up the point's
+      ancestors at the resolutions the cover holds, as
+      :func:`join_zones` does.  A boundary cell's band is the disc of
+      :func:`hexgrid.hex7_extent_np` (a margin of at least 0.7
+      circumradius).  ZONES at res 5: 8,734 full rows at res 1-5 for
+      196,690 cells, next to 21,556 boundary rows.
+
+    In both grains a ``(zone, key)`` pair appears once, and full and
+    boundary rows of a zone never overlap.
+
+    The edges grow with the edges per boundary cell (a zone of
+    thousands of vertices gives a cell the edges of its latitude band).
+    Above ``COVER_EDGE_LIMIT`` edges it raises ``ValueError`` naming the
+    zone and edge counts, and memoizes nothing; plan at a finer
+    resolution or split zones."""
     key = (_zones_key(zones), res, grain)
-    cols = _lru_get(_COVER_CACHE, key)
-    if cols is not None:
-        return cols
+    cover = _lru_get(_COVER_CACHE, key)
+    if cover is not None:
+        return cover
     from geodata_spark import hexgrid as HG
 
     zids, ids, flags, counts, values = [], [], [], [], []
@@ -252,110 +283,15 @@ def _cover_columns(
             f"COVER_EDGE_LIMIT = {COVER_EDGE_LIMIT}; zone {list(zones)[top]!r} "
             f"alone gives {per_zone[top]}"
         )
-    offsets = np.concatenate([[0], np.cumsum(np.concatenate(counts))]).astype(np.int32)
-    # non-null fields and items, as zone_cover_df's schema declares them
-    fields = [pa.field(f, pa.float64(), nullable=False) for f in _EDGE_FIELDS]
-    edge_col = pa.ListArray.from_arrays(
-        offsets,
-        pa.StructArray.from_arrays(list(np.concatenate(values, axis=1)), fields=fields),
-        type=pa.list_(pa.field("element", pa.struct(fields), nullable=False)),
+    cover = _Cover(
+        np.concatenate(zids),
+        np.concatenate(ids),
+        np.concatenate(flags),
+        np.concatenate([[0], np.cumsum(np.concatenate(counts))]).astype(np.int32),
+        np.concatenate(values, axis=1),
     )
-    cols = pa.table(
-        {
-            "zone_id": pa.array(np.concatenate(zids), pa.string()),
-            cell_col: np.concatenate(ids),
-            "boundary": np.concatenate(flags),
-            "edges": edge_col,
-        }
-    )
-    _lru_put(_COVER_CACHE, key, cols)
-    return cols
-
-
-def zone_cover_df(
-    spark: SparkSession,
-    zones: dict[str, list[np.ndarray]] | None = None,
-    res: int = 9,
-    grain: str = "grid",
-) -> DataFrame:
-    """(zone_id, cell_r{res}, boundary, edges) cover table, built on the
-    driver.
-
-    Zones are small.  The table is the cover :func:`zone_member`
-    packs into its function, as rows for SQL and for
-    :func:`extract_zone_cells`; :func:`join_zones` does not scan it.
-    ``boundary=true`` rows are res-``res`` cells that require the exact
-    PIP test; ``edges``
-    holds every edge of the zone's rings a rightward ray from the cell
-    can cross, as ``struct(y1, y2, x1, dx = x2 - x1, dy = y2 - y1)``.
-    ``boundary=false`` rows hold no edges and prove membership by cell
-    containment alone:
-
-    - ``grain="grid"``: res-``res`` square cells, matched by equality
-      with the point's ``cell_r{res}``.
-    - ``grain="hex"``: ``cell_hex{res}`` holds each zone's full
-      hexagonal cells (hexgrid.hex7_polyfill) compacted
-      (hexgrid.hex7_compact_np), so a full row may be an ancestor at
-      any res up to ``res``; it holds every res-``res`` descendant,
-      and a point's res-``res`` id matches at most one full row per
-      zone.  Join on the point's ancestors at the resolutions the
-      cover holds, as :func:`join_zones` does.  ZONES at res 5:
-      8,734 full rows at res 1-5 for 196,690 cells, next to 21,556
-      boundary rows.
-
-    In both grains a ``(zone_id, cell)`` pair appears once, and full
-    and boundary rows of a zone never overlap.
-
-    The cover grows with the edges per boundary cell (a zone of
-    thousands of vertices gives a cell the edges of its latitude band).
-    Above ``COVER_EDGE_LIMIT`` edges it raises ``ValueError`` naming the
-    zone and edge counts; plan at a finer resolution or split zones.
-
-    The cover is checkpointed once per (session, catalog, res, grain),
-    lazily: building it runs no job, the first job that reads it writes
-    the checkpoint's blocks, and every later call in that session
-    returns the same DataFrame, whose plan scans the checkpoint
-    (``Scan ExistingRDD``).  A literal ``LocalRelation`` instead would
-    be re-optimized and shipped inside the tasks of every query that
-    uses it.  Memos are LRU-bounded by
-    ``COVER_CACHE_LIMIT``; entries of stopped sessions are dropped.
-
-    Known failure mode: a local checkpoint lives only in the executors'
-    block managers and has no lineage to recompute from.  Losing an
-    executor that holds a cover block fails every later query that
-    scans this table (:func:`extract_zone_cells`) until the session is
-    restarted.  :func:`join_zones` does
-    not scan it: its function's broadcast keeps the driver's copy.
-    """
-    zones = zones or ZONES
-    cell_col = f"cell_hex{res}" if grain == "hex" else f"cell_r{res}"
-    key = (id(spark), _zones_key(zones), res, grain)
-    with _COVER_LOCK:
-        # SparkContext.stop() clears _jsc: such a session's blocks are gone
-        for k in [
-            k for k, df in _COVER_DF_CACHE.items()
-            if df.sparkSession.sparkContext._jsc is None
-        ]:
-            del _COVER_DF_CACHE[k]
-        hit = _lru_get(_COVER_DF_CACHE, key)
-        if hit is not None:
-            return hit
-        edge = T.StructType([T.StructField(f, T.DoubleType(), False) for f in _EDGE_FIELDS])
-        schema = T.StructType(
-            [
-                T.StructField("zone_id", T.StringType(), False),
-                T.StructField(cell_col, T.LongType(), False),
-                T.StructField("boundary", T.BooleanType(), False),
-                T.StructField("edges", T.ArrayType(edge, False), False),
-            ]
-        )
-        # from Arrow: per-tuple Python serialization in createDataFrame
-        # dominated plan-build latency for covers of O(10^4+) rows
-        df = spark.createDataFrame(
-            _cover_columns(zones, res, grain, cell_col), schema
-        ).localCheckpoint(eager=False)
-        _lru_put(_COVER_DF_CACHE, key, df)
-        return df
+    _lru_put(_COVER_CACHE, key, cover)
+    return cover
 
 
 class _Member:
@@ -380,18 +316,12 @@ class _Member:
             self.broadcast.unpersist(False)
 
 
-def _pack_cover(cols: "pa.Table", cell_col: str) -> bytes:
+def _pack_cover(cover: _Cover) -> bytes:
     """A planned cover as the big-endian bytes ``jvm/ZoneMember.java``
     reads: the zone ids, then per row sorted by key its key, zone
     index, edge range and boundary flag, then five doubles per edge."""
-    zids = cols.column("zone_id").to_numpy(zero_copy_only=False)
-    names, zone = np.unique(zids, return_inverse=True)
-    keys = cols.column(cell_col).to_numpy()
-    order = np.argsort(keys, kind="stable")
-    edges = cols.column("edges").combine_chunks()
-    offsets = edges.offsets.to_numpy()
-    values = edges.values  # the child the offsets index, unsliced
-    table = np.stack([values.field(f).to_numpy() for f in _EDGE_FIELDS], axis=1)
+    names, zone = np.unique(cover.zone, return_inverse=True)
+    order = np.argsort(cover.key, kind="stable")
     head = [struct.pack(">i", len(names))]
     for name in names:
         b = str(name).encode()
@@ -399,14 +329,14 @@ def _pack_cover(cols: "pa.Table", cell_col: str) -> bytes:
     return b"".join(
         head
         + [
-            struct.pack(">i", len(keys)),
-            keys[order].astype(">i8").tobytes(),
+            struct.pack(">i", len(order)),
+            cover.key[order].astype(">i8").tobytes(),
             zone[order].astype(">i4").tobytes(),
-            offsets[:-1][order].astype(">i4").tobytes(),
-            offsets[1:][order].astype(">i4").tobytes(),
-            cols.column("boundary").to_numpy(zero_copy_only=False)[order].astype(np.uint8).tobytes(),
-            struct.pack(">i", len(table)),
-            table.astype(">f8").tobytes(),
+            cover.offsets[:-1][order].astype(">i4").tobytes(),
+            cover.offsets[1:][order].astype(">i4").tobytes(),
+            cover.boundary[order].astype(np.uint8).tobytes(),
+            struct.pack(">i", cover.edges.shape[1]),
+            np.ascontiguousarray(cover.edges.T, dtype=">f8").tobytes(),
         ]
     )
 
@@ -437,9 +367,10 @@ def zone_member(
     coordinate only the zones of full rows.
 
     The function is ``jvm/ZoneMember.java`` over one broadcast of the
-    packed cover, made once per (SparkContext, catalog, res, grain) and
-    registered once per session (:func:`deploy.java_udf`), so a query
-    ships no cover and runs no job to build one.  Broadcasts are
+    packed cover (:func:`_plan_cover`), made once per (SparkContext,
+    catalog, res, grain) and registered once per session
+    (:func:`deploy.java_udf`), so a query ships no cover and runs no
+    job to build one.  Broadcasts are
     LRU-bounded by ``COVER_CACHE_LIMIT``: an eviction drops the
     function from its sessions and unpersists the broadcast, without
     destroying it.  SQL text may name the function
@@ -447,25 +378,23 @@ def zone_member(
     from geodata_spark import deploy
 
     zones = zones or ZONES
-    zkey = _zones_key(zones)
-    cell_col = f"cell_hex{res}" if grain == "hex" else f"cell_r{res}"
     sc = spark.sparkContext
-    key = (id(sc), zkey, res, grain)
+    key = (id(sc), _zones_key(zones), res, grain)
     with _COVER_LOCK:
         # SparkContext.stop() clears _jsc: its broadcasts are gone
         for k in [k for k, m in _MEMBER_CACHE.items() if m.sc._jsc is None]:
             del _MEMBER_CACHE[k]
         member = _lru_get(_MEMBER_CACHE, key)
         if member is None:
-            cols = _cover_columns(zones, res, grain, cell_col)
+            cover = _plan_cover(zones, res, grain)
             if grain == "hex":
                 from geodata_spark import hexgrid as HG
 
-                levels = np.unique(HG.hex7_res_np(cols.column(cell_col).to_numpy())).tolist()
+                levels = np.unique(HG.hex7_res_np(cover.key)).tolist()
             else:
                 levels = [res]
             member = _Member(
-                sc, sc._jsc.broadcast(_pack_cover(cols, cell_col)), levels,
+                sc, sc._jsc.broadcast(_pack_cover(cover)), levels,
                 zone_member_name(zones, res, grain),
             )
             for old in _lru_put(_MEMBER_CACHE, key, member):
@@ -580,18 +509,35 @@ def extract_zone_cells(
     Returns (zone_id, cell_r{res}, interior) where interior cells are
     wholly inside the zone.  Boundary cells are resolved by testing the
     cell *center*, matching rasterio's all_touched=False default in the
-    reference's clip (``mask.py:682``), through the membership function
-    :func:`join_zones` calls (:func:`zone_member`): no Python stage, and
-    a cost that scales with the edges per boundary cell.  The rows come
-    from :func:`zone_cover_df`, whose failure mode applies.
+    reference's clip (``mask.py:682``), with
+    :func:`geometry.points_in_rings`, the test :func:`join_zones`
+    matches bit for bit.  The rows are built on the driver from the
+    memoized grid cover (:func:`_plan_cover`) in its row order, as one
+    local relation: building runs no job and registers no function.
     """
+    import pyarrow as pa
+
     zones = zones or ZONES
-    cover = zone_cover_df(spark, zones, res)
-    fn, _ = zone_member(spark, zones, res)
+    with _COVER_LOCK:
+        cover = _plan_cover(zones, res, "grid")
+    keep = ~cover.boundary
+    for zid, rings in zones.items():
+        rows = np.flatnonzero(cover.boundary & (cover.zone == zid))
+        south, north, west, east = cells.cell_bounds_np(cover.key[rows])
+        keep[rows] = geometry.points_in_rings((west + east) / 2, (south + north) / 2, rings)
     cell_col = f"cell_r{res}"
-    _, _, _, clat, clon = cells.decode_expr(F.col(cell_col))
-    withc = cover.withColumn("_clat", clat).withColumn("_clon", clon)
-    return (
-        withc.filter(f"NOT boundary OR array_contains({fn}({cell_col}, _clat, _clon), zone_id)")
-        .select("zone_id", cell_col, (~F.col("boundary")).alias("interior"))
+    schema = T.StructType(
+        [
+            T.StructField("zone_id", T.StringType(), False),
+            T.StructField(cell_col, T.LongType(), False),
+            T.StructField("interior", T.BooleanType(), False),
+        ]
     )
+    table = pa.table(
+        {
+            "zone_id": pa.array(cover.zone[keep], pa.string()),
+            cell_col: cover.key[keep],
+            "interior": ~cover.boundary[keep],
+        }
+    )
+    return spark.createDataFrame(table, schema)

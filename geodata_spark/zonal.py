@@ -86,34 +86,19 @@ def zonal_weighted_mean(
     dropping rows downstream — the SPARK-23207 bug class.  Deterministic
     salting keeps retries idempotent at any scale.
 
-    Default ``salt_cols`` = keys + value + weight — columns the
-    aggregation reads anyway.  Hashing every input column (the round-2
-    default) silently defeated column pruning: the scan had to read
-    and hash unrelated strings (doc_id, kind, ts) per row, which
-    profiling showed costing 2.2× on the whole prepared flagship.
-    Rows identical in (keys, v, w) landing in one bucket is harmless
-    for correctness (sums are algebraic over all rows) — but if value
-    AND weight are near-constant within a hot key (e.g. uniform
-    weight=1 counting workloads), the default collapses the hot key
-    into one bucket and the skew protection is lost: pass
-    ``salt_cols`` explicitly with any high-cardinality columns the
-    query already reads (the flagship passes lat/lon/hour).  Relying
-    on the default with ``salt_buckets`` set emits a ``UserWarning``
-    so the hazard is visible at call time, not in a skewed-stage
-    post-mortem.
+    ``salt_cols`` is required with ``salt_buckets`` (``ValueError``
+    otherwise), as in :func:`ranking.topk_per_group`: pass
+    high-cardinality row columns the query already reads (the flagship
+    passes lat/lon/hour).  A salt over only the keys, value and weight
+    collapses a hot key into one bucket when value and weight are
+    near-constant within it (e.g. weight=1 counting), and a salt over
+    every input column defeats column pruning (the scan must read and
+    hash unrelated strings).
     """
-    if salt_buckets is not None and salt_cols is None:
-        import warnings
-
-        warnings.warn(
-            "zonal_weighted_mean: salt_buckets set without explicit "
-            "salt_cols — the default salt hashes (keys, value, weight), "
-            "which collapses to ONE bucket when value and weight are "
-            "near-constant within a hot key (e.g. weight=1 counting). "
-            "Pass salt_cols with high-cardinality columns the query "
-            "already reads.",
-            UserWarning,
-            stacklevel=2,
+    if salt_buckets is not None and not salt_cols:
+        raise ValueError(
+            "zonal_weighted_mean: salt_cols is required when salt_buckets is set "
+            "(pass deterministic, high-cardinality row columns)"
         )
     if salt_buckets is None:
         vq, wq = ident(value_col), ident(weight_col)
@@ -123,9 +108,8 @@ def zonal_weighted_mean(
             F.expr("count(1) AS n_points"),
         )
     v, w = F.col(value_col), F.col(weight_col)
-    scols = salt_cols if salt_cols is not None else [*keys, value_col, weight_col]
     salted = df.withColumn(
-        "_salt", F.pmod(F.xxhash64(*[F.col(c) for c in scols]), F.lit(salt_buckets))
+        "_salt", F.pmod(F.xxhash64(*[F.col(c) for c in salt_cols]), F.lit(salt_buckets))
     )
     partial = salted.groupBy(*keys, "_salt").agg(
         F.sum(v * w).alias("_vw"),

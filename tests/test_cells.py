@@ -38,19 +38,6 @@ def test_parent_hierarchy_np_vs_expr(spark):
     assert (cells.cell_id_np(lat, lon, 9) == np.array([r.c9 for r in out])).all()
 
 
-def test_decode_expr_center(spark):
-    df = spark.createDataFrame([(40.0, 100.0)], ["lat", "lon"])
-    c = F.expr(cells.cell_sql("lat", "lon", 9))
-    res, yi, xi, clat, clon = cells.decode_expr(c)
-    row = df.select(
-        res.alias("res"), clat.alias("clat"), clon.alias("clon")
-    ).collect()[0]
-    assert row.res == 9
-    # cell containing (40,100) at 0.25°: [40.0,40.25)x[100.0,100.25)
-    assert abs(row.clat - 40.125) < 1e-12
-    assert abs(row.clon - 100.125) < 1e-12
-
-
 def test_cell_sql_matches_expr(spark, duck):
     """One formula text, three engines: Spark's parse of cell_sql, the
     DuckDB oracles' and the numpy twin give the same key, including

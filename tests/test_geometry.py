@@ -169,8 +169,8 @@ def test_polygon_cover_prefilter_equivalence():
 
 def test_extract_zone_cells_expr_path_has_no_python_stage(spark):
     """extract_zone_cells keeps every full cell and each boundary cell
-    whose centre its zone holds, as geometry.points_in_rings decides
-    from the centre Spark computes, with no Python stage in the plan."""
+    whose centre its zone holds, as geometry.points_in_rings decides,
+    with no Python stage in the plan."""
     from geodata_spark import cells, spatial
 
     df = spatial.extract_zone_cells(spark, ZONES, res=7)
@@ -180,7 +180,7 @@ def test_extract_zone_cells_expr_path_has_no_python_stage(spark):
     for zid, rings in ZONES.items():
         full, boundary = geometry.polygon_cover(rings, 7)
         want |= {(zid, int(c), True) for c in full}
-        # cells.decode_expr's centre: (index + 0.5) * edge - offset
+        # the centre (index + 0.5) * edge - offset: exact, as the edge is dyadic
         rem = boundary - 7 * cells._RES_SHIFT
         yi, xi = rem // cells.Y_SHIFT, rem % cells.Y_SHIFT
         edge = cells.EDGE_DEG[7]

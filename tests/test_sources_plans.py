@@ -141,14 +141,13 @@ def test_salt_is_deterministic(spark):
         [(i % 3, float(i), 1.0, i) for i in range(64)],
         ["zone_id", "val", "w", "row_id"],
     )
-    import warnings
-
-    with warnings.catch_warnings(record=True) as caught:
-        warnings.simplefilter("always")
-        out = zonal.zonal_weighted_mean(df, "val", "w", ["zone_id"], salt_buckets=8)
-    # default salt_cols + salt_buckets is a documented skew hazard
-    # (constant value/weight collapses the salt) — must warn loudly
-    assert any("salt_cols" in str(w.message) for w in caught)
+    # a salt chosen by default can collapse on constant columns:
+    # salt_buckets without salt_cols is refused, as in topk_per_group
+    with pytest.raises(ValueError, match="salt_cols"):
+        zonal.zonal_weighted_mean(df, "val", "w", ["zone_id"], salt_buckets=8)
+    out = zonal.zonal_weighted_mean(
+        df, "val", "w", ["zone_id"], salt_buckets=8, salt_cols=["row_id"]
+    )
     plan = _plan(out)
     assert "monotonically_increasing_id" not in plan
     # the salt expression is a pure function of row columns: two

@@ -1,8 +1,10 @@
-"""zone_cover_df: a session-resident checkpoint, memoized per session,
-LRU-bounded, with the same rows as a literal cover; and the membership
-function join_zones calls: one cover broadcast per SparkContext, with
-the join output of a literal cover."""
+"""The zone cover: planned once per catalog, memoized and LRU-bounded,
+with the rows of a literal cover; the membership function join_zones
+calls: one cover broadcast per SparkContext, with the join output of a
+literal cover; and extract_zone_cells, built on the driver from the
+cover with no job, with the rows of a brute-force pass over the grid."""
 
+import hashlib
 import sys
 from concurrent.futures import ThreadPoolExecutor
 from types import SimpleNamespace
@@ -47,9 +49,9 @@ def _all_edges(rings):
 
 def _literal_cover(spark, res, grain, compact=True):
     """The cover as built before memoization: Python row tuples through
-    createDataFrame, no checkpoint, and on every boundary row all of
-    its zone's edges.  Hex full cells are compacted per zone, as the
-    memoized cover stores them, unless ``compact=False``."""
+    createDataFrame, and on every boundary row all of its zone's edges.
+    Hex full cells are compacted per zone, as the memoized cover stores
+    them, unless ``compact=False``."""
     cell_col = f"cell_hex{res}" if grain == "hex" else f"cell_r{res}"
     rows = []
     for zid, rings in TINY.items():
@@ -78,30 +80,29 @@ def _same_rows(a, b):
 
 @pytest.mark.parametrize("grain,res", GRAINS)
 def test_cover_rows_unchanged(spark, grain, res):
-    pdf, old = _literal_cover(spark, res, grain)
-    cover = spatial.zone_cover_df(spark, TINY, res, grain)
-    assert cover.schema == old.schema
-    cols = cover.columns[:3]
-    assert cover.count() == len(pdf) > 0 and _same_rows(cover.select(cols), old.select(cols))
-    # the planned columns hold the old rows in the old order
-    key = (spatial._zones_key(TINY), res, grain)
-    planned = spatial._COVER_CACHE[key]
-    pd.testing.assert_frame_equal(planned.select(cols).to_pandas(), pdf[cols])
+    pdf, _ = _literal_cover(spark, res, grain)
+    cover = spatial._plan_cover(TINY, res, grain)
+    # the planned cover holds the literal rows in their order
+    assert len(cover.key) == len(pdf) > 0
+    assert cover.zone.tolist() == pdf["zone_id"].tolist()
+    assert cover.key.tolist() == pdf[pdf.columns[1]].tolist()
+    assert cover.boundary.tolist() == pdf["boundary"].tolist()
+    assert cover.edges.shape[0] == 5 and cover.offsets[-1] == cover.edges.shape[1]
     # full rows carry no edges; boundary rows some of their zone's edges
-    for zid, boundary, edges in zip(
-        pdf["zone_id"], pdf["boundary"], planned.column("edges").to_pylist()
-    ):
-        got = [tuple(e.values()) for e in edges]
+    for zid, boundary, lo, hi in zip(cover.zone, cover.boundary, cover.offsets, cover.offsets[1:]):
+        got = [tuple(e) for e in cover.edges[:, lo:hi].T.tolist()]
         assert bool(got) == boundary and set(got) <= set(_all_edges(TINY[zid]))
 
 
-def test_cover_plan_scans_checkpoint(spark, points):
-    """The cover table scans its checkpoint; the join scans no cover at
-    all: it calls the membership function, with no cover broadcast."""
-    cover = spatial.zone_cover_df(spark, TINY, 4, "hex")
-    assert "LocalRelation" not in cover._jdf.queryExecution().optimizedPlan().toString()
-    joined = spatial.join_zones(points, spark, TINY, res=4, grain="hex")
-    plan = joined._jdf.queryExecution().executedPlan().toString()
+def _plan(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+def test_extract_is_local_and_join_scans_no_cover(spark, points):
+    """The cell extract is one local relation; the join scans no cover
+    at all: it calls the membership function, with no cover broadcast."""
+    assert _plan(spatial.extract_zone_cells(spark, TINY, 8)).startswith("LocalTableScan")
+    plan = _plan(spatial.join_zones(points, spark, TINY, res=4, grain="hex"))
     assert "LocalTableScan" not in plan and "ExistingRDD" not in plan
     assert spatial.zone_member_name(TINY, 4, "hex") in plan
     assert "BroadcastExchange" not in plan and "Join" not in plan
@@ -111,47 +112,47 @@ def test_cover_plan_scans_checkpoint(spark, points):
 def test_hex_cover_full_cells_are_compacted():
     # TINY at hex res 4 compacts to coarser full cells, so the join tests
     # below run the ancestor probe
-    cols = spatial._cover_columns(TINY, 4, "hex", "cell_hex4").to_pandas()
-    full = cols.loc[~cols["boundary"], "cell_hex4"].to_numpy()
-    bound = cols.loc[cols["boundary"], "cell_hex4"].to_numpy()
-    assert set(hexgrid.hex7_res_np(bound).tolist()) == {4}
-    assert len(set(hexgrid.hex7_res_np(full).tolist())) > 1
+    cover = spatial._plan_cover(TINY, 4, "hex")
+    assert set(hexgrid.hex7_res_np(cover.key[cover.boundary]).tolist()) == {4}
+    assert len(set(hexgrid.hex7_res_np(cover.key[~cover.boundary]).tolist())) > 1
     for zid, rings in TINY.items():
         want, _ = hexgrid.hex7_polyfill(rings, 4)
-        got = cols.loc[(cols["zone_id"] == zid) & ~cols["boundary"], "cell_hex4"]
-        assert np.array_equal(hexgrid.hex7_uncompact_np(got.to_numpy(), 4), np.sort(want))
+        got = cover.key[(cover.zone == zid) & ~cover.boundary]
+        assert np.array_equal(hexgrid.hex7_uncompact_np(got, 4), np.sort(want))
 
 
 def test_zones_hex_cover_rows():
     # ZONES at hex res 5: 196,690 reachable full cells compact to 8,734
     # rows at res 1-5, next to 21,556 boundary cells holding 29,388 edges
-    cols = spatial._cover_columns(ZONES, 5, "hex", "cell_hex5")
-    edges = cols.column("edges")
-    cols = cols.select(["zone_id", "cell_hex5", "boundary"]).to_pandas()
-    ids = cols["cell_hex5"].to_numpy()
-    assert hexgrid._reachable(ids).all()
-    assert not cols.duplicated(["zone_id", "cell_hex5"]).any()
-    assert (len(cols), int(cols["boundary"].sum())) == (30290, 21556)
-    assert sum(len(e) for e in edges.to_pylist()) == 29388
+    cover = spatial._plan_cover(ZONES, 5, "hex")
+    assert hexgrid._reachable(cover.key).all()
+    assert not pd.DataFrame({"zone": cover.zone, "key": cover.key}).duplicated().any()
+    assert (len(cover.key), int(cover.boundary.sum())) == (30290, 21556)
+    assert cover.edges.shape == (5, 29388)
     # grid res 9: 124 boundary cells, 248 edges
-    grid = spatial._cover_columns(ZONES, 9, "grid", "cell_r9")
-    assert int(grid.column("boundary").to_numpy().sum()) == 124
-    assert len(grid.column("edges").combine_chunks().flatten()) == 248
+    grid = spatial._plan_cover(ZONES, 9, "grid")
+    assert int(grid.boundary.sum()) == 124
+    assert grid.edges.shape == (5, 248)
+
+
+def _shifted(by):
+    """TINY moved by ``by`` degrees: a catalog no other test plans, so
+    its cover is not memoized yet."""
+    return {zid: [ring + by for ring in rings] for zid, rings in TINY.items()}
 
 
 def test_cover_edge_limit(spark, monkeypatch):
     """A cover holding more than COVER_EDGE_LIMIT edges raises before
     anything is memoized, naming its zone and edge counts."""
-    # a catalog no other test plans: a memoized cover is not re-planned
-    shifted = {zid: [ring + 0.125 for ring in rings] for zid, rings in TINY.items()}
+    shifted = _shifted(0.125)
     monkeypatch.setattr(spatial, "COVER_EDGE_LIMIT", 10)
     with pytest.raises(
         ValueError, match=r"grid res 9: 2 zones give \d+ crossing edges .* = 10; zone '\w+' alone"
     ):
-        spatial.zone_cover_df(spark, shifted, 9)
+        spatial.extract_zone_cells(spark, shifted, 9)
     assert (spatial._zones_key(shifted), 9, "grid") not in spatial._COVER_CACHE
     monkeypatch.setattr(spatial, "COVER_EDGE_LIMIT", 1000)
-    assert spatial.zone_cover_df(spark, shifted, 9).count() > 0
+    assert spatial.extract_zone_cells(spark, shifted, 9).count() > 0
 
 
 # the exact PIP as SQL over a literal cover row's ``boundary`` and
@@ -247,53 +248,80 @@ def test_second_zonal_query_runs_no_cover_job(spark, points):
     assert _jobs(spark) == lo + 1
 
 
-def test_memo_is_per_session(spark):
-    a = spatial.zone_cover_df(spark, TINY, 8)
-    assert spatial.zone_cover_df(spark, TINY, 8) is a
+def test_extract_zone_cells_runs_no_job_and_registers_nothing(spark, monkeypatch):
+    """The cell extract needs neither a job nor a session's function:
+    building it runs none and registers none, and a second session
+    reads the same memoized cover without planning it again."""
+    zones = _shifted(0.25)
+    lo = _jobs(spark)
+    df = spatial.extract_zone_cells(spark, zones, 8)
+    assert _jobs(spark) == lo
+    rows = _rows(df)
+    assert rows
+    name = spatial.zone_member_name(zones, 8)
+    assert not spark.catalog.functionExists(name)
+    assert not any(key[1] == spatial._zones_key(zones) for key in spatial._MEMBER_CACHE)
+    monkeypatch.setattr(geometry, "polygon_cover", None)  # a re-plan would raise
     other = spark.newSession()
-    b = spatial.zone_cover_df(other, TINY, 8)
-    assert b is not a and b.sparkSession is other
-    assert spatial.zone_cover_df(other, TINY, 8) is b
-    assert spatial.zone_cover_df(spark, TINY, 8) is a
-    assert _same_rows(a, b)
+    assert _rows(spatial.extract_zone_cells(other, zones, 8)) == rows
+    assert not other.catalog.functionExists(name)
 
 
 def test_concurrent_first_calls_build_once(spark, monkeypatch):
+    """Threads asking for one new cover at once, some for the cell
+    extract and some for the membership function, plan it once and
+    broadcast it once."""
+    zones = _shifted(0.375)
     planned = []
     plan = geometry.polygon_cover
     monkeypatch.setattr(
         geometry, "polygon_cover", lambda rings, res: planned.append(res) or plan(rings, res)
     )
+    calls = [spatial.extract_zone_cells, spatial.zone_member] * 4
     interval = sys.getswitchinterval()
     sys.setswitchinterval(1e-5)
     try:
         with ThreadPoolExecutor(8) as pool:
-            futures = [pool.submit(spatial.zone_cover_df, spark, TINY, 9) for _ in range(8)]
-            covers = [f.result(timeout=120) for f in futures]
+            futures = [pool.submit(call, spark, zones, 9) for call in calls]
+            out = [f.result(timeout=120) for f in futures]
     finally:
         sys.setswitchinterval(interval)
-    assert all(c is covers[0] for c in covers)
-    assert planned == [9] * len(TINY)
+    assert planned == [9] * len(zones)
+    zkey = spatial._zones_key(zones)
+    assert [k for k in spatial._COVER_CACHE if k[0] == zkey] == [(zkey, 9, "grid")]
+    assert [k for k in spatial._MEMBER_CACHE if k[1] == zkey] == [
+        (id(spark.sparkContext), zkey, 9, "grid")
+    ]
+    rows = _rows(out[0])
+    assert rows and all(_rows(df) == rows for df in out[2::2])
+    assert all(fn == out[1] for fn in out[1::2])
 
 
 def test_memos_are_lru_bounded(spark, monkeypatch):
     monkeypatch.setattr(spatial, "COVER_CACHE_LIMIT", 2)
-    first = spatial.zone_cover_df(spark, TINY, 5)
-    spatial.zone_cover_df(spark, TINY, 6)
-    assert spatial.zone_cover_df(spark, TINY, 5) is first  # a hit refreshes it
-    spatial.zone_cover_df(spark, TINY, 7)  # evicts res 6, the least recent
     tiny = spatial._zones_key(TINY)
-    assert len(spatial._COVER_DF_CACHE) == len(spatial._COVER_CACHE) == 2
-    assert set(spatial._COVER_DF_CACHE) == {(id(spark), tiny, r, "grid") for r in (5, 7)}
-    assert (tiny, 7, "grid") in spatial._COVER_CACHE
-    assert spatial.zone_cover_df(spark, TINY, 5) is first
+    first = {}
+    # a hit on res 5 refreshes it, so res 7 evicts res 6, the least recent
+    for res in (5, 6, 5, 7):
+        spatial.extract_zone_cells(spark, TINY, res)
+        spatial.zone_member(spark, TINY, res)
+        first.setdefault(res, (
+            spatial._COVER_CACHE[(tiny, res, "grid")], _member(spark, TINY, res)
+        ))
+    assert list(spatial._COVER_CACHE) == [(tiny, r, "grid") for r in (5, 7)]
+    assert list(spatial._MEMBER_CACHE) == [(id(spark.sparkContext), tiny, r, "grid") for r in (5, 7)]
+    # a hit returns the memo itself
+    assert spatial._COVER_CACHE[(tiny, 5, "grid")] is first[5][0]
+    assert _member(spark, TINY, 5) is first[5][1]
 
 
 def test_stopped_session_entries_are_dropped(spark, monkeypatch):
-    stopped = SimpleNamespace(sparkSession=SimpleNamespace(sparkContext=SimpleNamespace(_jsc=None)))
-    monkeypatch.setitem(spatial._COVER_DF_CACHE, ("stopped",), stopped)
-    spatial.zone_cover_df(spark, TINY, 8)
-    assert ("stopped",) not in spatial._COVER_DF_CACHE
+    """A membership entry whose SparkContext stopped (its broadcast is
+    gone) is dropped by the next call."""
+    stopped = SimpleNamespace(sc=SimpleNamespace(_jsc=None))
+    monkeypatch.setitem(spatial._MEMBER_CACHE, ("stopped",), stopped)
+    spatial.zone_member(spark, TINY, 8)
+    assert ("stopped",) not in spatial._MEMBER_CACHE
 
 
 def test_join_zones_drops_non_finite_points(spark):
@@ -367,3 +395,67 @@ def test_join_zones_many_vertex_zones(spark, grain, res):
     finally:
         for k in conf:
             spark.conf.unset(k)
+
+
+def _sliver_catalog():
+    """A zone whose second ring is a zero-area sliver (three collinear
+    dyadic vertices) beside its main ring, and a plain zone."""
+    # off the grid's lines, so the main ring has boundary cells too
+    main = np.array([(100.0, 30.0), (103.0, 30.0), (103.0, 32.5), (100.0, 32.5)]) + (0.0625, 0.03125)
+    sliver = np.array([(103.25, 30.125), (104.25, 32.125), (103.75, 31.125)])
+    return {"with_sliver": [main, sliver], "plain": [main + (5.0, 0.0)]}
+
+
+@pytest.mark.parametrize("res", [8, 9])
+def test_extract_zone_cells_equals_brute_force(spark, res):
+    """extract_zone_cells keeps exactly the cells of a zone's bbox
+    (cells.cells_in_bbox) whose centre geometry.points_in_rings puts in
+    the zone, once each, for many-vertex stars and a zone with a
+    degenerate ring; and every interior cell, inset by a millionth of
+    its edge, has its four corners inside its zone."""
+    _, catalogs = _star_catalogs()
+    n_interior = 0
+    for zones in [*catalogs, _sliver_catalog()]:
+        got = spatial.extract_zone_cells(spark, zones, res).collect()
+        want = set()
+        for zid, rings in zones.items():
+            allv = np.concatenate(rings)
+            (lon0, lat0), (lon1, lat1) = allv.min(axis=0), allv.max(axis=0)
+            ids = cells.cells_in_bbox(lat0, lat1, lon0, lon1, res)
+            south, north, west, east = cells.cell_bounds_np(ids)
+            inside = geometry.points_in_rings((west + east) / 2, (south + north) / 2, rings)
+            want |= {(zid, int(c)) for c in ids[inside]}
+        assert len(got) == len(want) and {(r[0], r[1]) for r in got} == want
+        for zid, rings in zones.items():
+            keys = np.array([r[1] for r in got if r[0] == zid and r.interior], dtype=np.int64)
+            south, north, west, east = cells.cell_bounds_np(keys)
+            d = (north - south) * 1e-6
+            xs = np.concatenate([west + d, east - d, west + d, east - d])
+            ys = np.concatenate([south + d, south + d, north - d, north - d])
+            assert geometry.points_in_rings(xs, ys, rings).all()
+            n_interior += len(keys)
+    assert n_interior > 0
+
+
+# extract_zone_cells over ZONES as the checkpointed cover table gave it:
+# row count and the first 16 hex digits of the sha256 of the sorted
+# rows' repr
+_ZONES_CELLS = {
+    5: (134, "23cc0203e1eca01e"),
+    6: (514, "7cb33591b3bbb723"),
+    7: (2080, "faa921fcb48b63dc"),
+    8: (8289, "bf970c9d371476c3"),
+    9: (33094, "5e7514cff927c0c6"),
+}
+
+
+def test_extract_zone_cells_rows_pinned(spark):
+    for res, want in _ZONES_CELLS.items():
+        df = spatial.extract_zone_cells(spark, ZONES, res)
+        assert df.schema == T.StructType([
+            T.StructField("zone_id", T.StringType(), False),
+            T.StructField(f"cell_r{res}", T.LongType(), False),
+            T.StructField("interior", T.BooleanType(), False),
+        ])
+        rows = sorted(tuple(r) for r in df.collect())
+        assert (len(rows), hashlib.sha256(repr(rows).encode()).hexdigest()[:16]) == want
